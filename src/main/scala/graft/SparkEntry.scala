@@ -1232,38 +1232,39 @@ object SparkEntry {
         .withColumn("us_since_click",
           col("purchase_ts_us") - col("click_ts_us"))
     }),
-    // Snapshot-versioned lake: two MERGE commits into a fresh versioned
-    // table (q10's batches), then TIME TRAVEL — the output is v1 and v2
-    // read back via readAt, each tagged with its version. Gates both the
-    // merge-as-snapshot semantics and the log/manifest read path; the
-    // oracle replays the two latest-wins merge states directly.
+    // Versioned lake: two MERGE commits into a fresh Delta table (q10's
+    // batches), then TIME TRAVEL — the output is Delta versions 0 and 1
+    // read back via readAt, labelled 1 and 2 (the first and second
+    // merge). Gates the merge-as-rewrite-commit semantics and the log
+    // read path; the oracle replays the two latest-wins merge states.
     "q128_snapshot_history" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
       val root = freshScratch("q128")
-      graft.lake.Snapshots.mergeIntoSnapshot(s, root,
-        ev.filter(col("event_id") % 3 === 0),
-        Seq("event_id"), Seq("event_ts_us", "event_id"))
-      graft.lake.Snapshots.mergeIntoSnapshot(s, root,
-        ev.filter(col("event_id") % 2 === 0),
-        Seq("event_id"), Seq("event_ts_us", "event_id"))
-      graft.lake.Snapshots.readAt(s, root, 1L).withColumn("version", lit(1L))
+      val keys = Seq("event_id")
+      val ordering = Seq("event_ts_us", "event_id")
+      graft.lake.DeltaLog.commitFlat(s, root, graft.lake.Upsert.latestWins(
+        ev.filter(col("event_id") % 3 === 0), keys, ordering))
+      graft.lake.DeltaLog.commitFlat(s, root,
+        graft.lake.Upsert.merge(graft.lake.DeltaLog.read(s, root),
+          ev.filter(col("event_id") % 2 === 0), keys, ordering),
+        rewrite = true)
+      graft.lake.DeltaLog.readAt(s, root, 0L).withColumn("version", lit(1L))
         .unionByName(
-          graft.lake.Snapshots.readAt(s, root, 2L).withColumn("version", lit(2L)))
+          graft.lake.DeltaLog.readAt(s, root, 1L).withColumn("version", lit(2L)))
     }),
-    // Snapshot APPEND commits — the Bronze-cadence path: two append
-    // commits into a fresh versioned table, current read = the union of
-    // both batches via the manifest's shared file list (the second
-    // commit references the first's physical files; nothing is copied
-    // or rewritten). Gates the file-sharing manifest read end-to-end.
+    // APPEND commits — the Bronze-cadence path: two append commits
+    // into a fresh Delta table, current read = the union of both
+    // batches (the second commit only adds files; nothing is copied or
+    // rewritten). Gates the append-only log replay end-to-end.
     "q129_snapshot_append" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
       val root = freshScratch("q129")
-      graft.lake.Snapshots.commitAppendSlices(root,
+      graft.lake.DeltaLog.commitFlatSlices(s, root,
         ev.withColumn("__slice", col("event_id") % 3),
         "__slice", Seq(0, 1))
-      graft.lake.Snapshots.read(s, root)
+      graft.lake.DeltaLog.read(s, root)
     }),
     // N-gram novelty: fraction of each doc's distinct 3-shingles with
     // corpus df = 1 — the uniqueness signal curation ranks by (inverse
@@ -1280,30 +1281,24 @@ object SparkEntry {
     "q132_curation_funnel" -> ((s, d) =>
       TextStats.curationFunnel(Tables.documentsSpread(s, d), "doc_id",
         "text", "lang", "en", 40)),
-    // Snapshot change-data-feed: two rewrite commits whose states
-    // overlap (v1 = %3 keys, v2 = %2 keys with doubled values), then
-    // diff(v1, v2) classifies every key as insert (%2 not %3), delete
-    // (%3 not %2) or update (%6 with value ≠ 0) with before/after
-    // images — the Delta CDF analog, derived after the fact.
+    // Snapshot change rows: two rewrite commits whose states overlap
+    // (v0 = %3 keys, v1 = %2 keys with doubled values), then diff(v0, v1)
+    // classifies every key as insert (%2 not %3), delete (%3 not %2) or
+    // update (%6 with value ≠ 0) with before/after images — the Delta
+    // CDF analog, derived after the fact from two readAt versions.
     "q133_snapshot_diff" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
       val root = freshScratch("q133")
-      // The two version rewrites compute from independent inputs (the
-      // %3 and %2 slices of the SAME source state) — stage both writes
-      // concurrently and commit versions in order (guide §2.6, the q241
-      // overlap; read parity with sequential commits is spec-pinned).
-      graft.lake.Snapshots.commitRewrites(root)(Seq(
-        tmp =>
-          graft.lake.Upsert.latestWins(ev.filter(col("event_id") % 3 === 0),
-              Seq("event_id"), Seq("event_ts_us", "event_id"))
-            .write.mode("overwrite").parquet(tmp),
-        tmp =>
-          graft.lake.Upsert.latestWins(ev.filter(col("event_id") % 2 === 0),
-              Seq("event_id"), Seq("event_ts_us", "event_id"))
-            .withColumn("value", col("value") * 2)
-            .write.mode("overwrite").parquet(tmp)))
-      graft.lake.Snapshots.diff(s, root, 1L, 2L, Seq("event_id"))
+      graft.lake.DeltaLog.commitFlat(s, root,
+        graft.lake.Upsert.latestWins(ev.filter(col("event_id") % 3 === 0),
+          Seq("event_id"), Seq("event_ts_us", "event_id")))
+      graft.lake.DeltaLog.commitFlat(s, root,
+        graft.lake.Upsert.latestWins(ev.filter(col("event_id") % 2 === 0),
+            Seq("event_id"), Seq("event_ts_us", "event_id"))
+          .withColumn("value", col("value") * 2),
+        rewrite = true)
+      graft.lake.DeltaLog.diff(s, root, 0L, 1L, Seq("event_id"))
     }),
     // SemDeDup (cluster-then-dedup): q71's centroid assignment, then
     // within-cluster pairwise cosine — drop any vector 0.3-close to a
@@ -1313,10 +1308,10 @@ object SparkEntry {
       Similarity.semDedup(Tables.embeddingsSpread(s, d),
         Similarity.centroidsOf(
           Tables.embeddings(s, d).filter(col("vec_id") < 8)), 0.3)),
-    // Snapshot DML: DELETE WHERE then UPDATE WHERE on a versioned
-    // table, current read gated relationally — delete keeps
-    // null-evaluating rows (three-valued logic), update doubles
-    // purchase values against the ORIGINAL row. Dedup tiebreak note
+    // Versioned DML: DELETE WHERE then UPDATE WHERE on a Delta table,
+    // each a filtered rewrite commit, current read gated relationally —
+    // delete keeps null-evaluating rows (three-valued logic), update
+    // doubles purchase values against the ORIGINAL row. Dedup tiebreak note
     // (applies to q128/q133/q136 too): event_id is UNIQUE in the driver
     // fixture (verified 10000/10000), so the latest-wins window is an
     // idempotence formality with one row per partition — if a future
@@ -1327,15 +1322,19 @@ object SparkEntry {
         .select(col("event_id"), col("event_type"), col("event_ts_us"),
           col("value"))
       val root = freshScratch("q135")
-      graft.lake.Snapshots.commitRewrite(root)(tmp =>
+      graft.lake.DeltaLog.commitFlat(s, root,
         graft.lake.Upsert.latestWins(ev.filter(col("event_id") % 3 === 0),
-            Seq("event_id"), Seq("event_ts_us", "event_id"))
-          .write.mode("overwrite").parquet(tmp))
-      graft.lake.Snapshots.deleteWhere(s, root, col("value") < 50.0)
-      graft.lake.Snapshots.updateWhere(s, root,
-        col("event_type") === "purchase",
-        Map("value" -> col("value") * 2))
-      graft.lake.Snapshots.read(s, root)
+          Seq("event_id"), Seq("event_ts_us", "event_id")))
+      graft.lake.DeltaLog.commitFlat(s, root,
+        graft.lake.DeltaLog.read(s, root)
+          .filter(!coalesce(col("value") < 50.0, lit(false))),
+        rewrite = true)
+      graft.lake.DeltaLog.commitFlat(s, root,
+        graft.lake.DeltaLog.read(s, root).withColumn("value",
+          when(coalesce(col("event_type") === "purchase", lit(false)),
+            col("value") * 2).otherwise(col("value"))),
+        rewrite = true)
+      graft.lake.DeltaLog.read(s, root)
     }),
     // OPTIMIZE ZORDER row-preservation: the Z-clustered rewrite commit
     // must carry exactly the pre-optimize rows (hash-matched).
@@ -1344,13 +1343,12 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"), col("event_ts_us"))
         .filter(col("user_id").isNotNull)
       val root = freshScratch("q136")
-      graft.lake.Snapshots.commitRewrite(root)(tmp =>
+      graft.lake.DeltaLog.commitFlat(s, root,
         graft.lake.Upsert.latestWins(ev, Seq("event_id"),
-            Seq("event_ts_us", "event_id"))
-          .write.mode("overwrite").parquet(tmp))
-      graft.lake.Snapshots.optimizeSnapshot(s, root, "event_id", "user_id",
+          Seq("event_ts_us", "event_id")))
+      graft.lake.DeltaLog.optimizeZOrder(s, root, "event_id", "user_id",
         bits = 10, numFiles = 8)
-      graft.lake.Snapshots.read(s, root)
+      graft.lake.DeltaLog.read(s, root)
     }),
     // Duplicated-span detection (exact-substring dedup at shingle
     // granularity, Lee et al. 2022): positions whose trigram shingle
@@ -1931,23 +1929,19 @@ object SparkEntry {
         col("y_fp") - coalesce(lag(col("y_fp"), 1).over(w), lit(0L)))
       Analytics.maxDrawdown(flows, Seq("series"), "day", "day", "flow")
     }),
-    // Delta-protocol round trip: three snapshot commits (two appends,
-    // then a rewrite that retires every prior file) are synced into a
-    // public-format _delta_log, and EVERY version is read back via the
-    // Delta log alone — manifest never consulted. Gates the writer's
-    // add/remove/metaData emission and the reader's multi-commit replay
-    // (graft version g ↔ delta commit g−1).
+    // Delta-protocol round trip: three commits (two appends, then a
+    // rewrite that retires every prior file), and EVERY version is read
+    // back through the log. Gates the writer's add/remove/metaData
+    // emission and the reader's multi-commit replay.
     "q205_delta_log_roundtrip" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
       val root = freshScratch("q205")
-      graft.lake.Snapshots.commitAppendSlices(root,
+      graft.lake.DeltaLog.commitFlatSlices(s, root,
         ev.withColumn("__slice", col("event_id") % 3),
         "__slice", Seq(0, 1))
-      graft.lake.Snapshots.commitRewrite(root)(tmp =>
-        ev.filter(col("event_id") % 2 === 0)
-          .write.mode("overwrite").parquet(tmp))
-      graft.lake.DeltaLog.sync(s, root)
+      graft.lake.DeltaLog.commitFlat(s, root,
+        ev.filter(col("event_id") % 2 === 0), rewrite = true)
       Seq(0L, 1L, 2L).map(v =>
         graft.lake.DeltaLog.readAt(s, root, v)
           .withColumn("delta_version", lit(v)))
@@ -2175,11 +2169,11 @@ object SparkEntry {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
       val root = freshScratch("q246")
-      graft.lake.Snapshots.commitAppendSlices(root,
+      graft.lake.DeltaLog.commitFlatSlices(s, root,
         ev.withColumn("__slice",
           pmod(coalesce(col("event_id"), lit(0L)), lit(5))),
-        "__slice", Seq(0, 1, 2, 3, 4))
-      graft.lake.DeltaLog.sync(s, root, checkpointInterval = 2)
+        "__slice", Seq(0, 1, 2, 3, 4),
+        configuration = Map("delta.checkpointInterval" -> "2"))
       (0L to 3L).foreach(v => java.nio.file.Files.delete(
         java.nio.file.Paths.get(root, "_delta_log", f"$v%020d.json")))
       graft.lake.DeltaLog.read(s, root)
@@ -2210,11 +2204,10 @@ object SparkEntry {
     // one level further up the stack.
     "q251_delta_stats_count" -> ((s, d) => {
       val root = freshScratch("q251")
-      graft.lake.Snapshots.commitAppendSlices(root,
+      graft.lake.DeltaLog.commitFlatSlices(s, root,
         Tables.events(s, d).withColumn("__slice",
           pmod(coalesce(col("event_id"), lit(0L)), lit(2))),
         "__slice", Seq(0, 1))
-      graft.lake.DeltaLog.sync(s, root)
       graft.lake.DeltaLog.statsCount(s, root).select(col("n_rows"))
     }),
     // Delta data skipping: four appends with DISJOINT event_id ranges,
@@ -2225,13 +2218,12 @@ object SparkEntry {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
       val root = freshScratch("q252")
-      graft.lake.Snapshots.commitAppendSlices(root,
+      graft.lake.DeltaLog.commitFlatSlices(s, root,
         ev.filter(col("event_id") >= 0L).withColumn("__slice",
           when(col("event_id") < 2500L, 0)
             .when(col("event_id") < 5000L, 1)
             .when(col("event_id") < 7500L, 2).otherwise(3)),
         "__slice", Seq(0, 1, 2, 3))
-      graft.lake.DeltaLog.sync(s, root)
       graft.lake.DeltaLog.readWhereLong(s, root, "event_id", 3000L, 6000L)
     }),
     // SCC size histogram over the q248 graph: (size, n_sccs) — the
@@ -2246,11 +2238,10 @@ object SparkEntry {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
       val root = freshScratch("q255")
-      graft.lake.Snapshots.commitAppendSlices(root,
+      graft.lake.DeltaLog.commitFlatSlices(s, root,
         ev.withColumn("__slice",
           pmod(coalesce(col("event_id"), lit(0L)), lit(3))),
         "__slice", Seq(0, 1, 2))
-      graft.lake.DeltaLog.sync(s, root)
       graft.lake.DeltaLog.updateWhereLong(s, root, "event_id", 2000L, 4000L,
         Map("value" -> lit(0.0)))
       graft.lake.DeltaLog.read(s, root)
@@ -2262,11 +2253,10 @@ object SparkEntry {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
       val root = freshScratch("q256")
-      graft.lake.Snapshots.commitAppendSlices(root,
+      graft.lake.DeltaLog.commitFlatSlices(s, root,
         ev.withColumn("__slice",
           pmod(coalesce(col("event_id"), lit(0L)), lit(3))),
         "__slice", Seq(0, 1, 2))
-      graft.lake.DeltaLog.sync(s, root)
       graft.lake.DeltaLog.readAppendsSince(s, root, 0L)
     }),
     // Copy-on-write DELETE with file skipping: whole events committed
@@ -2278,11 +2268,10 @@ object SparkEntry {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
       val root = freshScratch("q253")
-      graft.lake.Snapshots.commitAppendSlices(root,
+      graft.lake.DeltaLog.commitFlatSlices(s, root,
         ev.withColumn("__slice",
           pmod(coalesce(col("event_id"), lit(0L)), lit(3))),
         "__slice", Seq(0, 1, 2))
-      graft.lake.DeltaLog.sync(s, root)
       graft.lake.DeltaLog.deleteWhereLong(s, root, "event_id", 3000L, 6000L)
       graft.lake.DeltaLog.read(s, root)
     }),
@@ -2326,11 +2315,10 @@ object SparkEntry {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
       val root = freshScratch("q264")
-      graft.lake.Snapshots.commitAppendSlices(root,
+      graft.lake.DeltaLog.commitFlatSlices(s, root,
         ev.withColumn("__slice",
           pmod(coalesce(col("event_id"), lit(0L)), lit(3))),
         "__slice", Seq(0, 1, 2))
-      graft.lake.DeltaLog.sync(s, root)
       graft.lake.DeltaLog.deleteWhereLong(s, root, "event_id", 3000L, 6000L)
       graft.lake.DeltaLog.updateWhereLong(s, root, "event_id", 100L, 200L,
         Map("value" -> lit(0.0)))
@@ -3692,11 +3680,10 @@ object SparkEntry {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
       val root = freshScratch("q260")
-      graft.lake.Snapshots.commitAppendSlices(root,
+      graft.lake.DeltaLog.commitFlatSlices(s, root,
         ev.withColumn("__slice",
           pmod(coalesce(col("event_id"), lit(0L)), lit(3))),
         "__slice", Seq(0, 1, 2))
-      graft.lake.DeltaLog.sync(s, root)
       graft.lake.DeltaLog.deleteWhereLongDV(s, root, "event_id", 3000L, 6000L)
       graft.lake.DeltaLog.deleteWhereLongDV(s, root, "event_id", 8000L, 8500L)
       graft.lake.DeltaLog.read(s, root)
@@ -4036,18 +4023,19 @@ object SparkEntry {
     "q224_functional_dependency" -> ((s, d) =>
       graft.quality.Checks.functionalDependencyReport(
         Tables.orders(s, d), Seq("o_custkey"), "o_orderstatus")),
-    // Metadata-only COUNT(*): two snapshot commits, then the footer-sum
-    // count — gated against the real COUNT(*) over the same rows.
+    // Metadata-only COUNT(*): two append commits, then the footer-sum
+    // count over the active files — gated against the real COUNT(*)
+    // over the same rows.
     "q225_metadata_count" -> ((s, d) => {
       val root = freshScratch("q225")
       // pmod+coalesce: the two commits must be a TOTAL partition of
       // events, because the oracle is COUNT(*) over the WHOLE table —
       // bare `% 2 === i` loses NULL and negative-odd ids (q235's hole).
-      graft.lake.Snapshots.commitAppendSlices(root,
+      graft.lake.DeltaLog.commitFlatSlices(s, root,
         Tables.events(s, d).withColumn("__slice",
           pmod(coalesce(col("event_id"), lit(0L)), lit(2))),
         "__slice", Seq(0, 1))
-      graft.lake.Snapshots.countFast(s, root).select(col("n_rows"))
+      graft.lake.DeltaLog.countFast(s, root).select(col("n_rows"))
     }),
     // Wald SPRT over the event stream (H0: purchase rate 0.18 vs H1:
     // 0.22, alpha .05 / beta .2): the full integer LLR trajectory with
@@ -4989,7 +4977,7 @@ object SparkEntry {
          SELECT 'insert', CAST(3 AS BIGINT), count(*),
            CAST(sum(price) AS DECIMAL(18,2))
          FROM li WHERE s = 2""",
-    // q264: after restore to version 2 (the fully-synced base) every
+    // q264: after restore to version 2 (the fully-committed base) every
     // DML is rolled back — the feed is simply the whole table.
     "q264_delta_restore" ->
       """SELECT event_id, epoch_us(ts) AS event_ts_us, value

@@ -12,68 +12,57 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
-/** Delta Lake transaction-log interop for [[Snapshots]] tables — the
-  * format bridge to the reference's storage layer (its tables are Delta:
-  * analytics/spark/jobs/silver_orders.py:72-84,
-  * analytics/spark/conf/spark-defaults.conf:5-10). Two halves, both
-  * speaking the PUBLIC Delta protocol (delta.io PROTOCOL.md):
+/** graft's versioned-table format: the Delta Lake transaction log
+  * (delta.io PROTOCOL.md), the storage layer of the reference (its
+  * tables are Delta: analytics/spark/jobs/silver_orders.py:72-84,
+  * analytics/spark/conf/spark-defaults.conf:5-10). Every versioned
+  * table graft writes is a `_delta_log` of 0-based JSON commits beside
+  * its parquet files, so an EXTERNAL Delta reader (Spark+delta, duckdb
+  * delta_scan, delta-rs) opens it directly and graft opens theirs.
   *
-  *  - '''Writer''' ([[sync]]): materializes `_delta_log/%020d.json`
-  *    commits alongside the graft manifest log, one per committed
-  *    snapshot version, so an EXTERNAL Delta reader (Spark+delta,
-  *    duckdb delta_scan, delta-rs) can open the table directly. Graft
-  *    version v maps to Delta commit v−1 (Delta logs are 0-based).
-  *    Commit 0 carries `protocol` (reader 1 / writer 2 — no table
-  *    features used) and `metaData` (id, parquet format, Spark-JSON
-  *    `schemaString`); later commits re-emit `metaData` only when the
-  *    snapshot schema actually changed (the Delta schema-evolution
-  *    idiom). File deltas come from manifest set-difference: a rewrite
-  *    commit emits `remove` for every parent file plus `add` for its
-  *    own; an append emits only `add`s — so the Delta view of history
-  *    is file-for-file the manifest view. Every `checkpointInterval`
-  *    commits sync also writes a classic parquet CHECKPOINT
-  *    (`%020d.checkpoint.parquet`, one row per action) plus the
-  *    `_last_checkpoint` pointer, so external readers of a long log
-  *    replay one parquet file + a JSON tail instead of every commit —
-  *    exactly what Spark's own Delta writer does every 10 commits.
+  *  - '''Writers''' commit `protocol`/`metaData` at version 0 and then
+  *    one JSON commit per operation: appends and rewrites
+  *    ([[commitFlat]], [[commitPartitioned]], the one-scan
+  *    [[commitFlatSlices]]/[[commitPartitionedSlices]] backfills), DML
+  *    ([[deleteWhereLong]], [[updateWhereLong]], [[mergeKey]], deletion
+  *    vectors), maintenance ([[optimizeZOrder]], [[compactPartitioned]],
+  *    [[vacuum]]) and [[restore]]. A rewrite emits `remove` for every
+  *    file it retires; `metaData` is re-emitted only when the schema or
+  *    table configuration changes. The commit point is a put-if-absent
+  *    rename of the commit file, so a writer racing another for the
+  *    same version fails loudly (blind appends reconcile and retry). A
+  *    declared `delta.checkpointInterval` writes classic parquet
+  *    CHECKPOINTS (`%020d.checkpoint.parquet` plus `_last_checkpoint`)
+  *    as the log grows, so readers of a long log replay one parquet
+  *    file and a JSON tail instead of every commit.
   *
-  *  - '''Reader''' ([[read]]/[[readAt]]): replays an externally-written
-  *    Delta log. Version resolution starts from the NEWEST complete
-  *    checkpoint at or below the requested version (single-part
-  *    `%020d.checkpoint.parquet` or multi-part
-  *    `%020d.checkpoint.%010d.%010d.parquet`; discovery is by listing,
-  *    so a stale or missing `_last_checkpoint` hint never breaks
-  *    reads), then applies the JSON commits after it — line-delimited
-  *    actions, `add` activating a file, `remove` retiring it (last
-  *    action per path wins), `metaData` carrying the schema, unknown
-  *    actions (`commitInfo`, `txn`, …) skipped. PARTITIONED tables are
-  *    honored: `metaData.partitionColumns` names columns whose values
-  *    live in each add's `partitionValues` (not in the data files); the
-  *    reader scans each partition's files with the data schema and
-  *    attaches the partition columns as typed literals, so a filter on
-  *    a partition column constant-folds per partition and PRUNES whole
-  *    scans at plan time. Scope: parquet format, relative paths,
-  *    reader protocol 1; protocol 2 with column-mapping mode none or
-  *    name (physical parquet names resolved from schema metadata);
-  *    protocol 3 when every named readerFeature is supported
-  *    (deletionVectors, timestampNtz, vacuumProtocolCheck,
-  *    v2Checkpoint, columnMapping in modes none/name).
-  *    Anything else fails loudly NAMING the missing feature rather
-  *    than returning wrong rows.
-  *
-  *  - '''Partitioned writer''' ([[commitPartitioned]]): commits a
-  *    DataFrame as a hive-laid-out partitioned Delta table (the common
-  *    shape of any real lake) — `col=value` data paths, partition
-  *    values recorded in each `add`'s `partitionValues`,
-  *    `partitionColumns` declared in `metaData`.
+  *  - '''Reader''' ([[read]]/[[readAt]]): replays the log. Version
+  *    resolution starts from the NEWEST complete checkpoint at or below
+  *    the requested version (single-part `%020d.checkpoint.parquet` or
+  *    multi-part `%020d.checkpoint.%010d.%010d.parquet`; discovery is
+  *    by listing, so a stale or missing `_last_checkpoint` hint never
+  *    breaks reads), then applies the JSON commits after it —
+  *    line-delimited actions, `add` activating a file, `remove`
+  *    retiring it (last action per path wins), `metaData` carrying the
+  *    schema, unknown actions (`commitInfo`, `txn`, …) skipped. The file
+  *    list resolves eagerly, so a returned frame is a pinned snapshot:
+  *    later commits never change what it reads, and every version stays
+  *    time-travelable until [[vacuum]] reclaims its files. PARTITIONED
+  *    tables are honored: `metaData.partitionColumns` names columns
+  *    whose values live in each add's `partitionValues` (not in the
+  *    data files); the reader attaches them as typed literals, so a
+  *    filter on a partition column PRUNES whole scans at plan time.
+  *    Scope: parquet format, relative paths, reader protocol 1;
+  *    protocol 2 with column-mapping mode none or name (physical
+  *    parquet names resolved from schema metadata); protocol 3 when
+  *    every named readerFeature is supported (deletionVectors,
+  *    timestampNtz, vacuumProtocolCheck, v2Checkpoint, columnMapping in
+  *    modes none/name). Anything else fails loudly NAMING the missing
+  *    feature rather than returning wrong rows.
   *
   * Scale posture: everything here is file-granularity metadata — one
   * JSON line (or checkpoint row) per file per commit, schema reads
   * touch parquet FOOTERS only — bounded by layout, never data size.
-  * Sync is idempotent (commits and checkpoints already on disk are
-  * never rewritten; the rename is the same atomic-move commit point the
-  * manifest uses), so it can run after every [[Snapshots]] commit or
-  * once at publish time.
   */
 object DeltaLog {
 
@@ -171,130 +160,6 @@ object DeltaLog {
     (versions(root) ++ checkpointRefs(root).map(_.version))
       .maxOption.getOrElse(-1L)
 
-  // ------------------------------------------------------------------
-  // Writer: graft manifest log → _delta_log
-  // ------------------------------------------------------------------
-
-  /** Write every missing `_delta_log` commit for `root`'s committed
-    * snapshot versions, then any due checkpoints (one per
-    * `checkpointInterval` commits, i.e. at Delta versions v where
-    * `v % interval == 0`, v > 0 — Spark's own cadence is interval 10).
-    * Returns the highest Delta version present afterwards. Idempotent:
-    * existing commit and checkpoint files are left untouched (they are
-    * immutable once renamed in, like the manifests).
-    */
-  def sync(spark: SparkSession, root: String,
-           checkpointInterval: Int = 10): Long = {
-    require(checkpointInterval >= 1,
-      s"DeltaLog.sync: checkpointInterval >= 1, got $checkpointInterval")
-    val gvs = Snapshots.versions(root)
-    require(gvs.nonEmpty, s"DeltaLog.sync: no committed snapshots at $root")
-    // Delta commits beyond the manifest mapping (graft v ↔ Delta v−1)
-    // mean DML/compaction landed directly on the Delta log — it is now
-    // the source of truth and re-syncing would resurrect removed files
-    // and skip new appends. Fail loudly instead of silently diverging.
-    // Detection is by MARKER, not by number: a DML commit can occupy
-    // exactly the version the next sync would write, so every existing
-    // commit in the mapped range must carry sync's own commitInfo.
-    require(currentVersion(root) <= gvs.max - 1,
-      s"DeltaLog.sync: the Delta log at $root has commits beyond the " +
-        "manifest mapping (direct DML/OPTIMIZE?) — the table is " +
-        "Delta-owned now; write through DeltaLog, not Snapshots+sync")
-    versions(root).foreach { dv =>
-      val lines = Files.readAllLines(logDir(root).resolve(commitName(dv)))
-        .asScala.filter(_.trim.nonEmpty)
-      val synced = lines.exists { l =>
-        val n = mapper.readTree(l)
-        n.path("commitInfo").path("operation").asText("") == "graft-sync"
-      }
-      require(synced,
-        s"DeltaLog.sync: Delta commit $dv of $root was not written by " +
-          "sync (direct DML/OPTIMIZE?) — the table is Delta-owned now; " +
-          "write through DeltaLog, not Snapshots+sync")
-    }
-    Files.createDirectories(logDir(root))
-    // Deterministic table id: stable across re-syncs of the same root.
-    val tableId = java.util.UUID.nameUUIDFromBytes(
-      ("graft-delta:" + root).getBytes("UTF-8")).toString
-    // Commits at or below the newest complete checkpoint are NOT
-    // re-materialized: their absence means retention cleanup deleted
-    // them on purpose, and rewriting them would (a) resurrect history
-    // the table owner retired and (b) stamp it with sync-time mtimes,
-    // collapsing timestamp time travel onto the sync moment.
-    val newestCp = checkpointVersions(root).map(_._1).maxOption.getOrElse(-1L)
-    var prevFiles: Seq[String] = Seq.empty
-    var prevSchema: String = null
-    gvs.foreach { gv =>
-      val dv = gv - 1
-      val files = Snapshots.manifestFiles(root, gv)
-      val schemaJson = spark.read
-        .parquet(files.map(f => Paths.get(root, f).toString): _*)
-        .schema.json
-      val target = logDir(root).resolve(commitName(dv))
-      if (!Files.exists(target) && dv > newestCp) {
-        val actions = Seq.newBuilder[JsonNode]
-        locally {
-          val ci = mapper.createObjectNode()
-          val c = ci.putObject("commitInfo")
-          c.put("operation", "graft-sync")
-          c.put("graftVersion", gv)
-          actions += ci
-        }
-        if (dv == 0L) {
-          val protocol = mapper.createObjectNode()
-          val p = protocol.putObject("protocol")
-          p.put("minReaderVersion", 1)
-          p.put("minWriterVersion", 2)
-          actions += protocol
-        }
-        if (dv == 0L || schemaJson != prevSchema)
-          actions += metaDataAction(tableId, schemaJson, Seq.empty)
-        val removed = prevFiles.filterNot(files.contains)
-        val added = files.filterNot(prevFiles.contains)
-        removed.foreach { f =>
-          val n = mapper.createObjectNode()
-          val r = n.putObject("remove")
-          r.put("path", encodePath(f))
-          r.put("deletionTimestamp", Snapshots.commitTimeMillis(root, gv))
-          r.put("dataChange", true)
-          actions += n
-        }
-        added.foreach { f =>
-          actions += addActionNode(root, f, Map.empty, dataChange = true,
-            spark.sparkContext.hadoopConfiguration)
-        }
-        writeCommitFile(root, dv, actions.result(), operation = "WRITE",
-          opTimestamp = Snapshots.commitTimeMillis(root, gv))
-        // Timestamp time travel resolves from commit-file mtimes (Delta's
-        // own mechanism): stamp the commit with the MANIFEST commit time,
-        // not sync wall-clock — otherwise one late sync collapses every
-        // version onto the sync moment and versionAsOf mis-resolves.
-        Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(
-            Snapshots.commitTimeMillis(root, gv)))
-      }
-      prevFiles = files
-      prevSchema = schemaJson
-    }
-    val cur = currentVersion(root)
-    val have = checkpointVersions(root).map(_._1).toSet
-    (checkpointInterval.toLong to cur by checkpointInterval.toLong)
-      .filterNot(have)
-      .foreach(v => checkpoint(spark, root, v))
-    cur
-  }
-
-  /** Commit-file write with put-if-absent semantics: the fully-written
-    * temp file is renamed WITHOUT `REPLACE_EXISTING`/`ATOMIC_MOVE`, so a
-    * concurrent or stale writer racing for the same version fails with
-    * `FileAlreadyExistsException` instead of silently clobbering
-    * committed history (the Delta commit protocol's requirement). The
-    * same-filesystem rename underneath is still atomic; what NIO cannot
-    * give is a fully race-free compare-and-rename (no renameat2
-    * NOREPLACE), so multi-process writers to one table additionally
-    * need external coordination — single-writer-per-table is the
-    * documented deployment here.
-    */
   /** [[writeCommitFileOnce]] plus bounded optimistic-concurrency
     * reconciliation (`retryDataConflicts = true`): when the version is
     * taken by a concurrent writer, a commit that is a BLIND APPEND
@@ -312,7 +177,6 @@ object DeltaLog {
   private[lake] def writeCommitFile(root: String, dv: Long,
                                     actions: Seq[JsonNode],
                                     operation: String = null,
-                                    opTimestamp: Long = -1L,
                                     ictStart: Boolean = false,
                                     retryDataConflicts: Boolean = false,
                                     maxAttempts: Int = 5): Long = {
@@ -321,8 +185,7 @@ object DeltaLog {
     while (true) {
       attempt += 1
       try {
-        writeCommitFileOnce(root, v, actions, operation, opTimestamp,
-          ictStart)
+        writeCommitFileOnce(root, v, actions, operation, ictStart)
         return v
       } catch {
         case e: IllegalStateException
@@ -357,15 +220,21 @@ object DeltaLog {
     v // unreachable
   }
 
+  /** Commit-file write with put-if-absent semantics: the fully-written
+    * temp file is hard-linked into place (renamed WITHOUT
+    * `REPLACE_EXISTING`/`ATOMIC_MOVE` where links are unsupported), so a
+    * concurrent or stale writer racing for the same version fails with
+    * `FileAlreadyExistsException` instead of silently clobbering
+    * committed history (the Delta commit protocol's requirement).
+    */
   private def writeCommitFileOnce(root: String, dv: Long,
                                   actions: Seq[JsonNode],
                                   operation: String = null,
-                                  opTimestamp: Long = -1L,
                                   ictStart: Boolean = false): Unit = {
     // In-commit timestamps (the `inCommitTimestamp` writer feature):
     // once a table carries one, every successor commit continues the
     // MONOTONIC chain — max(wall clock, predecessor + 1) — so
-    // timestamp time travel survives file-mtime churn (copies, syncs,
+    // timestamp time travel survives file-mtime churn (copies and
     // retention rewrites). The chain is self-perpetuating: presence on
     // the predecessor commit is the signal, so no caller but the
     // creating one (`ictStart`) needs to know. If the predecessor JSON
@@ -403,8 +272,7 @@ object DeltaLog {
       else {
         val n = mapper.createObjectNode()
         val ci = n.putObject("commitInfo")
-        ci.put("timestamp",
-          if (opTimestamp >= 0L) opTimestamp else System.currentTimeMillis())
+        ci.put("timestamp", System.currentTimeMillis())
         if (operation != null) ci.put("operation", operation)
         ict.foreach(ci.put("inCommitTimestamp", _))
         ci.put("engineInfo", "graft-deltalog")
@@ -2984,14 +2852,14 @@ object DeltaLog {
     new java.net.URI(null, null, rel, null).getRawPath
 
   /** Read the table AT Delta commit `version`, via the Delta log alone
-    * (the graft manifest is never consulted) — both the external-table
-    * ingest path and the round-trip check that [[sync]]'s log means
-    * what the manifest meant. The schema is pinned from the log's
-    * `metaData`, so an empty active set still returns the declared
-    * shape (and mixed-footer unions resolve the Delta way: declared
-    * schema wins). For a PARTITIONED table, partition-column values
-    * come from each add's `partitionValues` and are attached as typed
-    * literals per partition — a filter on a partition column
+    * — the same path for graft-written and externally-written tables.
+    * The file list resolves HERE, eagerly, so the frame is a pinned
+    * snapshot that later commits cannot change. The schema is pinned
+    * from the log's `metaData`, so an empty active set still returns
+    * the declared shape (and mixed-footer unions resolve the Delta way:
+    * declared schema wins). For a PARTITIONED table, partition-column
+    * values come from each add's `partitionValues` and are attached as
+    * typed literals per partition — a filter on a partition column
     * constant-folds to false on non-matching partitions and the
     * optimizer drops their scans entirely (partition pruning; pinned
     * by DeltaLogSpec via `inputFiles`).
@@ -3185,6 +3053,48 @@ object DeltaLog {
     }
     spark.createDataFrame(Seq((counts.sum, counts.size.toLong)))
       .toDF("n_rows", "n_files")
+  }
+
+  /** Metadata-only COUNT(*) from parquet FOOTERS — the count a lakehouse
+    * answers without touching a data page and without trusting the
+    * log's `stats` (which external writers may omit): each active file's
+    * footer carries exact per-row-group row counts, so the snapshot's
+    * total is the sum over the files [[filesAt]] lists, minus each
+    * file's deletion-vector cardinality. Footer reads are DISTRIBUTED
+    * (Hadoop FileSystem API, so the same code walks HDFS/S3); bytes
+    * read ∝ footer size, not table size. q225 gates the sum against
+    * the real COUNT(*).
+    *
+    * Output is ONE row: (n_rows, n_files).
+    */
+  def countFast(spark: SparkSession, root: String): DataFrame = {
+    import spark.implicits._
+    val st = replay(spark, root, currentVersion(root))
+    val files = st.files.map(_._1)
+    val deleted = files.flatMap(st.fileDvs.get).map(_.cardinality).sum
+    // Ship the SESSION'S hadoopConfiguration to the tasks (resolved
+    // key/value pairs, rebuilt into a Configuration per task) — a bare
+    // `new Configuration()` inside the task loses S3 credentials / FS
+    // settings.
+    val hadoopProps: Array[(String, String)] =
+      spark.sparkContext.hadoopConfiguration.iterator().asScala
+        .map(e => (e.getKey, e.getValue)).toArray
+    val confBc = spark.sparkContext.broadcast(hadoopProps)
+    spark.createDataset(files.map(f => resolvePath(root, f).toString))
+      .repartition(math.max(1, math.min(files.size,
+        spark.sparkContext.defaultParallelism)))
+      .map { f =>
+        val conf = new org.apache.hadoop.conf.Configuration(false)
+        confBc.value.foreach { case (k, v) => conf.set(k, v) }
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new org.apache.hadoop.fs.Path(f), conf)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+        finally r.close()
+      }
+      .toDF("__n")
+      .agg((org.apache.spark.sql.functions.coalesce(sum(col("__n")),
+        lit(0L)) - lit(deleted)).as("n_rows"), count(lit(1)).as("n_files"))
   }
 
   /** Data-skipping read: rows of the current snapshot with `column` in
@@ -3682,11 +3592,6 @@ object DeltaLog {
     * partitions drop with zero data IO (partition values must then be
     * numeric). No-op (no commit) when nothing matches. Returns the
     * table version afterwards.
-    *
-    * Ownership: direct DML makes the Delta log the table's source of
-    * truth — on a [[Snapshots]]-synced root, [[sync]] refuses to run
-    * afterwards (by design) and `Snapshots.vacuum` must not run (its
-    * manifests no longer cover the live file set).
     */
   def deleteWhereLong(spark: SparkSession, root: String, column: String,
                       lo: Long, hi: Long): Long = {
@@ -4697,6 +4602,57 @@ object DeltaLog {
       st.partitionColumns)
   }
 
+  /** Change rows between two committed versions, derived after the fact
+    * from the two snapshots (no write-path capture, so it works on any
+    * table, CDF-enabled or not): one row per key whose state changed
+    * from `fromVersion` to `toVersion`, classified `insert` (key only in
+    * `to`), `delete` (only in `from`) or `update` (in both, any non-key
+    * column differing null-safely), with the full before/after column
+    * images (`old_*` / `new_*`). Unchanged keys are absent. Both
+    * snapshots must be key-unique on `keys` (the MERGE table contract)
+    * and share a column set.
+    *
+    * Scale posture: ONE full-outer shuffle join on the key — the
+    * minimum any snapshot comparison can do — with every classification
+    * predicate row-local (IS DISTINCT FROM, codegen'd).
+    */
+  def diff(spark: SparkSession, root: String, fromVersion: Long,
+           toVersion: Long, keys: Seq[String]): DataFrame = {
+    require(keys.nonEmpty, "DeltaLog.diff: at least one key column")
+    val a = readAt(spark, root, fromVersion)
+    val b = readAt(spark, root, toVersion)
+    require(a.columns.sorted.sameElements(b.columns.sorted),
+      s"DeltaLog.diff: column sets differ (${a.columns.mkString(",")} vs " +
+        s"${b.columns.mkString(",")}) — diff a schema change via readAt directly")
+    val vals = a.columns.filterNot(keys.contains).toSeq
+    // Side presence comes from an explicit marker, NOT from key
+    // null-ness: a null-keyed row present only in `from` would otherwise
+    // read as "insert" (all join-side columns are null after a full
+    // outer miss, keys included). The join itself is null-SAFE so
+    // null-keyed rows pair up instead of cross-emitting.
+    val aa = a.select(a.columns.map(c => col(c).as(s"__a_$c")).toIndexedSeq
+      :+ lit(true).as("__a_present"): _*)
+    val bb = b.select(b.columns.map(c => col(c).as(s"__b_$c")).toIndexedSeq
+      :+ lit(true).as("__b_present"): _*)
+    val cond = keys.map(k => aa(s"__a_$k") <=> bb(s"__b_$k")).reduce(_ && _)
+    val inA = col("__a_present").isNotNull
+    val inB = col("__b_present").isNotNull
+    val changed = vals.map(c =>
+      !(col(s"__a_$c") <=> col(s"__b_$c"))).reduceOption(_ || _)
+      .getOrElse(lit(false))
+    aa.join(bb, cond, "full_outer")
+      .withColumn("change_type",
+        when(!inA, lit("insert"))
+          .when(!inB, lit("delete"))
+          .when(changed, lit("update")))
+      .filter(col("change_type").isNotNull)
+      .select(col("change_type") +:
+        keys.map(k => org.apache.spark.sql.functions.coalesce(
+          col(s"__b_$k"), col(s"__a_$k")).as(k)) ++:
+        vals.flatMap(c => Seq(col(s"__a_$c").as(s"old_$c"),
+          col(s"__b_$c").as(s"new_$c"))): _*)
+  }
+
   /** The CHANGE DATA FEED of versions `(sinceVersion, toVersion]` —
     * every row-level change with `_change_type` (`insert` / `delete` /
     * `update_preimage` / `update_postimage`), `_commit_version` and
@@ -5236,10 +5192,7 @@ object DeltaLog {
     * declares none collects with ZERO retention here (the dev-friendly
     * local form — Delta's managed default is `interval 1 week`, which
     * deployments that want the grace period should declare on the
-    * table). Refuses tables that also carry a graft [[Snapshots]]
-    * `_log` (their manifests reference history files this walk cannot
-    * see; vacuum those through [[Snapshots.vacuum]]). Returns the
-    * deleted table-relative paths.
+    * table). Returns the deleted table-relative paths.
     */
   def vacuum(spark: SparkSession, root: String): Seq[String] = {
     val st = replay(spark, root, currentVersion(root))
@@ -5337,9 +5290,6 @@ object DeltaLog {
   private def vacuumImpl(spark: SparkSession, root: String,
                          retentionMs: Long, delete: Boolean): Seq[String] = {
     require(retentionMs >= 0L, s"DeltaLog.vacuum: retentionMs >= 0")
-    require(!Files.isDirectory(Paths.get(root, "_log")),
-      s"DeltaLog.vacuum: $root is a graft Snapshots table — vacuum " +
-        "through Snapshots.vacuum so manifests stay readable")
     val st = replay(spark, root, currentVersion(root))
     val active = st.files.map(_._1).toSet
     // DV sidecars referenced by an ACTIVE descriptor stay; the rest are
@@ -6338,34 +6288,6 @@ object DeltaLog {
         }
     }
 
-  /** OPTIMIZE for a partitioned Delta table: every partition holding
-    * more than one active file is rewritten as ONE file, committed as
-    * `remove` + `add` actions with `dataChange = false` — the
-    * protocol's compaction idiom (readers know no rows changed, so
-    * streaming consumers skip the commit). Partitions already at one
-    * file are untouched; if nothing needs compacting no commit is
-    * written. Returns the table's version afterwards.
-    *
-    * Scale posture: ONE job for every fat partition — the DV/clone/
-    * mapping-aware assembly reads live rows and a dynamic-partitioned
-    * write lands one file per partition directory (hash repartition on
-    * the partition columns), so compacting 10 k fat partitions is one
-    * scan + one write, never 10 k sequential jobs; the commit is one
-    * JSON line per touched file. DV-carrying files compact to their
-    * LIVE rows with the DV cleared (Delta's OPTIMIZE semantics) and
-    * shallow-cloned absolute references MATERIALIZE under this table's
-    * root — the clone-localization pass. One-file-per-partition is the
-    * local-scale simplification of OPTIMIZE's bin-to-target-size — a
-    * partition bigger than a sane file would bin into
-    * ceil(bytes/target) files instead.
-    * (Unpartitioned [[Snapshots]] tables compact through their own
-    * OPTIMIZE; this is the partitioned-layout sibling.)
-    *
-    * `targetRowsPerFile` bins each partition's output at the target
-    * inside the same job (a 100 TB partition must not serialize into
-    * one file); binned runs are maintenance passes, not no-op
-    * idempotent like the default one-file shape.
-    */
   /** `OPTIMIZE … ZORDER BY (x, y)` through the Delta log: the current
     * active set rewrites Z-clustered ([[Layout.zorderWrite]] —
     * Morton-keyed range partitioning + in-partition sort, one shuffle)
@@ -6491,6 +6413,34 @@ object DeltaLog {
     v + 1
   }
 
+  /** OPTIMIZE for a partitioned Delta table: every partition holding
+    * more than one active file is rewritten as ONE file, committed as
+    * `remove` + `add` actions with `dataChange = false` — the
+    * protocol's compaction idiom (readers know no rows changed, so
+    * streaming consumers skip the commit). Partitions already at one
+    * file are untouched; if nothing needs compacting no commit is
+    * written. Returns the table's version afterwards.
+    *
+    * Scale posture: ONE job for every fat partition — the DV/clone/
+    * mapping-aware assembly reads live rows and a dynamic-partitioned
+    * write lands one file per partition directory (hash repartition on
+    * the partition columns), so compacting 10 k fat partitions is one
+    * scan + one write, never 10 k sequential jobs; the commit is one
+    * JSON line per touched file. DV-carrying files compact to their
+    * LIVE rows with the DV cleared (Delta's OPTIMIZE semantics) and
+    * shallow-cloned absolute references MATERIALIZE under this table's
+    * root — the clone-localization pass. One-file-per-partition is the
+    * local-scale simplification of OPTIMIZE's bin-to-target-size — a
+    * partition bigger than a sane file would bin into
+    * ceil(bytes/target) files instead.
+    * (Unpartitioned tables compact through [[optimizeZOrder]]; this is
+    * the partitioned-layout sibling.)
+    *
+    * `targetRowsPerFile` bins each partition's output at the target
+    * inside the same job (a 100 TB partition must not serialize into
+    * one file); binned runs are maintenance passes, not no-op
+    * idempotent like the default one-file shape.
+    */
   def compactPartitioned(spark: SparkSession, root: String,
                          targetRowsPerFile: Option[Long] = None): Long = {
     val v = currentVersion(root)
@@ -6498,7 +6448,7 @@ object DeltaLog {
     requireWritableMapping(st, "compactPartitioned")
     require(st.partitionColumns.nonEmpty,
       "DeltaLog.compactPartitioned: table is not partitioned " +
-        "(use Snapshots OPTIMIZE for flat tables)")
+        "(use optimizeZOrder for flat tables)")
     requireWritable(st, "compactPartitioned")
     val schema = st.schema.getOrElse(throw new IllegalStateException(
       s"DeltaLog.compactPartitioned: no metaData in $root log"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.lake.Upsert
+import graft.lake.{DeltaLog, Upsert}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -38,27 +38,34 @@ object SilverStream {
       }
       .start()
 
-  /** [[mergeStream]] into a SNAPSHOT-VERSIONED table
-    * ([[graft.lake.Snapshots]]): each micro-batch commits one new
-    * version via the ordering-first merge, so concurrent readers keep
-    * their pinned snapshot while the stream lands (the isolation the
-    * in-place swap cannot give) and every micro-batch boundary is time
-    * travelable. Exactly-once lands on the SAME idempotence contract as
+  /** [[mergeStream]] into a versioned Delta table
+    * ([[graft.lake.DeltaLog]]): each micro-batch commits one new Delta
+    * version — the ordering-first merge over the current snapshot,
+    * committed as a rewrite — so concurrent readers keep their pinned
+    * snapshot while the stream lands (the isolation the in-place swap
+    * cannot give) and every micro-batch boundary is time travelable.
+    * Exactly-once lands on the SAME idempotence contract as
     * [[mergeStream]] — a replayed micro-batch commits a version with
     * identical content (the table state is a pure function of the
     * delivered record set), so the extra replay version is
-    * content-equal, never wrong; vacuum trims the history.
+    * content-equal, never wrong; vacuum reclaims the retired files.
     */
-  def mergeStreamSnapshots(bronze: DataFrame, root: String, checkpoint: String,
-                           keys: Seq[String], ordering: Seq[String],
-                           trigger: Trigger = BronzeIngest.DefaultTrigger): StreamingQuery =
+  def mergeStreamDelta(bronze: DataFrame, root: String, checkpoint: String,
+                       keys: Seq[String], ordering: Seq[String],
+                       trigger: Trigger = BronzeIngest.DefaultTrigger): StreamingQuery =
     bronze.writeStream
       .outputMode(OutputMode.Update)
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.lake.Snapshots.mergeIntoSnapshot(batch.sparkSession, root,
-          batch, keys, ordering, orderingFirst = true)
+        val spark = batch.sparkSession
+        val merged =
+          if (DeltaLog.currentVersion(root) < 0L)
+            Upsert.latestWins(batch, keys, ordering)
+          else Upsert.mergeLatest(DeltaLog.read(spark, root), batch, keys,
+            ordering)
+        DeltaLog.commitFlat(spark, root, merged, rewrite = true,
+          mergeSchema = true)
         ()
       }
       .start()

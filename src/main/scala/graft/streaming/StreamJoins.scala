@@ -65,7 +65,8 @@ object StreamJoins {
   }
 
   /** Watermarked streaming dedup — the streaming twin of the W1/P3 batch
-    * dedup window (`Upsert.dedupLatest`): keeps the FIRST arrival of each
+    * dedup window ([[graft.pipeline.Medallion.dedupLatest]], built on
+    * [[graft.lake.Upsert.latestWins]]): keeps the FIRST arrival of each
     * key and drops re-deliveries that land within the watermark horizon.
     * Seen-key state is evicted once older than the watermark, so memory
     * is bounded by rate × `delay`, not by history; a duplicate arriving

@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-/** Delta-protocol interop contracts: sync writes a log an external Delta
-  * reader could open (protocol/metaData/add/remove JSON actions, 0-based
-  * commits, removes on rewrite, metaData re-emitted only on schema
-  * change), and the reader replays externally-written checkpointless
+/** Delta-protocol contracts: the writers produce a log an external
+  * Delta reader could open (protocol/metaData/add/remove JSON actions,
+  * 0-based commits, removes on rewrite, metaData re-emitted only on
+  * schema change), pinned readers and time travel survive later
+  * commits, and the reader replays externally-written checkpointless
   * logs (unknown actions skipped, URL-encoded paths, last-action-wins,
   * declared schema pinned) while refusing what it can't honor.
   */
@@ -27,34 +28,14 @@ class DeltaLogSpec extends SparkSpec {
     Files.readAllLines(Paths.get(root, "_delta_log", f"$v%020d.json"))
       .asScala.toSeq.filter(_.trim.nonEmpty)
 
-  test("sync round-trip: delta read matches snapshot read at every version") {
-    val root = freshRoot()
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((3L, "c")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    Snapshots.commitRewrite(root)(tmp =>
-      Seq((9L, "z")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    val dv = DeltaLog.sync(spark, root)
-    assert(dv == 2L, "graft v3 must map to delta commit 2")
-    assert(DeltaLog.versions(root) == Seq(0L, 1L, 2L))
-    // graft version g ↔ delta version g−1, row-for-row
-    (1L to 3L).foreach { g =>
-      assert(rows(DeltaLog.readAt(spark, root, g - 1)) ==
-        rows(Snapshots.readAt(spark, root, g)), s"version $g")
-    }
-    assert(rows(DeltaLog.read(spark, root)) == Set((9L, "z")))
-  }
-
   test("commit 0 carries protocol+metaData; rewrite emits removes; appends never do") {
     val root = freshRoot()
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((1L, "a")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((2L, "b")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    Snapshots.commitRewrite(root)(tmp =>
-      Seq((3L, "c")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    DeltaLog.sync(spark, root)
+    DeltaLog.commitFlat(spark, root,
+      Seq((1L, "a")).toDF("k", "v").coalesce(1))
+    DeltaLog.commitFlat(spark, root,
+      Seq((2L, "b")).toDF("k", "v").coalesce(1))
+    DeltaLog.commitFlat(spark, root,
+      Seq((3L, "c")).toDF("k", "v").coalesce(1), rewrite = true)
     val c0 = commitLines(root, 0L)
     assert(c0.exists(_.contains("\"protocol\"")), c0.mkString("|"))
     assert(c0.exists(_.contains("\"minReaderVersion\":1")), c0.mkString("|"))
@@ -71,27 +52,6 @@ class DeltaLogSpec extends SparkSpec {
     val c2 = commitLines(root, 2L)
     assert(c2.count(_.contains("\"remove\"")) == 2, c2.mkString("|"))
     assert(c2.count(_.contains("\"add\"")) == 1)
-  }
-
-  test("sync is idempotent and incremental; schema change re-emits metaData") {
-    val root = freshRoot()
-    Snapshots.commitRewrite(root)(tmp =>
-      Seq((1L, "a")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    DeltaLog.sync(spark, root)
-    val before = commitLines(root, 0L)
-    // widen the schema in a second commit; sync again (covers both the
-    // no-op re-sync of commit 0 and the incremental commit 1)
-    Snapshots.commitRewrite(root)(tmp =>
-      Seq((1L, "a", 7L)).toDF("k", "v", "extra")
-        .coalesce(1).write.parquet(tmp))
-    DeltaLog.sync(spark, root)
-    assert(commitLines(root, 0L) == before, "existing commits are immutable")
-    val c1 = commitLines(root, 1L)
-    assert(c1.exists(_.contains("\"metaData\"")), "schema change must re-emit metaData")
-    assert(c1.exists(_.contains("extra")), c1.mkString("|"))
-    // reader honors each version's declared schema
-    assert(DeltaLog.readAt(spark, root, 0L).columns.toSeq == Seq("k", "v"))
-    assert(DeltaLog.readAt(spark, root, 1L).columns.toSeq == Seq("k", "v", "extra"))
   }
 
   // ----- externally-written logs -----
@@ -235,19 +195,20 @@ class DeltaLogSpec extends SparkSpec {
 
   // ----- checkpoints -----
 
-  test("sync writes a checkpoint every interval commits + _last_checkpoint; " +
+  test("a declared checkpointInterval writes checkpoints + _last_checkpoint; " +
     "reader survives a compacted JSON prefix") {
     val root = freshRoot()
-    (1 to 5).foreach { i =>
-      Snapshots.commitAppend(root)(tmp =>
-        Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    }
-    DeltaLog.sync(spark, root, checkpointInterval = 2)
-    // Delta versions 0..4; checkpoints due at 2 and 4.
-    assert(DeltaLog.checkpointVersions(root).map(_._1) == Seq(2L, 4L))
+    DeltaLog.commitFlatSlices(spark, root,
+      (1 to 5).map(i => (i.toLong, s"v$i", i)).toDF("k", "v", "__slice")
+        .coalesce(1),
+      "__slice", 1 to 5,
+      configuration = Map("delta.checkpointInterval" -> "2"))
+    // Delta versions 0..4; a checkpoint lands whenever the tail lags
+    // the newest one by the interval: at 1 and 3.
+    assert(DeltaLog.checkpointVersions(root).map(_._1) == Seq(1L, 3L))
     val lc = Files.readAllLines(
       Paths.get(root, "_delta_log", "_last_checkpoint")).asScala.mkString
-    assert(lc.contains("\"version\":4"), lc)
+    assert(lc.contains("\"version\":3"), lc)
     val full = rows(DeltaLog.read(spark, root))
     assert(full == (1 to 5).map(i => (i.toLong, s"v$i")).toSet)
     // Simulate a checkpoint-compacted log: delete JSON commits 0..3.
@@ -256,59 +217,20 @@ class DeltaLogSpec extends SparkSpec {
     assert(rows(DeltaLog.read(spark, root)) == full,
       "replay must start from the newest checkpoint, not refuse")
     // Time travel to the checkpointed version itself also works...
-    assert(rows(DeltaLog.readAt(spark, root, 4L)) ==
-      (1 to 5).map(i => (i.toLong, s"v$i")).toSet)
+    assert(rows(DeltaLog.readAt(spark, root, 3L)) ==
+      (1 to 4).map(i => (i.toLong, s"v$i")).toSet)
     // ...but a version BELOW every usable start is a loud refusal.
     val e = intercept[IllegalArgumentException](
-      DeltaLog.readAt(spark, root, 1L))
+      DeltaLog.readAt(spark, root, 0L))
     assert(e.getMessage.contains("does not exist"), e.getMessage)
-    // Idempotent re-sync after compaction must not rewrite history:
-    // retention deleted commits 0..3 ON PURPOSE (the checkpoint covers
-    // them) — re-materializing them would stamp fresh mtimes and
-    // collapse timestamp time travel onto the sync moment.
-    DeltaLog.sync(spark, root, checkpointInterval = 2)
-    assert(rows(DeltaLog.read(spark, root)) == full)
-    (0L to 3L).foreach(v => assert(
-      !Files.exists(Paths.get(root, "_delta_log", f"$v%020d.json")),
-      s"re-sync must not re-materialize retention-deleted commit $v"))
-  }
-
-  test("sync stamps commit mtimes from manifest commit times, so " +
-    "versionAsOf on a late-synced table resolves real history") {
-    val root = freshRoot()
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((1L, "a")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    Thread.sleep(30)
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((2L, "b")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    Thread.sleep(30)
-    // sync happens long after both commits — wall-clock NOW must not
-    // leak into the commit files' mtimes
-    val syncStart = System.currentTimeMillis()
-    DeltaLog.sync(spark, root)
-    (0L to 1L).foreach { dv =>
-      val mt = Files.getLastModifiedTime(
-        Paths.get(root, "_delta_log", f"$dv%020d.json")).toMillis
-      val manifest = Snapshots.versions(root)
-      assert(mt < syncStart,
-        s"commit $dv mtime $mt reads as sync wall-clock (>= $syncStart)")
-    }
-    val t0 = Files.getLastModifiedTime(
-      Paths.get(root, "_delta_log", f"${0L}%020d.json")).toMillis
-    val t1 = Files.getLastModifiedTime(
-      Paths.get(root, "_delta_log", f"${1L}%020d.json")).toMillis
-    assert(t0 < t1, s"commit mtimes must preserve history order ($t0 vs $t1)")
-    assert(DeltaLog.versionAsOf(root, t0) == 0L)
-    assert(DeltaLog.versionAsOf(root, t1) == 1L)
   }
 
   test("DML that matches no rows commits nothing, even when stats " +
     "overlap; commit-version conflicts are loud") {
     val root = freshRoot()
     // one file with k in {1, 10}: stats overlap [4,6] but no row matches
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((1L, "a"), (10L, "j")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    DeltaLog.sync(spark, root)
+    DeltaLog.commitFlat(spark, root,
+      Seq((1L, "a"), (10L, "j")).toDF("k", "v").coalesce(1))
     val v0 = DeltaLog.currentVersion(root)
     assert(DeltaLog.deleteWhereLong(spark, root, "k", 4L, 6L) == v0,
       "no-match DELETE must not commit")
@@ -346,16 +268,16 @@ class DeltaLogSpec extends SparkSpec {
     // 3 commits x 4 files, then a rewrite that retires them all and a
     // final append — adds, removes, and checkpoint state all in play
     (1 to 3).foreach { i =>
-      Snapshots.commitAppend(root)(tmp =>
+      DeltaLog.commitFlat(spark, root,
         (1 to 8).map(j => (i * 100L + j, s"v$i-$j")).toDF("k", "v")
-          .repartition(4).write.mode("overwrite").parquet(tmp))
+          .repartition(4))
     }
-    Snapshots.commitRewrite(root)(tmp =>
+    DeltaLog.commitFlat(spark, root,
       (1 to 6).map(j => (900L + j, s"w$j")).toDF("k", "v")
-        .repartition(3).write.mode("overwrite").parquet(tmp))
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((999L, "tail")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    DeltaLog.sync(spark, root, checkpointInterval = 3)
+        .repartition(3), rewrite = true)
+    DeltaLog.commitFlat(spark, root,
+      Seq((999L, "tail")).toDF("k", "v").coalesce(1))
+    DeltaLog.checkpoint(spark, root, 3L)
     val driverFiles = DeltaLog.filesAt(spark, root, 4L).toSet
     val driverRows = rows(DeltaLog.read(spark, root))
     val driverCount = DeltaLog.statsCount(spark, root).collect()
@@ -381,10 +303,10 @@ class DeltaLogSpec extends SparkSpec {
   test("distributed replay keeps same-version remove+add files active: " +
     "a DV-delete + RESTORE tail matches the driver fold") {
     val root = freshRoot()
-    Snapshots.commitAppend(root)(tmp =>
+    DeltaLog.commitFlat(spark, root,
       (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v")
-        .repartition(4).write.mode("overwrite").parquet(tmp))
-    val dv0 = DeltaLog.sync(spark, root)
+        .repartition(4))
+    val dv0 = DeltaLog.currentVersion(root)
     DeltaLog.checkpoint(spark, root, dv0)
     // tail beyond the checkpoint: a DV delete commits remove+add of the
     // SAME path in one version (retire the bare entry, re-add with the
@@ -410,10 +332,9 @@ class DeltaLogSpec extends SparkSpec {
   test("deleteWhereLongDV: soft-delete via deletion vectors — no data " +
     "rewrite, merged on repeat, protocol upgraded, time travel intact") {
     val root = freshRoot()
-    Snapshots.commitAppend(root)(tmp =>
+    DeltaLog.commitFlat(spark, root,
       (1L to 20L).map(k => (k, s"v$k")).toDF("k", "v")
-        .coalesce(1).write.parquet(tmp))
-    DeltaLog.sync(spark, root)
+        .coalesce(1))
     val dataFilesBefore = DeltaLog.filesAt(spark, root, 0L)
     val bytesBefore = dataFilesBefore
       .map(f => Files.size(Paths.get(root, f))).sum
@@ -475,11 +396,10 @@ class DeltaLogSpec extends SparkSpec {
 
   test("restore rolls back DML in one commit; history stays travelable") {
     val root = freshRoot()
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((3L, "c")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    DeltaLog.sync(spark, root)
+    DeltaLog.commitFlat(spark, root,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1))
+    DeltaLog.commitFlat(spark, root,
+      Seq((3L, "c")).toDF("k", "v").coalesce(1))
     assert(DeltaLog.deleteWhereLong(spark, root, "k", 2L, 3L) == 2L)
     assert(rows(DeltaLog.read(spark, root)) == Set((1L, "a")))
     assert(DeltaLog.restore(spark, root, 1L) == 3L)
@@ -2378,12 +2298,11 @@ class DeltaLogSpec extends SparkSpec {
   test("footer stats emit only order-preserving min/max: ASCII strings " +
     "yes, non-ASCII strings and annotated types no") {
     val root = freshRoot()
-    Snapshots.commitAppend(root)(tmp =>
+    DeltaLog.commitFlat(spark, root,
       Seq((1L, "apple", "café", BigDecimal("1.50")),
         (2L, "zebra", "über", BigDecimal("2.75")))
         .toDF("k", "ascii_s", "uni_s", "dec")
-        .coalesce(1).write.parquet(tmp))
-    DeltaLog.sync(spark, root)
+        .coalesce(1))
     val statsLine = commitLines(root, 0L).find(_.contains("\"stats\"")).get
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val add = mapper.readTree(statsLine).path("add")
@@ -2551,10 +2470,9 @@ class DeltaLogSpec extends SparkSpec {
     import java.nio.file.attribute.FileTime
     val root = freshRoot()
     (1 to 3).foreach { i =>
-      Snapshots.commitAppend(root)(tmp =>
-        Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1).write.parquet(tmp))
+      DeltaLog.commitFlat(spark, root,
+        Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1))
     }
-    DeltaLog.sync(spark, root)
     // pin commit mtimes to known instants
     Seq(0L -> 1000000L, 1L -> 2000000L, 2L -> 3000000L).foreach { case (v, t) =>
       Files.setLastModifiedTime(
@@ -2596,10 +2514,10 @@ class DeltaLogSpec extends SparkSpec {
     // three appends with DISJOINT k ranges -> three files with disjoint
     // min/max stats
     Seq(1L to 10L, 11L to 20L, 21L to 30L).foreach { r =>
-      Snapshots.commitAppend(root)(tmp =>
-        r.map(i => (i, s"v$i")).toDF("k", "v").coalesce(1).write.parquet(tmp))
+      DeltaLog.commitFlat(spark, root,
+        r.map(i => (i, s"v$i")).toDF("k", "v").coalesce(1))
     }
-    DeltaLog.sync(spark, root, checkpointInterval = 2)
+    DeltaLog.checkpoint(spark, root, 2L)
     // stats JSON shape on the adds
     val c0 = commitLines(root, 0L)
     assert(c0.exists(l => l.contains("\"stats\"") &&
@@ -2631,12 +2549,11 @@ class DeltaLogSpec extends SparkSpec {
     val root = freshRoot()
     // three files with disjoint k ranges + one NULL-k row in the middle
     Seq(Seq(1L, 2L, 3L), Seq(10L, 11L, 12L), Seq(20L, 21L, 22L)).foreach { ks =>
-      Snapshots.commitAppend(root)(tmp =>
+      DeltaLog.commitFlat(spark, root,
         (ks.map(k => (Option(k), s"v$k")) ++
           (if (ks.head == 10L) Seq((None: Option[Long], "vnull")) else Nil))
-          .toDF("k", "v").coalesce(1).write.parquet(tmp))
+          .toDF("k", "v").coalesce(1))
     }
-    DeltaLog.sync(spark, root)
     val filesBefore = DeltaLog.filesAt(spark, root, DeltaLog.currentVersion(root))
     // [10, 11] overlaps only the middle file; first/last untouched
     val v = DeltaLog.deleteWhereLong(spark, root, "k", 10L, 11L)
@@ -2658,11 +2575,10 @@ class DeltaLogSpec extends SparkSpec {
     "rows pass through; schema pinned; partition SET refused") {
     val root = freshRoot()
     Seq(Seq(1L, 2L, 3L), Seq(10L, 11L, 12L)).foreach { ks =>
-      Snapshots.commitAppend(root)(tmp =>
+      DeltaLog.commitFlat(spark, root,
         ks.map(k => (k, s"v$k")).toDF("k", "v")
-          .coalesce(1).write.parquet(tmp))
+          .coalesce(1))
     }
-    DeltaLog.sync(spark, root)
     val filesBefore = DeltaLog.filesAt(spark, root, DeltaLog.currentVersion(root))
     val v = DeltaLog.updateWhereLong(spark, root, "k", 10L, 11L,
       Map("v" -> lit("UPDATED")))
@@ -2688,10 +2604,9 @@ class DeltaLogSpec extends SparkSpec {
   test("readAppendsSince returns only files activated after the version") {
     val root = freshRoot()
     (1 to 3).foreach { i =>
-      Snapshots.commitAppend(root)(tmp =>
-        Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1).write.parquet(tmp))
+      DeltaLog.commitFlat(spark, root,
+        Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1))
     }
-    DeltaLog.sync(spark, root)
     assert(rows(DeltaLog.readAppendsSince(spark, root, 0L)) ==
       Set((2L, "v2"), (3L, "v3")))
     assert(rows(DeltaLog.readAppendsSince(spark, root, 2L)) == Set.empty)
@@ -2724,11 +2639,10 @@ class DeltaLogSpec extends SparkSpec {
   test("readAppendsSince skips an external OPTIMIZE that retains DV " +
     "descriptors on its dataChange=false adds") {
     val root = freshRoot()
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((3L, "c")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    DeltaLog.sync(spark, root)
+    DeltaLog.commitFlat(spark, root,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1))
+    DeltaLog.commitFlat(spark, root,
+      Seq((3L, "c")).toDF("k", "v").coalesce(1))
     // layout-only rewrite by an external engine: the compacted file
     // keeps its deletion vector, dataChange=false on both actions — a
     // logical no-op an append tail must SKIP (refusing DVs applies only
@@ -2745,10 +2659,10 @@ class DeltaLogSpec extends SparkSpec {
   test("a fully checkpoint-compacted log (zero JSON commits) still reads") {
     val root = freshRoot()
     (1 to 3).foreach { i =>
-      Snapshots.commitAppend(root)(tmp =>
-        Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1).write.parquet(tmp))
+      DeltaLog.commitFlat(spark, root,
+        Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1))
     }
-    DeltaLog.sync(spark, root, checkpointInterval = 2)
+    DeltaLog.checkpoint(spark, root, 2L)
     val full = rows(DeltaLog.read(spark, root))
     // retention cleanup deletes EVERY JSON commit; checkpoint at 2 is
     // the whole log now
@@ -2757,18 +2671,6 @@ class DeltaLogSpec extends SparkSpec {
     assert(DeltaLog.currentVersion(root) == 2L,
       "currentVersion must see the checkpoint")
     assert(rows(DeltaLog.read(spark, root)) == full)
-  }
-
-  test("sync refuses a table whose Delta log gained direct DML commits") {
-    val root = freshRoot()
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    DeltaLog.sync(spark, root)
-    DeltaLog.deleteWhereLong(spark, root, "k", 1L, 1L) // Delta-owned now
-    Snapshots.commitAppend(root)(tmp =>
-      Seq((3L, "c")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    val e = intercept[IllegalArgumentException](DeltaLog.sync(spark, root))
-    assert(e.getMessage.contains("Delta-owned"), e.getMessage)
   }
 
   test("deleteWhereLong on a partition column is metadata-only partition drop") {
@@ -2788,7 +2690,7 @@ class DeltaLogSpec extends SparkSpec {
   }
 
   test("vacuum deletes files the current version no longer references; " +
-    "current snapshot intact; Snapshots-backed tables refused") {
+    "current snapshot intact") {
     val root = freshRoot()
     DeltaLog.commitPartitioned(spark, root,
       Seq((1L, "a", "x"), (2L, "b", "y")).toDF("k", "v", "p"), Seq("p"))
@@ -2804,13 +2706,6 @@ class DeltaLogSpec extends SparkSpec {
     }
     // a second vacuum finds nothing
     assert(DeltaLog.vacuum(spark, root).isEmpty)
-    // graft Snapshots tables are refused
-    val root2 = freshRoot()
-    Snapshots.commitAppend(root2)(tmp =>
-      Seq((1L, "a")).toDF("k", "v").coalesce(1).write.parquet(tmp))
-    DeltaLog.sync(spark, root2)
-    val e = intercept[IllegalArgumentException](DeltaLog.vacuum(spark, root2))
-    assert(e.getMessage.contains("Snapshots"), e.getMessage)
   }
 
   test("txn watermarks make commitPartitioned exactly-once, surviving " +
@@ -3593,5 +3488,208 @@ class DeltaLogSpec extends SparkSpec {
       s"ICT chain must be strictly monotonic: $icts")
     // content equals the source regardless of routing
     assert(DeltaLog.read(spark, root).count() == 200L)
+  }
+
+  // ----- versioned-table contracts -----
+
+  /** MERGE as one rewrite commit: latest-wins over the current snapshot
+    * plus `batch` (a fresh table takes the deduplicated batch).
+    */
+  private def mergeCommit(root: String,
+                          batch: org.apache.spark.sql.DataFrame): Long = {
+    val merged =
+      if (DeltaLog.currentVersion(root) < 0L)
+        Upsert.latestWins(batch, Seq("k"), Seq("ts", "k"))
+      else Upsert.merge(DeltaLog.read(spark, root), batch, Seq("k"),
+        Seq("ts", "k"))
+    DeltaLog.commitFlat(spark, root, merged, rewrite = true)
+  }
+
+  test("pinned reader keeps its snapshot while a merge commits underneath") {
+    val root = freshRoot()
+    mergeCommit(root, Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "v", "ts"))
+    val pinned = DeltaLog.read(spark, root) // file list resolved NOW
+    // a second merge rewrites the table as v1; v0's files are untouched
+    mergeCommit(root, Seq((2L, "B", 2L), (3L, "c", 2L)).toDF("k", "v", "ts"))
+    assert(rows(pinned) == Set((1L, "a"), (2L, "b")),
+      "reader pinned before the merge must still see the pre-merge rows")
+    assert(rows(DeltaLog.read(spark, root)) ==
+      Set((1L, "a"), (2L, "B"), (3L, "c")))
+  }
+
+  test("time travel: readAt replays every committed state; history lists versions") {
+    val root = freshRoot()
+    val v0 = mergeCommit(root, Seq((1L, "a", 1L)).toDF("k", "v", "ts"))
+    val v1 = mergeCommit(root,
+      Seq((1L, "A", 2L), (2L, "b", 2L)).toDF("k", "v", "ts"))
+    assert((v0, v1) == (0L, 1L))
+    assert(DeltaLog.versions(root) == Seq(0L, 1L))
+    assert(rows(DeltaLog.readAt(spark, root, 0L)) == Set((1L, "a")))
+    assert(rows(DeltaLog.readAt(spark, root, 1L)) == Set((1L, "A"), (2L, "b")))
+    intercept[IllegalArgumentException](DeltaLog.readAt(spark, root, 2L))
+  }
+
+  test("idempotent re-delivery: merging the same batch twice is a no-op state") {
+    val root = freshRoot()
+    val batch = Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "v", "ts")
+    mergeCommit(root, batch)
+    mergeCommit(root, batch)
+    assert(rows(DeltaLog.read(spark, root)) == Set((1L, "a"), (2L, "b")))
+    assert(DeltaLog.currentVersion(root) == 1L) // two commits, same state
+  }
+
+  test("diff: insert/delete/update classification with null-safe column compare") {
+    val root = freshRoot()
+    // v0: keys 1..4; v1: 1 unchanged, 2 value-changed, 3 null→value
+    // (must classify update, not unchanged), 4 deleted, 5 inserted
+    DeltaLog.commitFlat(spark, root,
+      Seq((1L, Some("a")), (2L, Some("b")), (3L, None), (4L, Some("d")))
+        .toDF("k", "v"))
+    DeltaLog.commitFlat(spark, root,
+      Seq((1L, Some("a")), (2L, Some("B")), (3L, Some("c")), (5L, Some("e")))
+        .toDF("k", "v"), rewrite = true)
+    val got = DeltaLog.diff(spark, root, 0L, 1L, Seq("k"))
+      .collect().map(r => (r.getString(0), r.getLong(1),
+        Option(r.getString(2)), Option(r.getString(3)))).toSet
+    assert(got == Set(
+      ("update", 2L, Some("b"), Some("B")),
+      ("update", 3L, None, Some("c")),
+      ("delete", 4L, Some("d"), None),
+      ("insert", 5L, None, Some("e"))), s"got $got")
+    // mismatched column sets refuse loudly
+    DeltaLog.commitFlat(spark, root,
+      Seq((1L, "a", 9L)).toDF("k", "v", "extra"), rewrite = true,
+      mergeSchema = true)
+    intercept[IllegalArgumentException](
+      DeltaLog.diff(spark, root, 1L, 2L, Seq("k")))
+  }
+
+  test("diff: a null-keyed row classifies by PRESENCE, not key null-ness") {
+    val root = freshRoot()
+    def df(rows: Seq[(Option[Long], String)]) = rows.toDF("k", "v")
+    // v0 has a null-keyed row; v1 does not → that row is a DELETE (the
+    // presence-marker contract; key-null inference would invert it to
+    // an insert). The null keys in both versions pair null-safely.
+    DeltaLog.commitFlat(spark, root, df(Seq(Some(1L) -> "a", None -> "x")))
+    DeltaLog.commitFlat(spark, root,
+      df(Seq(Some(1L) -> "a", Some(2L) -> "b")), rewrite = true)
+    val got = DeltaLog.diff(spark, root, 0L, 1L, Seq("k"))
+      .collect().map(r => (r.getString(0),
+        Option(r.get(1)).map(_.toString).getOrElse("null"),
+        Option(r.getString(2)), Option(r.getString(3)))).toSet
+    assert(got == Set(
+      ("delete", "null", Some("x"), None),
+      ("insert", "2", None, Some("b"))), s"got $got")
+    // and a null-keyed row present in BOTH versions with a changed value
+    // is an update, not an insert/delete pair
+    DeltaLog.commitFlat(spark, root,
+      df(Seq(Some(1L) -> "a", None -> "y")), rewrite = true)
+    val got2 = DeltaLog.diff(spark, root, 0L, 2L, Seq("k"))
+      .collect().map(r => (r.getString(0),
+        Option(r.getString(2)), Option(r.getString(3)))).toSet
+    assert(got2 == Set(("update", Some("x"), Some("y"))), s"got $got2")
+  }
+
+  test("countFast: footer-sum count equals the real count, zero data read") {
+    val root = freshRoot()
+    DeltaLog.commitFlat(spark, root, spark.range(0, 1234)
+      .selectExpr("id AS k", "CAST(id AS STRING) AS v", "id AS ts"))
+    DeltaLog.commitFlat(spark, root, spark.range(5000, 5432)
+      .selectExpr("id AS k", "CAST(id AS STRING) AS v", "id AS ts"))
+    val r = DeltaLog.countFast(spark, root).head()
+    assert(r.getLong(0) == 1234L + 432L)
+    assert(r.getLong(1) >= 2L) // at least one file per commit
+    assert(r.getLong(0) == DeltaLog.read(spark, root).count())
+    // deletion-vector cardinalities come off the footer sum
+    DeltaLog.deleteWhereLongDV(spark, root, "k", 0L, 9L)
+    assert(DeltaLog.countFast(spark, root).head().getLong(0) ==
+      DeltaLog.read(spark, root).count())
+  }
+
+  test("commitFlatSlices: each slice version keeps its predecessors' files") {
+    val src = (1L to 300L).map(i => (i, s"v$i")).toDF("k", "v")
+    val seqRoot = freshRoot()
+    (0 until 3).foreach(i => DeltaLog.commitFlat(spark, seqRoot,
+      src.filter(pmod(col("k"), lit(3)) === i)))
+    val slcRoot = freshRoot()
+    DeltaLog.commitFlatSlices(spark, slcRoot,
+      src.withColumn("__slice", pmod(col("k"), lit(3))),
+      "__slice", Seq(0, 1, 2))
+    (1L to 2L).foreach { v =>
+      // append semantics: version v adds files and removes none
+      val prev = DeltaLog.filesAt(spark, slcRoot, v - 1L).toSet
+      val cur = DeltaLog.filesAt(spark, slcRoot, v).toSet
+      assert(prev.subsetOf(cur) && cur.size > prev.size, s"version $v")
+      assert(commitLines(slcRoot, v).forall(!_.contains("\"remove\"")))
+      assert(rows(DeltaLog.readAt(spark, slcRoot, v)) ==
+        rows(DeltaLog.readAt(spark, seqRoot, v)), s"version $v")
+    }
+    assert(DeltaLog.countFast(spark, slcRoot).head().getLong(0) == 300L)
+  }
+
+  test("compaction is a new version with identical rows; v0 stays readable") {
+    val root = freshRoot()
+    DeltaLog.commitFlat(spark, root,
+      spark.range(0L, 1000L).select(col("id").as("k"),
+        concat(lit("v"), col("id")).as("v")).repartition(8),
+      rewrite = true)
+    val before = rows(DeltaLog.read(spark, root))
+    // flat-table compaction is OPTIMIZE into one file
+    val v1 = DeltaLog.optimizeZOrder(spark, root, "k", "k", 6, 1)
+    assert(v1 == 1L)
+    assert(rows(DeltaLog.read(spark, root)) == before)
+    assert(rows(DeltaLog.readAt(spark, root, 0L)) == before)
+    assert(DeltaLog.filesAt(spark, root, 1L).size <
+      DeltaLog.filesAt(spark, root, 0L).size)
+  }
+
+  test("optimizeZOrder on a flat rewrite keeps rows, history, and skips files") {
+    val root = freshRoot()
+    DeltaLog.commitFlat(spark, root,
+      spark.range(0L, 4096L).select(col("id").as("k"), col("id").as("v"),
+        pmod(col("id") * 37L, lit(64L)).as("x"),
+        pmod(col("id") * 101L, lit(64L)).as("y")).repartition(8),
+      rewrite = true)
+    val before = DeltaLog.read(spark, root).collect().map(_.toString).sorted.toSeq
+    val v1 = DeltaLog.optimizeZOrder(spark, root, "x", "y", 6, 8)
+    assert(v1 == 1L)
+    assert(DeltaLog.read(spark, root).collect().map(_.toString).sorted.toSeq
+      == before, "optimize must not change rows")
+    assert(DeltaLog.readAt(spark, root, 0L).collect().length == 4096,
+      "pre-optimize version must stay readable")
+    // the clustered layout actually skips: a selective x-range opens
+    // fewer files than the table has
+    val opened = DeltaLog.readWhereLong(spark, root, "x", 0L, 8L)
+      .inputFiles.length
+    assert(opened < 8, s"no skipping benefit: $opened of 8 files overlap x<=8")
+  }
+
+  test("random rewrite/append sequences track the in-memory model at " +
+    "every version (two seeds)") {
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select(col("k"), col("v")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    for (seed <- Seq(7, 23)) {
+      val rnd = new scala.util.Random(seed)
+      val root = freshRoot()
+      // model: committed version -> expected multiset of (k, v)
+      var model = Map.empty[Long, Seq[(Long, Long)]]
+      for (step <- 1 to 10) {
+        val batch =
+          Seq.fill(1 + rnd.nextInt(5))((rnd.nextInt(6).toLong, rnd.nextLong(1000)))
+        val parent = DeltaLog.currentVersion(root)
+        val rewrite = rnd.nextInt(3) == 0
+        val v = DeltaLog.commitFlat(spark, root, batch.toDF("k", "v"),
+          rewrite = rewrite)
+        val base = if (rewrite || parent < 0L) Seq.empty else model(parent)
+        model += v -> (base ++ batch).sorted
+        assert(DeltaLog.versions(root) == model.keys.toSeq.sorted,
+          s"seed $seed step $step: version list diverged")
+        model.foreach { case (mv, expected) =>
+          assert(rowsOf(DeltaLog.readAt(spark, root, mv)) == expected,
+            s"seed $seed step $step: version $mv content diverged")
+        }
+      }
+    }
   }
 }

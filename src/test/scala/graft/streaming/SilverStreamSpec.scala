@@ -50,14 +50,14 @@ class SilverStreamSpec extends SparkSpec {
       s"latest-wins merge violated: $rows")
   }
 
-  test("mergeStreamSnapshots: per-batch versions, pinned reader survives, replay content-equal") {
-    import graft.lake.Snapshots
-    val dir = Files.createTempDirectory("graft-silver-snap").toString
+  test("mergeStreamDelta: per-batch versions, pinned reader survives, replay content-equal") {
+    import graft.lake.DeltaLog
+    val dir = Files.createTempDirectory("graft-silver-delta").toString
     val root = s"$dir/tbl"
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[Ev]
-    val q = SilverStream.mergeStreamSnapshots(input.toDF(), root, s"$dir/ckpt",
+    val q = SilverStream.mergeStreamDelta(input.toDF(), root, s"$dir/ckpt",
       keys = Seq("event_id"), ordering = Seq("event_ts_us", "event_id"),
       trigger = Trigger.ProcessingTime(0))
     val batch1 = Seq(
@@ -65,20 +65,20 @@ class SilverStreamSpec extends SparkSpec {
       ev(2, "purchase", 20.0, "2024-01-01 01:01:00"))
     input.addData(batch1)
     q.processAllAvailable()
-    val v1 = Snapshots.currentVersion(root)
-    val pinned = Snapshots.read(spark, root) // resolve file list NOW
+    val v1 = DeltaLog.currentVersion(root)
+    val pinned = DeltaLog.read(spark, root) // resolve file list NOW
     // second micro-batch: stale replay of key 1 + newer key 2
     input.addData(batch1.take(1) :+ ev(2, "purchase", 25.0, "2024-01-01 01:05:00"))
     q.processAllAvailable()
     q.stop()
     def state(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
-    assert(Snapshots.currentVersion(root) == v1 + 1, "one version per micro-batch")
-    assert(state(Snapshots.read(spark, root)) == Map(1L -> 10.0, 2L -> 25.0))
+    assert(DeltaLog.currentVersion(root) == v1 + 1, "one version per micro-batch")
+    assert(state(DeltaLog.read(spark, root)) == Map(1L -> 10.0, 2L -> 25.0))
     // the reader pinned before batch 2 still sees batch-1 state
     assert(state(pinned) == Map(1L -> 10.0, 2L -> 20.0))
     // and time travel replays it
-    assert(state(Snapshots.readAt(spark, root, v1)) == Map(1L -> 10.0, 2L -> 20.0))
+    assert(state(DeltaLog.readAt(spark, root, v1)) == Map(1L -> 10.0, 2L -> 20.0))
   }
 
   test("fixture topic streamed through mergeStream + parse equals the batch silver parse") {

@@ -67,6 +67,13 @@ def main():
         only = ran
     failures = 0
     record = {}
+    # A requested query with no oracle entry is an error, not a silent
+    # skip: a mistyped gate name must not "pass".
+    for name in sorted(only - set(oracle)):
+        failures += 1
+        record[name] = {"rows_match": False, "schema_match": False,
+                        "hash_match": False, "err": "no oracle entry"}
+        print(f"ERROR {name}: no oracle entry")
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
