@@ -103,8 +103,10 @@ object Upsert {
   def mergeIntoPath(spark: org.apache.spark.sql.SparkSession, path: String,
                     source: DataFrame, keys: Seq[String], ordering: Seq[String],
                     orderingFirst: Boolean = false): Unit = {
-    mergeIntoPathGated(spark, path, source, keys, ordering, orderingFirst)(_ => Nil)
-    ()
+    // No gate reads the merge, so the write is its only consumer and
+    // computes it once — no persist.
+    val merged = mergedWith(spark, path, source, keys, ordering, orderingFirst)
+    atomicSwapWrite(path)(tmp => merged.write.mode(SaveMode.Overwrite).parquet(tmp))
   }
 
   /** [[mergeIntoPath]] with a pre-commit QUALITY GATE: `gate` sees the
@@ -118,16 +120,11 @@ object Upsert {
                          source: DataFrame, keys: Seq[String],
                          ordering: Seq[String], orderingFirst: Boolean = false)
                         (gate: DataFrame => Seq[String]): Seq[String] = {
-    recover(path)
-    val p = Paths.get(path)
-    val merged =
-      (if (Files.exists(p))
-        mergeImpl(spark.read.parquet(path), source, keys, ordering, orderingFirst)
-      else latestWins(source, keys, ordering))
-      // The candidate is audited (each gate check is its own action) and
-      // then written — persist it for the call so the merge computes
-      // once, not once per check plus once for the write, and so the
-      // gate provably audits the exact rows that get published.
+    val merged = mergedWith(spark, path, source, keys, ordering, orderingFirst)
+      // The candidate is audited and then written — persist it for the
+      // call so the merge computes once, not once for the gate plus once
+      // for the write, and so the gate provably audits the exact rows
+      // that get published.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val failures = gate(merged)
@@ -136,6 +133,18 @@ object Upsert {
           merged.write.mode(SaveMode.Overwrite).parquet(tmp))
       failures
     } finally merged.unpersist(blocking = false)
+  }
+
+  /** The live table at `path` (healed by [[recover]] first) merged with
+    * `source`, or `source` deduplicated if there is no table yet.
+    */
+  private def mergedWith(spark: org.apache.spark.sql.SparkSession, path: String,
+                         source: DataFrame, keys: Seq[String],
+                         ordering: Seq[String], orderingFirst: Boolean): DataFrame = {
+    recover(path)
+    if (Files.exists(Paths.get(path)))
+      mergeImpl(spark.read.parquet(path), source, keys, ordering, orderingFirst)
+    else latestWins(source, keys, ordering)
   }
 
   /** The crash-safe table swap shared by the merge and by lake

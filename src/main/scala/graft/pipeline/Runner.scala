@@ -19,7 +19,10 @@ import scala.util.control.NonFatal
   *  2. silver: latest-wins by event_id over bronze (payload and event_id
   *     break timestamp ties deterministically);
   *  3. gold: minute-bucketed sales fact, merged by bucket;
-  *  4. quality gate: the reference's dbt schema tests on the gold output.
+  *  4. quality gate: the reference's dbt schema tests, run ONCE per batch
+  *     as one aggregate on the merged gold candidate, before its swap —
+  *     the committed rows are the audited rows, so nothing is re-audited
+  *     after the commit.
   *
   * [[runManaged]] adds the reference DAG's operational posture
   * (reference: analytics/airflow/dags/rt_pipeline.py:152-154 — retries,
@@ -36,7 +39,9 @@ object Runner {
 
   /** `gold` is read fresh from `goldPath`; NOTE a subsequent run() swaps
     * the directory under any still-lazy reader, so materialize (or
-    * re-read from `goldPath`) before rerunning.
+    * re-read from `goldPath`) before rerunning. `qualityFailures` are the
+    * gate's findings on the committed candidate, audited once before the
+    * swap.
     */
   case class GoldResult(gold: DataFrame, goldPath: String,
                         qualityFailures: Seq[String])
@@ -94,15 +99,11 @@ object Runner {
       err), out)
   }
 
-  /** The dbt schema tests (models/gold/schema.yml:4-20), applied to a
-    * gold table or candidate.
+  /** The dbt schema tests (models/gold/schema.yml:4-20) on the gold
+    * candidate, in one aggregate.
     */
-  private def goldGate(gold: DataFrame): Seq[String] = Seq(
-    Checks.notNull(gold, "minute_bucket_us"),
-    Checks.unique(gold, "minute_bucket_us"),
-    Checks.notNull(gold, "gmv"),
-    Checks.notNull(gold, "paid_orders"))
-    .collect { case Left(e) => e }
+  private def goldGate(gold: DataFrame): Seq[String] =
+    Checks.keyContract(gold, "minute_bucket_us", Seq("gmv", "paid_orders"))
 
   def run(spark: SparkSession, events: DataFrame, baseDir: String): GoldResult = {
     val m = runManaged(spark, events, baseDir, retries = 0, gateAborts = false)
@@ -120,9 +121,12 @@ object Runner {
 
   /** Hardened pipeline run. `retries`/`backoffMs` govern every stage;
     * `slaMs` is the per-stage SLA (breaches are surfaced in the reports,
-    * never aborting); `gateAborts = true` (default) makes the quality
-    * gate veto the gold publish — the managed semantics — while `false`
-    * reproduces [[run]]'s report-only posture (test-after-build).
+    * never aborting). The quality gate audits the merged gold candidate
+    * once, and its failures are `qualityFailures` in both postures:
+    * `gateAborts = true` (default) makes them veto the gold publish — the
+    * managed semantics — while `false` is [[run]]'s report-only posture,
+    * which commits the candidate and reports them (test-after-build, with
+    * the test run on exactly the rows the build published).
     */
   def runManaged(spark: SparkSession, events: DataFrame, baseDir: String,
                  retries: Int = 2, backoffMs: Long = 500L,
@@ -154,29 +158,31 @@ object Runner {
     if (silver.isEmpty)
       return ManagedResult(reports.toSeq, None, Nil, Some("silver"))
 
-    // gold: the quality gate audits the merged candidate BEFORE the
-    // swap — an aborted publish leaves the gold table unmodified.
+    // gold: the quality gate audits the merged candidate once, BEFORE
+    // the swap — the committed rows are exactly the audited ones, so its
+    // failures are the table's. Under gateAborts they veto the publish
+    // and leave the gold table unmodified; otherwise they are reported.
     val goldPath = s"$baseDir/gold/fct_sales_minute"
     val gateResult = stage("gold") {
+      var failures = Seq.empty[String]
       val fct = Medallion.salesMinute(spark.read.parquet(silverPath))
-      Upsert.mergeIntoPathGated(spark, goldPath, fct,
+      val vetoed = Upsert.mergeIntoPathGated(spark, goldPath, fct,
         keys = Seq("minute_bucket_us"), ordering = Seq("minute_bucket_us")) {
-        candidate => if (gateAborts) goldGate(candidate) else Nil
+        candidate =>
+          failures = goldGate(candidate)
+          if (gateAborts) failures else Nil
       }
+      (failures, vetoed.nonEmpty)
     }
     gateResult match {
       case None =>
         ManagedResult(reports.toSeq, None, Nil, Some("gold"))
-      case Some(failures) if failures.nonEmpty =>
+      case Some((failures, true)) =>
         ManagedResult(reports.toSeq, None, failures, Some("gold"))
-      case Some(_) =>
-        val gold = spark.read.parquet(goldPath)
-        // report-only posture re-audits the committed table (run()'s
-        // historical contract); managed runs re-audit for the record —
-        // a committed table that passed as a candidate passes again.
-        val failures = goldGate(gold)
+      case Some((failures, false)) =>
         ManagedResult(reports.toSeq,
-          Some(GoldResult(gold, goldPath, failures)), failures, None)
+          Some(GoldResult(spark.read.parquet(goldPath), goldPath, failures)),
+          failures, None)
     }
   }
 }

@@ -16,14 +16,15 @@ object Checks {
 
   private val CountCap = 1000000L
 
-  private def violation(df: DataFrame, what: String): Either[String, Unit] = {
+  private def violation(df: DataFrame, what: String): Either[String, Unit] =
     // limit() bounds the scan: a check's verdict needs "zero or not", not
     // an exact count of a billion violations. Report the cap honestly.
-    val n = df.limit(CountCap.toInt).count()
+    verdict(df.limit(CountCap.toInt).count(), what)
+
+  private def verdict(n: Long, what: String): Either[String, Unit] =
     if (n == 0) Right(())
     else if (n >= CountCap) Left(s"$what: >= $CountCap violating row(s) (count capped)")
     else Left(s"$what: $n violating row(s)")
-  }
 
   /** dbt `not_null`. */
   def notNull(df: DataFrame, column: String): Either[String, Unit] =
@@ -35,6 +36,30 @@ object Checks {
       df.groupBy(columns.map(col): _*).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1),
       s"unique(${columns.mkString(",")})")
+
+  /** A primary-key contract in ONE aggregate: `not_null(key)`,
+    * `unique(key)`, then `not_null(c)` for each of `notNull`, returning
+    * the failures in that order with exactly the messages the separate
+    * [[notNull]]/[[unique]] calls produce. The frame is grouped by `key`
+    * once (NULL keys form one group, as in [[unique]]) and the groups
+    * fold into one row of duplicate-group and per-column null counts —
+    * one action where the separate calls run one each.
+    */
+  def keyContract(df: DataFrame, key: String, notNull: Seq[String]): Seq[String] = {
+    val nullCounts = notNull.indices.map(i => s"__nulls$i")
+    val groups = df.groupBy(col(key)).agg(count(lit(1)).as("__n"),
+      notNull.zip(nullCounts).map { case (c, a) =>
+        sum(when(col(c).isNull, 1L).otherwise(0L)).as(a) }: _*)
+    val r = groups.agg(
+      sum(when(col(key).isNull, col("__n")).otherwise(0L)),
+      sum(when(col("__n") > 1, 1L).otherwise(0L)) +:
+        nullCounts.map(a => sum(col(a))): _*).head()
+    // an empty frame has no groups: every sum is NULL, i.e. zero
+    def n(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+    (Seq(verdict(n(0), s"not_null($key)"), verdict(n(1), s"unique($key)")) ++
+      notNull.indices.map(i => verdict(n(i + 2), s"not_null(${notNull(i)})")))
+      .collect { case Left(e) => e }
+  }
 
   /** dbt `accepted_values`: NULLs pass (matching dbt's `NOT IN` compile —
     * null handling is [[notNull]]'s job).

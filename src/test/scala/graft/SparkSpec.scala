@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,4 +22,39 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sfDir: String = SparkSpec.sfDir
+
+  /** Flush the listener bus so every posted job-start is counted
+    * (bytecode-public `listenerBus.waitUntilEmpty`, Scala
+    * private[spark] — reflection, the SerializableConfiguration trick).
+    */
+  private def flushListeners(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethods.find(_.getName == "listenerBus")
+      .get.invoke(sc)
+    bus.getClass.getMethods
+      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+      .map(_.invoke(bus))
+      .getOrElse {
+        val m = bus.getClass.getMethods
+          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
+          .get
+        m.invoke(bus, java.lang.Long.valueOf(30000L))
+      }
+  }
+
+  /** Spark jobs started by `body` — a timing-free cost contract. Jobs
+    * posted before the call are flushed first so none is miscounted.
+    */
+  protected def countJobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    flushListeners()
+    spark.sparkContext.addSparkListener(l)
+    try { body; flushListeners() }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
 }

@@ -1,7 +1,6 @@
 package graft.lake
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 
@@ -19,37 +18,6 @@ class DeltaDmlScaleSpec extends SparkSpec {
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft-dml-scale").toString + "/tbl"
-
-  /** Flush the listener bus so every posted job-start is counted
-    * (bytecode-public `listenerBus.waitUntilEmpty`, Scala
-    * private[spark] — reflection, the SerializableConfiguration trick).
-    */
-  private def flushListeners(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethods.find(_.getName == "listenerBus")
-      .get.invoke(sc)
-    bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      .map(_.invoke(bus))
-      .getOrElse {
-        val m = bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-          .get
-        m.invoke(bus, java.lang.Long.valueOf(30000L))
-      }
-  }
-
-  private def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; flushListeners() }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
 
   test("a DELETE touching 64 files runs a bounded job count " +
     "(one probe + one rewrite), not O(touched files)") {

@@ -106,4 +106,43 @@ class RunnerSpec extends SparkSpec {
     // upstream layers keep their idempotent commits (Airflow task semantics)
     assert(spark.read.parquet(s"$dir/bronze/events_raw").count() == 2)
   }
+
+  private def events(rows: (Long, Option[Double], String)*) = {
+    import spark.implicits._
+    rows.map { case (id, v, ts) =>
+      val t = java.sql.Timestamp.valueOf(ts)
+      (id, id % 3, "purchase", v, t, t.getTime * 1000L, new java.sql.Date(t.getTime))
+    }.toDF("event_id", "user_id", "event_type", "value", "event_ts", "event_ts_us", "event_date")
+  }
+
+  test("report-only run commits the candidate and reports its gate failures") {
+    val dir = Files.createTempDirectory("graft-runner5").toString
+    val r1 = Runner.run(spark, events((1L, Some(10.0), "2024-01-01 01:00:00")), dir)
+    assert(r1.qualityFailures.isEmpty, r1.qualityFailures.mkString("; "))
+    // a null-value purchase in a FRESH minute: the candidate fails
+    // not_null(gmv), and run() publishes it anyway and says so
+    val r2 = Runner.run(spark, events((2L, None, "2024-01-01 02:00:00")), dir)
+    assert(r2.qualityFailures.exists(_.contains("gmv")), r2.qualityFailures.toString)
+    val gold = spark.read.parquet(r2.goldPath)
+    assert(gold.count() == 2L)
+    assert(gold.filter(org.apache.spark.sql.functions.col("gmv").isNull).count() == 1L)
+  }
+
+  test("a warm micro-batch runs a pinned number of Spark jobs") {
+    val dir = Files.createTempDirectory("graft-runner6").toString
+    val cold = Runner.runManaged(spark, events(
+      (1L, Some(10.0), "2024-01-01 01:00:00"), (2L, Some(5.0), "2024-01-01 01:00:30")), dir)
+    assert(cold.abortedAt.isEmpty)
+    var warm: Runner.ManagedResult = null
+    val jobs = countJobs {
+      warm = Runner.runManaged(spark, events(
+        (2L, Some(5.0), "2024-01-01 01:00:30"),   // replay
+        (3L, Some(7.0), "2024-01-01 01:01:00"), (4L, Some(2.0), "2024-01-01 01:02:00")), dir)
+    }
+    assert(warm.abortedAt.isEmpty && warm.qualityFailures.isEmpty)
+    // the gold gate is one aggregate on the candidate and nothing
+    // re-audits the committed table: per-check actions or a re-audit
+    // add jobs and break this pin
+    assert(jobs <= 16, s"warm micro-batch ran $jobs Spark jobs (pinned at 16)")
+  }
 }

@@ -14,10 +14,37 @@ class ChecksSpec extends SparkSpec {
 
   test("gold fct_sales_minute satisfies the reference's schema tests") {
     val fct = Medallion.salesMinute(Tables.events(spark, sfDir))
-    assert(Checks.notNull(fct, "minute_bucket_us").isRight)
-    assert(Checks.notNull(fct, "gmv").isRight)
-    assert(Checks.unique(fct, "minute_bucket_us").isRight)
+    val failures = Checks.keyContract(fct, "minute_bucket_us", Seq("gmv", "paid_orders"))
+    assert(failures.isEmpty, failures.mkString("; "))
     assert(Checks.notNullProportion(fct, "paid_orders", 1.0).isRight)
+  }
+
+  test("keyContract returns exactly the separate notNull/unique calls' failures") {
+    val s = spark; import s.implicits._
+    def row(k: Option[Long], a: Option[Double], b: Option[Long]) = (k, a, b)
+    val cases = Seq(
+      ("clean", Seq(row(Some(1L), Some(1.0), Some(1L)),
+        row(Some(2L), Some(2.0), Some(2L))), Nil),
+      ("empty", Seq.empty[(Option[Long], Option[Double], Option[Long])], Nil),
+      ("duplicate keys", Seq(row(Some(1L), Some(1.0), Some(1L)),
+        row(Some(1L), Some(2.0), Some(2L)), row(Some(2L), Some(3.0), Some(3L)),
+        row(Some(2L), Some(4.0), Some(4L)), row(Some(3L), Some(5.0), Some(5L))),
+        Seq("unique(k): 2 violating row(s)")),
+      // one duplicate group (NULL keys group together) plus two null rows
+      ("two NULL keys", Seq(row(None, Some(1.0), Some(1L)),
+        row(None, Some(2.0), Some(2L)), row(Some(1L), Some(3.0), Some(3L))),
+        Seq("not_null(k): 2 violating row(s)", "unique(k): 1 violating row(s)")),
+      ("nulls in each value column", Seq(row(Some(1L), None, Some(1L)),
+        row(Some(2L), Some(2.0), None), row(Some(3L), None, None)),
+        Seq("not_null(a): 2 violating row(s)", "not_null(b): 2 violating row(s)")))
+    cases.foreach { case (name, rows, expected) =>
+      val df = rows.toDF("k", "a", "b")
+      val separate = Seq(Checks.notNull(df, "k"), Checks.unique(df, "k"),
+        Checks.notNull(df, "a"), Checks.notNull(df, "b"))
+        .collect { case Left(e) => e }
+      assert(separate == expected, name)
+      assert(Checks.keyContract(df, "k", Seq("a", "b")) == separate, name)
+    }
   }
 
   test("unique and notNull flag planted duplicates and nulls with counts") {
