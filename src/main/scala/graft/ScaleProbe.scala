@@ -177,12 +177,10 @@ object ScaleProbe {
         graft.text.SparseSim.tfidfCosinePairs(docs(k), "doc_id", "text")
       },
       "label_prop" -> { k =>
-        graft.graphs.LabelProp.run(edges(k), rounds = 3,
-          broadcastLabels = true)
+        graft.graphs.LabelProp.run(edges(k), rounds = 3)
       },
       "kcore" -> { k =>
-        graft.graphs.KCore.run(edges(k), k = 60, rounds = 3,
-          broadcastActive = true)
+        graft.graphs.KCore.run(edges(k), k = 60, rounds = 3)
       },
       "bfs" -> { k =>
         val seeds = edges(k).selectExpr("src AS node")
@@ -199,8 +197,8 @@ object ScaleProbe {
         TextDedup.weightedJaccardPairs(docs(k), "doc_id", "text",
           shingleN = 3, threshold = 0.3)
       },
-      // r15 newcomers: hyperball shuffles edges·2^p per round (never
-      // quadratic — expect the bfs/pagerank exponent class); the
+      // r15 newcomers: hyperball merges edges·2^p registers per round
+      // (never quadratic — expect the bfs/pagerank exponent class); the
       // bucketed-join point times the WHOLE write-then-join pipeline
       // (two clustering writes + exchange-free join), both ~linear.
       "hyperball" -> { k =>

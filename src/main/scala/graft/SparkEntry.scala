@@ -129,65 +129,27 @@ object SparkEntry {
     }
 
   /** The item co-occurrence edge list (parts sharing an order, both
-    * directions, duplicates as they fall out of the self-join) — the ONE
-    * graph all six graph-family gates analyze (q94 PageRank, q101
-    * triangles, q147 label propagation, q162 k-core, q173 BFS, q226
-    * HyperBall). The production shape is the same as [[sccLabels]] /
-    * [[jaccardShingles]]: a pipeline materializes its co-occurrence
-    * edge table once and every graph analysis reads it, instead of each
-    * analysis re-running the fact-table self-join. Stored DISTINCT:
-    * every consumer dedupes internally (multiplicity-insensitive by
-    * contract — Triangles/PageRank/LabelProp/KCore/HyperBall `distinct`,
-    * Bfs node-grain array dedup), so the canonical edge SET is the
-    * common denominator; memoizing it caches ~8× fewer rows than the
-    * raw per-order pair stream (2.4 M vs ~18 M at sf0.1) and every
-    * operator's first exchange shuffles the set, not the multiset. No
-    * partitioning opinion — each operator still partitions for its own
-    * round layout. Same eviction-proof persist discipline as
-    * [[jaccardShingles]] (clearCache between harness queries evicts the
-    * blocks; the memo re-registers the persist on access).
+    * directions) — the ONE graph all six graph-family gates analyze
+    * (q94 PageRank, q101 triangles, q147 label propagation, q162 k-core,
+    * q173 BFS, q226 HyperBall). DISTINCT: every consumer dedupes
+    * internally (multiplicity-insensitive by contract), so the canonical
+    * edge SET is the common denominator and every operator's first
+    * exchange shuffles the set (2.4 M rows at sf0.1), not the ~18 M-row
+    * per-order pair stream. Deliberately NOT memoized: each operator
+    * consumes it exactly once, into the adjacency it persists itself,
+    * and both harnesses clearCache between queries, so a persisted memo
+    * only re-pays its cache build on every run (q94: 3 extra jobs, ~1 s
+    * per run at the curate benchmark's scale) — the q43/q44 trap below.
     */
-  private val itemCoEdgesCache = new PlanCache
-  private def itemCoEdges(s: SparkSession, d: String): DataFrame =
-    cachedPlan(itemCoEdgesCache, s, d) {
-      val li = Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_partkey"))
-      li.as("a").join(li.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") =!= col("b.l_partkey"))
-        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-        .distinct()
-    }
-
-  /** Second-level graph memos: each operator's PREPARED adjacency over
-    * [[itemCoEdges]] — the layout its rounds ride — materialized once
-    * per (session, sf-dir) like the edge set itself. Production shape:
-    * a pipeline that reruns a readout (or runs LabelProp AND KCore,
-    * which share one layout) materializes the round-ready adjacency
-    * once; rebuilding it per call re-pays an exchange + dedup each
-    * time. Same eviction-proof persist discipline as [[jaccardShingles]].
-    */
-  private val graphAdjDstCache = new PlanCache
-  private def graphAdjDst(s: SparkSession, d: String): DataFrame =
-    cachedPlan(graphAdjDstCache, s, d) {
-      graft.graphs.LabelProp.prepareAdjacency(itemCoEdges(s, d),
-        broadcastLabels = true)
-    }
-  private val pagerankAdjCache = new PlanCache
-  private def pagerankAdj(s: SparkSession, d: String): DataFrame =
-    cachedPlan(pagerankAdjCache, s, d) {
-      graft.graphs.PageRank.prepareBroadcastAdjacency(itemCoEdges(s, d))
-    }
-  private val trianglesAdjCache = new PlanCache
-  private def trianglesAdj(s: SparkSession, d: String): DataFrame =
-    cachedPlan(trianglesAdjCache, s, d) {
-      graft.graphs.Triangles.prepareOriented(itemCoEdges(s, d))
-    }
-  private val hyperballAdjCache = new PlanCache
-  private def hyperballAdj(s: SparkSession, d: String): DataFrame =
-    cachedPlan(hyperballAdjCache, s, d) {
-      graft.graphs.HyperBall.prepareBroadcastAdjacency(itemCoEdges(s, d))
-    }
+  private def itemCoEdges(s: SparkSession, d: String): DataFrame = {
+    val li = Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_partkey"))
+    li.as("a").join(li.as("b"),
+        col("a.l_orderkey") === col("b.l_orderkey") &&
+          col("a.l_partkey") =!= col("b.l_partkey"))
+      .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+      .distinct()
+  }
 
   /** q43/q44 each build the parsed silver orders table directly — NOT
     * through the memo above. Unlike jaccardShingles (referenced 3× in
@@ -964,11 +926,8 @@ object SparkEntry {
       // scale pinned to the value the oracle CTEs unroll with (the
       // library default is auto-derived from node count and would drift
       // if the item graph ever outgrew the 1e12-safe bound).
-      // item rank table is dimension-sized → broadcast hops (zero
-      // per-hop exchanges against the dst-partitioned adjacency)
-      graft.graphs.PageRank.run(pagerankAdj(s, d), iterations = 3,
-        scale = 1000000000000L, broadcastRanks = true,
-        preparedAdjacency = true)
+      graft.graphs.PageRank.run(itemCoEdges(s, d), iterations = 3,
+        scale = 1000000000000L)
     }),
     // End-to-end near-dup REMOVAL: simhash pairs → connected components →
     // keep the min-id doc per cluster. Oracle composes the q50 pair graph
@@ -1016,8 +975,7 @@ object SparkEntry {
     // Degree-ordered triangle counts on the item co-occurrence graph
     // (q94's edge list) — top 100 triangle-heavy parts, unique tiebreak.
     "q101_triangles" -> ((s, d) => {
-      graft.graphs.Triangles.topTriangleNodes(trianglesAdj(s, d), 100,
-        preparedOriented = true)
+      graft.graphs.Triangles.topTriangleNodes(itemCoEdges(s, d), 100)
     }),
     // Count-min heavy hitters over the corpus BIGRAM stream (916
     // distinct bigrams vs d = 4 × w = 256 counters — real collision
@@ -1414,12 +1372,7 @@ object SparkEntry {
     // 4-round synchronous label propagation over the item co-occurrence
     // graph (deterministic plurality vote, min-label ties).
     "q147_label_prop" -> ((s, d) => {
-      // item label table is dimension-sized → broadcast rounds
-      // the co-occurrence edge set is symmetric by construction (both
-      // directions of every pair) — the no-in-edge completion is empty
-      graft.graphs.LabelProp.run(graphAdjDst(s, d), rounds = 4,
-        broadcastLabels = true, preparedAdjacency = true,
-        symmetricEdges = true)
+      graft.graphs.LabelProp.run(itemCoEdges(s, d), rounds = 4)
     }),
     // DSIR hashed-unigram importance weights: target = English docs,
     // add-half-smoothed log-ratio per md5 bucket, exact fixed-point sums.
@@ -1507,9 +1460,7 @@ object SparkEntry {
     // 80-core of the item co-occurrence graph: 6 peeling rounds (monotone,
     // converged at every shipped scale — extra rounds are no-ops).
     "q162_kcore" -> ((s, d) => {
-      // active set is part-dimension-sized → broadcast the semi-joins
-      graft.graphs.KCore.run(graphAdjDst(s, d), k = 80, rounds = 6,
-        broadcastActive = true, preparedAdjacency = true)
+      graft.graphs.KCore.run(itemCoEdges(s, d), k = 80, rounds = 6)
     }),
     // Hybrid retrieval: BM25 top-50 ∪ dense-cosine top-50, fused by
     // reciprocal rank (exact integer terms), top-20 out.
@@ -4013,10 +3964,8 @@ object SparkEntry {
     // n BFS runs collapsed into register max-merges, each estimate an
     // exact integer both engines reproduce.
     "q226_hyperball" -> ((s, d) => {
-      // item register table is dimension-sized → broadcast rounds (zero
-      // per-round exchanges against the src-partitioned adjacency)
-      graft.graphs.HyperBall.neighborhoodSizes(hyperballAdj(s, d),
-        rounds = 2, broadcastRegisters = true, preparedAdjacency = true)
+      graft.graphs.HyperBall.neighborhoodSizes(itemCoEdges(s, d),
+        rounds = 2)
     }),
     // Functional-dependency audit: does o_custkey determine
     // o_orderstatus? (No — the summary quantifies how badly.)

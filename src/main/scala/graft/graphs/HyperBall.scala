@@ -18,10 +18,15 @@ import graft.ml.Sketches
   * at scale.
   *
   * Scale posture: state is nodes·2^p register rows (p = 4 → 16 per
-  * node); each round is one equi-join of the edge list against the
-  * register table plus one map-side-combinable max-agg — shuffle volume
-  * ∝ edges·2^p per round, never quadratic, and the merge is associative
-  * so AQE/skew handling apply as usual. This is the [[Bfs]] cost model
+  * node). The adjacency is hash-partitioned on `src` ONCE with a
+  * self-loop per node folded in, and persisted: the self-merge
+  * `regs ∪ fromNbrs` is algebraically a max over {v} ∪ out-nbrs(v), so
+  * the self-loops let a single join cover it. Each round broadcasts the
+  * register table into a join that streams that layout unmoved, so the
+  * (node = src, bucket) max-agg rides it in place (hash(src) clusters
+  * (node, bucket)): ZERO per-round exchanges. The broadcast is explicit
+  * (the [[PageRank]] posture), so the register table must fit an
+  * executor. This is the [[Bfs]] cost model
   * with a constant 2^p factor traded for EVERY source at once (n BFS
   * runs collapse into one sketch pass).
   *
@@ -36,64 +41,26 @@ object HyperBall {
     * upstream for undirected balls). Returns (node, est_reachable) —
     * the estimated |ball(node, rounds)| INCLUDING the node itself —
     * for every node with at least one edge endpoint.
-    *
-    * `broadcastRegisters = true` ships each round's register table to
-    * the edge join as a broadcast and folds the self-merge into the
-    * adjacency as explicit self-loops, so a round costs ZERO exchanges:
-    * the adjacency is hash-partitioned on `src` ONCE, the broadcast join
-    * preserves that layout, and the (node = src, bucket) max-agg rides
-    * it in place (hash(src) clusters (node, bucket)). The register table
-    * is nodes·2^p rows — broadcast it whenever that fits an executor
-    * (the [[LabelProp]] `broadcastLabels` posture); leave false for
-    * billion-node graphs, where each round shuffles instead.
     */
-  /** The adjacency the broadcast-register path consumes: the DISTINCT
-    * long (src, dst) set hash-partitioned on `src` with a self-loop per
-    * node folded in (the self-merge of each round). Public so a
-    * pipeline running ball readouts repeatedly over one graph
-    * materializes it ONCE and passes it back through
-    * `neighborhoodSizes(..., preparedAdjacency = true)`; the caller
-    * owns persistence. The node set is recoverable from the self-loops,
-    * so no second table is needed.
-    */
-  def prepareBroadcastAdjacency(edges: DataFrame): DataFrame = {
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val nodes = e0.select(col("src").as("node"))
-      .unionByName(e0.select(col("dst").as("node"))).distinct()
-    e0.unionByName(
-        nodes.select(col("node").as("src"), col("node").as("dst")))
-      .repartition(col("src"))
-      .distinct()
-  }
-
   def neighborhoodSizes(edges: DataFrame, rounds: Int,
-                        p: Int = 4,
-                        broadcastRegisters: Boolean = false,
-                        preparedAdjacency: Boolean = false): DataFrame = {
+                        p: Int = 4): DataFrame = {
     require(rounds >= 1 && rounds <= 8,
       s"HyperBall: rounds in [1, 8], got $rounds")
-    require(!preparedAdjacency || broadcastRegisters,
-      "HyperBall: preparedAdjacency is the broadcast-register layout — " +
-        "prepare with prepareBroadcastAdjacency and pass both flags")
     val lvl = StorageLevel.MEMORY_AND_DISK
-    if (broadcastRegisters)
-      return neighborhoodSizesBroadcast(edges, rounds, p,
-        preparedAdjacency)
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .distinct().persist(lvl)
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
+    // The node set rides the adjacency's self-loops.
+    val e = prepareAdjacency(edges).persist(lvl)
+    val nodes = e.filter(col("src") === col("dst"))
+      .select(col("src").as("node")).persist(lvl)
+    e.count()
     var regs = Sketches.hllRegisters(nodes, Seq("node"), col("node"), p)
       .persist(lvl)
     regs.count()
-    for (__it <- 1 to rounds) {
-      val fromNbrs = e.join(regs, e("dst") === regs("node"))
+    for (_ <- 1 to rounds) {
+      val next = e.join(broadcast(regs), e("dst") === regs("node"))
         .select(e("src").as("node"), col("bucket"), col("max_rho"))
-      val next = regs.unionByName(fromNbrs)
         .groupBy(col("node"), col("bucket"))
         .agg(max(col("max_rho")).cast("int").as("max_rho"))
         .persist(lvl)
-      if (__it == 1) GraphExplain("hyperball round", next)
       next.count()
       regs.unpersist(blocking = false)
       regs = next
@@ -102,57 +69,22 @@ object HyperBall {
       .withColumnRenamed("est_distinct", "est_reachable")
     out.count()
     e.unpersist(blocking = false)
+    nodes.unpersist(blocking = false)
     out
   }
 
-  /** Broadcast-register formulation: identical results (spec-asserted),
-    * zero per-round exchanges. The self-merge `regs ∪ fromNbrs` of the
-    * shuffling path is algebraically a max over {v} ∪ out-nbrs(v), so a
-    * self-loop per node makes the single join cover it — and unlike the
-    * union (which destroys partitioning and forces a full
-    * (node, bucket) exchange of edges·2^p rows per round), the broadcast
-    * join streams the src-partitioned adjacency so the max-agg needs no
-    * exchange at all.
+  /** The adjacency [[neighborhoodSizes]] rides: the DISTINCT long
+    * (src, dst) set plus a self-loop per node, hash-partitioned on `src`
+    * (hash(src) clusters (src, dst), so the dedup adds no second
+    * exchange).
     */
-  private def neighborhoodSizesBroadcast(edges: DataFrame, rounds: Int,
-                                         p: Int,
-                                         preparedAdjacency: Boolean): DataFrame = {
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    // Self-loops fold the "include self" merge into the join; the
-    // repartition(src) layout is what every round's agg rides (hash(src)
-    // clusters (src, dst), so the dedup adds no second exchange). Under
-    // preparedAdjacency the caller passed [[prepareBroadcastAdjacency]]'s
-    // output (caller-persisted); the node set rides its self-loops.
-    val e =
-      if (preparedAdjacency) edges
-      else prepareBroadcastAdjacency(edges).persist(lvl)
-    val nodes =
-      if (preparedAdjacency)
-        e.filter(col("src") === col("dst")).select(col("src").as("node"))
-      else e.filter(col("src") === col("dst")).select(col("src").as("node"))
-        .persist(lvl)
-    e.count()
-    var regs = Sketches.hllRegisters(nodes, Seq("node"), col("node"), p)
-      .persist(lvl)
-    regs.count()
-    for (__it <- 1 to rounds) {
-      val next = e.join(broadcast(regs), e("dst") === regs("node"))
-        .select(e("src").as("node"), col("bucket"), col("max_rho"))
-        .groupBy(col("node"), col("bucket"))
-        .agg(max(col("max_rho")).cast("int").as("max_rho"))
-        .persist(lvl)
-      if (__it == 1) GraphExplain("hyperball round", next)
-      next.count()
-      regs.unpersist(blocking = false)
-      regs = next
-    }
-    val out = Sketches.hllEstimateCorrected(regs, Seq("node"), p)
-      .withColumnRenamed("est_distinct", "est_reachable")
-    out.count()
-    if (!preparedAdjacency) {
-      e.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-    }
-    out
+  private[graphs] def prepareAdjacency(edges: DataFrame): DataFrame = {
+    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val nodes = e0.select(col("src").as("node"))
+      .unionByName(e0.select(col("dst").as("node"))).distinct()
+    e0.unionByName(
+        nodes.select(col("node").as("src"), col("node").as("dst")))
+      .repartition(col("src"))
+      .distinct()
   }
 }

@@ -15,13 +15,13 @@ import org.apache.spark.sql.functions._
   * graph at hand computes the exact k-core, and extra rounds cost one
   * no-op plan each rather than a driver-side convergence probe per round.
   *
-  * Scale posture: the adjacency is deduped and hash-partitioned ONCE and
-  * persisted; each round is two LEFT SEMI equi-joins of the (shrinking)
-  * node-sized active set against that layout plus one map-side-combinable
-  * degree count. `broadcastActive = true` ships the active set to both
-  * semi-joins as a broadcast — the right call whenever the NODE SET fits
-  * an executor (checkpointed rounds lose the size statistics AQE would
-  * need to make that call itself); results are identical either way.
+  * Scale posture: the adjacency is deduped and hash-partitioned on `dst`
+  * ONCE and persisted (the [[LabelProp]] layout). Each round broadcasts
+  * the (shrinking) node-sized active set into two LEFT SEMI joins that
+  * stream that layout unmoved, so the groupBy(dst) degree count rides
+  * it in place: ZERO per-round exchanges. The broadcast is explicit,
+  * not left to AQE's size estimates of checkpointed rounds, so the node
+  * table must fit an executor.
   */
 object KCore {
 
@@ -33,57 +33,31 @@ object KCore {
     * itself). Materialized before returning, so internal caches are
     * released rather than leaked ([[PageRank.run]] lifecycle).
     */
-  /** The adjacency [[run]] consumes: the DISTINCT long (src, dst) edge
-    * set hash-partitioned on the round key (dst under broadcastActive,
-    * src otherwise) — identical to [[LabelProp.prepareAdjacency]], so a
-    * pipeline running both readouts over one graph materializes ONE
-    * table. Pass back through `run(..., preparedAdjacency = true)`;
-    * the caller owns persistence.
-    */
-  def prepareAdjacency(edges: DataFrame,
-                       broadcastActive: Boolean = false): DataFrame =
-    LabelProp.prepareAdjacency(edges, broadcastActive)
-
-  def run(edges: DataFrame, k: Int, rounds: Int = 6,
-          broadcastActive: Boolean = false,
-          preparedAdjacency: Boolean = false): DataFrame = {
+  def run(edges: DataFrame, k: Int, rounds: Int = 6): DataFrame = {
     require(k >= 1, s"KCore: k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 20,
       s"KCore: rounds in [1, 20], got $rounds")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Partition key: with a broadcast active set both semi-joins stream
-    // the adjacency unmoved, so hash(dst) means every round's
-    // groupBy(dst) degree count ALSO rides the persisted layout — zero
-    // per-round exchanges (hash(dst) clusters (src, dst), so the dedup
-    // still adds no second exchange). On the shuffling path the src
-    // semi-join is the one that can reuse a layout, so keep hash(src)
-    // there. `preparedAdjacency = true`: `edges` IS already
-    // [[prepareAdjacency]]'s output (same flag), caller-persisted —
-    // skip the per-call exchange + dedup + persist.
-    val adj =
-      if (preparedAdjacency) edges
-      else prepareAdjacency(edges, broadcastActive).persist(lvl)
+    val adj = LabelProp.prepareAdjacency(edges).persist(lvl)
     adj.count()
     // Round 1: active_0 = all nodes, so the degree filter runs over the
     // raw adjacency (no-in-edge nodes have degree 0 and drop immediately).
     var active = adj.groupBy(col("dst").as("node"))
       .agg(count(lit(1)).as("core_deg"))
       .filter(col("core_deg") >= k)
-    for (__it <- 2 to rounds) {
-      val nodesOnly = active.select(col("node"))
-      val actSide = if (broadcastActive) broadcast(nodesOnly) else nodesOnly
+    for (_ <- 2 to rounds) {
+      val actSide = broadcast(active.select(col("node")))
       val next = adj
         .join(actSide.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(actSide.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
         .groupBy(col("dst").as("node"))
         .agg(count(lit(1)).as("core_deg"))
         .filter(col("core_deg") >= k)
-      if (__it == 2) GraphExplain("kcore round", next)
       active = next.localCheckpoint(eager = false)
     }
     val out = active.select(col("node"), col("core_deg"))
     out.count()
-    if (!preparedAdjacency) adj.unpersist(blocking = false)
+    adj.unpersist(blocking = false)
     out
   }
 }

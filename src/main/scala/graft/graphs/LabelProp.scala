@@ -17,13 +17,15 @@ import org.apache.spark.sql.functions._
   * honest distributed semantics (it also keeps the driver loop bounded
   * and every round's plan identical — the [[PageRank]] argument).
   *
-  * Scale posture: the adjacency is deduped and hash-partitioned ONCE and
-  * persisted; each round is one equi-join of the node-sized label table
-  * against that layout plus TWO map-side-combinable aggregations (the
-  * (dst, label) vote count collapses per-partition before its shuffle;
-  * the per-dst argmax folds over at most |distinct neighbor labels|
-  * rows). Lazy local checkpoints collapse the loop into one job at the
-  * final action, truncating lineage per round.
+  * Scale posture: the adjacency is deduped and hash-partitioned on `dst`
+  * ONCE and persisted. Each round broadcasts the node-sized label table
+  * into a join that streams that layout unmoved, so BOTH vote
+  * aggregations ride it in place (hash(dst) clusters (dst, lab) and
+  * (dst) alike): ZERO per-round exchanges. The broadcast is explicit,
+  * not left to AQE's size estimates of checkpointed rounds, so the node
+  * table must fit an executor. Lazy local
+  * checkpoints collapse the loop into one job at the final action,
+  * truncating lineage per round.
   */
 object LabelProp {
 
@@ -33,98 +35,61 @@ object LabelProp {
     * or destination; a node with no in-edges keeps its previous label.
     * Materialized before returning (the [[PageRank.run]] lifecycle), so
     * the internal caches are released rather than leaked.
-    *
-    * `broadcastLabels = true` ships each round's node-sized label table
-    * to the edge join as a broadcast instead of a shuffle join — the
-    * right call whenever the node set fits an executor (checkpointed
-    * rounds lose size statistics, so AQE cannot make this call by
-    * itself). Results are identical (spec-asserted); leave it false for
-    * graphs whose LABEL TABLE alone is too big to broadcast (billions of
-    * nodes), where each round must shuffle instead.
     */
-  /** The adjacency [[run]] consumes: the DISTINCT long (src, dst) edge
-    * set hash-partitioned on the round key (dst under broadcastLabels,
-    * src otherwise). Public so a pipeline running several readouts over
-    * one graph materializes it ONCE and passes it back through
-    * `run(..., preparedAdjacency = true)`; the caller owns persistence.
-    */
-  def prepareAdjacency(edges: DataFrame,
-                       broadcastLabels: Boolean = false): DataFrame =
-    edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(if (broadcastLabels) col("dst") else col("src"))
-      .distinct()
-
   def run(edges: DataFrame, rounds: Int = 4,
-          reliable: Boolean = false,
-          broadcastLabels: Boolean = false,
-          preparedAdjacency: Boolean = false,
-          symmetricEdges: Boolean = false): DataFrame = {
+          reliable: Boolean = false): DataFrame = {
     require(rounds >= 1 && rounds <= 20,
       s"LabelProp: rounds in [1, 20], got $rounds")
     if (reliable) require(
       edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
       "reliable=true needs spark.sparkContext.setCheckpointDir(...) first")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Partition key: with broadcast labels the per-round join streams the
-    // adjacency unmoved, so hash(dst) lets BOTH vote aggregations ride
-    // the persisted layout in place (hash(dst) clusters (dst, lab) and
-    // (dst) alike) — zero per-round exchanges instead of two. On the
-    // shuffling path the label join is the reusable exchange, so keep
-    // hash(src) there.
-    //
-    // `preparedAdjacency = true`: the caller asserts `edges` IS already
-    // [[prepareAdjacency]]'s output (same broadcastLabels flag) with
-    // caller-owned persistence — the per-call exchange + dedup + persist
-    // is skipped: the repeated-readout production shape.
-    val adj =
-      if (preparedAdjacency) edges
-      else prepareAdjacency(edges, broadcastLabels).persist(lvl)
+    val adj = prepareAdjacency(edges).persist(lvl)
     adj.count()
-    // `symmetricEdges = true`: the caller asserts every edge is stored
-    // in BOTH directions (an undirected graph symmetrized upstream) —
-    // then every node appears as a dst, so the node set is the dst side
-    // alone (rides the broadcast layout with no union) and the
-    // no-in-edge completion set below is provably EMPTY: its anti-join
-    // build, persist, and per-round union are all skipped.
-    val nodes =
-      if (symmetricEdges) adj.select(col("dst").as("node")).distinct()
-      else adj.select(col("src").as("node"))
-        .union(adj.select(col("dst").as("node"))).distinct()
+    val nodes = adj.select(col("src").as("node"))
+      .union(adj.select(col("dst").as("node"))).distinct()
     // A node with no in-edges never receives a vote, so its label is its
     // own id FOREVER — computed once, unioned into every round's result
     // instead of a per-round left join (one stage fewer per round; empty
     // on symmetric graphs).
-    val noIn =
-      if (symmetricEdges) None
-      else Some(nodes
-        .join(adj.select(col("dst").as("node")).distinct(), Seq("node"),
-          "left_anti")
-        .select(col("node"), col("node").as("lab"))
-        .persist(lvl))
-    noIn.foreach(_.count())
+    val noIn = nodes
+      .join(adj.select(col("dst").as("node")).distinct(), Seq("node"),
+        "left_anti")
+      .select(col("node"), col("node").as("lab"))
+      .persist(lvl)
+    noIn.count()
     var labels = nodes.select(col("node"), col("node").as("lab"))
-    for (__it <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       // Plurality vote: count each label among in-neighbors, then argmax
       // with min-label tiebreak — max of (count, -label) structs, the
       // kmeansAssign idiom (struct comparison is lexicographic). The
       // vote covers exactly the nodes with >= 1 in-edge; the constant
       // no-in-edge rows complete the node set.
-      val labelSide = if (broadcastLabels) broadcast(labels) else labels
+      val labelSide = broadcast(labels)
       val voted = labelSide.join(adj, labelSide("node") === adj("src"))
         .groupBy(col("dst"), col("lab")).agg(count(lit(1)).as("__c"))
         .groupBy(col("dst"))
         .agg(max(struct(col("__c").as("c"), (-col("lab")).as("nl"))).as("__b"))
         .select(col("dst").as("node"), (-col("__b.nl")).as("lab"))
-      val next = noIn.fold(voted)(voted.unionByName(_))
-      if (__it == 1) GraphExplain("label_prop round", next)
+      val next = voted.unionByName(noIn)
       labels = if (reliable) next.checkpoint(eager = false)
                else next.localCheckpoint(eager = false)
     }
     val out = labels.select(col("node"), col("lab").as("label"))
     out.count()
-    if (!preparedAdjacency) adj.unpersist(blocking = false)
-    noIn.foreach(_.unpersist(blocking = false))
+    adj.unpersist(blocking = false)
+    noIn.unpersist(blocking = false)
     out
   }
+
+  /** The adjacency the [[LabelProp]] and [[KCore]] rounds ride: the
+    * DISTINCT long (src, dst) edge set hash-partitioned on `dst`
+    * (hash(dst) clusters (src, dst), so the dedup adds no second
+    * exchange).
+    */
+  private[graphs] def prepareAdjacency(edges: DataFrame): DataFrame =
+    edges
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .repartition(col("dst"))
+      .distinct()
 }

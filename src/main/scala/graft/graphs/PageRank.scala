@@ -33,17 +33,21 @@ import org.apache.spark.sql.functions._
   * against the same bound up front — the job fails with the formula in
   * the message instead of an ANSI overflow mid-iteration.
   *
-  * Scale posture: the degrees are folded into a contribution-ready
-  * adjacency (src, dst, deg) ONCE, hash-partitioned on `src` and
-  * persisted — each iteration then costs one equi-join of the (node-
-  * sized) rank table against that layout plus ONE map-side-combinable
-  * shuffle (groupBy dst of (long, long) messages), with no per-round
-  * degree recompute or node-set rebuild. The iteration count is FIXED
-  * (the operator is a k-hop centrality score, not a fixpoint — near-
-  * dup/recommender use sites want a handful of hops), so the driver
-  * loop is bounded and each round's plan is small. Nodes with no
-  * outgoing edges contribute nothing (standard dangling-mass drop;
-  * total mass declines, rankings unaffected for comparison use).
+  * Scale posture: the distinct edge set is hash-partitioned on `dst`
+  * ONCE with each source's out-degree folded in as a contribution-ready
+  * adjacency (src, dst, deg), and persisted. Each hop broadcasts the
+  * node-sized rank table into a join that streams that layout unmoved,
+  * so the groupBy(dst) inflow sum rides it in place, and the node-sized
+  * contribution table broadcasts into the completion join: ZERO per-hop
+  * exchanges, no per-hop degree recompute or node-set rebuild. The
+  * broadcasts are explicit, not left to AQE's size estimates of
+  * checkpointed rounds, so the node table must fit an executor. The
+  * iteration count is FIXED (the operator is a k-hop centrality score,
+  * not a fixpoint — near-dup/recommender use sites want a handful of
+  * hops), so the loop is bounded and each round's plan is small.
+  * Nodes with no outgoing edges contribute nothing (standard dangling-
+  * mass drop; total mass declines, rankings unaffected for comparison
+  * use).
   */
 object PageRank {
 
@@ -69,67 +73,17 @@ object PageRank {
     * executor-loss recovery — the same knob, same reasoning, as
     * [[ConnectedComponents.run]].
     */
-  /** The contribution-ready adjacency [[run]] consumes under
-    * `broadcastRanks`: the DISTINCT long (src, dst) set hash-partitioned
-    * on `dst` with each source's out-degree folded in as `__deg`.
-    * Public so a pipeline running rank readouts repeatedly over one
-    * graph materializes it ONCE and passes it back through
-    * `run(..., preparedAdjacency = true)`; the caller owns persistence.
-    */
-  def prepareBroadcastAdjacency(edges: DataFrame): DataFrame = {
-    val dedup = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("dst"))
-      .distinct()
-    val degs = dedup.groupBy(col("src").as("__dn"))
-      .agg(count(lit(1)).as("__deg"))
-    dedup.join(broadcast(degs), col("src") === col("__dn"))
-      .select(col("src"), col("dst"), col("__deg"))
-  }
-
   def run(edges: DataFrame, iterations: Int = 3,
-          scale: Long = 0L, reliable: Boolean = false,
-          broadcastRanks: Boolean = false,
-          preparedAdjacency: Boolean = false): DataFrame = {
+          scale: Long = 0L, reliable: Boolean = false): DataFrame = {
     require(iterations >= 1 && iterations <= 20,
       s"PageRank: iterations in [1, 20], got $iterations")
-    require(!preparedAdjacency || broadcastRanks,
-      "PageRank: preparedAdjacency is the broadcastRanks layout — " +
-        "prepare with prepareBroadcastAdjacency and pass both flags")
     require(scale == 0L || scale >= 1000L,
       s"PageRank: scale >= 1000 (or 0 for auto), got $scale")
     if (reliable) require(
       edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
       "reliable=true needs spark.sparkContext.setCheckpointDir(...) first")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Contribution-ready adjacency, built ONCE with a single exchange:
-    // hash(src) already clusters (src, dst), so the dedup aggregate adds
-    // no second shuffle, and the out-degree is a window count within the
-    // same layout instead of a groupBy + self-join. The loop then only
-    // ever touches these two cached tables — no per-iteration degree
-    // recompute or node-set rebuild.
-    //
-    // `broadcastRanks = true` (the [[LabelProp]] `broadcastLabels`
-    // posture: right whenever the NODE table fits an executor —
-    // checkpointed rounds lose the size stats AQE would need to choose
-    // this itself) instead partitions the adjacency on `dst` and ships
-    // each hop's node-sized rank table as a broadcast: the hop join then
-    // streams the persisted layout unmoved and the groupBy(dst) inflow
-    // sum rides it in place — ZERO per-hop exchanges instead of a rank
-    // exchange plus the contribution shuffle. The out-degree becomes a
-    // broadcast-joined node-sized side table (the window over src would
-    // need the src layout back). Results identical (spec-asserted):
-    // same integer arithmetic over the same groups.
-    val adj = if (preparedAdjacency) edges
-    else if (broadcastRanks)
-      prepareBroadcastAdjacency(edges).persist(lvl)
-    else edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("src"))
-      .distinct()
-      .withColumn("__deg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-      .persist(lvl)
+    val adj = prepareAdjacency(edges).persist(lvl)
     val nodes = adj.select(col("src").as("node"))
       .union(adj.select(col("dst").as("node"))).distinct()
       .persist(lvl)
@@ -149,23 +103,21 @@ object PageRank {
         s"Long.Max/100; pass scale <= $safeCap")
     val base = lit(15L * s / 100L)
     var rank = nodes.select(col("node"), lit(s).as("rank_fp"))
-    for (__it <- 1 to iterations) {
-      val rankSide = if (broadcastRanks) broadcast(rank) else rank
+    for (_ <- 1 to iterations) {
+      val rankSide = broadcast(rank)
       val contribs = rankSide
         .join(adj, rankSide("node") === adj("src"))
         .select(col("dst").as("node"),
           expr("rank_fp div __deg").as("__c"))
         .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
       // LEFT join keeps sink-only / source-only nodes alive at the base
-      // rank (they receive no mass but stay rankable). Under
-      // broadcastRanks the contribution table is node-sized too, so the
-      // completion join broadcasts it rather than exchanging both sides.
-      val contribSide = if (broadcastRanks) broadcast(contribs) else contribs
-      val next = nodes.join(contribSide, Seq("node"), "left")
+      // rank (they receive no mass but stay rankable). The contribution
+      // table is node-sized too, so the completion join broadcasts it
+      // rather than exchanging both sides.
+      val next = nodes.join(broadcast(contribs), Seq("node"), "left")
         .select(col("node"),
           (base + expr("(85 * coalesce(__in, CAST(0 AS BIGINT))) div 100"))
             .as("rank_fp"))
-      if (__it == 1) GraphExplain("pagerank round", next)
       // Lazy checkpoints keep the loop at zero jobs; the single action
       // below materializes every round's boundary in one pass.
       rank = if (reliable) next.checkpoint(eager = false)
@@ -175,8 +127,24 @@ object PageRank {
     // intermediate) checkpoint so the plan no longer references the
     // cached tables, then release them.
     rank.count()
-    if (!preparedAdjacency) adj.unpersist(blocking = false)
+    adj.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     rank
+  }
+
+  /** The contribution-ready adjacency [[run]] consumes: the DISTINCT
+    * long (src, dst) set hash-partitioned on `dst` with each source's
+    * out-degree folded in as `__deg` (a broadcast-joined node-sized
+    * side table — a window over src would need a src layout).
+    */
+  private[graphs] def prepareAdjacency(edges: DataFrame): DataFrame = {
+    val dedup = edges
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .repartition(col("dst"))
+      .distinct()
+    val degs = dedup.groupBy(col("src").as("__dn"))
+      .agg(count(lit(1)).as("__deg"))
+    dedup.join(broadcast(degs), col("src") === col("__dn"))
+      .select(col("src"), col("dst"), col("__deg"))
   }
 }

@@ -26,10 +26,10 @@ import org.apache.spark.sql.functions._
   * exact skew that kills the naive three-way self-join. All joins are
   * equi-joins (spec asserts no CartesianProduct).
   *
-  * Plan shape (the [[PageRank]] adjacency idiom): symmetrize row-locally,
-  * then `repartition(src)` so the dedup `distinct` RIDES the layout (hash
-  * clustering on `src` satisfies the distinct's clustered distribution —
-  * no second exchange) and the src-degree is a window count in place;
+  * Plan shape: symmetrize row-locally, then `repartition(src)` so the
+  * dedup `distinct` RIDES the layout (hash clustering on `src` satisfies
+  * the distinct's clustered distribution — no second exchange) and the
+  * src-degree is a window count in place;
   * one more exchange on `dst` window-counts the other endpoint's degree
   * (symmetric graph: in-degree ≡ degree). Orientation is then a
   * row-local FILTER — each undirected edge survives exactly once, no
@@ -45,39 +45,10 @@ object Triangles {
     * nodes in ≥ 1 triangle appear — union with the node set for the
     * zero-filled variant.
     */
-  /** The degree-oriented adjacency [[nodeTriangles]] intersects: each
-    * undirected edge once, low-rank → high-rank as (a, b). Public so a
-    * pipeline re-running triangle readouts over one graph materializes
-    * it ONCE and passes it back through
-    * `nodeTriangles(..., preparedOriented = true)`; the caller owns
-    * persistence. The neighbor lists still build per call (one
-    * aggregation over the prepared layout) — they are consumed twice
-    * within one plan and stay operator-internal.
-    */
-  def prepareOriented(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst"))
-    val dir = e
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("src"))
-      .distinct()
-      .withColumn("du", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .repartition(col("dst"))
-      .withColumn("dv", count(lit(1)).over(Window.partitionBy(col("dst"))))
-    dir
-      .filter(col("du") < col("dv") ||
-        (col("du") === col("dv") && col("src") < col("dst")))
-      .select(col("src").as("a"), col("dst").as("b"))
-  }
-
-  def nodeTriangles(edges: DataFrame,
-                    preparedOriented: Boolean = false): DataFrame = {
+  def nodeTriangles(edges: DataFrame): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val (adj, nbrs, out) = trianglesPlan(edges, preparedOriented)
-    if (!preparedOriented) adj.persist(lvl)
+    val (adj, nbrs, out) = trianglesPlan(edges)
+    adj.persist(lvl)
     nbrs.persist(lvl)
     // The oriented adjacency feeds three consumers (nbrs + both join
     // sides) and nbrs two — unpersisted, the whole edge build re-runs
@@ -85,10 +56,9 @@ object Triangles {
     // one small row per triangle-bearing node, so materialize it through
     // a lazy localCheckpoint (the [[PageRank]] idiom) and release the
     // caches before returning.
-    GraphExplain("triangles out", out)
     val result = out.localCheckpoint(eager = false)
     result.count()
-    if (!preparedOriented) adj.unpersist(blocking = false)
+    adj.unpersist(blocking = false)
     nbrs.unpersist(blocking = false)
     result
   }
@@ -97,18 +67,9 @@ object Triangles {
     * per-node counts) — split out so the spec can assert plan contracts
     * on the un-checkpointed composition.
     */
-  private[graphs] def trianglesPlan(edges: DataFrame,
-                                    preparedOriented: Boolean = false)
+  private[graphs] def trianglesPlan(edges: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    // Symmetrize row-locally (explode of the two orientations — NOT a
-    // union, which would run the upstream edge build once per branch),
-    // then dedup + both endpoint degrees in exactly two exchanges, zero
-    // joins — see [[prepareOriented]]; under `preparedOriented` the
-    // caller passed that output (caller-persisted) and the build is
-    // skipped.
-    val adj =
-      if (preparedOriented) edges
-      else prepareOriented(edges)
+    val adj = prepareOriented(edges)
     // Edge-intersection ("compact-forward") enumeration: for the
     // oriented edge (a, b), every common out-neighbor c ∈ N⁺(a) ∩ N⁺(b)
     // closes the triangle with rank(a) < rank(b) < rank(c) — each
@@ -137,11 +98,35 @@ object Triangles {
   /** Top-k triangle-heavy nodes, unique-tiebroken — TakeOrdered, never a
     * global sort.
     */
-  def topTriangleNodes(edges: DataFrame, k: Int,
-                       preparedOriented: Boolean = false): DataFrame = {
+  def topTriangleNodes(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"topTriangleNodes: k >= 1, got $k")
-    nodeTriangles(edges, preparedOriented)
+    nodeTriangles(edges)
       .orderBy(col("n_triangles").desc, col("node").asc)
       .limit(k)
+  }
+
+  /** The degree-oriented adjacency [[trianglesPlan]] intersects: each
+    * undirected edge once, low-rank → high-rank as (a, b). Symmetrize
+    * row-locally (explode of the two orientations — NOT a union, which
+    * would run the upstream edge build once per branch), then dedup +
+    * both endpoint degrees in exactly two exchanges, zero joins.
+    */
+  private[graphs] def prepareOriented(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .filter(col("src") =!= col("dst"))
+    val dir = e
+      .select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .repartition(col("src"))
+      .distinct()
+      .withColumn("du", count(lit(1)).over(Window.partitionBy(col("src"))))
+      .repartition(col("dst"))
+      .withColumn("dv", count(lit(1)).over(Window.partitionBy(col("dst"))))
+    dir
+      .filter(col("du") < col("dv") ||
+        (col("du") === col("dv") && col("src") < col("dst")))
+      .select(col("src").as("a"), col("dst").as("b"))
   }
 }

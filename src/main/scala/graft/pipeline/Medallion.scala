@@ -187,14 +187,6 @@ object Medallion {
     }
   }
 
-  /** Integer-only flavor of [[mergeAggState]]: identical fold semantics
-    * (quantize each row ONCE to long cents, floor(value·100 + 0.5), sum
-    * longs exactly in any order) but the state/output carries the raw
-    * `cents BIGINT` with no decimal presentation step. Zero
-    * engine-sensitive surface: every column is an integer, so any
-    * cross-engine comparison of this output is exact by construction.
-    * Output/state schema: (groupCols…, n_rows BIGINT, cents BIGINT).
-    */
   /** Fold a CHANGE-FEED batch (rows carrying `_change_type`) into the
     * `(groupCols → n_rows, cents)` aggregate state — the delta rule
     * for COUNT/SUM over a CDC stream (Gupta–Mumick incremental view
@@ -233,6 +225,14 @@ object Medallion {
     merged.filter(col("n_rows") =!= 0L)
   }
 
+  /** Integer-only flavor of [[mergeAggState]]: identical fold semantics
+    * (quantize each row ONCE to long cents, floor(value·100 + 0.5), sum
+    * longs exactly in any order) but the state/output carries the raw
+    * `cents BIGINT` with no decimal presentation step. Zero
+    * engine-sensitive surface: every column is an integer, so any
+    * cross-engine comparison of this output is exact by construction.
+    * Output/state schema: (groupCols…, n_rows BIGINT, cents BIGINT).
+    */
   def mergeAggStateCents(state: Option[DataFrame], batch: DataFrame,
                          groupCols: Seq[String], valueCol: String): DataFrame = {
     require(groupCols.nonEmpty, "mergeAggStateCents needs group columns")

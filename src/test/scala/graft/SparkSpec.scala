@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,19 +45,38 @@ abstract class SparkSpec extends AnyFunSuite {
       }
   }
 
-  /** Spark jobs started by `body` — a timing-free cost contract. Jobs
-    * posted before the call are flushed first so none is miscounted.
+  /** Events counted by `listener` while `body` runs. Events posted
+    * before the call are flushed first so none is miscounted.
     */
-  protected def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
+  private def countEvents(body: => Unit)(
+      listener: AtomicInteger => SparkListener): Int = {
+    val n = new AtomicInteger
+    val l = listener(n)
     flushListeners()
     spark.sparkContext.addSparkListener(l)
     try { body; flushListeners() }
     finally spark.sparkContext.removeSparkListener(l)
     n.get()
   }
+
+  /** Spark jobs started by `body` — a timing-free cost contract. */
+  protected def countJobs(body: => Unit): Int =
+    countEvents(body)(n => new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    })
+
+  /** Shuffle-map stages completed by `body`: stages carrying a
+    * `shuffleDepId`, i.e. the exchanges the plan really ran (a reused
+    * shuffle's stage is skipped, not completed). `shuffleDepId` is
+    * Scala private[spark] but bytecode-public — reflection, as above.
+    */
+  protected def countShuffleMapStages(body: => Unit): Int =
+    countEvents(body)(n => new SparkListener {
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val info = sc.stageInfo
+        val dep = info.getClass.getMethod("shuffleDepId").invoke(info)
+        if (dep.asInstanceOf[Option[_]].isDefined) n.incrementAndGet()
+      }
+    })
 }

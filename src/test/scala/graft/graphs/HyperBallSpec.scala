@@ -23,34 +23,17 @@ class HyperBallSpec extends SparkSpec {
     assert(est2(5L) == 1L && est2(11L) == 1L)
   }
 
-  test("broadcast-register rounds are output-identical to shuffle rounds") {
+  test("round shape: a round adds one shuffle-map stage, its materializing count") {
+    // The round plan itself runs no exchange (the broadcast join streams
+    // the src layout, the max-agg rides it); each round's persist is
+    // materialized by a count(), whose single-partition exchange is the
+    // one stage a round adds (measured: 1 round 6, 4 rounds 9).
     val s = spark; import s.implicits._
     val edges = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 1L)) ++
       (11L to 16L).map(v => (10L, v))).toDF("src", "dst")
-    val shuffle = HyperBall.neighborhoodSizes(edges, rounds = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bcast = HyperBall.neighborhoodSizes(edges, rounds = 3,
-        broadcastRegisters = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(bcast == shuffle)
-  }
-
-  test("prepared adjacency is output-identical to inline preparation") {
-    val s = spark; import s.implicits._
-    val edges = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 1L)) ++
-      (11L to 16L).map(v => (10L, v))).toDF("src", "dst")
-    val inline = HyperBall.neighborhoodSizes(edges, rounds = 3,
-        broadcastRegisters = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prep = HyperBall.prepareBroadcastAdjacency(edges).persist()
-    val prepared = HyperBall.neighborhoodSizes(prep, rounds = 3,
-        broadcastRegisters = true, preparedAdjacency = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(prepared == inline)
-    prep.unpersist()
-    intercept[IllegalArgumentException](
-      HyperBall.neighborhoodSizes(edges, rounds = 3,
-        preparedAdjacency = true))
+    val one = countShuffleMapStages(HyperBall.neighborhoodSizes(edges, 1))
+    val four = countShuffleMapStages(HyperBall.neighborhoodSizes(edges, 4))
+    assert(four == one + 3, s"1 round: $one stages, 4 rounds: $four")
   }
 
   test("rounds grow balls monotonically; round count bounds the radius") {

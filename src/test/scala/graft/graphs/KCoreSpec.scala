@@ -30,34 +30,26 @@ class KCoreSpec extends SparkSpec {
     assert(KCore.run(edges, k = 5, rounds = 3).count() == 0)
   }
 
-  test("broadcastActive ≡ shuffle semi-joins on two fused cliques") {
-    // two 4-cliques sharing node 10 via single bridges: bridges peel at
-    // k=3, cliques (internal degree 3) survive.
+  /** Two 4-cliques joined through node 10 by single bridges. */
+  private def fusedCliques = {
     val k4a = for (a <- 1L to 4L; b <- 1L to 4L if a < b) yield (a, b)
     val k4b = for (a <- 5L to 8L; b <- 5L to 8L if a < b) yield (a, b)
-    val edges = undirected(k4a ++ k4b ++ Seq((4L, 10L), (10L, 5L)))
-    val bc = KCore.run(edges, k = 3, rounds = 5, broadcastActive = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sh = KCore.run(edges, k = 3, rounds = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(bc == sh)
-    assert(bc.map(_._1) == (1L to 8L).toSet)
-    assert(bc.forall(_._2 == 3L))
+    undirected(k4a ++ k4b ++ Seq((4L, 10L), (10L, 5L)))
   }
 
-  test("prepared adjacency is output-identical to inline preparation") {
-    val k4a = for (a <- 1L to 4L; b <- 1L to 4L if a < b) yield (a, b)
-    val k4b = for (a <- 5L to 8L; b <- 5L to 8L if a < b) yield (a, b)
-    val edges = undirected(k4a ++ k4b ++ Seq((4L, 10L), (10L, 5L)))
-    val inline = KCore.run(edges, k = 3, rounds = 5,
-        broadcastActive = true)
+  test("two fused cliques: the bridge peels, both cliques survive") {
+    // at k=3 the bridge node 10 (degree 2) peels; the cliques (internal
+    // degree 3) are the fixpoint.
+    val got = KCore.run(fusedCliques, k = 3, rounds = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val prep = KCore.prepareAdjacency(edges, broadcastActive = true)
-      .persist()
-    val prepared = KCore.run(prep, k = 3, rounds = 5,
-        broadcastActive = true, preparedAdjacency = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(prepared == inline)
-    prep.unpersist()
+    assert(got.map(_._1) == (1L to 8L).toSet)
+    assert(got.forall(_._2 == 3L))
   }
+
+  test("round shape: a round adds no shuffle-map stage (1 vs 4 rounds)") {
+    val one = countShuffleMapStages(KCore.run(fusedCliques, k = 3, rounds = 1))
+    val four = countShuffleMapStages(KCore.run(fusedCliques, k = 3, rounds = 4))
+    assert(four == one, s"1 round: $one stages, 4 rounds: $four")
+  }
+
 }

@@ -49,29 +49,12 @@ class PageRankSpec extends SparkSpec {
       Map(1L -> 1000000000000L, 2L -> 1000000000000L))
   }
 
-  test("broadcast hops are output-identical to shuffle hops") {
-    val s = spark; import s.implicits._
-    val bcast = PageRank.run(fourNode.toDF("src", "dst"), 3,
-        broadcastRanks = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(bcast == reference(fourNode.toSet, 3))
-    assert(bcast == run(fourNode, 3))
-  }
-
-  test("prepared adjacency is output-identical to inline preparation") {
+  test("round shape: a hop adds no shuffle-map stage (1 vs 4 iterations)") {
     val s = spark; import s.implicits._
     val df = fourNode.toDF("src", "dst")
-    val inline = PageRank.run(df, 3, broadcastRanks = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prep = PageRank.prepareBroadcastAdjacency(df).persist()
-    val prepared = PageRank.run(prep, 3, broadcastRanks = true,
-        preparedAdjacency = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(prepared == inline)
-    prep.unpersist()
-    // prepared without broadcastRanks refuses
-    intercept[IllegalArgumentException](
-      PageRank.run(df, 3, preparedAdjacency = true))
+    val one = countShuffleMapStages(PageRank.run(df, 1))
+    val four = countShuffleMapStages(PageRank.run(df, 4))
+    assert(four == one, s"1 iteration: $one stages, 4 iterations: $four")
   }
 
   test("duplicate edges collapse before degree counting") {

@@ -93,16 +93,4 @@ class TrianglesSpec extends SparkSpec {
       s"all-pairs join in triangle plan:\n$plan")
   }
 
-  test("prepared oriented adjacency is output-identical to inline") {
-    val s2 = spark; import s2.implicits._
-    val edges = ((for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)) ++
-      Seq((4L, 5L), (5L, 6L), (6L, 4L), (7L, 8L))).toDF("src", "dst")
-    val inline = Triangles.nodeTriangles(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prep = Triangles.prepareOriented(edges).persist()
-    val prepared = Triangles.nodeTriangles(prep, preparedOriented = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(prepared == inline)
-    prep.unpersist()
-  }
 }

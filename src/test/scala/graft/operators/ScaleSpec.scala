@@ -144,9 +144,9 @@ class ScaleSpec extends SparkSpec {
     val k = 3
     val e1 = ScaledFixtures.scaledEdges(spark, sfDir, 1, s"$tmpBase/lp-edges1")
     val ek = ScaledFixtures.scaledEdges(spark, sfDir, k, s"$tmpBase/lp-edges$k")
-    val base = graft.graphs.LabelProp.run(e1, rounds = 3, broadcastLabels = true)
+    val base = graft.graphs.LabelProp.run(e1, rounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val grown = graft.graphs.LabelProp.run(ek, rounds = 3, broadcastLabels = true)
+    val grown = graft.graphs.LabelProp.run(ek, rounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(grown.length == k * base.size)
     // votes never cross disjoint components, so copy cp's labels are the
@@ -162,12 +162,10 @@ class ScaleSpec extends SparkSpec {
     val k = 3
     val e1 = ScaledFixtures.scaledEdges(spark, sfDir, 1, s"$tmpBase/kc-edges1")
     val ek = ScaledFixtures.scaledEdges(spark, sfDir, k, s"$tmpBase/kc-edges$k")
-    val base = graft.graphs.KCore.run(e1, k = 60, rounds = 3,
-        broadcastActive = true)
+    val base = graft.graphs.KCore.run(e1, k = 60, rounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(base.nonEmpty, "base 60-core empty — law is vacuous")
-    val grown = graft.graphs.KCore.run(ek, k = 60, rounds = 3,
-        broadcastActive = true)
+    val grown = graft.graphs.KCore.run(ek, k = 60, rounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(grown.length == k * base.size)
     // peeling never crosses disjoint components: copy cp's core is the
