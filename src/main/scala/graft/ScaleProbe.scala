@@ -165,7 +165,8 @@ object ScaleProbe {
         // cluster — a property of the synthetic growth model, not the
         // operator. At 0.8 cross-copy edges are ~impossible and the
         // per-copy dup structure is what scales.
-        graft.ml.Similarity.keepCanonical(embs(k), 0.8)
+        graft.ml.Similarity.keepCanonical(embs(k),
+          graft.ml.Similarity.cosineDupPairsBucketed(embs(k), 0.8))
       },
       "triangles" -> { k =>
         graft.graphs.Triangles.nodeTriangles(edges(k))

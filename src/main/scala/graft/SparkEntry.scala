@@ -24,73 +24,14 @@ object SparkEntry {
 
   private val eventTypes = Seq("click", "error", "purchase", "signup", "view")
 
-  /** One persisted 2-gram shingle table per (session, sf-dir), shared by
-    * the q70 (count-based) and q77 (prefix-filtered) exact-Jaccard plans —
-    * the real-pipeline shape (shingling is a materialized intermediate
-    * every dedup flavor reads) and it keeps the session CacheManager at
-    * ONE copy of the corpus shingles instead of one per flavor.
-    *
-    * The memo stores the PLAN; the persist is (re-)registered on every
-    * call. Harnesses (Bench) call `spark.catalog.clearCache()` between
-    * queries, which evicts the cached blocks behind our back — in round 8
-    * the memo handed back the evicted plan forever and q77 silently
-    * recomputed the shingle pass three times per run (4.3 → 8.9 s).
-    * `persist()` on an already-persisted Dataset is a no-op, so the
-    * steady-state check costs nothing. The plan is built UNPERSISTED and
-    * raced through `putIfAbsent` so a losing builder never strands an
-    * orphaned corpus-sized entry in the session CacheManager; only the
-    * map's winning entry is ever persisted. Entries whose session has
-    * stopped are dropped on the way in, bounding the map in a long-lived
-    * process that cycles sessions.
+  /** The simhash near-dup pair graph over the documents — the graph
+    * q50 reports, q60/q118/q217 group, q95/q152 remove against, and
+    * q158/q200 audit. Built per call: each gate computes from its own
+    * inputs, so no gate's timing includes another gate's cached work.
     */
-  private type PlanCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
-  private def cachedPlan(cache: PlanCache, s: SparkSession, d: String)
-                        (build: => DataFrame): DataFrame = {
-    cache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    val df = cache.get((s, d)).getOrElse {
-      val built = build
-      cache.putIfAbsent((s, d), built).getOrElse(built)
-    }
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
-  }
-
-  private val jaccardShingleCache = new PlanCache
-  private def jaccardShingles(s: SparkSession, d: String): DataFrame =
-    cachedPlan(jaccardShingleCache, s, d) {
-      val docs = Tables.documentsSpread(s, d)
-      TextDedup.shingleHashedDocs(
-        docs.filter(size(TextDedup.tokens(col("text"))) >= 2),
-        "doc_id", "text", n = 2)
-    }
-
-  /** The posting-list co-occurrence table over [[jaccardShingles]],
-    * carrying BOTH the shared-shingle count and the idf²-weighted dot
-    * from ONE pair pass — q70 scores it as Jaccard, q110 as
-    * containment (n_shared), q198 as idf-weighted Jaccard (dot).
-    * Materialized once (same eviction-proof persist discipline); the
-    * expensive posting self-join never runs twice, let alone three
-    * times.
-    */
-  private val jaccardPairCountsCache = new PlanCache
-  private def jaccardPairCounts(s: SparkSession, d: String): DataFrame =
-    cachedPlan(jaccardPairCountsCache, s, d) {
-      TextDedup.shinglePairDots(jaccardShingles(s, d))
-    }
-
-  /** Same sharing shape for the simhash near-dup pair graph: q50 reports
-    * it, q60 groups it, q95 removes against it — in a real pipeline the
-    * pair graph is materialized once and every downstream consumer reads
-    * it. Same eviction-proof persist discipline as [[jaccardShingles]].
-    */
-  private val simhashPairsCache = new PlanCache
   private def simhashPairs(s: SparkSession, d: String): DataFrame =
-    cachedPlan(simhashPairsCache, s, d) {
-      TextDedup.simhashNearDupPairs(Tables.documentsSpread(s, d),
-        "doc_id", "text")
-    }
+    TextDedup.simhashNearDupPairs(Tables.documentsSpread(s, d),
+      "doc_id", "text")
 
   /** The q248/q254/q257 directed part-succession graph — next-line
     * part transitions within an order, capped to parts ≤ 500.
@@ -114,20 +55,6 @@ object SparkEntry {
       .select(col("l_partkey").as("src"), col("__next").as("dst"))
   }
 
-  /** One SCC label table per (session, sf-dir), shared by q248 (the
-    * labels), q254 (condensation), q257 (size histogram) — the real
-    * pipeline materializes the fixpoint once and every readout consumes
-    * it; without the memo each readout re-runs the full multi-phase
-    * FW-BW fixpoint. Same eviction-proof persist discipline as
-    * [[jaccardShingles]] (Scc.run's output additionally rides its own
-    * RDD-level persists, which clearCache does not evict).
-    */
-  private val sccLabelsCache = new PlanCache
-  private def sccLabels(s: SparkSession, d: String): DataFrame =
-    cachedPlan(sccLabelsCache, s, d) {
-      graft.graphs.Scc.run(sccLineitemEdges(s, d))
-    }
-
   /** The item co-occurrence edge list (parts sharing an order, both
     * directions) — the ONE graph all six graph-family gates analyze
     * (q94 PageRank, q101 triangles, q147 label propagation, q162 k-core,
@@ -135,11 +62,9 @@ object SparkEntry {
     * internally (multiplicity-insensitive by contract), so the canonical
     * edge SET is the common denominator and every operator's first
     * exchange shuffles the set (2.4 M rows at sf0.1), not the ~18 M-row
-    * per-order pair stream. Deliberately NOT memoized: each operator
-    * consumes it exactly once, into the adjacency it persists itself,
-    * and both harnesses clearCache between queries, so a persisted memo
-    * only re-pays its cache build on every run (q94: 3 extra jobs, ~1 s
-    * per run at the curate benchmark's scale) — the q43/q44 trap below.
+    * per-order pair stream. Built per call like every gate input: each
+    * operator consumes it exactly once, into the adjacency it persists
+    * itself.
     */
   private def itemCoEdges(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
@@ -151,13 +76,8 @@ object SparkEntry {
       .distinct()
   }
 
-  /** q43/q44 each build the parsed silver orders table directly — NOT
-    * through the memo above. Unlike jaccardShingles (referenced 3× in
-    * one plan), each of these plans consumes the parse exactly once, and
-    * both harnesses clearCache between queries, so a memoized persist
-    * would never be shared across queries; its only effect would be
-    * min-of-N's second run timing a cache hit instead of the parse —
-    * masking parse regressions (tried and reverted in round 11).
+  /** The parsed silver orders table q43/q44 each build and consume
+    * once.
     */
   private def silverOrdersParsed(s: SparkSession, d: String): DataFrame =
     pipeline.OrderEvents.parse(
@@ -800,9 +720,7 @@ object SparkEntry {
     // recall. 2-gram shingles to differentiate from q24's 3-grams.
     "q70_jaccard_neardup" -> ((s, d) =>
       TextDedup.jaccardNearDupPairs(Tables.documentsSpread(s, d),
-        "doc_id", "text", shingleN = 2, threshold = 0.5,
-        shingles = Some(jaccardShingles(s, d)),
-        pairCounts = Some(jaccardPairCounts(s, d)))),
+        "doc_id", "text", shingleN = 2, threshold = 0.5)),
     // k-means over embeddings, centroids = vec_id < 8 (model state,
     // driver-collected into plan literals). Assignment is a ZERO-shuffle
     // map stage; the update step's sufficient statistics are exact
@@ -828,8 +746,7 @@ object SparkEntry {
     // — two independent formulations gated against one truth.
     "q77_jaccard_prefix" -> ((s, d) =>
       TextDedup.jaccardNearDupPairsPrefix(Tables.documentsSpread(s, d),
-        "doc_id", "text", shingleN = 2, threshold = 0.5,
-        shingles = Some(jaccardShingles(s, d)))),
+        "doc_id", "text", shingleN = 2, threshold = 0.5)),
     // Tokenizer-training vocab: counts >= 3, ids by (count desc, token).
     "q90_vocab_build" -> ((s, d) =>
       TextStats.buildVocab(Tables.documentsSpread(s, d), "text", 3)),
@@ -933,8 +850,8 @@ object SparkEntry {
     // keep the min-id doc per cluster. Oracle composes the q50 pair graph
     // with the q60 recursive-CTE reachability, then anti-joins the losers.
     "q95_keep_canonical" -> ((s, d) =>
-      TextDedup.keepCanonical(Tables.documentsSpread(s, d), "doc_id", "text",
-          pairs = Some(simhashPairs(s, d)))
+      TextDedup.keepCanonical(Tables.documentsSpread(s, d), "doc_id",
+          simhashPairs(s, d))
         .select(col("doc_id"), col("lang"), col("n_chars"))),
     // Sliding-window token chunking (8-token windows, 3-token overlap) —
     // boundaries, sizes and text all integer/slice arithmetic DuckDB
@@ -1043,9 +960,11 @@ object SparkEntry {
     // connected components → keep the min-id vector per cluster (the
     // vector-space q95). Oracle composes the q42 bucket/cosine CTEs with
     // the q60 recursive-CTE reachability.
-    "q108_embedding_canonical" -> ((s, d) =>
-      Similarity.keepCanonical(Tables.embeddingsSpread(s, d), 0.3)
-        .select(col("vec_id"), col("label"))),
+    "q108_embedding_canonical" -> ((s, d) => {
+      val em = Tables.embeddingsSpread(s, d)
+      Similarity.keepCanonical(em, Similarity.cosineDupPairsBucketed(em, 0.3))
+        .select(col("vec_id"), col("label"))
+    }),
     // Incremental SCD2 maintenance gated by its defining invariant:
     // history(events < Jan 16) + applyChanges(events ≥ Jan 16) must
     // equal history(all events) — the oracle IS q99's full rebuild.
@@ -1062,13 +981,10 @@ object SparkEntry {
           col("valid_to_us"), col("version"), col("is_current"))
     }),
     // Asymmetric containment pairs (quote/subset detection): same
-    // posting-list machinery and shared shingle table as q70/q77, score
-    // = n_shared / min(|A|, |B|) — fourth consumer of the shared cache.
+    // posting-list machinery as q70/q77, score = n_shared / min(|A|, |B|).
     "q110_containment" -> ((s, d) =>
       TextDedup.containmentPairs(Tables.documentsSpread(s, d),
-        "doc_id", "text", shingleN = 2, threshold = 0.8,
-        shingles = Some(jaccardShingles(s, d)),
-        pairCounts = Some(jaccardPairCounts(s, d)))),
+        "doc_id", "text", shingleN = 2, threshold = 0.8)),
     // Histogram-sketch quantiles (the sketch family's quantile member):
     // p50/p95 account-balance bins per market segment from a 64-bin
     // mergeable sketch — floor(×100) cents keep every step integer
@@ -1333,8 +1249,8 @@ object SparkEntry {
     // corpus.
     "q140_phrase_search" -> ((s, d) =>
       // the postings index is read once PER PHRASE WORD inside one plan
-      // (the jaccardShingles 3x-in-one-plan rule) — persist per call so
-      // the tokenize+posexplode pass runs once, not three times
+      // — persist per call so the tokenize+posexplode pass runs once,
+      // not three times
       TextStats.phraseSearch(
         TextStats.positionalPostings(Tables.documentsSpread(s, d),
             "doc_id", "text")
@@ -1395,7 +1311,7 @@ object SparkEntry {
     "q151_bpe_token_counts" -> ((s, d) =>
       TextStats.bpeTokenCounts(Tables.documentsSpread(s, d), "doc_id",
         "text", 3)),
-    // Quality-policy canonical selection over the shared simhash pair
+    // Quality-policy canonical selection over the simhash pair
     // graph: keep each cluster's LONGEST member (token count, min-id
     // ties) instead of q95's min id.
     "q152_quality_canonical" -> ((s, d) =>
@@ -1656,9 +1572,7 @@ object SparkEntry {
     "q187_lsh_tuning" -> ((s, d) =>
       TextDedup.lshTuningTable(
         TextDedup.jaccardNearDupPairs(Tables.documentsSpread(s, d),
-          "doc_id", "text", shingleN = 2, threshold = 0.5,
-          shingles = Some(jaccardShingles(s, d)),
-          pairCounts = Some(jaccardPairCounts(s, d))),
+          "doc_id", "text", shingleN = 2, threshold = 0.5),
         "jaccard", lshGrid)),
     // Chi-squared independence of language vs source (corpus balance).
     "q188_chi_squared" -> ((s, d) =>
@@ -1780,15 +1694,10 @@ object SparkEntry {
         Seq("split"), "latency_us", Seq(50, 90))
     }),
     // idf²-weighted Jaccard pairs — boilerplate shingles stop drowning
-    // the similarity signal on this templated corpus. Shares the q70/q77
-    // shingle cache (one corpus tokenize across the whole family) AND
-    // the q70/q110 pair materialization (the Σdf² co-occurrence join
-    // runs once for the family; this plan adds only posting-sized
-    // idf/norm aggregations).
+    // the similarity signal on this templated corpus.
     "q198_weighted_jaccard" -> ((s, d) =>
       TextDedup.weightedJaccardPairs(Tables.documentsSpread(s, d),
-        "doc_id", "text", shingles = Some(jaccardShingles(s, d)),
-        pairDots = Some(jaccardPairCounts(s, d)))),
+        "doc_id", "text")),
     // Per-state next-event entropy (behavior predictability) — the q172
     // fixed-point entropy over the q112 transition stream.
     "q199_transition_entropy" -> ((s, d) => {
@@ -1836,14 +1745,10 @@ object SparkEntry {
         // (rest of the union chain continues below)
         .unionByName(pairSummary("jaccard",
           TextDedup.jaccardNearDupPairs(docs, "doc_id", "text",
-            shingleN = 2, threshold = 0.5,
-            shingles = Some(jaccardShingles(s, d)),
-            pairCounts = Some(jaccardPairCounts(s, d))), "doc_a", "doc_b"))
+            shingleN = 2, threshold = 0.5), "doc_a", "doc_b"))
         .unionByName(pairSummary("containment",
           TextDedup.containmentPairs(docs, "doc_id", "text",
-            shingleN = 2, threshold = 0.8,
-            shingles = Some(jaccardShingles(s, d)),
-            pairCounts = Some(jaccardPairCounts(s, d))), "doc_a", "doc_b"))
+            shingleN = 2, threshold = 0.8), "doc_a", "doc_b"))
         .unionByName(groupSummary("ahash", ahashGroups, "n_images"))
     }),
     // Sketch calibration: exact distinct user-days vs the p=8 HLL
@@ -2181,7 +2086,7 @@ object SparkEntry {
     // cycle-structure readout (how much of the graph sits in
     // nontrivial cycles vs singletons).
     "q257_scc_sizes" -> ((s, d) =>
-      graft.graphs.Scc.sizeHistogramFromLabels(sccLabels(s, d))),
+      graft.graphs.Scc.sizeHistogram(sccLineitemEdges(s, d))),
     // Copy-on-write UPDATE with file skipping: zero out value for an
     // event_id range, pass everything else through bit-identical; the
     // oracle is the CASE expression over the whole table.
@@ -3643,8 +3548,7 @@ object SparkEntry {
     // distinct components with an original edge between them — always
     // acyclic, the dependency readout SCC exists to produce.
     "q254_scc_condensation" -> ((s, d) =>
-      graft.graphs.Scc.condensationFromLabels(
-        sccLineitemEdges(s, d), sccLabels(s, d))),
+      graft.graphs.Scc.condensation(sccLineitemEdges(s, d))),
     // Incremental JOIN-view maintenance (the delta rule): three
     // MISALIGNED batch pairs of orders/lineitem folded through
     // JoinView.advance must equal the one-shot join — every cross term
@@ -3704,7 +3608,7 @@ object SparkEntry {
       graft.lake.DeltaLog.compactPartitioned(s, root)
       graft.lake.DeltaLog.read(s, root)
     }),
-    "q248_scc" -> ((s, d) => sccLabels(s, d)),
+    "q248_scc" -> ((s, d) => graft.graphs.Scc.run(sccLineitemEdges(s, d))),
     "q245_ks_test" -> ((s, d) =>
       graft.ml.Eval.ksTest(
         Tables.events(s, d)

@@ -46,30 +46,25 @@ object HyperBall {
                         p: Int = 4): DataFrame = {
     require(rounds >= 1 && rounds <= 8,
       s"HyperBall: rounds in [1, 8], got $rounds")
-    val lvl = StorageLevel.MEMORY_AND_DISK
     // The node set rides the adjacency's self-loops.
-    val e = prepareAdjacency(edges).persist(lvl)
-    val nodes = e.filter(col("src") === col("dst"))
-      .select(col("src").as("node")).persist(lvl)
+    val e = prepareAdjacency(edges).persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
-    var regs = Sketches.hllRegisters(nodes, Seq("node"), col("node"), p)
-      .persist(lvl)
-    regs.count()
+    var regs = Sketches.hllRegisters(
+      e.filter(col("src") === col("dst")).select(col("src").as("node")),
+      Seq("node"), col("node"), p)
     for (_ <- 1 to rounds) {
       val next = e.join(broadcast(regs), e("dst") === regs("node"))
         .select(e("src").as("node"), col("bucket"), col("max_rho"))
         .groupBy(col("node"), col("bucket"))
         .agg(max(col("max_rho")).cast("int").as("max_rho"))
-        .persist(lvl)
-      next.count()
-      regs.unpersist(blocking = false)
-      regs = next
+      // Lazy checkpoints keep the loop at zero jobs; the single action
+      // below materializes every round's boundary in one pass.
+      regs = next.localCheckpoint(eager = false)
     }
     val out = Sketches.hllEstimateCorrected(regs, Seq("node"), p)
       .withColumnRenamed("est_distinct", "est_reachable")
     out.count()
     e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
     out
   }
 

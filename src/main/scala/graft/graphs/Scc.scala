@@ -184,22 +184,16 @@ object Scc {
     }
     require(nRemaining == 0,
       s"Scc: $nRemaining nodes unassigned after $maxPhases phases")
-    val df =
-      if (done.isEmpty)
-        // empty node universe: empty result with the declared shape
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("scc_id",
-              org.apache.spark.sql.types.LongType))))
-      else done.reduce(_ union _).toDF("node", "scc_id")
-    rawPairs.unpersist(blocking = false)
-    ePairs.unpersist(blocking = false)
-    eBySrc.unpersist(blocking = false)
-    adjOut.unpersist(blocking = false)
-    df
+    // The phases' outputs materialize once as ONE persisted union, so
+    // the call leaves exactly one RDD behind (the result's) — RDD-level
+    // persists are out of reach of the session's clearCache().
+    val labels = done.foldLeft(
+        spark.sparkContext.emptyRDD[(Long, Long)])(_ union _)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    labels.count()
+    (done ++ Seq(remaining, rawPairs, ePairs, eBySrc, adjOut))
+      .foreach(_.unpersist(blocking = false))
+    labels.toDF("node", "scc_id")
   }
 
   /** Condensation DAG — the graph OVER the SCCs: one edge (scc_a,
@@ -210,16 +204,8 @@ object Scc {
     * label joins on top of [[run]].
     */
   def condensation(edges: DataFrame, maxPhases: Int = 20,
-                   maxRounds: Int = 100): DataFrame =
-    condensationFromLabels(edges, run(edges, maxPhases, maxRounds))
-
-  /** [[condensation]] over a PRECOMPUTED (`node`, `scc_id`) label table
-    * (the [[run]] output shape): in a real pipeline the SCC fixpoint is
-    * materialized once and every readout consumes it — passing labels in
-    * keeps one fixpoint serving the label, condensation, and histogram
-    * surfaces instead of three.
-    */
-  def condensationFromLabels(edges: DataFrame, labels: DataFrame): DataFrame =
+                   maxRounds: Int = 100): DataFrame = {
+    val labels = run(edges, maxPhases, maxRounds)
     edges.select(col("src").cast("long"), col("dst").cast("long"))
       .join(labels.withColumnRenamed("node", "src")
         .withColumnRenamed("scc_id", "scc_a"), Seq("src"))
@@ -227,20 +213,14 @@ object Scc {
         .withColumnRenamed("scc_id", "scc_b"), Seq("dst"))
       .filter(col("scc_a") =!= col("scc_b"))
       .select(col("scc_a"), col("scc_b")).distinct()
+  }
 
   /** SCC-size histogram — (size, n_sccs); the cycle-structure readout
     * (how much of the graph sits in nontrivial cycles vs singletons).
     */
   def sizeHistogram(edges: DataFrame, maxPhases: Int = 20,
                     maxRounds: Int = 100): DataFrame =
-    sizeHistogramFromLabels(run(edges, maxPhases, maxRounds))
-
-  /** [[sizeHistogram]] over a precomputed label table (see
-    * [[condensationFromLabels]] for the one-fixpoint-many-readouts
-    * rationale).
-    */
-  def sizeHistogramFromLabels(labels: DataFrame): DataFrame =
-    labels
+    run(edges, maxPhases, maxRounds)
       .groupBy(col("scc_id")).agg(count(lit(1)).as("size"))
       .groupBy(col("size")).agg(count(lit(1)).as("n_sccs"))
 }

@@ -1641,8 +1641,8 @@ object DeltaLog {
   }
 
   /** Write `df` as `numFiles` parquet files staged UNDER `root` in ONE
-    * Spark job (round-robin repartition — the [[Layout.compact]]
-    * rows-per-file discipline); returns the hoisted part files. The
+    * Spark job (round-robin repartition: balanced file sizes); returns
+    * the hoisted part files. The
     * multi-file sibling of [[writeSingleParquet]] for bulk writes that
     * must not serialize through one task.
     */

@@ -142,29 +142,6 @@ object Layout {
       spark.read.parquet(files: _*).filter(residual)
   }
 
-  /** Small-file compaction — the lake maintenance pass every streaming
-    * append sink eventually needs (a 10 s trigger writes ~8 640
-    * files/day/partition; scan cost and namenode/listing pressure grow
-    * with file COUNT, not bytes). Rewrites the table at
-    * `targetRowsPerFile` granularity behind the same crash-safe
-    * tmp→swap→cleanup dance as the merge ([[Upsert.atomicSwapWrite]]) —
-    * readers never observe a missing or half-written table, and a crash
-    * at any step is healed by [[Upsert.recover]]. Round-robin
-    * repartition: compaction balances file sizes; ordering is
-    * [[zorderWrite]]'s job.
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-              targetRowsPerFile: Long): Unit = {
-    require(targetRowsPerFile >= 1,
-      s"compact: targetRowsPerFile >= 1, got $targetRowsPerFile")
-    Upsert.recover(path)
-    val df = spark.read.parquet(path)
-    val n = df.count()
-    val files = math.max(1L, (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    Upsert.atomicSwapWrite(path)(tmp =>
-      df.repartition(files).write.mode("overwrite").parquet(tmp))
-  }
-
   /** Rendezvous (highest-random-weight, Thaler & Ravishankar 1998) shard
     * resize report: every key's shard is argmax over shards of
     * md5(salt·shard·key), so growing `fromShards → toShards` moves ONLY

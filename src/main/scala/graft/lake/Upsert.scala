@@ -147,13 +147,12 @@ object Upsert {
     else latestWins(source, keys, ordering)
   }
 
-  /** The crash-safe table swap shared by the merge and by lake
-    * maintenance ([[Layout.compact]]): materialize the replacement at
-    * `__tmp` FIRST, then two atomic renames — the live table is never
-    * gone before its replacement exists, and [[recover]] heals every
-    * intermediate state.
+  /** The crash-safe table swap behind the merge: materialize the
+    * replacement at `__tmp` FIRST, then two atomic renames — the live
+    * table is never gone before its replacement exists, and [[recover]]
+    * heals every intermediate state.
     */
-  private[lake] def atomicSwapWrite(path: String)(write: String => Unit): Unit = {
+  private def atomicSwapWrite(path: String)(write: String => Unit): Unit = {
     val p = Paths.get(path)
     val tmp = Paths.get(path + ".__tmp")
     val old = Paths.get(path + ".__old")

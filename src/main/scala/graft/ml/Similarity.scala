@@ -619,19 +619,17 @@ object Similarity {
   }
 
   /** End-to-end embedding near-dup REMOVAL — the vector-space sibling of
-    * [[graft.text.TextDedup.keepCanonical]]: cosine dup pairs →
+    * [[graft.text.TextDedup.keepCanonical]]: a cosine dup pair graph
+    * `pairs` (id_a, id_b) — e.g. [[cosineDupPairsBucketed]] — →
     * connected components → LEFT ANTI on the losers (nodes ≠ their
     * component label), keeping the min-id vector of every duplicate
-    * cluster. `pairs` accepts an already-materialized pair graph (the
-    * shared-intermediate shape); the corpus only ever joins the loser
-    * set, which is at most the duplicate count.
+    * cluster. The corpus only ever joins the loser set, which is at most
+    * the duplicate count.
     */
-  def keepCanonical(vectors: DataFrame, threshold: Double,
-                    idCol: String = "vec_id",
-                    pairs: Option[DataFrame] = None): DataFrame = {
-    val p = pairs.getOrElse(cosineDupPairsBucketed(vectors, threshold))
+  def keepCanonical(vectors: DataFrame, pairs: DataFrame,
+                    idCol: String = "vec_id"): DataFrame = {
     val comps = graft.graphs.ConnectedComponents.run(
-      p.select(col("id_a").as("src"), col("id_b").as("dst")))
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
     val losers = comps.filter(col("node") =!= col("component"))
       .select(col("node").as("__loser"))
     vectors.join(losers, vectors(idCol) === col("__loser"), "left_anti")

@@ -279,49 +279,51 @@ object TextDedup {
     * odds are ~m²/2⁶⁵ per doc pair (negligible at any corpus that fits a
     * cluster) but nonzero — the same caveat as [[shingleHashedDocs]].
     *
-    * `shingles`: pass a pre-built [[shingleHashedDocs]] table (id, sh) to
-    * share one persisted copy across several dedup flavors — the caller
-    * then owns its persistence/unpersist AND the build-time knobs: the
-    * internal build pre-filters docs shorter than shingleN tokens, so a
-    * supplied table must have applied the same filter (and `pairCounts`,
-    * when supplied, similarly bakes in its own maxDf/cap — non-default
-    * values alongside it are rejected). When None, the table is built
-    * here and persisted for this plan's internal reuse (it stays in the
-    * session CacheManager until unpersist/session end — see
-    * [[nearDupPairs]]'s lifecycle note).
+    * The shingle table is built here and persisted for this plan's
+    * internal reuse (it stays in the session CacheManager until
+    * unpersist/session end — see [[nearDupPairs]]'s lifecycle note).
     */
   def jaccardNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                           shingleN: Int = 2, threshold: Double = 0.5,
-                          maxDf: Option[Int] = None, cap: Int = 2048,
-                          shingles: Option[DataFrame] = None,
-                          pairCounts: Option[DataFrame] = None): DataFrame = {
-    // maxDf/cap parameterize the pair-count build ONLY — a caller handing
-    // in a pre-built pairCounts owns those knobs (they were fixed when it
-    // was built), so non-default values alongside pairCounts are a
-    // contradiction we refuse rather than silently ignore.
-    require(pairCounts.isEmpty || (maxDf.isEmpty && cap == 2048),
-      "jaccardNearDupPairs: maxDf/cap only apply when pairCounts is " +
-        "built internally - they were fixed when the supplied pairCounts " +
-        "was created (build it via shinglePairCounts(sh, maxDf, cap))")
-    val sh = shingles.getOrElse(shingleHashedDocs(
-      docs.filter(size(tokens(col(textCol))) >= shingleN), idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // Set sizes are row-local (size of the distinct-shingle array) — no
-    // aggregation; the join back onto pairs moves one int per doc.
-    val sizes = sh.select(col("id"), size(col("sh")).as("__n"))
-    pairCounts.getOrElse(shinglePairCounts(sh, maxDf, cap))
-      .join(sizes.select(col("id").as("id_a"), col("__n").as("__na")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("__n").as("__nb")), Seq("id_b"))
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("n_shared"),
+                          maxDf: Option[Int] = None,
+                          cap: Int = 2048): DataFrame =
+    sizedPairCounts(docs, idCol, textCol, shingleN, maxDf, cap)
+      .select(col("doc_a"), col("doc_b"), col("n_shared"),
         (col("n_shared") / (col("__na") + col("__nb") - col("n_shared")))
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
+
+  /** The exact-set-similarity family's shingle table: the docs with at
+    * least `shingleN` tokens as [[shingleHashedDocs]] (id, sh).
+    */
+  private def shingleTable(docs: DataFrame, idCol: String, textCol: String,
+                           shingleN: Int): DataFrame =
+    shingleHashedDocs(docs.filter(size(tokens(col(textCol))) >= shingleN),
+      idCol, textCol, shingleN)
+
+  /** [[shinglePairCounts]] over the persisted [[shingleTable]], with both
+    * docs' set sizes joined on: (doc_a, doc_b, n_shared, __na, __nb) —
+    * what the Jaccard and containment scores divide. Set sizes are
+    * row-local (size of the distinct-shingle array) — no aggregation; the
+    * joins back onto pairs move one int per doc.
+    */
+  private def sizedPairCounts(docs: DataFrame, idCol: String,
+                              textCol: String, shingleN: Int,
+                              maxDf: Option[Int], cap: Int): DataFrame = {
+    val sh = shingleTable(docs, idCol, textCol, shingleN)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sizes = sh.select(col("id"), size(col("sh")).as("__n"))
+    shinglePairCounts(sh, maxDf, cap)
+      .join(sizes.select(col("id").as("id_a"), col("__n").as("__na")), Seq("id_a"))
+      .join(sizes.select(col("id").as("id_b"), col("__n").as("__nb")), Seq("id_b"))
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+        col("n_shared"), col("__na"), col("__nb"))
   }
 
   /** The posting-list co-occurrence count table (id_a, id_b, n_shared)
-    * over a [[shingleHashedDocs]] table — THE shared intermediate of
-    * every intersection-based set-similarity score (Jaccard q70,
-    * containment q110): materialize once, score many ways.
+    * over a [[shingleHashedDocs]] table — the intermediate of every
+    * intersection-based set-similarity score (Jaccard q70, containment
+    * q110).
     */
   def shinglePairCounts(sh: DataFrame, maxDf: Option[Int] = None,
                         cap: Int = 2048): DataFrame = {
@@ -344,11 +346,9 @@ object TextDedup {
   /** [[shinglePairCounts]] widened with the idf²-weighted DOT in the
     * SAME pair pass: (id_a, id_b, n_shared, dot), dot = Σ idf_fp² over
     * shared shingles with idf_fp = floor(ln(N/df)·10⁶) quantized once
-    * per shingle. One co-occurrence join serves every
-    * intersection-based score — unweighted (Jaccard q70, containment
-    * q110) reads n_shared, idf-weighted (q198) reads dot — so the
-    * expensive pair stage materializes once, not per score. Runs one
-    * count job at build time (corpus size for the idf table).
+    * per shingle — one co-occurrence join serves both the unweighted
+    * (n_shared) and the idf-weighted (dot) scores. Runs one count job at
+    * build time (corpus size for the idf table).
     */
   def shinglePairDots(sh: DataFrame, maxDf: Option[Int] = None,
                       cap: Int = 2048): DataFrame = {
@@ -358,13 +358,21 @@ object TextDedup {
     // filter can drop docs wholesale and force the posting-side count
     val n = maxDf.fold(sh.count())(_ =>
       posting.select(col("id")).distinct().count())
-    require(n > 0, "shinglePairDots over an empty corpus")
+    graft.operators.CandidatePairs.inBucketPairDots(
+      idfWeighted(posting, n, "shinglePairDots"), cap)
+  }
+
+  /** `posting` (id, bk) with each shingle's quantized idf weight
+    * `__w` = floor(ln(n/df)·10⁶) over a corpus of `n` docs.
+    */
+  private def idfWeighted(posting: DataFrame, n: Long,
+                          what: String): DataFrame = {
+    require(n > 0, s"$what over an empty corpus")
     val idf = posting.groupBy(col("bk")).agg(count(lit(1)).as("__df"))
       .select(col("bk"),
         floor(log(lit(n.toDouble) / col("__df").cast("double"))
           * lit(1000000.0)).cast("long").as("__w"))
-    graft.operators.CandidatePairs.inBucketPairDots(
-      posting.join(idf, Seq("bk")), cap)
+    posting.join(idf, Seq("bk"))
   }
 
   /** Exact n-gram CONTAINMENT pairs — the asymmetric near-dup signal
@@ -373,7 +381,7 @@ object TextDedup {
     * C = |A∩B|/min(|A|,|B|) ≈ 1 (the RefinedWeb/quote-detection
     * criterion, symmetrized by the min). Same posting-list pipeline,
     * candidate volume, and hashed-shingle caveat as
-    * [[jaccardNearDupPairs]]; accepts the same shared `shingles` table.
+    * [[jaccardNearDupPairs]].
     *
     * Output: (doc_a, doc_b, n_shared, containment), doc_a < doc_b,
     * containment >= threshold; one exact IEEE division per pair, oracle-
@@ -381,26 +389,12 @@ object TextDedup {
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 2, threshold: Double = 0.9,
-                       maxDf: Option[Int] = None, cap: Int = 2048,
-                       shingles: Option[DataFrame] = None,
-                       pairCounts: Option[DataFrame] = None): DataFrame = {
-    // Same knob-ownership contract as [[jaccardNearDupPairs]]: a supplied
-    // pairCounts already baked in its maxDf/cap.
-    require(pairCounts.isEmpty || (maxDf.isEmpty && cap == 2048),
-      "containmentPairs: maxDf/cap only apply when pairCounts is built " +
-        "internally - they were fixed when the supplied pairCounts was " +
-        "created (build it via shinglePairCounts(sh, maxDf, cap))")
-    val sh = shingles.getOrElse(shingleHashedDocs(
-      docs.filter(size(tokens(col(textCol))) >= shingleN), idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val sizes = sh.select(col("id"), size(col("sh")).as("__n"))
-    pairCounts.getOrElse(shinglePairCounts(sh, maxDf, cap))
-      .join(sizes.select(col("id").as("id_a"), col("__n").as("__na")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("__n").as("__nb")), Seq("id_b"))
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("n_shared"),
+                       maxDf: Option[Int] = None,
+                       cap: Int = 2048): DataFrame =
+    sizedPairCounts(docs, idCol, textCol, shingleN, maxDf, cap)
+      .select(col("doc_a"), col("doc_b"), col("n_shared"),
         (col("n_shared") / least(col("__na"), col("__nb"))).as("containment"))
       .filter(col("containment") >= threshold)
-  }
 
   /** Exact n-gram Jaccard near-dup pairs via PREFIX FILTERING — the
     * AllPairs/PPJoin family (Bayardo et al., WWW'07; public literature):
@@ -423,19 +417,16 @@ object TextDedup {
     * (the per-doc rank window) + the per-candidate array verify.
     *
     * Shares [[jaccardNearDupPairs]]'s hashed-shingle exactness caveat and
-    * its `shingles` pass-in contract (one persisted table across flavors;
-    * caller owns the lifecycle when provided).
+    * its persisted per-call shingle table.
     */
   def jaccardNearDupPairsPrefix(docs: DataFrame, idCol: String,
                                 textCol: String, shingleN: Int = 2,
                                 threshold: Double = 0.5,
-                                cap: Int = 2048,
-                                shingles: Option[DataFrame] = None): DataFrame = {
+                                cap: Int = 2048): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"jaccardNearDupPairsPrefix: threshold in (0,1], got $threshold")
-    val sh = shingles.getOrElse(shingleHashedDocs(
-      docs.filter(size(tokens(col(textCol))) >= shingleN), idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val sh = shingleTable(docs, idCol, textCol, shingleN)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val posting = sh.select(col("id"), size(col("sh")).as("__n"),
       explode(col("sh")).as("bk"))
     val dfCounts = posting.groupBy(col("bk")).agg(count(lit(1)).as("__df"))
@@ -647,43 +638,19 @@ object TextDedup {
   def weightedJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                            shingleN: Int = 2, threshold: Double = 0.3,
                            cap: Int = 2048,
-                           shingles: Option[DataFrame] = None,
-                           pairDots: Option[DataFrame] = None,
                            maxDf: Option[Int] = None): DataFrame = {
-    // Same knob-ownership contract as [[jaccardNearDupPairs]]: a
-    // supplied pairDots already baked in its cap.
-    require(pairDots.isEmpty || cap == 2048,
-      "weightedJaccardPairs: cap only applies when the pair table is " +
-        "built internally - it was fixed when the supplied pairDots was " +
-        "created (build it via shinglePairDots(sh, maxDf, cap))")
-    // A DF filter changes the idf table AND the corpus size: the per-doc
-    // norms recomputed here must weight by the SAME filtered posting the
-    // pair dots were built from, or dot and norms silently disagree —
-    // callers supplying a shinglePairDots(sh, maxDf = Some(d)) table
-    // MUST pass the same maxDf here (and None for a maxDf = None table).
     // The posting table feeds the df counts, the weighted join, and the
-    // corpus size — persisted for the call (the jaccardShingles shared-
-    // intermediate discipline; session clearCache() releases it). A
-    // caller-supplied `shingles` table (the q70/q77/q110 shared cache)
-    // saves the tokenize+shingle corpus pass entirely, and a supplied
-    // `pairDots` (the [[shinglePairDots]] shared materialization) saves
-    // the pair join — this call then only adds the posting-sized idf
-    // and per-doc norm aggregations.
-    val posting = dfFiltered(shingles.getOrElse(shingleHashedDocs(
-        docs.filter(size(tokens(col(textCol))) >= shingleN), idCol, textCol,
-        shingleN)), maxDf)
+    // corpus size — persisted for the call (session clearCache()
+    // releases it). A DF filter changes the idf table AND the corpus
+    // size, so both are taken from the filtered posting.
+    val posting = dfFiltered(shingleTable(docs, idCol, textCol, shingleN),
+        maxDf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = posting.select(col("id")).distinct().count()
-    require(n > 0, "weightedJaccardPairs over an empty corpus")
-    val idf = posting.groupBy(col("bk")).agg(count(lit(1)).as("__df"))
-      .select(col("bk"),
-        floor(log(lit(n.toDouble) / col("__df").cast("double"))
-          * lit(1000000.0)).cast("long").as("__w"))
-    val weighted = posting.join(idf, Seq("bk"))
+    val weighted = idfWeighted(posting,
+      posting.select(col("id")).distinct().count(), "weightedJaccardPairs")
     val docw = weighted.groupBy(col("id"))
       .agg(sum(col("__w") * col("__w")).as("__w2"))
-    pairDots.getOrElse(
-      graft.operators.CandidatePairs.inBucketPairDots(weighted, cap))
+    graft.operators.CandidatePairs.inBucketPairDots(weighted, cap)
       .join(docw.select(col("id").as("id_a"), col("__w2").as("__wa")), Seq("id_a"))
       .join(docw.select(col("id").as("id_b"), col("__w2").as("__wb2")), Seq("id_b"))
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
@@ -705,8 +672,9 @@ object TextDedup {
     * multiplication chains (never libm `pow`, whose last ulp differs
     * between engines), each pair's P is quantized ONCE to 10⁻⁹ fixed
     * point, and the per-cell mean is an exact long sum with truncating
-    * division. The pair table is scanned once per grid cell (grid is
-    * literal-bounded, never data-sized).
+    * division. The pair table is scanned ONCE: each pair fans out to one
+    * row per grid cell (grid is literal-bounded, never data-sized), so an
+    * unpersisted pair plan is never recomputed per cell.
     *
     * Output: (bands, rows_per_band, n_pairs, recall_fp) — recall in ppb.
     */
@@ -718,13 +686,14 @@ object TextDedup {
       s"bands/rows must be in [1, 64]: $grid")
     def chainPow(base: Column, e: Int): Column =
       (1 until e).foldLeft(base)((acc, _) => acc * base)
-    grid.map { case (b, r) =>
-      val s = col(jaccardCol).cast("double")
+    val s = col(jaccardCol).cast("double")
+    val cells = grid.map { case (b, r) =>
       val p = lit(1.0) - chainPow(lit(1.0) - chainPow(s, r), b)
-      pairs.select(lit(b.toLong).as("bands"),
-        lit(r.toLong).as("rows_per_band"),
+      struct(lit(b.toLong).as("bands"), lit(r.toLong).as("rows_per_band"),
         floor(p * lit(1.0e9)).cast("long").as("__pfp"))
-    }.reduce(_ unionByName _)
+    }
+    pairs.select(explode(array(cells: _*)).as("__c"))
+      .select(col("__c.bands"), col("__c.rows_per_band"), col("__c.__pfp"))
       .groupBy(col("bands"), col("rows_per_band"))
       .agg(count(lit(1)).as("n_pairs"), sum(col("__pfp")).as("__s"))
       .select(col("bands"), col("rows_per_band"), col("n_pairs"),
@@ -816,11 +785,12 @@ object TextDedup {
   }
 
   /** End-to-end near-dup REMOVAL — the step every dedup pipeline actually
-    * ships: near-dup pairs ([[simhashNearDupPairs]]) → connected
-    * components ([[graft.graphs.ConnectedComponents]]) → keep ONE
-    * canonical document per cluster (the minimum doc id, i.e. the
-    * component label) plus every document in no cluster at all. Returns
-    * the SURVIVING docs with their original columns.
+    * ships: a near-dup pair graph `pairs` (doc_a, doc_b) — e.g.
+    * [[simhashNearDupPairs]] — → connected components
+    * ([[graft.graphs.ConnectedComponents]]) → keep ONE canonical document
+    * per cluster (the minimum doc id, i.e. the component label) plus
+    * every document in no cluster at all. Returns the SURVIVING docs
+    * with their original columns.
     *
     * Anti-join shape: components yields (node, component); the losers are
     * exactly the nodes whose label differs from themselves, and the
@@ -830,16 +800,10 @@ object TextDedup {
     * the doc id like any equi-join; the loser side is small enough to
     * broadcast in real corpora.
     */
-  def keepCanonical(docs: DataFrame, idCol: String, textCol: String,
-                    bands: Int = 4, maxHamming: Int = 3,
-                    pairs: Option[DataFrame] = None): DataFrame = {
-    // `pairs` lets a pipeline hand in an already-materialized (doc_a,
-    // doc_b) near-dup graph (the shared-intermediate shape: one pair
-    // table, many consumers) instead of recomputing the simhash pass.
-    val p = pairs.getOrElse(simhashNearDupPairs(docs, idCol, textCol,
-      bands = bands, maxHamming = maxHamming))
+  def keepCanonical(docs: DataFrame, idCol: String,
+                    pairs: DataFrame): DataFrame = {
     val comps = graft.graphs.ConnectedComponents.run(
-      p.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
     val losers = comps.filter(col("node") =!= col("component"))
       .select(col("node").as("__loser"))
     docs.join(losers, docs(idCol) === col("__loser"), "left_anti")

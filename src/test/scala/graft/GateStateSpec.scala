@@ -1,0 +1,27 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Gates keep no state across queries: after `spark.catalog.clearCache()`
+  * (what both harnesses run between queries) a gate launches exactly the
+  * jobs its first run did — nothing an earlier run built is read back.
+  */
+class GateStateSpec extends SparkSpec {
+
+  /** Evaluate every column of every row, as the harnesses do. */
+  private def force(df: DataFrame): Unit =
+    df.select(xxhash64(struct(df.columns.map(col).toSeq: _*)).as("__h"))
+      .agg(expr("bit_xor(__h)")).head()
+
+  for (q <- Seq("q248_scc", "q70_jaccard_neardup"))
+    test(s"$q: rerun after clearCache runs the same jobs") {
+      def run(): Int = countJobs(force(SparkEntry.queries(q)(spark, sfDir)))
+      spark.catalog.clearCache()
+      val first = run()
+      spark.catalog.clearCache()
+      val second = run()
+      info(s"jobs: first run $first, rerun $second")
+      assert(second == first, s"first run: $first jobs, rerun: $second")
+    }
+}

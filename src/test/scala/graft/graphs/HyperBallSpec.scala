@@ -23,17 +23,17 @@ class HyperBallSpec extends SparkSpec {
     assert(est2(5L) == 1L && est2(11L) == 1L)
   }
 
-  test("round shape: a round adds one shuffle-map stage, its materializing count") {
-    // The round plan itself runs no exchange (the broadcast join streams
-    // the src layout, the max-agg rides it); each round's persist is
-    // materialized by a count(), whose single-partition exchange is the
-    // one stage a round adds (measured: 1 round 6, 4 rounds 9).
+  test("round shape: rounds add no shuffle-map stage (1 vs 4)") {
+    // The round plan runs no exchange (the broadcast join streams the src
+    // layout, the max-agg rides it), and rounds chain through lazy
+    // checkpoints that the one final count materializes.
     val s = spark; import s.implicits._
     val edges = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 1L)) ++
       (11L to 16L).map(v => (10L, v))).toDF("src", "dst")
     val one = countShuffleMapStages(HyperBall.neighborhoodSizes(edges, 1))
     val four = countShuffleMapStages(HyperBall.neighborhoodSizes(edges, 4))
-    assert(four == one + 3, s"1 round: $one stages, 4 rounds: $four")
+    info(s"shuffle-map stages: 1 round $one, 4 rounds $four")
+    assert(four == one, s"1 round: $one stages, 4 rounds: $four")
   }
 
   test("rounds grow balls monotonically; round count bounds the radius") {

@@ -72,24 +72,23 @@ class SccSpec extends SparkSpec {
     assert(dag == Set((1L, 4L), (4L, 6L)), dag)
   }
 
-  test("FromLabels overloads equal the self-computing paths") {
+  test("sizeHistogram counts SCCs per size") {
     val edges = Seq(
       (1L, 2L), (2L, 3L), (3L, 1L), // SCC 1
       (3L, 4L),
       (4L, 5L), (5L, 4L), // SCC 4
       (5L, 6L), (6L, 6L)) // singleton 6 (self-loop)
-    val df = edges.toDF("src", "dst")
-    val labels = Scc.run(df)
-    val dagSelf = Scc.condensation(df).collect()
+    val hist = Scc.sizeHistogram(edges.toDF("src", "dst")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dagPre = Scc.condensationFromLabels(df, labels).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(dagSelf == dagPre, s"$dagSelf vs $dagPre")
-    val histSelf = Scc.sizeHistogram(df).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val histPre = Scc.sizeHistogramFromLabels(labels).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(histSelf == histPre, s"$histSelf vs $histPre")
+    assert(hist == Set((3L, 1L), (2L, 1L), (1L, 1L)), hist)
+  }
+
+  test("run leaves at most one persisted RDD behind (multi-phase)") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    sccOf(Seq((10L, 1L), (1L, 2L), (2L, 1L)))
+    val after = sc.getPersistentRDDs.size
+    assert(after <= before + 1, s"persisted RDDs: $before before, $after after")
   }
 
   test("seeded random graphs agree with an in-spec Tarjan reference " +

@@ -35,26 +35,6 @@ class LayoutSpec extends SparkSpec {
     assert(diff == 0)
   }
 
-  test("compact rewrites many small files into the target granularity") {
-    val s = spark; import s.implicits._
-    val dir = Files.createTempDirectory("graft-compact").toString + "/t"
-    (0 until 1000).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-      .repartition(64).write.parquet(dir)
-    def parquetFiles = new java.io.File(dir).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(parquetFiles == 64)
-    Layout.compact(spark, dir, targetRowsPerFile = 500)
-    assert(parquetFiles == 2, s"expected 2 files, got $parquetFiles")
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 1000 && back.distinct().count() == 1000)
-    // idempotent: a second pass at the same target changes nothing
-    Layout.compact(spark, dir, targetRowsPerFile = 500)
-    assert(parquetFiles == 2)
-    // no swap debris
-    assert(!new java.io.File(dir + ".__tmp").exists() &&
-      !new java.io.File(dir + ".__old").exists())
-  }
-
   test("zorderWrite: data preserved, files sorted, both dims' ranges narrow") {
     val s = spark; import s.implicits._
     val dir = Files.createTempDirectory("graft-zorder").toString + "/t"

@@ -77,7 +77,7 @@ class SimilaritySpec extends SparkSpec {
     val df = (base ++ dups).toDF("vec_id", "embedding")
     val pairs = Similarity.cosineDupPairsBucketed(df, threshold = 0.999,
       planes = 8, tables = 6, dims = 8)
-    val kept = Similarity.keepCanonical(df, 0.999, pairs = Some(pairs))
+    val kept = Similarity.keepCanonical(df, pairs)
       .collect().map(_.getAs[Long]("vec_id")).toSet
     // reference: driver-side union-find over the SAME pair graph (the
     // sin fixture has incidental near-dups at this threshold, so the

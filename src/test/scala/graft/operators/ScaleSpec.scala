@@ -291,7 +291,8 @@ class ScaleSpec extends SparkSpec {
       "prefix-jaccard" -> TextDedup.jaccardNearDupPairsPrefix(
         d20, "doc_id", "text", shingleN = 2, threshold = 0.5),
       "fuzzy" -> graft.text.Fuzzy.editDistancePairs(n20, "c_custkey", "c_name"),
-      "embedding-canonical" -> graft.ml.Similarity.keepCanonical(e20, 0.3),
+      "embedding-canonical" -> graft.ml.Similarity.keepCanonical(e20,
+        graft.ml.Similarity.cosineDupPairsBucketed(e20, 0.3)),
       "tfidf-cosine" -> graft.text.SparseSim.tfidfCosinePairs(
         d20, "doc_id", "text"))
     plans.foreach { case (name, df) =>

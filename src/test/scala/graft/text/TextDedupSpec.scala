@@ -192,7 +192,8 @@ class TextDedupSpec extends SparkSpec {
       (6L, "completely different text about spark shuffles and partitions now", "fr"),
       (5L, "unrelated fifth document with its own entirely disjoint tokens", "en"),
     ).toDF("doc_id", "text", "lang")
-    val out = TextDedup.keepCanonical(docs, "doc_id", "text")
+    val out = TextDedup.keepCanonical(docs, "doc_id",
+      TextDedup.simhashNearDupPairs(docs, "doc_id", "text"))
     assert(out.columns.toSeq == Seq("doc_id", "text", "lang"),
       "survivors must keep the original columns")
     assert(out.select("doc_id").collect().map(_.getLong(0)).toSet ==
@@ -205,7 +206,8 @@ class TextDedupSpec extends SparkSpec {
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, "one two three four five six seven eight nine ten"),
     ).toDF("doc_id", "text")
-    assert(TextDedup.keepCanonical(docs, "doc_id", "text").count() == 2)
+    assert(TextDedup.keepCanonical(docs, "doc_id",
+      TextDedup.simhashNearDupPairs(docs, "doc_id", "text")).count() == 2)
   }
 
   test("chunkDedup drops repeated chunks corpus-wide, keep-first by (doc, order)") {
@@ -247,7 +249,8 @@ class TextDedupSpec extends SparkSpec {
 
   test("keepCanonical and chunkDedup plans stay candidate-bounded (no all-pairs)") {
     val docs = Tables.documents(spark, sfDir)
-    val p1 = TextDedup.keepCanonical(docs, "doc_id", "text")
+    val p1 = TextDedup.keepCanonical(docs, "doc_id",
+        TextDedup.simhashNearDupPairs(docs, "doc_id", "text"))
       .queryExecution.executedPlan.toString
     assert(!p1.contains("CartesianProduct") && !p1.contains("BroadcastNestedLoop"),
       s"all-pairs join in keepCanonical plan:\n$p1")
@@ -312,25 +315,6 @@ class TextDedupSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(Some(16)) == pairs(None))
     spark.catalog.clearCache()
-  }
-
-  test("supplied pairCounts rejects non-default maxDf/cap (knobs baked at build)") {
-    import spark.implicits._
-    val docs = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text")
-    val sh = TextDedup.shingleHashedDocs(docs, "doc_id", "text", 2)
-    val pc = TextDedup.shinglePairCounts(sh, maxDf = Some(5), cap = 64)
-    // the pre-built table with ITS knobs is fine…
-    assert(TextDedup.jaccardNearDupPairs(docs, "doc_id", "text", shingleN = 2,
-      threshold = 0.1, shingles = Some(sh), pairCounts = Some(pc)).count() >= 1)
-    // …but restating knobs alongside it is a contradiction, refused
-    intercept[IllegalArgumentException] {
-      TextDedup.jaccardNearDupPairs(docs, "doc_id", "text", shingleN = 2,
-        maxDf = Some(3), shingles = Some(sh), pairCounts = Some(pc))
-    }
-    intercept[IllegalArgumentException] {
-      TextDedup.containmentPairs(docs, "doc_id", "text", shingleN = 2,
-        cap = 64, shingles = Some(sh), pairCounts = Some(pc))
-    }
   }
 
   test("dupSpans merges consecutive duplicated positions into maximal spans") {
@@ -409,8 +393,7 @@ class TextDedupSpec extends SparkSpec {
     assert(kept == Set(2L, 5L, 9L), s"kept $kept")
     // same graph under the min-id policy keeps 1 — the policies differ
     // exactly on the quality pick
-    val minId = TextDedup.keepCanonical(docs, "doc_id", "text",
-        pairs = Some(pairs))
+    val minId = TextDedup.keepCanonical(docs, "doc_id", pairs)
       .collect().map(_.getLong(0)).toSet
     assert(minId == Set(1L, 5L, 9L), s"minId $minId")
   }
@@ -534,9 +517,7 @@ class TextDedupSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("shinglePairDots: one pair pass serves every score — n_shared " +
-    "equals shinglePairCounts, and weightedJaccardPairs through the " +
-    "shared table equals the self-built path row-for-row") {
+  test("shinglePairDots: n_shared equals shinglePairCounts") {
     val s = spark; import s.implicits._
     val docs = Seq(
       (1L, "the same header alpha beta"),
@@ -553,20 +534,6 @@ class TextDedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(fromDots == counts,
       "n_shared must be identical across the widened pair table")
-    def key(r: org.apache.spark.sql.Row) =
-      ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3),
-        r.getDouble(4)))
-    val direct = TextDedup.weightedJaccardPairs(docs, "doc_id", "text",
-      threshold = 0.0).collect().map(key).toMap
-    val shared = TextDedup.weightedJaccardPairs(docs, "doc_id", "text",
-      threshold = 0.0, shingles = Some(sh), pairDots = Some(dots))
-      .collect().map(key).toMap
-    assert(shared == direct)
-    // a supplied pairDots owns the cap knob
-    val e = intercept[IllegalArgumentException](
-      TextDedup.weightedJaccardPairs(docs, "doc_id", "text", cap = 7,
-        pairDots = Some(dots)))
-    assert(e.getMessage.contains("cap"), e.getMessage)
     spark.catalog.clearCache()
   }
 
