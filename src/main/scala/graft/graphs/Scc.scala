@@ -184,16 +184,18 @@ object Scc {
     }
     require(nRemaining == 0,
       s"Scc: $nRemaining nodes unassigned after $maxPhases phases")
-    // The phases' outputs materialize once as ONE persisted union, so
-    // the call leaves exactly one RDD behind (the result's) — RDD-level
-    // persists are out of reach of the session's clearCache().
+    // The phases' outputs materialize once as ONE cached union held by
+    // the session's cache manager, so the call leaves one cached plan
+    // behind that spark.catalog.clearCache() evicts — the RDD-level
+    // persists above are out of its reach and all released here.
     val labels = done.foldLeft(
         spark.sparkContext.emptyRDD[(Long, Long)])(_ union _)
+      .toDF("node", "scc_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
     labels.count()
     (done ++ Seq(remaining, rawPairs, ePairs, eBySrc, adjOut))
       .foreach(_.unpersist(blocking = false))
-    labels.toDF("node", "scc_id")
+    labels
   }
 
   /** Condensation DAG — the graph OVER the SCCs: one edge (scc_a,

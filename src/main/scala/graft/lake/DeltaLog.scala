@@ -2549,9 +2549,8 @@ object DeltaLog {
     * the protocol's audit trail); ZERO data movement — files written
     * before keep their narrower physical form and every read path
     * here widens them natively (Spark's parquet readers promote
-    * int32→int64 / float→double in the scan; the streaming source's
-    * Group walk extracts by each file's OWN physical type and
-    * upcasts). Allowed changes are the lossless integral chain
+    * int32→int64 / float→double in the scan, the streaming source's
+    * included). Allowed changes are the lossless integral chain
     * byte→short→int→long plus float→double — the set whose widened
     * values are bit-exact, so cross-engine hashes never move.
     * Refused: narrowing or cross-family changes (loud), partition
@@ -3288,9 +3287,9 @@ object DeltaLog {
 
   /** Nullability and field metadata are write-path metadata, not
     * physical schema — the shared normalization for schema-shape
-    * checks ([[commitData]] and the streaming sink).
+    * checks ([[commitData]] and the slice commits).
     */
-  private[graft] def normSchema(dt: DataType): DataType = dt match {
+  private def normSchema(dt: DataType): DataType = dt match {
     case s: StructType => StructType(s.fields.map(f =>
       f.copy(dataType = normSchema(f.dataType), nullable = true,
         metadata = Metadata.empty)))
@@ -3300,112 +3299,6 @@ object DeltaLog {
       valueContainsNull = true)
     case other => other
   }
-
-  /** Commit ALREADY-STAGED parquet files (written by the streaming
-    * sink's executors under `.graft_staging`) as one append, guarded
-    * by a txn watermark: a replayed epoch — Spark re-running a commit
-    * after driver recovery — is a NO-OP that just discards its staged
-    * files, which is what makes the DSv2 sink exactly-once. Creates
-    * the table (protocol + metaData from `schemaJson`) at version 0;
-    * later epochs must match the declared schema shape. Flat tables
-    * only; operation `STREAMING UPDATE` (Delta's name for it).
-    */
-  private[graft] def commitStreamFiles(spark: SparkSession, root: String,
-      schemaJson: String, staged: Seq[(Path, Map[String, String])],
-      txn: (String, Long),
-      partitionCols: Seq[String] = Seq.empty): Unit = {
-    val v = currentVersion(root) + 1
-    val prior = if (v == 0L) None else Some(replay(spark, root, v - 1))
-    prior.foreach { st =>
-      // replay no-op FIRST: the original epoch already passed every
-      // check below — a redelivery must discard quietly no matter what
-      val applied = st.txnVersions.get(txn._1).exists(_ >= txn._2)
-      if (applied) { staged.foreach(s => Files.deleteIfExists(s._1)); return }
-      requireWritable(st, "commitStreamFiles")
-      requireWritableMapping(st, "commitStreamFiles")
-      require(st.partitionColumns == partitionCols,
-        s"DeltaLog.commitStreamFiles: table is partitioned by " +
-          s"${st.partitionColumns}, the sink resolved $partitionCols")
-      val incoming = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      st.schema.foreach { sch =>
-        require(normSchema(sch) == normSchema(incoming),
-          s"DeltaLog.commitStreamFiles: epoch schema $incoming does not " +
-            s"match the table's $sch")
-        // the sink stages raw executor-written rows — it does not run
-        // the batch writer's invariant machinery, so tables carrying
-        // write OBLIGATIONS refuse rather than silently skip them
-        require(generationExprs(sch).isEmpty && identityInfo(sch).isEmpty,
-          "DeltaLog.commitStreamFiles: the table declares generated/" +
-            "identity columns — the streaming sink does not compute " +
-            "them; write through commitFlat")
-        sch.fields.filter(!_.nullable).foreach(f => require(
-          incoming.fieldNames.contains(f.name) &&
-            !incoming(f.name).nullable,
-          s"DeltaLog.commitStreamFiles: ${f.name} is declared NOT NULL " +
-            "but the stream's schema is nullable — the sink cannot " +
-            "prove the invariant"))
-      }
-      require(constraintsOf(st.configuration).isEmpty,
-        "DeltaLog.commitStreamFiles: the table declares CHECK " +
-          "constraints the streaming sink does not enforce; write " +
-          "through commitFlat")
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val actions = Seq.newBuilder[JsonNode]
-    if (v == 0L) {
-      val protocol = mapper.createObjectNode()
-      val p = protocol.putObject("protocol")
-      p.put("minReaderVersion", 1)
-      p.put("minWriterVersion", 2)
-      actions += protocol
-      val tableId = java.util.UUID.nameUUIDFromBytes(
-        ("graft-delta:" + root).getBytes("UTF-8")).toString
-      actions += metaDataAction(tableId, schemaJson, partitionCols,
-        Map.empty)
-    }
-    val n = mapper.createObjectNode()
-    val t = n.putObject("txn")
-    t.put("appId", txn._1)
-    t.put("version", txn._2)
-    actions += n
-    // mapped tables: partition DIRECTORIES and action partitionValues
-    // key by the PHYSICAL partition-column name (the writer's staged
-    // pv maps are logical-keyed)
-    val pcPhys = prior.flatMap(_.schema) match {
-      case Some(sch) if prior.exists(mappingMode(_) != "none") =>
-        val phys = physicalTopLevel(sch)
-        partitionCols.map(c => c -> phys.getOrElse(c, c)).toMap
-      case _ => partitionCols.map(c => c -> c).toMap
-    }
-    staged.foreach { case (p, pv) =>
-      // partitioned tables: the staged file moves into its hive-style
-      // partition directory, partitionValues ride the add
-      val segs = partitionCols.map { c =>
-        val value = pv.getOrElse(c, throw new IllegalArgumentException(
-          s"DeltaLog.commitStreamFiles: staged file $p lacks a value " +
-            s"for partition column $c"))
-        pcPhys(c) + "=" + (if (value == null) "__HIVE_DEFAULT_PARTITION__"
-                           else escapeHive(value))
-      }
-      val rel = (segs :+ p.getFileName.toString).mkString("/")
-      val target = Paths.get(root, rel)
-      Files.createDirectories(target.getParent)
-      Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-      val physPv = pv.map { case (c, v2) => pcPhys.getOrElse(c, c) -> v2 }
-      actions += addActionNode(root, rel, physPv, dataChange = true, conf)
-    }
-    Files.createDirectories(logDir(root))
-    writeCommitFile(root, v, actions.result(),
-      operation = "STREAMING UPDATE")
-    prior.foreach(postCommit(spark, root, _, v))
-  }
-
-  /** Executor-side staging dir for the streaming sink (same filesystem
-    * as the table by construction, so the commit-time rename is
-    * atomic).
-    */
-  private[graft] def streamStagingDir(root: String): Path =
-    stagingBase(root)
 
   /** `CONVERT TO DELTA` — adopt an EXISTING parquet directory in place:
     * commit 0 declares protocol + metaData (schema from the parquet
@@ -4491,37 +4384,22 @@ object DeltaLog {
     adds.result()
   }
 
-  /** The table's column-mapping mode ("none" when unset) — external
-    * integrations that read data files DIRECTLY (the streaming source)
-    * must resolve the mapping themselves (see [[columnResolution]]) or
-    * they would read physical-named files through logical names as
-    * all-NULL columns.
+  /** The parquet scan schema that reads the LOGICAL columns of
+    * `dataSchema` from the data files of `root`'s current snapshot:
+    * physical names at every nesting level under name mapping, plus
+    * `parquet.field.id` stamps under id mapping, identity when
+    * unmapped — the scan [[read]] runs, for callers that read data
+    * files through Spark's parquet reader themselves (the streaming
+    * source). Fields keep their position; columns the table does not
+    * declare pass through unchanged.
     */
-  def columnMappingMode(spark: SparkSession, root: String): String =
-    mappingMode(replay(spark, root, currentVersion(root)))
-
-  /** Direct-file-reader column resolution: (logical → physical name,
-    * logical → parquet field id) per the table's mapping mode — both
-    * empty when unmapped. Name mode resolves by physical name; id mode
-    * resolves by the footer's field ids with the physical name as the
-    * fallback lookup.
-    */
-  def columnResolution(spark: SparkSession,
-      root: String): (Map[String, String], Map[String, Long]) = {
+  private[graft] def scanSchema(spark: SparkSession, root: String,
+                                dataSchema: StructType): StructType = {
     val st = replay(spark, root, currentVersion(root))
-    st.schema match {
-      case None => (Map.empty, Map.empty)
-      case Some(schema) => mappingMode(st) match {
-        case "name" => (physicalTopLevel(schema), Map.empty)
-        case "id" =>
-          (physicalTopLevel(schema),
-            schema.fields.collect {
-              case f if f.metadata.contains(ColumnIdKey) =>
-                f.name -> f.metadata.getLong(ColumnIdKey)
-            }.toMap)
-        case _ => (Map.empty, Map.empty)
-      }
-    }
+    val declared = st.schema.map(_.fields.map(f => f.name -> f).toMap)
+      .getOrElse(Map.empty[String, StructField])
+    readSchemaFor(st, StructType(dataSchema.fields.map(f =>
+      declared.getOrElse(f.name, f))))._1
   }
 
   /** Whether the table currently declares change-data-feed capture. */
@@ -5952,6 +5830,19 @@ object DeltaLog {
     val prior =
       if (v == 0L) None
       else Some(replay(spark, root, v - 1))
+    // Exactly-once via txn watermarks (the protocol's mechanism): if
+    // this (appId, version) is at or below the log's recorded watermark
+    // the batch already landed — a replay is a NO-OP, not a double
+    // append. This is what makes a streaming sink on this writer
+    // idempotent across micro-batch replays. It runs BEFORE any
+    // validation: the original batch already passed the checks below,
+    // and re-checking a replay against the table's CURRENT rules
+    // (an evolved schema, a new constraint) would fail it spuriously.
+    txn.foreach { case (app, ver) =>
+      val applied = prior.exists(
+        _.txnVersions.get(app).exists(_ >= ver))
+      if (applied) return v - 1
+    }
     // generated columns: compute what the batch lacks / verify what it
     // provides, BEFORE the schema-shape check sees the batch
     val dfG0 = prior.flatMap(_.schema) match {
@@ -6065,16 +5956,6 @@ object DeltaLog {
           }
         }
       }
-    }
-    // Exactly-once via txn watermarks (the protocol's mechanism): if
-    // this (appId, version) is at or below the log's recorded watermark
-    // the batch already landed — a replay is a NO-OP, not a double
-    // append. This is what makes a foreachBatch streaming sink on this
-    // writer idempotent across micro-batch replays.
-    txn.foreach { case (app, ver) =>
-      val applied = prior.exists(
-        _.txnVersions.get(app).exists(_ >= ver))
-      if (applied) return v - 1
     }
     Files.createDirectories(Paths.get(root))
     val stagingPath = Files.createTempDirectory(stagingBase(root),

@@ -101,11 +101,11 @@ object Upsert {
     * location flip or a rename-capable committer against the object store.
     */
   def mergeIntoPath(spark: org.apache.spark.sql.SparkSession, path: String,
-                    source: DataFrame, keys: Seq[String], ordering: Seq[String],
-                    orderingFirst: Boolean = false): Unit = {
+                    source: DataFrame, keys: Seq[String],
+                    ordering: Seq[String]): Unit = {
     // No gate reads the merge, so the write is its only consumer and
     // computes it once — no persist.
-    val merged = mergedWith(spark, path, source, keys, ordering, orderingFirst)
+    val merged = mergedWith(spark, path, source, keys, ordering)
     atomicSwapWrite(path)(tmp => merged.write.mode(SaveMode.Overwrite).parquet(tmp))
   }
 
@@ -118,9 +118,9 @@ object Upsert {
     */
   def mergeIntoPathGated(spark: org.apache.spark.sql.SparkSession, path: String,
                          source: DataFrame, keys: Seq[String],
-                         ordering: Seq[String], orderingFirst: Boolean = false)
+                         ordering: Seq[String])
                         (gate: DataFrame => Seq[String]): Seq[String] = {
-    val merged = mergedWith(spark, path, source, keys, ordering, orderingFirst)
+    val merged = mergedWith(spark, path, source, keys, ordering)
       // The candidate is audited and then written — persist it for the
       // call so the merge computes once, not once for the gate plus once
       // for the write, and so the gate provably audits the exact rows
@@ -140,10 +140,10 @@ object Upsert {
     */
   private def mergedWith(spark: org.apache.spark.sql.SparkSession, path: String,
                          source: DataFrame, keys: Seq[String],
-                         ordering: Seq[String], orderingFirst: Boolean): DataFrame = {
+                         ordering: Seq[String]): DataFrame = {
     recover(path)
     if (Files.exists(Paths.get(path)))
-      mergeImpl(spark.read.parquet(path), source, keys, ordering, orderingFirst)
+      merge(spark.read.parquet(path), source, keys, ordering)
     else latestWins(source, keys, ordering)
   }
 

@@ -2,32 +2,41 @@ package graft.streaming
 
 import graft.lake.DeltaLog
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead,
-  SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+  Literal, UnsafeProjection}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
+  TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition,
   PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream,
   Offset, ReadLimit, SupportsAdmissionControl}
-import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo,
-  PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.connector.write.streaming.{
-  StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.{FileFormat,
+  PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.PartitionReaderFromIterator
+import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.execution.streaming.sources.ForeachBatchSink
+import org.apache.spark.sql.sources.StreamSinkProvider
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Structured-Streaming SOURCE over the graft Delta log — the
+import scala.jdk.CollectionConverters._
+
+/** Structured-Streaming SOURCE and SINK over the graft Delta log — the
   * `spark.readStream.format("graft.streaming.DeltaStreamProvider")
   * .option("path", root)` surface (Delta's own streaming-source shape;
   * the reference consumes its tables the same way:
-  * analytics/spark/jobs/silver_orders.py reads a Delta source stream).
+  * analytics/spark/jobs/silver_orders.py reads a Delta source stream),
+  * and `writeStream.format(...)` into a Delta table.
   *
-  * DataSource V2, micro-batch only. OFFSETS ARE LOG VERSIONS: a batch
-  * is the half-open commit range `(start, end]`, so offsets are
+  * SOURCE: DataSource V2, micro-batch only. OFFSETS ARE LOG VERSIONS: a
+  * batch is the half-open commit range `(start, end]`, so offsets are
   * deterministic, replayable and exactly-once under checkpoint
   * recovery — the engine persists them in the offset log and re-plans
   * the identical file set on restart ([[DeltaLog.appendedFilesIn]],
@@ -36,12 +45,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale: one InputPartition per appended file — reading parallelizes
   * across executors up to the append width; no driver row handling.
-  * Each reader walks its parquet file's row groups directly
-  * (parquet-hadoop Group API — no egress, no extra deps) and converts
-  * to InternalRow by the DECLARED schema: file-missing columns read
-  * null (schema evolution); atomic types plus struct/array/map
-  * nestings of them (the silver `items array<struct>` shape) —
-  * decimal refuses loudly at scan build.
+  * Each file is read by Spark's own parquet reader over the scan schema
+  * `DeltaLog.read` uses ([[DeltaLog.scanSchema]]), so the stream and
+  * the batch read share one type, widening and column-mapping rule
+  * (physical names under name mode, field ids under id mode, at every
+  * nesting level); columns a file lacks read null (schema evolution).
   *
   * `option("startingVersion", v)` starts the FIRST run after commit v
   * (default −1 = from table creation); `option("startingTimestamp",
@@ -55,39 +63,35 @@ import org.apache.spark.unsafe.types.UTF8String
   * several micro-batches (at most one of the three);
   * `readChangeFeed=true` streams the CHANGE FEED instead (cdc files
   * with their own `_change_type`, synthesized inserts,
-  * `_commit_version` constants). Partitioned tables stream with typed
-  * partition-value constants; column-mapped tables resolve by
-  * physical name (name mode) or footer field ids (id mode) at every
-  * nesting level.
+  * `_commit_version` constants). Partition values and the change-feed
+  * constants ride each file as typed per-file constants.
+  *
+  * SINK: a [[DeltaStreamSink]] — each micro-batch is one
+  * `DeltaLog.commitFlat` / `commitPartitioned` under a txn watermark.
   */
-class DeltaStreamProvider extends TableProvider {
+class DeltaStreamProvider extends TableProvider with StreamSinkProvider {
 
-  // the WRITE path hands us the query's schema directly (the sink may
-  // CREATE the table); reads without a user schema still infer
+  // the WRITE path hands getTable the query's schema directly (the
+  // sink may CREATE the table); reads without a user schema still infer
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val (schema, _) = DeltaLog.tableMeta(SparkSession.active,
       DeltaStreamProvider.rootOf(options))
     if (options.getBoolean("readChangeFeed", false))
-      schema.add("_change_type", StringType)
-        .add("_commit_version", LongType)
+      schema.add(DeltaStreamProvider.ChangeType, StringType)
+        .add(DeltaStreamProvider.CommitVersion, LongType)
     else schema
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table = {
-    val root = properties.get("path")
-    require(root != null,
-      "DeltaStreamProvider: option(\"path\", <table root>) is required")
-    val explicitVersion =
-      Option(properties.get("startingversion"))
-        .orElse(Option(properties.get("startingVersion")))
-        .map(_.toLong)
-    val startingTs =
-      Option(properties.get("startingtimestamp"))
-        .orElse(Option(properties.get("startingTimestamp")))
-        .map(_.toLong)
+    val options = new CaseInsensitiveStringMap(properties)
+    val root = DeltaStreamProvider.rootOf(options)
+    def long(key: String): Option[Long] =
+      Option(options.get(key)).map(_.toLong)
+    val explicitVersion = long("startingVersion")
+    val startingTs = long("startingTimestamp")
     require(explicitVersion.isEmpty || startingTs.isEmpty,
       "DeltaStreamProvider: startingVersion and startingTimestamp are " +
         "mutually exclusive")
@@ -100,21 +104,31 @@ class DeltaStreamProvider extends TableProvider {
         .map(_ - 1L).getOrElse(DeltaLog.currentVersion(root))
       case None => explicitVersion.getOrElse(-1L)
     }
-    def longOpt(lower: String, camel: String): Option[Long] =
-      Option(properties.get(lower))
-        .orElse(Option(properties.get(camel))).map(_.toLong)
-    val admission = DeltaAdmission(
-      longOpt("maxversionspertrigger", "maxVersionsPerTrigger"),
-      longOpt("maxfilespertrigger", "maxFilesPerTrigger"),
-      longOpt("maxbytespertrigger", "maxBytesPerTrigger"))
-    val cdf = Option(properties.get("readchangefeed"))
-      .orElse(Option(properties.get("readChangeFeed")))
-      .exists(_.trim.equalsIgnoreCase("true"))
-    new DeltaStreamTable(root, schema, startingVersion, admission, cdf)
+    val admission = DeltaAdmission(long("maxVersionsPerTrigger"),
+      long("maxFilesPerTrigger"), long("maxBytesPerTrigger"))
+    new DeltaStreamTable(root, schema, startingVersion, admission,
+      options.getBoolean("readChangeFeed", false))
+  }
+
+  // the table declares no STREAMING_WRITE capability, so
+  // DataStreamWriter takes its V1 path and asks for this sink
+  override def createSink(sqlContext: SQLContext,
+                          parameters: Map[String, String],
+                          partitionColumns: Seq[String],
+                          outputMode: OutputMode): Sink = {
+    require(outputMode == OutputMode.Append(),
+      s"DeltaStreamProvider sink: append output mode only, got $outputMode")
+    new DeltaStreamSink(DeltaStreamProvider.rootOf(
+      new CaseInsensitiveStringMap(parameters.asJava)))
   }
 }
 
 object DeltaStreamProvider {
+  /** The change-feed columns a `readChangeFeed` stream appends. */
+  private[streaming] val ChangeType = "_change_type"
+  private[streaming] val CommitVersion = "_commit_version"
+  private[streaming] val ChangeFeedCols = Seq(ChangeType, CommitVersion)
+
   private[streaming] def rootOf(options: CaseInsensitiveStringMap): String = {
     val root = options.get("path")
     require(root != null,
@@ -126,77 +140,13 @@ object DeltaStreamProvider {
 private[streaming] class DeltaStreamTable(root: String, schema0: StructType,
                                           startingVersion: Long,
                                           admission: DeltaAdmission,
-                                          cdf: Boolean = false)
-  extends Table with SupportsRead with SupportsWrite {
+                                          cdf: Boolean)
+  extends Table with SupportsRead {
 
   override def name(): String = s"graft-delta `$root`"
   override def schema(): StructType = schema0
-  override def capabilities(): java.util.Set[TableCapability] = {
-    val set = new java.util.HashSet[TableCapability]()
-    set.add(TableCapability.MICRO_BATCH_READ)
-    set.add(TableCapability.STREAMING_WRITE)
-    set
-  }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toStreaming: StreamingWrite = {
-          info.schema().fields.foreach(f => require(
-            DeltaStreamReaderFactory.readSupported(f.dataType),
-            s"DeltaStreamProvider sink: column ${f.name} has type " +
-              s"${f.dataType} — the sink writes atomic types and " +
-              "struct/array/map nestings of them"))
-          // an EXISTING table dictates the partitioning (rows route to
-          // partition directories executor-side); a table the sink
-          // CREATES is flat
-          val exists = DeltaLog.versions(root).nonEmpty
-          val (declared, pcs): (Option[StructType], Seq[String]) =
-            if (exists) {
-              val (sch, p) = DeltaLog.tableMeta(SparkSession.active, root)
-              (Some(sch), p)
-            } else (None, Seq.empty)
-          // mapped sinks stage files under the table's DECLARED
-          // physical names (+field ids in id mode) AT EVERY NESTING
-          // LEVEL: the declared schema carries the mapping in field
-          // metadata, so it becomes the writer's naming source —
-          // nested struct/array/map columns stream into mapped tables
-          // the same way they do into unmapped ones (q293 × q289/q290)
-          val (physNames, fieldIds) =
-            if (exists) DeltaLog.columnResolution(SparkSession.active, root)
-            else (Map.empty[String, String], Map.empty[String, Long])
-          val mapped = physNames.nonEmpty || fieldIds.nonEmpty
-          val writeSchema: StructType =
-            if (!mapped) info.schema()
-            else {
-              val d = declared.get
-              // shape must match EXACTLY (names, order, types modulo
-              // nullability/metadata): the writer stages rows by the
-              // declared schema's positions, and a mismatch would
-              // otherwise surface as an executor ClassCastException
-              // instead of this message
-              require(DeltaLog.normSchema(d) ==
-                  DeltaLog.normSchema(info.schema()),
-                s"DeltaStreamProvider sink: the stream's schema " +
-                  s"${info.schema()} does not match the mapped table's " +
-                  s"declared shape $d")
-              d
-            }
-          pcs.foreach { c =>
-            require(info.schema().fieldNames.contains(c),
-              s"DeltaStreamProvider sink: partition column $c missing " +
-                "from the stream's schema")
-            require(DeltaStreamReaderFactory.pvSupported(
-              info.schema()(c).dataType),
-              s"DeltaStreamProvider sink: partition column $c has type " +
-                s"${info.schema()(c).dataType} — supported partition " +
-                "types are long/int/string/boolean/double/date")
-          }
-          new DeltaStreamingWrite(root, info.schema(), info.queryId(),
-            pcs, writeSchema, stampIds = fieldIds.nonEmpty)
-        }
-      }
-    }
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
@@ -204,33 +154,16 @@ private[streaming] class DeltaStreamTable(root: String, schema0: StructType,
         override def readSchema(): StructType = schema0
         override def description(): String = name()
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-          val (_, pcs) = DeltaLog.tableMeta(SparkSession.active, root)
-          // the reader opens data files DIRECTLY — on a mapped table it
-          // resolves columns by physical name (name mode) or by the
-          // footer's field ids (id mode) via this resolution pair
-          val (lookupNames, fieldIds) =
-            DeltaLog.columnResolution(SparkSession.active, root)
-          if (cdf) require(
-            DeltaLog.changeFeedEnabled(SparkSession.active, root),
+          val spark = SparkSession.active
+          val (_, pcs) = DeltaLog.tableMeta(spark, root)
+          if (cdf) require(DeltaLog.changeFeedEnabled(spark, root),
             s"DeltaStreamProvider: $root does not declare " +
               "delta.enableChangeDataFeed — no change feed to stream")
-          schema0.fields.foreach(f => require(
-            DeltaStreamReaderFactory.readSupported(f.dataType),
-            s"DeltaStreamProvider: column ${f.name} has type " +
-              s"${f.dataType} — streaming reads support atomic types " +
-              "and struct/array/map nestings of them"))
-          pcs.foreach { c =>
-            require(schema0.fieldNames.contains(c),
-              s"DeltaStreamProvider: partition column $c missing from " +
-                "the declared schema")
-            require(DeltaStreamReaderFactory.pvSupported(
-              schema0(c).dataType),
-              s"DeltaStreamProvider: partition column $c has type " +
-                s"${schema0(c).dataType} — supported partition types " +
-                "are long/int/string/boolean/double/date")
-          }
-          new DeltaMicroBatchStream(root, schema0, startingVersion,
-            admission, pcs, cdf, lookupNames, fieldIds)
+          val table = StructType(schema0.filterNot(f =>
+            cdf && DeltaStreamProvider.ChangeFeedCols.contains(f.name)))
+          new DeltaMicroBatchStream(root, schema0,
+            DeltaLog.scanSchema(spark, root, table), startingVersion,
+            admission, pcs, cdf)
         }
       }
     }
@@ -299,14 +232,16 @@ private[streaming] case class DeltaAdmission(maxVersions: Option[Long],
       .getOrElse(ReadLimit.allAvailable())
 }
 
+/** `physical` is the scan schema of the table's own columns of
+  * `schema` (every column but the change-feed ones), by position.
+  */
 private[streaming] class DeltaMicroBatchStream(root: String,
                                                schema: StructType,
+                                               physical: StructType,
                                                startingVersion: Long,
                                                admission: DeltaAdmission,
                                                partitionCols: Seq[String],
-                                               cdf: Boolean = false,
-                                               lookupNames: Map[String, String] = Map.empty,
-                                               fieldIds: Map[String, Long] = Map.empty)
+                                               cdf: Boolean)
   extends MicroBatchStream with SupportsAdmissionControl {
 
   override def initialOffset(): Offset = VersionOffset(startingVersion)
@@ -334,8 +269,8 @@ private[streaming] class DeltaMicroBatchStream(root: String,
   private def commitFilesUncached(v: Long): Seq[(String, Map[String, String], Map[String, String], Long)] =
     if (cdf)
       DeltaLog.changeFilesIn(root, v - 1, v).map { case (_, rel, pv, ct, sz) =>
-        (rel, pv, Map("_commit_version" -> v.toString) ++
-          ct.map("_change_type" -> _), sz)
+        (rel, pv, Map(DeltaStreamProvider.CommitVersion -> v.toString) ++
+          ct.map(DeltaStreamProvider.ChangeType -> _), sz)
       }
     else
       DeltaLog.appendedFilesIn(root, v - 1, v).map { case (_, rel, pv, sz) =>
@@ -401,6 +336,7 @@ private[streaming] class DeltaMicroBatchStream(root: String,
     val s = start.asInstanceOf[VersionOffset]
     val e = end.asInstanceOf[VersionOffset]
     val lastV = if (e.index > 0L) e.version + 1 else e.version
+    val tz = SparkSession.active.sessionState.conf.sessionLocalTimeZone
     val out = Array.newBuilder[InputPartition]
     var v = s.version + 1
     while (v <= lastV) {
@@ -411,8 +347,17 @@ private[streaming] class DeltaMicroBatchStream(root: String,
       var i = from
       while (i < until) {
         val (rel, pv, extras, _) = fs(i)
-        out += DeltaFilePartition(
-          java.nio.file.Paths.get(root, rel).toString, pv, extras)
+        val consts = constantCols(extras)
+        // Delta partition-value strings → typed values by the rule the
+        // batch read applies (a cast of the string), keyed physical on
+        // mapped tables with the logical name as a fallback
+        val values = consts.map { c =>
+          val raw = extras.getOrElse(c,
+            pv.getOrElse(physicalName(c), pv.get(c).orNull))
+          Cast(Literal(raw), schema(c).dataType, Some(tz)).eval()
+        }
+        out += DeltaFilePartition(java.nio.file.Paths.get(root, rel).toString,
+          consts, InternalRow.fromSeq(values))
         i += 1
       }
       v += 1
@@ -420,633 +365,107 @@ private[streaming] class DeltaMicroBatchStream(root: String,
     out.result()
   }
 
+  /** The columns a file's rows take as per-file constants, in reader
+    * order: the table's partition columns, then the change-feed
+    * columns the file does not store (`_commit_version` always,
+    * `_change_type` for a synthesized insert — a cdc file carries its
+    * own).
+    */
+  private def constantCols(extras: Map[String, String]): Seq[String] =
+    partitionCols ++
+      DeltaStreamProvider.ChangeFeedCols.filter(extras.contains)
+
+  // the table's columns lead `schema`; the change-feed columns, which
+  // `physical` does not cover, come last
+  private val physicalByName: Map[String, StructField] =
+    physical.fields.zip(schema.fields).map { case (p, f) => f.name -> p }.toMap
+
+  private def physicalName(c: String): String = physicalByName(c).name
+
   override def createReaderFactory(): PartitionReaderFactory = {
-    // ship the session's resolved hadoop conf (the countFast pattern:
-    // a bare `new Configuration()` in the task would lose FS settings)
-    val it = SparkSession.active.sparkContext.hadoopConfiguration.iterator()
-    val props = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    while (it.hasNext) { val e = it.next(); props += ((e.getKey, e.getValue)) }
-    DeltaStreamReaderFactory(schema.json, props.toArray,
-      partitionCols.toArray, lookupNames, fieldIds)
+    val spark = SparkSession.active
+    // the constant layouts [[constantCols]] yields: a cdc file stores
+    // its `_change_type`, a synthesized insert takes it as a constant
+    val layouts =
+      if (!cdf) Seq(Nil)
+      else Seq(Seq(DeltaStreamProvider.CommitVersion),
+        DeltaStreamProvider.ChangeFeedCols)
+    DeltaStreamReaderFactory(layouts.map(partitionCols ++ _).map { consts =>
+      val fileCols = schema.fields.filterNot(f => consts.contains(f.name))
+      // a cdc file's own `_change_type` is a feed artifact, never mapped
+      val required = StructType(fileCols.map(f =>
+        physicalByName.getOrElse(f.name, f)))
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, required, StructType(consts.map(schema(_))), required, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+      // the reader yields file columns then constants; put them back
+      // in declared order
+      val produced = fileCols.map(_.name) ++ consts
+      consts -> (read, schema.fields.map(f =>
+        BoundReference(produced.indexOf(f.name), f.dataType,
+          nullable = true)).toSeq)
+    }.toMap)
   }
 }
 
+/** One appended (or cdc) file and its per-file constants (partition
+  * values, change-feed columns), typed, in [[constantCols]] order.
+  */
 private[streaming] case class DeltaFilePartition(
-    path: String, partitionValues: Map[String, String],
-    extras: Map[String, String] = Map.empty)
+    path: String, constantCols: Seq[String], constants: InternalRow)
   extends InputPartition
 
+/** Spark's parquet reader per constant layout, built on the driver,
+  * each with the projection back to the declared column order.
+  */
 private[streaming] case class DeltaStreamReaderFactory(
-    schemaJson: String, hadoopProps: Array[(String, String)],
-    partitionCols: Array[String],
-    lookupNames: Map[String, String] = Map.empty,
-    fieldIds: Map[String, Long] = Map.empty)
+    readers: Map[Seq[String],
+      (PartitionedFile => Iterator[InternalRow], Seq[BoundReference])])
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    hadoopProps.foreach { case (k, v) => conf.set(k, v) }
     val p = partition.asInstanceOf[DeltaFilePartition]
-    val declared = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    // partition columns read as per-file CONSTANTS from the add's
-    // partitionValues (keyed PHYSICAL on mapped tables, logical
-    // accepted as a fallback), parsed once per reader by declared type
-    val pcSet = partitionCols.toSet
-    val constants: Array[Option[Any]] = declared.fields.map { f =>
-      if (pcSet(f.name)) {
-        val key = lookupNames.getOrElse(f.name, f.name)
-        Some(DeltaStreamReaderFactory.parsePv(
-          p.partitionValues.get(key)
-            .orElse(p.partitionValues.get(f.name)).orNull, f.dataType))
-      } else if (p.extras.contains(f.name))
-        Some(DeltaStreamReaderFactory.parsePv(
-          p.extras(f.name), f.dataType))
-      else None
-    }
-    val lookups = declared.fields.map(f =>
-      lookupNames.getOrElse(f.name, f.name))
-    val ids = declared.fields.map(f => fieldIds.get(f.name))
-    new GroupParquetReader(p.path, declared, constants, conf,
-      lookups, ids)
+    val (read, declaredOrder) = readers(p.constantCols)
+    val project = UnsafeProjection.create(declaredOrder)
+    // the whole file is one split, whatever size its add records
+    // (external logs may record none): row groups are selected by the
+    // midpoint rule over [start, start + length)
+    val file = PartitionedFile(p.constants, SparkPath.fromPathString(p.path),
+      0L, Long.MaxValue)
+    new PartitionReaderFromIterator(read(file).map(project))
   }
 }
 
-private[streaming] object DeltaStreamReaderFactory {
-  def supported(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | DoubleType | FloatType | BooleanType |
-         StringType | BinaryType | TimestampType | DateType => true
-    case _ => false
-  }
-
-  /** Nested type support, BOTH directions: struct/array/map over
-    * supported atoms stream through the source's Group walk AND the
-    * sink's Group staging (the reference's silver nests
-    * `items array<struct<...>>`) — including column-mapped sinks,
-    * which stage under declared physical names/field ids at every
-    * level. [[supported]] is the atomic subset.
-    */
-  def readSupported(dt: DataType): Boolean = dt match {
-    case s: StructType => s.fields.forall(f => readSupported(f.dataType))
-    case a: org.apache.spark.sql.types.ArrayType =>
-      readSupported(a.elementType)
-    case m: org.apache.spark.sql.types.MapType =>
-      readSupported(m.keyType) && readSupported(m.valueType)
-    case other => supported(other)
-  }
-
-  def pvSupported(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | StringType | BooleanType | DoubleType |
-         DateType => true
-    case _ => false
-  }
-
-  /** Delta partition-value string → Spark internal representation. */
-  def parsePv(raw: String, dt: DataType): Any =
-    if (raw == null) null
-    else dt match {
-      case LongType => raw.toLong
-      case IntegerType => raw.toInt
-      case DoubleType => raw.toDouble
-      case BooleanType => raw.toBoolean
-      case StringType => UTF8String.fromString(raw)
-      case DateType => java.time.LocalDate.parse(raw).toEpochDay.toInt
-      case other => throw new IllegalArgumentException(
-        s"DeltaStreamReaderFactory: partition type $other unsupported")
-    }
-}
-
-/** Row-group walk of ONE parquet file via the parquet-hadoop Group API,
-  * converting to InternalRow by the declared schema: file-missing
-  * columns → null (post-evolution reads), value extraction by declared
-  * Spark type (timestamps must be INT64 µs — the only physical form
-  * this bridge writes; INT96 refuses loudly). Column-mapped tables
-  * resolve each field by its parquet FIELD ID when one is declared
-  * (id mode), else by `lookupNames` (the physical name under name
-  * mode, the logical name otherwise).
+/** Exactly-once streaming SINK into the Delta log: each micro-batch is
+  * converted to a batch Dataset by Spark's own `ForeachBatchSink` and
+  * committed as ONE append — `commitPartitioned` when the table already
+  * has partition columns (rows route to hive partition directories),
+  * `commitFlat` otherwise (creating the table on the first batch) —
+  * under the txn watermark `("graft-stream-sink-" + queryId, batchId)`.
+  * A replayed batch after recovery is a no-op (the Delta
+  * idempotent-writer pattern, checked before any validation), and the
+  * batch passes every writer rule `commitFlat` enforces: NOT NULL and
+  * CHECK constraints, generated and identity columns, column mapping.
   */
-private[streaming] class GroupParquetReader(
-    path: String, declared: StructType, constants: Array[Option[Any]],
-    conf: org.apache.hadoop.conf.Configuration,
-    lookupNames: Array[String] = Array.empty,
-    fieldIds: Array[Option[Long]] = Array.empty)
-  extends PartitionReader[InternalRow] {
+private[streaming] class DeltaStreamSink(root: String) extends Sink {
 
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-  import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.hadoop.util.HadoopInputFile
-  import org.apache.parquet.io.ColumnIOFactory
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+  override def addBatch(batchId: Long, data: DataFrame): Unit =
+    new ForeachBatchSink[Row](commit, ExpressionEncoder(data.schema))
+      .addBatch(batchId, data)
 
-  private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-    new org.apache.hadoop.fs.Path(path), conf))
-  private val fileSchema = reader.getFooter.getFileMetaData.getSchema
-  private val io = new ColumnIOFactory().getColumnIO(fileSchema)
-  private val fieldIdx: Array[Int] = declared.fields.zipWithIndex.map {
-    case (f, di) =>
-    if (constants(di).isDefined) -1
-    else {
-      val byId: Option[Int] =
-        if (di < fieldIds.length) fieldIds(di).flatMap { id =>
-          (0 until fileSchema.getFieldCount).find { i =>
-            val t = fileSchema.getType(i)
-            t.getId != null && t.getId.intValue().toLong == id
-          }
-        } else None
-      val name = if (di < lookupNames.length) lookupNames(di) else f.name
-      val idx = byId.getOrElse(
-        if (fileSchema.containsField(name)) fileSchema.getFieldIndex(name)
-        else -1)
-      if (idx >= 0 && f.dataType == TimestampType) {
-        val pt = fileSchema.getType(idx).asPrimitiveType()
-        require(pt.getPrimitiveTypeName == PrimitiveTypeName.INT64,
-          s"GroupParquetReader: $path stores ${f.name} as " +
-            s"${pt.getPrimitiveTypeName}, expected INT64 µs timestamps")
-      }
-      idx
-    }
+  private def commit(batch: Dataset[Row], batchId: Long): Unit = {
+    val spark = batch.sparkSession
+    // the query's persistent id (stable across restarts), which
+    // StreamExecution publishes as a local property
+    val txn = Some(("graft-stream-sink-" +
+      spark.sparkContext.getLocalProperty("sql.streaming.queryId"), batchId))
+    val pcs =
+      if (DeltaLog.currentVersion(root) < 0L) Nil
+      else DeltaLog.tableMeta(spark, root)._2
+    if (pcs.isEmpty) DeltaLog.commitFlat(spark, root, batch, txn = txn)
+    // a partitioned write of no rows yields no files to commit
+    else if (!batch.isEmpty)
+      DeltaLog.commitPartitioned(spark, root, batch, pcs, txn = txn)
   }
-
-  private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
-  private var remaining = 0L
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (remaining == 0L) {
-      val store = reader.readNextRowGroup()
-      if (store == null) return false
-      remaining = store.getRowCount
-      recordReader = io.getRecordReader(store,
-        new GroupRecordConverter(fileSchema))
-    }
-    val g = recordReader.read()
-    remaining -= 1
-    current = toRow(g)
-    true
-  }
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit = reader.close()
-
-  private def toRow(g: Group): InternalRow = {
-    val values = new Array[Any](declared.length)
-    var i = 0
-    while (i < declared.length) {
-      val idx = fieldIdx(i)
-      values(i) =
-        if (constants(i).isDefined) constants(i).get
-        else if (idx < 0 || g.getFieldRepetitionCount(idx) == 0) null
-        else convertValue(g, idx, 0, declared.fields(i).dataType)
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  private val PhysNameKey = "delta.columnMapping.physicalName"
-  private val ColIdKey = "delta.columnMapping.id"
-
-  /** Resolve a declared NESTED field inside a file group type: by the
-    * declared column-mapping FIELD ID when both sides carry one (id
-    * mode — stored names are not authoritative), else by physicalName
-    * (name mode), else by the logical name. −1 = absent (reads null,
-    * the evolution rule, same as top level).
-    */
-  private def resolveIn(gt: org.apache.parquet.schema.GroupType,
-                        f: org.apache.spark.sql.types.StructField): Int = {
-    val byId: Option[Int] =
-      if (f.metadata.contains(ColIdKey)) {
-        val id = f.metadata.getLong(ColIdKey)
-        (0 until gt.getFieldCount).find { i =>
-          val t = gt.getType(i)
-          t.getId != null && t.getId.intValue().toLong == id
-        }
-      } else None
-    val name = if (f.metadata.contains(PhysNameKey))
-      f.metadata.getString(PhysNameKey) else f.name
-    byId.getOrElse(
-      if (gt.containsField(name)) gt.getFieldIndex(name) else -1)
-  }
-
-  private def structRow(g: Group,
-      st: StructType): InternalRow = {
-    val gt = g.getType
-    val vals = new Array[Any](st.length)
-    var i = 0
-    while (i < st.length) {
-      val idx = resolveIn(gt, st.fields(i))
-      vals(i) =
-        if (idx < 0 || g.getFieldRepetitionCount(idx) == 0) null
-        else convertValue(g, idx, 0, st.fields(i).dataType)
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  /** Field `idx`, repetition `rep` of `g` as the Spark-internal value
-    * of `dt` — recursive over struct/array/map (parquet LIST in both
-    * the standard 3-level and the legacy element-direct shapes,
-    * disambiguated by the format's backward-compat rule; MAP as the
-    * standard repeated key_value).
-    */
-  /** The file-side primitive type of field `idx` in group `g` (the
-    * widening dispatch needs the PHYSICAL form, not the declared one).
-    */
-  private def primitiveOf(g: Group, idx: Int): PrimitiveTypeName =
-    g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName
-
-  private def convertValue(g: Group, idx: Int, rep: Int,
-                           dt: DataType): Any = dt match {
-    case st: StructType => structRow(g.getGroup(idx, rep), st)
-    case org.apache.spark.sql.types.ArrayType(et, _) =>
-      val lg = g.getGroup(idx, rep)
-      val repeated = lg.getType.getType(0)
-      val n = lg.getFieldRepetitionCount(0)
-      val out = new Array[Any](n)
-      // LogicalTypes.md backward-compat rule: a repeated PRIMITIVE, a
-      // repeated group with >1 fields, or one named array/..._tuple IS
-      // the element; otherwise it is the 3-level "list" wrapper
-      val elementDirect = repeated.isPrimitive ||
-        repeated.asGroupType().getFieldCount > 1 ||
-        repeated.getName == "array" || repeated.getName.endsWith("_tuple")
-      var i = 0
-      while (i < n) {
-        out(i) =
-          if (elementDirect) convertValue(lg, 0, i, et)
-          else {
-            val w = lg.getGroup(0, i)
-            if (w.getFieldRepetitionCount(0) == 0) null
-            else convertValue(w, 0, 0, et)
-          }
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    case org.apache.spark.sql.types.MapType(kt, vt, _) =>
-      val mg = g.getGroup(idx, rep)
-      val n = mg.getFieldRepetitionCount(0)
-      val ks = new Array[Any](n)
-      val vs = new Array[Any](n)
-      var i = 0
-      while (i < n) {
-        val kv = mg.getGroup(0, i)
-        ks(i) = convertValue(kv, 0, 0, kt)
-        vs(i) =
-          if (kv.getFieldRepetitionCount(1) == 0) null
-          else convertValue(kv, 1, 0, vt)
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(ks),
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(vs))
-    case LongType =>
-      // typeWidening: files written before an int→long widening store
-      // INT32 — extract by the file's OWN physical form and upcast
-      primitiveOf(g, idx) match {
-        case PrimitiveTypeName.INT32 => g.getInteger(idx, rep).toLong
-        case _ => g.getLong(idx, rep)
-      }
-    case TimestampType => g.getLong(idx, rep)
-    case IntegerType | DateType => g.getInteger(idx, rep)
-    case DoubleType =>
-      primitiveOf(g, idx) match {
-        case PrimitiveTypeName.FLOAT => g.getFloat(idx, rep).toDouble
-        case _ => g.getDouble(idx, rep)
-      }
-    case FloatType => g.getFloat(idx, rep)
-    case BooleanType => g.getBoolean(idx, rep)
-    case StringType =>
-      UTF8String.fromBytes(g.getBinary(idx, rep).getBytes)
-    case BinaryType => g.getBinary(idx, rep).getBytes
-    case other => throw new IllegalStateException(
-      s"GroupParquetReader: unsupported type $other (vetted at " +
-        "scan build — unreachable)")
-  }
-}
-
-/** Exactly-once DSv2 streaming SINK into the Delta log: executors
-  * write each task's rows to staged parquet parts under the table's
-  * same-filesystem staging dir — one part per TABLE PARTITION VALUE
-  * the task holds (rows route executor-side; partition columns are
-  * carried as directory metadata, never stored in the file) — and the
-  * DRIVER's epoch commit moves the staged files into their partition
-  * directories and writes ONE log commit carrying a `txn` watermark
-  * (appId = the query id) — a replayed epoch after recovery is a
-  * no-op, the Delta idempotent-writer pattern. Appends only (the
-  * streaming-sink shape); `abort` discards the epoch's staged files.
-  */
-private[streaming] class DeltaStreamingWrite(root: String,
-                                             schema: StructType,
-                                             queryId: String,
-                                             partitionCols: Seq[String],
-                                             writeSchema: StructType,
-                                             stampIds: Boolean = false)
-  extends StreamingWrite {
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val it = SparkSession.active.sparkContext.hadoopConfiguration.iterator()
-    val props = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    while (it.hasNext) { val e = it.next(); props += ((e.getKey, e.getValue)) }
-    // materialize the staging dir BEFORE executors need it
-    val staging = DeltaLog.streamStagingDir(root)
-    // the WRITE schema (the table's declared schema on a mapped
-    // table — its field metadata names the staged parquet columns at
-    // every level) ships as JSON; StructType.json round-trips metadata
-    DeltaStreamWriterFactory(staging.toString, writeSchema.json,
-      partitionCols, props.toArray, stampIds)
-  }
-
-  override def commit(epochId: Long,
-                      messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.collect {
-      case DeltaWriteMessage(files) => files.map { case (p, pv) =>
-        java.nio.file.Paths.get(p) -> pv }
-    }.toSeq.flatten
-    DeltaLog.commitStreamFiles(SparkSession.active, root, schema.json,
-      staged, (s"graft-stream-sink-$queryId", epochId), partitionCols)
-  }
-
-  override def abort(epochId: Long,
-                     messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case DeltaWriteMessage(files) => files.foreach { case (p, _) =>
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(p)) }
-      case _ => ()
-    }
-}
-
-/** Staged files of one task: (path, partitionValues) pairs. */
-private[streaming] case class DeltaWriteMessage(
-    files: Seq[(String, Map[String, String])])
-  extends WriterCommitMessage
-
-private[streaming] case class DeltaStreamWriterFactory(
-    stagingDir: String, schemaJson: String, partitionCols: Seq[String],
-    hadoopProps: Array[(String, String)],
-    stampIds: Boolean = false)
-  extends StreamingDataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] = {
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    hadoopProps.foreach { case (k, v) => conf.set(k, v) }
-    new GroupParquetWriter(stagingDir,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType],
-      partitionCols, conf, stampIds)
-  }
-}
-
-/** Staged parquet parts via the parquet-hadoop example writer
-  * (lazy-opened: an empty Spark partition stages nothing);
-  * declared-schema atomic types plus struct/array/map nestings of
-  * them (standard 3-level LIST / key_value MAP shapes, mirrored by
-  * [[GroupParquetReader]]'s walk). On a PARTITIONED table rows route
-  * executor-side: one staged part per distinct table-partition value
-  * this task holds, partition columns extracted per row (Delta string
-  * representation) and EXCLUDED from the file — they live in the
-  * directory path and the add's partitionValues, like every Delta
-  * writer. `commit` hands (path, partitionValues) pairs to the
-  * driver; `abort` deletes them all.
-  *
-  * Column mapping: `schema` is the table's DECLARED schema on a
-  * mapped table — each field's `delta.columnMapping.physicalName`
-  * names the staged parquet column (identity when absent), and with
-  * `stampIds` (id mode) its `delta.columnMapping.id` is recorded as
-  * the parquet field id, BOTH recursively at every nesting level
-  * (mirroring [[GroupParquetReader.resolveIn]] and the batch write's
-  * toPhysicalField).
-  */
-private[streaming] class GroupParquetWriter(
-    stagingDir: String, schema: StructType, partitionCols: Seq[String],
-    conf: org.apache.hadoop.conf.Configuration,
-    stampIds: Boolean = false)
-  extends DataWriter[InternalRow] {
-
-  import org.apache.parquet.example.data.simple.SimpleGroupFactory
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
-  import org.apache.parquet.io.api.Binary
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
-    Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-
-  private val pcSet = partitionCols.toSet
-  /** data fields with their index into the FULL row. */
-  private val dataFields: Array[(org.apache.spark.sql.types.StructField, Int)] =
-    schema.fields.zipWithIndex.filterNot { case (f, _) => pcSet(f.name) }
-  private val pcFields: Array[(Int, DataType)] =
-    partitionCols.map(c => (schema.fieldIndex(c), schema(c).dataType))
-      .toArray
-  private val dataSchema = StructType(dataFields.map(_._1))
-
-  /** Parquet type of one field — recursive: structs as optional
-    * groups, arrays as the STANDARD 3-level LIST (matching the
-    * reader's walk), maps as repeated key_value.
-    */
-  private def parquetTypeOf(name: String,
-      dt: DataType): org.apache.parquet.schema.Type = {
-    import org.apache.parquet.schema.{GroupType, Type}
-    def prim(ptn: org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName,
-             ann: LogicalTypeAnnotation = null): Type = {
-      var pb = Types.optional(ptn)
-      if (ann != null) pb = pb.as(ann)
-      pb.named(name)
-    }
-    dt match {
-      case st: StructType =>
-        val gb = Types.optionalGroup()
-        st.fields.foreach(f2 => gb.addField(fieldTypeOf(f2)))
-        gb.named(name)
-      case org.apache.spark.sql.types.ArrayType(et, _) =>
-        Types.optionalGroup().as(LogicalTypeAnnotation.listType())
-          .addField(new GroupType(Type.Repetition.REPEATED, "list",
-            parquetTypeOf("element", et)))
-          .named(name)
-      case org.apache.spark.sql.types.MapType(kt, vt, _) =>
-        // the format spec REQUIRES the map key field's repetition to be
-        // `required` (Spark map keys are non-null and [[appendField]]
-        // always writes them); an optional key reads fine here and in
-        // Spark, but strict external readers may reject the file
-        Types.optionalGroup().as(LogicalTypeAnnotation.mapType())
-          .addField(new GroupType(Type.Repetition.REPEATED, "key_value",
-            requiredCopy(parquetTypeOf("key", kt)),
-            parquetTypeOf("value", vt)))
-          .named(name)
-      case LongType => prim(INT64)
-      case TimestampType => prim(INT64,
-        LogicalTypeAnnotation.timestampType(true,
-          LogicalTypeAnnotation.TimeUnit.MICROS))
-      case IntegerType => prim(INT32)
-      case DateType => prim(INT32, LogicalTypeAnnotation.dateType())
-      case DoubleType => prim(DOUBLE)
-      case FloatType => prim(FLOAT)
-      case BooleanType => prim(BOOLEAN)
-      case StringType => prim(BINARY, LogicalTypeAnnotation.stringType())
-      case BinaryType => prim(BINARY)
-      case other => throw new IllegalArgumentException(
-        s"GroupParquetWriter: unsupported type $other (vetted at " +
-          "write build — unreachable)")
-    }
-  }
-
-  /** Same type with `required` repetition (map keys). */
-  private def requiredCopy(
-      t: org.apache.parquet.schema.Type): org.apache.parquet.schema.Type = {
-    import org.apache.parquet.schema.Type
-    if (t.isPrimitive) {
-      val p = t.asPrimitiveType()
-      var b = Types.primitive(p.getPrimitiveTypeName,
-        Type.Repetition.REQUIRED)
-      if (p.getLogicalTypeAnnotation != null)
-        b = b.as(p.getLogicalTypeAnnotation)
-      b.named(t.getName)
-    } else {
-      val g = t.asGroupType()
-      var b = Types.buildGroup(Type.Repetition.REQUIRED)
-      if (g.getLogicalTypeAnnotation != null)
-        b = b.as(g.getLogicalTypeAnnotation)
-      g.getFields.forEach(f => b.addField(f))
-      b.named(g.getName)
-    }
-  }
-
-  private val WriterPhysNameKey = "delta.columnMapping.physicalName"
-  private val WriterColIdKey = "delta.columnMapping.id"
-
-  /** Parquet type of one STRUCT FIELD (any nesting level): named by its
-    * column-mapping physicalName when declared, stamped with its field
-    * id under id mode — the write-side mirror of the reader's
-    * [[GroupParquetReader.resolveIn]].
-    */
-  private def fieldTypeOf(
-      f: org.apache.spark.sql.types.StructField): org.apache.parquet.schema.Type = {
-    val name =
-      if (f.metadata.contains(WriterPhysNameKey))
-        f.metadata.getString(WriterPhysNameKey)
-      else f.name
-    val t = parquetTypeOf(name, f.dataType)
-    if (stampIds && f.metadata.contains(WriterColIdKey))
-      t.withId(f.metadata.getLong(WriterColIdKey).toInt)
-    else t
-  }
-
-  private val messageType: MessageType = {
-    val b = Types.buildMessage()
-    dataSchema.fields.foreach(f => b.addField(fieldTypeOf(f)))
-    b.named("spark_schema")
-  }
-
-  private val factory = new SimpleGroupFactory(messageType)
-  private val writers = scala.collection.mutable.LinkedHashMap.empty[
-    Seq[Option[String]],
-    (org.apache.parquet.hadoop.ParquetWriter[
-      org.apache.parquet.example.data.Group], java.nio.file.Path)]
-
-  private def open(): (org.apache.parquet.hadoop.ParquetWriter[
-      org.apache.parquet.example.data.Group], java.nio.file.Path) = {
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(stagingDir))
-    val path = java.nio.file.Paths.get(stagingDir,
-      s"stream-${java.util.UUID.randomUUID()}.parquet")
-    val w = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(path.toString))
-      .withType(messageType).withConf(conf).build()
-    (w, path)
-  }
-
-  /** Delta partition-value strings of one row (None = null value). */
-  private def pvOf(row: InternalRow): Seq[Option[String]] =
-    pcFields.toSeq.map { case (i, dt) =>
-      if (row.isNullAt(i)) None
-      else Some(dt match {
-        case LongType => row.getLong(i).toString
-        case IntegerType => row.getInt(i).toString
-        case StringType => row.getUTF8String(i).toString
-        case BooleanType => row.getBoolean(i).toString
-        case DoubleType => row.getDouble(i).toString
-        case DateType =>
-          java.time.LocalDate.ofEpochDay(row.getInt(i).toLong).toString
-        case other => throw new IllegalStateException(
-          s"GroupParquetWriter: partition type $other — vetted at " +
-            "write build, unreachable")
-      })
-    }
-
-  /** Append field `idx` of `g` from position `i` of `src` (InternalRow
-    * and ArrayData share the SpecializedGetters surface, so one
-    * recursion covers rows, array elements and map entries). Nested
-    * group structure mirrors [[parquetTypeOf]] exactly.
-    */
-  private def appendField(g: org.apache.parquet.example.data.Group,
-      idx: Int, dt: DataType,
-      src: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      i: Int): Unit = dt match {
-    case st: StructType =>
-      val child = g.addGroup(idx)
-      val row = src.getStruct(i, st.length)
-      var j = 0
-      while (j < st.length) {
-        if (!row.isNullAt(j))
-          appendField(child, j, st.fields(j).dataType, row, j)
-        j += 1
-      }
-    case org.apache.spark.sql.types.ArrayType(et, _) =>
-      val lg = g.addGroup(idx)
-      val arr = src.getArray(i)
-      var j = 0
-      while (j < arr.numElements()) {
-        val w = lg.addGroup(0)
-        if (!arr.isNullAt(j)) appendField(w, 0, et, arr, j)
-        j += 1
-      }
-    case org.apache.spark.sql.types.MapType(kt, vt, _) =>
-      val mg = g.addGroup(idx)
-      val m = src.getMap(i)
-      val ks = m.keyArray()
-      val vs = m.valueArray()
-      var j = 0
-      while (j < m.numElements()) {
-        val kv = mg.addGroup(0)
-        appendField(kv, 0, kt, ks, j)
-        if (!vs.isNullAt(j)) appendField(kv, 1, vt, vs, j)
-        j += 1
-      }
-    case LongType | TimestampType => g.add(idx, src.getLong(i))
-    case IntegerType | DateType => g.add(idx, src.getInt(i))
-    case DoubleType => g.add(idx, src.getDouble(i))
-    case FloatType => g.add(idx, src.getFloat(i))
-    case BooleanType => g.add(idx, src.getBoolean(i))
-    case StringType => g.add(idx,
-      Binary.fromConstantByteArray(src.getUTF8String(i).getBytes))
-    case BinaryType => g.add(idx,
-      Binary.fromConstantByteArray(src.getBinary(i)))
-    case other => throw new IllegalStateException(
-      s"GroupParquetWriter: unsupported type $other — unreachable")
-  }
-
-  override def write(row: InternalRow): Unit = {
-    val w = writers.getOrElseUpdate(pvOf(row), open())._1
-    val g = factory.newGroup()
-    var j = 0
-    while (j < dataFields.length) {
-      val (f, i) = dataFields(j)
-      if (!row.isNullAt(i)) appendField(g, j, f.dataType, row, i)
-      j += 1
-    }
-    w.write(g)
-  }
-
-  override def commit(): WriterCommitMessage =
-    DeltaWriteMessage(writers.toSeq.map { case (pvKey, (w, path)) =>
-      w.close()
-      path.toString ->
-        partitionCols.zip(pvKey).map { case (c, v) => c -> v.orNull }.toMap
-    })
-
-  override def abort(): Unit =
-    writers.values.foreach { case (w, path) =>
-      w.close()
-      java.nio.file.Files.deleteIfExists(path)
-    }
-
-  override def close(): Unit = ()
 }

@@ -13,42 +13,22 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   */
 object SilverStream {
 
-  /** Bronze stream → idempotent silver upsert, one [[Upsert.mergeIntoPath]]
-    * per micro-batch. Exactly-once lands on the idempotence of the merge:
-    * a replayed micro-batch (failure/restart) rewrites the same keys with
-    * the same rows. This is the streaming twin of silver_orders.py:72-79.
+  /** Bronze stream → idempotent silver upsert into a versioned Delta
+    * table ([[graft.lake.DeltaLog]]), the streaming twin of
+    * silver_orders.py:72-79: each micro-batch commits one new Delta
+    * version — the ordering-first merge over the current snapshot
+    * ([[Upsert.mergeLatest]] semantics), committed as a rewrite — so
+    * concurrent readers keep their pinned snapshot while the stream
+    * lands and every micro-batch boundary is time travelable.
     *
-    * The merge is ORDERING-FIRST ([[Upsert.mergeLatest]] semantics): the
-    * table keeps the greatest-`ordering` row per key across all batches,
-    * so the result is a pure function of the delivered record set —
-    * independent of micro-batch slicing, and a stale duplicate arriving
-    * in a later batch can never regress a key (SilverStreamSpec proves
-    * stream ≡ batch on the q43 fixture topic under shuffled delivery).
-    */
-  def mergeStream(bronze: DataFrame, path: String, checkpoint: String,
-                  keys: Seq[String], ordering: Seq[String],
-                  trigger: Trigger = BronzeIngest.DefaultTrigger): StreamingQuery =
-    bronze.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Upsert.mergeIntoPath(batch.sparkSession, path, batch, keys, ordering,
-          orderingFirst = true)
-      }
-      .start()
-
-  /** [[mergeStream]] into a versioned Delta table
-    * ([[graft.lake.DeltaLog]]): each micro-batch commits one new Delta
-    * version — the ordering-first merge over the current snapshot,
-    * committed as a rewrite — so concurrent readers keep their pinned
-    * snapshot while the stream lands (the isolation the in-place swap
-    * cannot give) and every micro-batch boundary is time travelable.
-    * Exactly-once lands on the SAME idempotence contract as
-    * [[mergeStream]] — a replayed micro-batch commits a version with
-    * identical content (the table state is a pure function of the
-    * delivered record set), so the extra replay version is
-    * content-equal, never wrong; vacuum reclaims the retired files.
+    * The table keeps the greatest-`ordering` row per key across all
+    * batches, so its state is a pure function of the delivered record
+    * set — independent of micro-batch slicing, and a stale duplicate
+    * arriving in a later batch can never regress a key
+    * (SilverStreamSpec proves stream ≡ batch on the q43 fixture topic
+    * under shuffled delivery). Exactly-once lands on that idempotence:
+    * a replayed micro-batch commits a version with identical content,
+    * never a wrong one; vacuum reclaims the retired files.
     */
   def mergeStreamDelta(bronze: DataFrame, root: String, checkpoint: String,
                        keys: Seq[String], ordering: Seq[String],
@@ -77,8 +57,8 @@ object SilverStream {
     * (failure/restart re-delivery) finds its watermark already at or
     * past its version and no-ops instead of double-appending. This is
     * the same idempotence contract Spark's own Delta streaming sink
-    * rides; [[mergeStream]] gets it from merge semantics, this sink
-    * from the log. Empty micro-batches commit nothing.
+    * rides; [[mergeStreamDelta]] gets it from merge semantics, this
+    * sink from the log. Empty micro-batches commit nothing.
     */
   def partitionedDeltaStream(events: DataFrame, root: String,
                              checkpoint: String, partitionCols: Seq[String],

@@ -71,8 +71,8 @@ object StreamJoins {
     * Seen-key state is evicted once older than the watermark, so memory
     * is bounded by rate × `delay`, not by history; a duplicate arriving
     * AFTER eviction is re-emitted — pair with the idempotent downstream
-    * merge (SilverStream.mergeStream) for end-to-end exactly-once, which
-    * is the same layering the batch pipeline uses.
+    * merge ([[SilverStream.mergeStreamDelta]]) for end-to-end
+    * exactly-once, which is the same layering the batch pipeline uses.
     */
   def dedupStream(df: DataFrame, keys: Seq[String], eventTimeCol: String,
                   delay: String): DataFrame = {

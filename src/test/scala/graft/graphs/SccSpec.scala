@@ -85,10 +85,16 @@ class SccSpec extends SparkSpec {
 
   test("run leaves at most one persisted RDD behind (multi-phase)") {
     val sc = spark.sparkContext
+    spark.catalog.clearCache()
     val before = sc.getPersistentRDDs.size
     sccOf(Seq((10L, 1L), (1L, 2L), (2L, 1L)))
     val after = sc.getPersistentRDDs.size
     assert(after <= before + 1, s"persisted RDDs: $before before, $after after")
+    // what is left is the session's to evict
+    spark.catalog.clearCache()
+    val cleared = sc.getPersistentRDDs.size
+    assert(cleared == before,
+      s"persisted RDDs: $before before, $cleared after clearCache()")
   }
 
   test("seeded random graphs agree with an in-spec Tarjan reference " +

@@ -271,8 +271,7 @@ class DeltaStreamSpec extends SparkSpec {
       ("o2", Seq((103L, 5L))),
       ("o3", Seq.empty)), got2.toString)
 
-    // delta-to-delta ROUND TRIP of the nested table: the SINK stages
-    // the same 3-level LIST / key_value MAP shapes the reader walks
+    // delta-to-delta ROUND TRIP of the nested table through the SINK
     val dst = freshDir("graft-dstream-nested-dst")
     val ckpt = Files.createTempDirectory("graft-dsn-ck").toString
     val q3 = readStream(root).writeStream
@@ -303,25 +302,18 @@ class DeltaStreamSpec extends SparkSpec {
     def rowsOf(root: String) = DeltaLog.read(spark, root).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(rowsOf(sinkRoot) == Set((1L, "a"), (2L, "b"), (3L, "c")))
-    // the commits carry STREAMING UPDATE provenance + txn watermarks
+    // the commits carry WRITE provenance + txn watermarks
     val lines0 = Files.readAllLines(java.nio.file.Paths.get(sinkRoot,
       "_delta_log", f"${0L}%020d.json")).asScala.mkString
-    assert(lines0.contains("STREAMING UPDATE") && lines0.contains("txn"),
-      lines0)
+    assert(lines0.contains("\"operation\":\"WRITE\"") &&
+      lines0.contains("txn"), lines0)
     // a replayed epoch (same appId+version) must be a no-op
     val appId = {
       val re = """"appId":"([^"]+)"""".r
       re.findFirstMatchIn(lines0).get.group(1)
     }
-    val staged = DeltaLog.streamStagingDir(sinkRoot)
-      .resolve("replay.parquet")
-    Seq((9L, "dup")).toDF("k", "v").coalesce(1).write.mode("overwrite")
-      .parquet(staged.getParent.resolve("replay-stage").toString)
-    val part = Files.list(staged.getParent.resolve("replay-stage"))
-      .iterator().asScala.find(_.toString.endsWith(".parquet")).get
-    DeltaLog.commitStreamFiles(spark, sinkRoot,
-      DeltaLog.read(spark, sinkRoot).schema.json,
-      Seq(part -> Map.empty[String, String]), (appId, 0L))
+    DeltaLog.commitFlat(spark, sinkRoot, Seq((9L, "dup")).toDF("k", "v"),
+      txn = Some((appId, 0L)))
     assert(rowsOf(sinkRoot) == Set((1L, "a"), (2L, "b"), (3L, "c")),
       "replayed epoch 0 must not re-append")
     // delta-to-delta: stream the sink table into ANOTHER delta table
@@ -387,7 +379,7 @@ class DeltaStreamSpec extends SparkSpec {
         assert(spark.table(name).columns.toSeq == Seq("k", "v"))
       } finally q.stop()
     }
-    // SINK into the mapped tables: staged parquet stores PHYSICAL
+    // SINK into the mapped tables: written parquet stores PHYSICAL
     // names (id mode also stamps field ids); read-back logical
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -690,5 +682,75 @@ class DeltaStreamSpec extends SparkSpec {
         .exists(m => m.contains("append tail") || m.contains("CDC")),
         chain(e).mkString(" | "))
     } finally q.stop()
+  }
+
+  private def sinkTo(df: org.apache.spark.sql.DataFrame, root: String) =
+    df.writeStream.format("graft.streaming.DeltaStreamProvider")
+      .option("path", root)
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-dsink-ck").toString)
+      .outputMode("append").start()
+
+  test("a DECIMAL(18,2) money column streams source → sink → read " +
+    "unchanged") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.DecimalType
+    val src = freshDir("graft-dstream-dec")
+    DeltaLog.commitFlat(spark, src,
+      Seq((1L, "19.99"), (2L, "0.01"), (3L, "1234567890123456.78"))
+        .toDF("k", "s")
+        .select(col("k"), col("s").cast("decimal(18,2)").as("amount")))
+    val dst = freshDir("graft-dstream-dec-dst")
+    val q = sinkTo(readStream(src), dst)
+    try q.processAllAvailable() finally q.stop()
+    val out = DeltaLog.read(spark, dst)
+    assert(out.schema("amount").dataType == DecimalType(18, 2))
+    def money(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getDecimal(1).toPlainString)).toSet
+    assert(money(out) == Set((1L, "19.99"), (2L, "0.01"),
+      (3L, "1234567890123456.78")))
+    assert(money(out) == money(DeltaLog.read(spark, src)))
+  }
+
+  test("the sink enforces a CHECK constraint: a violating micro-batch " +
+    "fails and leaves the table at its prior version") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val root = freshDir("graft-dsink-check")
+    DeltaLog.commitFlat(spark, root, Seq((1L, 5L)).toDF("k", "qty"))
+    DeltaLog.addCheckConstraint(spark, root, "qty_positive", "qty > 0")
+    val in = MemoryStream[(Long, Long)]
+    val q = sinkTo(in.toDF().toDF("k", "qty"), root)
+    val ok =
+      try {
+        in.addData(Seq((2L, 3L)))
+        q.processAllAvailable()
+        val v = DeltaLog.currentVersion(root)
+        in.addData(Seq((3L, -1L)))
+        intercept[Exception](q.processAllAvailable())
+        v
+      } finally q.stop()
+    assert(DeltaLog.currentVersion(root) == ok,
+      "a violating batch must not commit")
+    assert(DeltaLog.read(spark, root).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((1L, 5L), (2L, 3L)))
+  }
+
+  test("the sink computes a generated column the stream does not carry") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val root = freshDir("graft-dsink-gen")
+    DeltaLog.commitFlat(spark, root, DeltaLog.withGenerationExpression(
+      Seq((1L, 10L, 20L)).toDF("k", "x", "dbl"), "dbl", "x * 2"))
+    val in = MemoryStream[(Long, Long)]
+    val q = sinkTo(in.toDF().toDF("k", "x"), root)
+    try {
+      in.addData(Seq((2L, 7L), (3L, 5L)))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(DeltaLog.read(spark, root).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
+      Set((1L, 10L, 20L), (2L, 7L, 14L), (3L, 5L, 10L)))
   }
 }

@@ -32,8 +32,9 @@ class SilverStreamSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[Ev]
-    val q = SilverStream.mergeStream(input.toDF(), s"$dir/t", s"$dir/ckpt",
-      keys = Seq("event_id"), ordering = Seq("event_ts_us", "event_id"),
+    val q = SilverStream.mergeStreamDelta(input.toDF(), s"$dir/t",
+      s"$dir/ckpt", keys = Seq("event_id"),
+      ordering = Seq("event_ts_us", "event_id"),
       trigger = Trigger.ProcessingTime(0))
     val batch1 = Seq(
       ev(1, "purchase", 10.0, "2024-01-01 01:00:00"),
@@ -44,7 +45,7 @@ class SilverStreamSpec extends SparkSpec {
     input.addData(batch1 :+ ev(2, "purchase", 25.0, "2024-01-01 01:05:00"))
     q.processAllAvailable()
     q.stop()
-    val rows = spark.read.parquet(s"$dir/t").collect()
+    val rows = graft.lake.DeltaLog.read(spark, s"$dir/t").collect()
       .map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toMap
     assert(rows == Map(1L -> 10.0, 2L -> 25.0),
       s"latest-wins merge violated: $rows")
@@ -81,10 +82,10 @@ class SilverStreamSpec extends SparkSpec {
     assert(state(DeltaLog.readAt(spark, root, v1)) == Map(1L -> 10.0, 2L -> 20.0))
   }
 
-  test("fixture topic streamed through mergeStream + parse equals the batch silver parse") {
+  test("fixture topic streamed through mergeStreamDelta + parse equals the batch silver parse") {
     // The q43 bronze fixture (planted stale dups, newer UPDATED dups,
     // malformed payloads) delivered as THREE out-of-order micro-batches
-    // through the foreachBatch durable merge, then batch-parsed — must
+    // through the foreachBatch Delta merge, then batch-parsed — must
     // equal OrderEvents.parse over the whole topic in one go. This is the
     // reference deployment shape: streaming ingest+merge, batch silver.
     val dir = Files.createTempDirectory("graft-silver-fixture").toString
@@ -98,12 +99,13 @@ class SilverStreamSpec extends SparkSpec {
     val mixed = rows.sortBy(r => (r.offset * 2654435761L + r.kafka_timestamp.getHour) % 997)
     val chunks = mixed.grouped(math.max(1, mixed.length / 3 + 1)).toSeq
     val input = MemoryStream[FixtureBronze]
-    val q = SilverStream.mergeStream(input.toDF(), s"$dir/t", s"$dir/ckpt",
-      keys = Seq("topic", "partition", "offset"), ordering = Seq("kafka_timestamp"),
-      trigger = Trigger.ProcessingTime(0))
+    val q = SilverStream.mergeStreamDelta(input.toDF(), s"$dir/t",
+      s"$dir/ckpt", keys = Seq("topic", "partition", "offset"),
+      ordering = Seq("kafka_timestamp"), trigger = Trigger.ProcessingTime(0))
     chunks.foreach { c => input.addData(c.toSeq); q.processAllAvailable() }
     q.stop()
-    val streamed = graft.pipeline.OrderEvents.parse(spark.read.parquet(s"$dir/t"))
+    val streamed = graft.pipeline.OrderEvents.parse(
+      graft.lake.DeltaLog.read(spark, s"$dir/t"))
     val batch = graft.pipeline.OrderEvents.parse(bronze)
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
