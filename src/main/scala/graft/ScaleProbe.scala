@@ -217,7 +217,7 @@ object ScaleProbe {
         mergeRun += 1
         val clone = s"$tmp/dclone-$k-$mergeRun"
         graft.lake.DeltaLog.shallowClone(spark, root, clone)
-        graft.lake.DeltaLog.mergeLongKey(spark, clone, "node",
+        graft.lake.DeltaLog.mergeKey(spark, clone, "node",
           spark.read.parquet(srcPath))
         graft.lake.DeltaLog.read(spark, clone)
       },

@@ -1265,7 +1265,7 @@ object SparkEntry {
     // per-order item count², Apriori support bar >= 2, fixed-point lift.
     "q142_basket_lift" -> ((s, d) =>
       Analytics.basketLift(Tables.lineitem(s, d), "l_orderkey", "l_partkey",
-        minSupport = 2, eager = true)),
+        minSupport = 2)),
     // TF-IDF cosine pairs: ltc weighting, exact fixed-point long dots via
     // the guarded posting-list pair join — topical similarity, vs the
     // copy-detection Jaccard family.
@@ -2308,7 +2308,7 @@ object SparkEntry {
       val updates = o.filter(col("o_orderkey").between(100L, 2000L) &&
           pmod(coalesce(col("o_orderkey"), lit(0L)), lit(3)) =!= 2)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      graft.lake.DeltaLog.mergeLongKey(s, root, "o_orderkey",
+      graft.lake.DeltaLog.mergeKey(s, root, "o_orderkey",
         updates.unionByName(slice(2)))
       graft.lake.DeltaLog.read(s, root)
     }),
@@ -2330,7 +2330,7 @@ object SparkEntry {
       val updates = o.filter(col("o_orderkey").between(100L, 2000L) &&
           pmod(coalesce(col("o_orderkey"), lit(0L)), lit(3)) =!= 2)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
-      graft.lake.DeltaLog.mergeLongKey(s, root, "o_orderkey",
+      graft.lake.DeltaLog.mergeKey(s, root, "o_orderkey",
         updates.unionByName(slice(2)))
       graft.lake.DeltaLog.readChangeFeed(s, root, 1L)
         .groupBy(col("_change_type").as("change_type"))

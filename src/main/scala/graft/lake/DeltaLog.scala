@@ -3,6 +3,12 @@ package graft.lake
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{assert_true, col, count, expr, hash,
   input_file_name, lit, max, pmod, regexp_extract, row_number, sum, when}
 import org.apache.spark.sql.types._
@@ -45,13 +51,15 @@ import scala.jdk.CollectionConverters._
   *    line-delimited actions, `add` activating a file, `remove`
   *    retiring it (last action per path wins), `metaData` carrying the
   *    schema, unknown actions (`commitInfo`, `txn`, …) skipped. The file
-  *    list resolves eagerly, so a returned frame is a pinned snapshot:
+  *    list resolves eagerly and IS the scan's file listing (no
+  *    directory discovery), so a returned frame is a pinned snapshot:
   *    later commits never change what it reads, and every version stays
   *    time-travelable until [[vacuum]] reclaims its files. PARTITIONED
   *    tables are honored: `metaData.partitionColumns` names columns
   *    whose values live in each add's `partitionValues` (not in the
-  *    data files); the reader attaches them as typed literals, so a
-  *    filter on a partition column PRUNES whole scans at plan time.
+  *    data files); the scan's file index carries them typed per file,
+  *    so a filter on a partition column PRUNES whole files at plan
+  *    time.
   *    Scope: parquet format, relative paths, reader protocol 1;
   *    protocol 2 with column-mapping mode none or name (physical
   *    parquet names resolved from schema metadata); protocol 3 when
@@ -854,7 +862,7 @@ object DeltaLog {
   /** Reader features this implementation genuinely honors when named by
     * a protocol-3 table: `deletionVectors` (full read support — add
     * actions carrying DV descriptors have the deleted positions
-    * filtered by `_metadata.row_index`, see [[assembleFiles]]),
+    * filtered by `_metadata.row_index`, see [[scanFiles]]),
     * `timestampNtz` (plain type support — the declared-schema read
     * handles TIMESTAMP_NTZ like any other type) and
     * `vacuumProtocolCheck` (constrains vacuum, not reads).
@@ -1100,25 +1108,6 @@ object DeltaLog {
       case _ =>
         (dataSchema, dataSchema.fieldNames.map(n => n -> n).toMap)
     }
-
-  /** Read `paths` with `dataSchema`, honoring column mapping: the
-    * parquet scan uses PHYSICAL field names (name mode) or field-id
-    * matching (id mode); the returned DataFrame carries the LOGICAL
-    * names (same order).
-    */
-  private def readDataFiles(spark: SparkSession, st: LogState,
-                            dataSchema: StructType,
-                            paths: Seq[String]): DataFrame = {
-    if (mappingMode(st) == "none")
-      spark.read.schema(dataSchema).parquet(paths: _*)
-    else {
-      val (scanSchema, physMap) = readSchemaFor(st, dataSchema)
-      spark.read.schema(scanSchema).parquet(paths: _*)
-        .select(dataSchema.fields.map(f =>
-          toLogicalField(f, physMap.getOrElse(f.name, f.name)))
-          .toIndexedSeq: _*)
-    }
-  }
 
   /** WRITE-path mapping gate: modes none, name and id are writable
     * (name/id writes resolve logical→physical at the IO boundary, id
@@ -1692,261 +1681,189 @@ object DeltaLog {
       org.apache.spark.sql.Encoders.BINARY
   }
 
-  /** Tag column the batched rewrite/probe machinery keys on — the
-    * table-relative path or basename when collision-free
-    * ([[chooseTagging]]), else a synthesized md5(file_path)
-    * ([[synthesizedTagging]]): every layout runs the batched one-job
-    * plans.
+  /** Per-file columns of a tagged [[scanFiles]]: the file's ordinal in
+    * the scan's file list (a constant the [[LogFileIndex]] supplies
+    * beside the partition values) and the row's position in its file
+    * (`_metadata.row_index`). Deletion vectors, the batched probe and
+    * rewrite, and DV deletes all key on (ordinal, position); an ordinal
+    * maps back to the caller's file by index.
     */
   private val SrcTagCol = "__graft_src"
+  private val PosCol = "__graft_pos"
 
-  /** File-tagging strategy for the batched multi-file machinery: how
-    * the executor labels each row's source file (`tagExpr` over the
-    * scan's `_metadata`) and how the driver predicts that label for a
-    * known rel (`tagOf`).
+  /** A Delta `partitionValues` string as the typed value its rows
+    * carry: a cast of the string in the session time zone (`null` is
+    * the null partition). The one typing rule for the batch scan's
+    * index and the streaming source.
     */
-  private case class FileTagging(
-      tagExpr: org.apache.spark.sql.Column,
-      tagOf: String => String)
+  private[graft] def typedPartitionValue(raw: String, dt: DataType,
+                                         tz: String): Any =
+    Cast(Literal(raw), dt, Some(tz)).eval()
 
-  /** Choose a COLLISION-FREE tagging for `rels`: the table-relative
-    * path (last depth+1 segments of `_metadata.file_path`) when depths
-    * are uniform and characters URI-round-trip-safe — partitioned
-    * layouts REPEAT part basenames across partition directories (one
-    * write, one part numbering), so basenames alone cannot tag them —
-    * else the basename when unique, else None (callers synthesize a
-    * tag via [[synthesizedTagging]]).
+  /** Spark `FileIndex` over a replayed snapshot's file list: the log IS
+    * the listing, so no directory discovery or listing job runs. Each
+    * file is its own `PartitionDirectory` whose row holds the table's
+    * typed partition values and the file's ordinal ([[SrcTagCol]]);
+    * `listFiles` evaluates the partition filters on those rows, so
+    * partition pruning happens at planning (visible in the executed
+    * scan's `numFiles`, not in `inputFiles`). Equal file lists make
+    * equal indexes, so two reads of one snapshot share cache entries
+    * and exchanges.
     */
-  /** GUARANTEED-unique tagging for layouts where no structural
-    * collision-free tag exists (imported/CONVERTed tables with
-    * duplicate basenames across MIXED depths, URI-unsafe characters,
-    * clone-absolute refs): ONE metadata-only probe job enumerates each
-    * file's actual `_metadata.file_path` rendering, and the tag is
-    * md5(file_path) — computed executor-side by the codegen'd `md5`
-    * expression and driver-side from the collected rendering per rel.
-    * Hex tags are partition-directory-safe by construction, so hostile
-    * layouts STAY on the one-probe + one-rewrite batched path instead
-    * of degrading to per-file jobs. Driver state is one string per
-    * candidate file — the manifests' class.
-    */
-  private def synthesizedTagging(spark: SparkSession, root: String,
-      rels: Seq[String]): FileTagging = {
-    import org.apache.spark.sql.functions.md5
-    val paths = rels.map(r => resolvePath(root, r).toString)
-    val rendered = spark.read.schema(StructType(Nil))
-      .parquet(paths: _*)
-      .select(col("_metadata.file_path"))
-      .distinct().collect().map(_.getString(0)).toSeq
-    // map each rendering back to its rel through the SAME class that
-    // produced it (Hadoop Path round-trips its own toString; a raw
-    // java.net.URI parse would choke on spaces)
-    val byAbs: Map[String, String] = rels.map { r =>
-      resolvePath(root, r).toAbsolutePath.normalize().toString -> r
-    }.toMap
-    val relToRendered: Map[String, String] = rendered.map { s =>
-      val abs = Paths.get(new org.apache.hadoop.fs.Path(s).toUri.getPath)
-        .toAbsolutePath.normalize().toString
-      byAbs.getOrElse(abs, throw new IllegalStateException(
-        s"DeltaLog: file_path rendering $s matches no candidate file")) -> s
-    }.toMap
-    // a ZERO-ROW parquet file yields no probe row: no scanned row will
-    // ever carry its tag (it holds no matching rows by construction), so
-    // any deterministic rendering works — use the same Hadoop Path class
-    // the probe renders through, instead of aborting the whole DML
-    val full: Map[String, String] = rels.distinct.map { r =>
-      r -> relToRendered.getOrElse(r,
-        new org.apache.hadoop.fs.Path(
-          resolvePath(root, r).toString).toString)
-    }.toMap
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString
-    FileTagging(md5(col("_metadata.file_path")),
-      rel => md5hex(full(rel)))
+  private case class LogFileIndex(partitionSchema: StructType,
+      entries: Seq[(org.apache.hadoop.fs.FileStatus, InternalRow)])
+    extends FileIndex {
+    override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
+      entries.map(_._1.getPath)
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val names = partitionSchema.fieldNames
+      val usable = partitionFilters.filter(
+        _.references.forall(a => names.contains(a.name)))
+      val keep: InternalRow => Boolean =
+        if (usable.isEmpty) _ => true
+        else Predicate.createInterpreted(usable.reduce(And).transform {
+          case a: AttributeReference =>
+            val i = names.indexOf(a.name)
+            BoundReference(i, partitionSchema(i).dataType, nullable = true)
+        }).eval
+      entries.collect { case (status, row) if keep(row) =>
+        PartitionDirectory(row, Array(status)) }
+    }
+    override def inputFiles: Array[String] =
+      entries.map(_._1.getPath.toUri.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = entries.map(_._1.getLen).sum
   }
 
-  private def chooseTagging(root: String,
-      rels: Seq[String]): Option[FileTagging] = {
-    import org.apache.spark.sql.functions.{array_join, slice, split}
-    val safe = rels.forall(r => !r.startsWith("/") &&
-      r.forall(c => c.isLetterOrDigit || "._-=/".indexOf(c.toInt) >= 0))
-    val depths = rels.map(_.count(_ == '/')).distinct
-    if (safe && depths.size == 1) {
-      val n = depths.head + 1
-      Some(FileTagging(
-        array_join(slice(split(col("_metadata.file_path"), "/"),
-          -n, n), "/"),
-        identity))
-    } else {
-      val byName = rels.map(rel =>
-        resolvePath(root, rel).getFileName.toString)
-      if (byName.distinct.size == byName.size)
-        Some(FileTagging(col("_metadata.file_name"),
-          rel => resolvePath(root, rel).getFileName.toString))
-      else None
+  /** The one table-data scan: `files` of state `st` read through a
+    * [[LogFileIndex]] by Spark's parquet source, returning the logical
+    * columns `cols` in order. Data columns resolve by physical name or
+    * field id ([[readSchemaFor]]); columns the table does not declare
+    * (a cdc file's `_change_type`) read as named; partition columns come
+    * from the index. Rows a file's deletion vector deletes are
+    * anti-joined away on ([[SrcTagCol]], [[PosCol]]). `tagged` keeps
+    * those two columns. File lengths come from a stat of each file —
+    * external adds may record any `size`, and splits must see the real
+    * one.
+    */
+  private def scanFiles(spark: SparkSession, root: String, st: LogState,
+      files: Seq[(String, Map[String, String])], cols: StructType,
+      tagged: Boolean = false): DataFrame = {
+    // every caller has already refused a log without metaData
+    val schema = st.schema.getOrElse(cols)
+    val pcs = st.partitionColumns
+    val partitionSchema = StructType(pcs.map(c =>
+      StructField(c, schema(c).dataType, nullable = true)) :+
+      StructField(SrcTagCol, IntegerType, nullable = false))
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val conf = spark.sparkContext.hadoopConfiguration
+    val entries = files.zipWithIndex.map { case ((rel, pv), i) =>
+      val path = new org.apache.hadoop.fs.Path(resolvePath(root, rel).toUri)
+      val values = pcs.map { c =>
+        val key = pvKeyOf(st, schema, c, pv).getOrElse(
+          throw new IllegalArgumentException(
+            s"DeltaLog: add $rel lacks partitionValues for declared " +
+              s"partition column $c"))
+        typedPartitionValue(pv(key), schema(c).dataType, tz)
+      }
+      path.getFileSystem(conf).getFileStatus(path) ->
+        InternalRow.fromSeq(values :+ i)
+    }
+    val (fileCols, extra) = cols.filterNot(f => pcs.contains(f.name))
+      .partition(f => schema.fieldNames.contains(f.name))
+    val (scanSchema, physMap) = readSchemaFor(st, StructType(fileCols))
+    val relation = HadoopFsRelation(LogFileIndex(partitionSchema, entries),
+      partitionSchema,
+      nullableDataType(StructType(scanSchema ++ extra)).asInstanceOf[StructType],
+      None, new ParquetFileFormat, Map.empty)(spark)
+    val out = cols.fields.toSeq.map(f =>
+      if (pcs.contains(f.name)) col(f.name)
+      else toLogicalField(f, physMap.getOrElse(f.name, f.name)))
+    val dvs = files.zipWithIndex.flatMap { case ((rel, _), i) =>
+      st.fileDvs.get(rel).map(i -> _) }
+    val df = spark.baseRelationToDataFrame(relation)
+    if (dvs.isEmpty && !tagged) df.select(out: _*)
+    else {
+      // _metadata is unreachable after any projection: row_index rides
+      // the scan's own select
+      val scanned = df.select(out :+ col(SrcTagCol) :+
+        col("_metadata.row_index").as(PosCol): _*)
+      val live =
+        if (dvs.isEmpty) scanned
+        else scanned.join(dvPositions(spark, root, dvs),
+          Seq(SrcTagCol, PosCol), "left_anti")
+      if (tagged) live else live.drop(SrcTagCol, PosCol)
     }
   }
 
-  /** (basename, position) rows of the given files' deletion vectors —
-    * positions exploded EXECUTOR-side from the shipped bitmap bytes
-    * (the [[dvFilteredFiles]] idiom), broadcast when the total
-    * cardinality is join-build sized. The anti-join key for every
-    * "live rows only" multi-file scan below.
+  /** ([[SrcTagCol]], [[PosCol]]) rows of the given files' deletion
+    * vectors — positions exploded EXECUTOR-side from the shipped bitmap
+    * bytes, broadcast when the build is join-sized. The anti-join key
+    * of every live-rows scan.
     */
-  private def dvPositionsByName(spark: SparkSession, root: String,
-      dvs: Map[String, DvDescriptor],
-      tagOf: String => String = null): DataFrame = {
+  private def dvPositions(spark: SparkSession, root: String,
+      dvs: Seq[(Int, DvDescriptor)]): DataFrame = {
     import spark.implicits._
-    val tag: String => String =
-      if (tagOf != null) tagOf
-      else rel => resolvePath(root, rel).getFileName.toString
-    val rows: Seq[(String, Array[Byte])] = dvs.toSeq.map { case (rel, d) =>
-      tag(rel) -> d.readBytes(root) }
-    val df = spark.createDataset(rows)
-      .flatMap { case (n, b) => Dv.deserialize(b).positions.map(p => (n, p)) }
-      .toDF(SrcTagCol, "__graft_pos")
-    // broadcast bound is on BUILD BYTES, not row count: relative-path
-    // tags run tens of bytes each, so 4M rows could be a several-hundred
-    // -MB hash build — estimate per-row cost (tag chars + boxed long +
-    // map-entry overhead) and stay under a safe build size
-    val estBytes = dvs.toSeq.map { case (rel, d) =>
-      d.cardinality * (tag(rel).length + 64L) }.sum
+    val df = spark.createDataset(dvs.map { case (i, d) => i -> d.readBytes(root) })
+      .flatMap { case (i, b) => Dv.deserialize(b).positions.map(p => (i, p)) }
+      .toDF(SrcTagCol, PosCol)
+    // broadcast bound is on BUILD BYTES, not row count: estimate the
+    // per-row cost (int tag + boxed long + map-entry overhead) and stay
+    // under a safe build size
+    val estBytes = dvs.map(_._2.cardinality * 68L).sum
     if (estBytes <= (64L << 20))
       org.apache.spark.sql.functions.broadcast(df)
     else df
   }
 
-  /** Read `files` in LOGICAL space EXCLUDING each file's DV-deleted
-    * positions — the live-row multi-file scan the CDC builders use
-    * (mapping-aware: scans resolve physical names / field ids and hand
-    * back logical columns). Always ONE scan: hostile layouts tag via
-    * [[synthesizedTagging]].
-    */
-  private def readFilesMinusDv(spark: SparkSession, root: String,
-      st: LogState, dataSchema: StructType,
-      files: Seq[String]): DataFrame = {
-    val (scanSchema, physMap) = readSchemaFor(st, dataSchema)
-    def toLogical = dataSchema.fields.map(f =>
-      toLogicalField(f, physMap.getOrElse(f.name, f.name)))
-    val dvs = files.flatMap(rel => st.fileDvs.get(rel).map(rel -> _)).toMap
-    val paths = files.map(f => resolvePath(root, f).toString)
-    if (dvs.isEmpty)
-      spark.read.schema(scanSchema).parquet(paths: _*)
-        .select(toLogical.toIndexedSeq: _*)
-    else {
-      val tagging = chooseTagging(root, files)
-        .getOrElse(synthesizedTagging(spark, root, files))
-      spark.read.schema(scanSchema).parquet(paths: _*)
-        .select(toLogical :+
-          tagging.tagExpr.as(SrcTagCol) :+
-          col("_metadata.row_index").as("__graft_pos"): _*)
-        .join(dvPositionsByName(spark, root, dvs, tagging.tagOf),
-          Seq(SrcTagCol, "__graft_pos"), "left_anti")
-        .drop(SrcTagCol, "__graft_pos")
-    }
-  }
-
   /** Exact TOUCHED subset of `candidates`: ONE column-pruned,
-    * predicate-pushable scan over all candidate files at once, tagged
-    * by basename via `_metadata.file_name`. `matcher` narrows the
-    * scanned rows to the matched ones (a filter, or a semi-join against
-    * source keys) and must preserve the [[SrcTagCol]] column. Candidate
-    * order is preserved in the result. This replaces per-file limit-1
-    * probe jobs: at 10 k candidate files the probe is one job, not 10 k.
+    * predicate-pushable tagged scan over the candidates' live rows.
+    * `matcher` narrows the scanned rows to the matched ones (a filter,
+    * or a semi-join against source keys) and must preserve the
+    * [[SrcTagCol]] column. A file whose matching rows are all already
+    * DV-deleted is NOT touched (rewriting it would commit a dataChange
+    * no-op). Candidate order is preserved in the result. At 10 k
+    * candidate files the probe is one job, not 10 k.
     */
   private def probeTouched(spark: SparkSession, root: String,
       candidates: Seq[(String, Map[String, String])],
       probeSchema: StructType, matcher: DataFrame => DataFrame,
-      st: LogState,
-      dvs: Map[String, DvDescriptor] = Map.empty)
-    : Seq[(String, Map[String, String])] = {
+      st: LogState): Seq[(String, Map[String, String])] = {
     import spark.implicits._
     if (candidates.isEmpty) return Nil
-    // column mapping: scan PHYSICAL field names / field ids, hand the
-    // matcher LOGICAL ones (identity when unmapped)
-    val (physSchema, physMap) = readSchemaFor(st, probeSchema)
-    def logicalCols = probeSchema.fields.map(f =>
-      toLogicalField(f, physMap.getOrElse(f.name, f.name)))
-    // hostile layouts (duplicate basenames at mixed depths, unsafe
-    // chars) get a synthesized md5(file_path) tag from one metadata
-    // probe job — the fast path never degrades to per-file plans
-    val tagging = chooseTagging(root, candidates.map(_._1))
-      .getOrElse(synthesizedTagging(spark, root, candidates.map(_._1)))
-    val tagToRel = candidates.map(c => tagging.tagOf(c._1) -> c._1).toMap
-    // DV-carrying candidates probe over their LIVE rows only — a
-    // file whose matching rows are all already DV-deleted is NOT
-    // touched (rewriting it would commit a dataChange no-op).
-    // row_index must ride the SCAN's own select (_metadata is
-    // unreachable after any projection).
-    val scan0 = spark.read.schema(physSchema)
-      .parquet(candidates.map(c => resolvePath(root, c._1).toString): _*)
-    val live =
-      if (dvs.isEmpty)
-        scan0.select(logicalCols :+ tagging.tagExpr.as(SrcTagCol): _*)
-      else
-        scan0.select(logicalCols :+ tagging.tagExpr.as(SrcTagCol) :+
-          col("_metadata.row_index").as("__graft_pos"): _*)
-          .join(dvPositionsByName(spark, root, dvs, tagging.tagOf),
-            Seq(SrcTagCol, "__graft_pos"), "left_anti")
-          .drop("__graft_pos")
-    val hit: Set[String] = matcher(live)
+    val hit: Set[Int] = matcher(
+        scanFiles(spark, root, st, candidates, probeSchema, tagged = true))
       .select(col(SrcTagCol)).distinct()
-      .as[String].collect().toSet.map(tagToRel)
-    candidates.filter { case (rel, _) => hit(rel) }
+      .as[Int].collect().toSet
+    candidates.zipWithIndex.collect { case (c, i) if hit(i) => c }
   }
 
-  /** Rewrite `rels` in ONE Spark job: a single multi-file scan tagged
-    * by source basename, `transform` applied (it sees the data columns
+  /** Rewrite `files` in ONE Spark job: a single tagged scan of their
+    * live rows, `transform` applied (it sees the logical data columns
     * plus [[SrcTagCol]] and must carry the tag through — filters,
     * withColumn folds and join-based row drops all do), then ONE
     * dynamic-partitioned write producing exactly one staged file per
     * touched input (hash repartition on the tag lands every source
-    * file's rows in one task). Returns rel → staged part file; a rel
-    * whose rewrite kept ZERO rows is absent (its partition directory is
-    * never created). This is the scale posture for wide DML: a DELETE
-    * touching 10 k files runs one probe job and one rewrite job, never
-    * 10 k sequential single-task jobs.
+    * file's rows in one task). Files are rewritten under PHYSICAL names
+    * / field ids on mapped tables; a DV-carrying input rewrites its live
+    * rows, so the rewrite CLEARS the DV. Returns rel → staged part file;
+    * a rel whose rewrite kept ZERO rows is absent (its partition
+    * directory is never created). A DELETE touching 10 k files runs one
+    * probe job and one rewrite job, never 10 k sequential jobs.
     */
   private def rewriteFilesBatched(spark: SparkSession, root: String,
-      rels: Seq[String], dataSchema: StructType,
+      files: Seq[(String, Map[String, String])], dataSchema: StructType,
       transform: DataFrame => DataFrame,
       prefix: String,
       st: LogState,
-      dvs: Map[String, DvDescriptor] = Map.empty,
       writeOptions: Map[String, String] = Map.empty): Map[String, Path] = {
-    if (rels.isEmpty) return Map.empty
-    // column mapping: files are scanned AND rewritten under PHYSICAL
-    // names / field ids; the transform runs between two renames in
-    // LOGICAL space. DV-carrying inputs rewrite their LIVE rows only
-    // (positions anti-joined executor-side) — the rewrite CLEARS the DV.
-    val (physSchema, physMap) = readSchemaFor(st, dataSchema)
-    val fieldIds = physFieldIds(st, dataSchema)
-    def toLogical = dataSchema.fields.map(f =>
-      toLogicalField(f, physMap.getOrElse(f.name, f.name)))
-    def toPhysical = dataSchema.fields.map(f =>
-      toPhysicalField(mappingMode(st) == "id", f,
-        physMap.getOrElse(f.name, f.name)))
-    // hostile layouts stay on the ONE-job batched path via the
-    // synthesized md5(file_path) tag (hex — partition-dir-safe)
-    val tagging = chooseTagging(root, rels)
-      .getOrElse(synthesizedTagging(spark, root, rels))
-    val tagToRel = rels.map(rel => tagging.tagOf(rel) -> rel).toMap
+    if (files.isEmpty) return Map.empty
     val staging = Files.createTempDirectory(stagingBase(root), prefix)
-    val scan0 = spark.read.schema(physSchema)
-      .parquet(rels.map(r => resolvePath(root, r).toString): _*)
-    val scanned =
-      if (dvs.isEmpty)
-        scan0.select(toLogical :+ tagging.tagExpr.as(SrcTagCol): _*)
-      else
-        scan0.select(toLogical :+ tagging.tagExpr.as(SrcTagCol) :+
-          col("_metadata.row_index").as("__graft_pos"): _*)
-          .join(dvPositionsByName(spark, root, dvs, tagging.tagOf),
-            Seq(SrcTagCol, "__graft_pos"), "left_anti")
-          .drop("__graft_pos")
-    stampFieldIds(transform(scanned)
-      .select(toPhysical :+ col(SrcTagCol): _*), fieldIds)
-      .repartition(rels.size, col(SrcTagCol))
+    toPhysicalDf(st, dataSchema,
+        transform(scanFiles(spark, root, st, files, dataSchema, tagged = true))
+          .select(dataSchema.fieldNames.toSeq.map(col) :+ col(SrcTagCol): _*))
+      .repartition(files.size, col(SrcTagCol))
       .write.options(writeOptions).partitionBy(SrcTagCol).mode("overwrite")
       .parquet(staging.toString)
     val out = Map.newBuilder[String, Path]
@@ -1954,20 +1871,20 @@ object DeltaLog {
     try dirs.iterator().asScala.filter(Files.isDirectory(_)).foreach { d =>
       val dn = d.getFileName.toString
       if (dn.startsWith(SrcTagCol + "=")) {
-        val name = unescapeHive(dn.drop(SrcTagCol.length + 1))
+        val i = dn.drop(SrcTagCol.length + 1).toInt
         val s = Files.list(d)
         val part =
           try s.iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet"))
             .getOrElse(throw new IllegalStateException(
-              s"DeltaLog: no parquet produced for $name in $staging"))
+              s"DeltaLog: no parquet produced for ${files(i)._1} in $staging"))
           finally s.close()
         // one task writes several partition dirs under ONE part name —
         // hoist under a fresh UUID so sibling moves cannot collide
         val hoisted = stagingBase(root).resolve(
           s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
         Files.move(part, hoisted, StandardCopyOption.ATOMIC_MOVE)
-        out += tagToRel(name) -> hoisted
+        out += files(i)._1 -> hoisted
       }
     } finally dirs.close()
     deleteRecursively(staging)
@@ -2857,11 +2774,10 @@ object DeltaLog {
     * from the log's `metaData`, so an empty active set still returns
     * the declared shape (and mixed-footer unions resolve the Delta way:
     * declared schema wins). For a PARTITIONED table, partition-column
-    * values come from each add's `partitionValues` and are attached as
-    * typed literals per partition — a filter on a partition column
-    * constant-folds to false on non-matching partitions and the
-    * optimizer drops their scans entirely (partition pruning; pinned
-    * by DeltaLogSpec via `inputFiles`).
+    * values come from each add's `partitionValues`, typed by
+    * [[typedPartitionValue]] in the scan's file index — a filter on a
+    * partition column prunes whole files at planning (pinned by
+    * DeltaLogSpec via the executed scan's `numFiles`).
     */
   def readAt(spark: SparkSession, root: String, version: Long): DataFrame = {
     val st = replay(spark, root, version)
@@ -2869,80 +2785,14 @@ object DeltaLog {
   }
 
   /** Build the DataFrame for a (possibly pruned) subset of a state's
-    * active files — the shared assembly for [[readAt]] and the
-    * stats-skipping read.
+    * active files — the full-schema entry point to [[scanFiles]] for
+    * [[readAt]], the stats-skipping read and the change feed.
     */
   private def assembleFiles(spark: SparkSession, root: String, st: LogState,
-                            files: Seq[(String, Map[String, String])]): DataFrame = {
-    val schema = st.schema.getOrElse(throw new IllegalStateException(
-      s"DeltaLog: no metaData action in $root log — schema unknown"))
-    val (dvFiles, plainFiles) = files.partition(f => st.fileDvs.contains(f._1))
-    val dvPart =
-      if (dvFiles.isEmpty) Seq.empty
-      else Seq(dvFilteredFiles(spark, root, st, schema, dvFiles))
-    val plainPart =
-      if (plainFiles.isEmpty) Seq.empty
-      else Seq(assemblePlainFiles(spark, root, st, schema, plainFiles))
-    (plainPart ++ dvPart) match {
-      case Seq() =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      case parts => parts.reduce(_ unionByName _)
-    }
-  }
-
-  /** ALL DV-carrying files of an assembly in ONE tagged scan: deleted
-    * positions anti-joined on (file tag, row_index) against one shared
-    * executor-decoded position table (ONE broadcast build, not one per
-    * file — reading a snapshot with 10 k DV'd files used to
-    * materialize 10 k broadcasts), partition values re-attached
-    * through a broadcast (tag → pv) dim of file-count rows. The
-    * `_metadata` columns ride the scan's own select (unreachable after
-    * any projection).
-    */
-  private def dvFilteredFiles(spark: SparkSession, root: String,
-      st: LogState, schema: StructType,
-      files: Seq[(String, Map[String, String])]): DataFrame = {
-    val pcSet = st.partitionColumns.toSet
-    val dataSchema = StructType(schema.filterNot(f => pcSet(f.name)))
-    val (physSchema, physMap) = readSchemaFor(st, dataSchema)
-    val rels = files.map(_._1)
-    val tagging = chooseTagging(root, rels)
-      .getOrElse(synthesizedTagging(spark, root, rels))
-    val dvs = rels.flatMap(rel => st.fileDvs.get(rel).map(rel -> _)).toMap
-    def toLogical = dataSchema.fields.map(f =>
-      toLogicalField(f, physMap(f.name)))
-    val live = spark.read.schema(physSchema)
-      .parquet(rels.map(r => resolvePath(root, r).toString): _*)
-      .select(toLogical :+ tagging.tagExpr.as(SrcTagCol) :+
-        col("_metadata.row_index").as("__graft_pos"): _*)
-      .join(dvPositionsByName(spark, root, dvs, tagging.tagOf),
-        Seq(SrcTagCol, "__graft_pos"), "left_anti")
-      .drop("__graft_pos")
-    if (pcSet.isEmpty) live.drop(SrcTagCol)
-    else {
-      val pvSchema = StructType(
-        StructField(SrcTagCol, StringType, nullable = false) +:
-          st.partitionColumns.map(c =>
-            StructField(s"__graft_pv_$c", StringType, nullable = true)))
-      val pvRows: Seq[Row] = files.map { case (rel, pv) =>
-        Row.fromSeq(tagging.tagOf(rel) +: st.partitionColumns.map { c =>
-          val key = pvKeyOf(st, schema, c, pv).getOrElse(
-            throw new IllegalArgumentException(
-              s"DeltaLog: add $rel lacks partitionValues for declared " +
-                s"partition column $c"))
-          pv(key)
-        })
-      }
-      val pvDf = org.apache.spark.sql.functions.broadcast(
-        spark.createDataFrame(pvRows.asJava, pvSchema))
-      live.join(pvDf, Seq(SrcTagCol))
-        .select(schema.fields.map { f =>
-          if (pcSet(f.name))
-            col(s"__graft_pv_${f.name}").cast(f.dataType).as(f.name)
-          else col(f.name)
-        }.toIndexedSeq: _*)
-    }
-  }
+                            files: Seq[(String, Map[String, String])]): DataFrame =
+    scanFiles(spark, root, st, files, st.schema.getOrElse(
+      throw new IllegalStateException(
+        s"DeltaLog: no metaData action in $root log — schema unknown")))
 
   /** partitionValues key for logical partition column `c` — PHYSICAL
     * under name-mode column mapping (that is what mapped writers record;
@@ -2956,80 +2806,6 @@ object DeltaLog {
           .getOrElse(c, c), c)
       else Seq(c)
     candidates.find(pv.contains)
-  }
-
-  private def assemblePlainFiles(spark: SparkSession, root: String,
-                                 st: LogState, schema: StructType,
-                                 files: Seq[(String, Map[String, String])]): DataFrame = {
-    if (st.partitionColumns.isEmpty)
-      readDataFiles(spark, st, schema,
-        files.map(f => resolvePath(root, f._1).toString))
-    else {
-      val pcSet = st.partitionColumns.toSet
-      val missing = pcSet.filterNot(schema.fieldNames.contains)
-      require(missing.isEmpty,
-        s"DeltaLog: partitionColumns $missing not in declared schema")
-      val dataSchema = StructType(schema.filterNot(f => pcSet(f.name)))
-      // an add whose partitionValues OMITS a declared partition column
-      // is malformed (unknown mapping, broken writers): treating absent
-      // as null would surface wrong rows — fail loudly instead
-      def recordedPv(f: (String, Map[String, String])): Seq[Option[String]] =
-        st.partitionColumns.map { c =>
-          val key = pvKeyOf(st, schema, c, f._2).getOrElse(
-            throw new IllegalArgumentException(
-              s"DeltaLog: add ${f._1} lacks partitionValues for declared " +
-                s"partition column $c"))
-          Option(f._2(key))
-        }
-      val physMap = physicalWriteMap(st, schema)
-      val physPcs = st.partitionColumns.map(c => physMap.getOrElse(c, c))
-      // FAST PATH — hive-consistent layout (every rel sits under
-      // root-relative `pc=value/...` dirs whose parsed values EQUAL the
-      // recorded partitionValues, the shape this writer and Spark
-      // produce): ONE basePath-discovery relation attaches partition
-      // columns natively. The per-partition plan union below is kept
-      // only for external adds whose paths don't encode their values —
-      // at 10 k partitions a 10 k-branch union is itself a driver
-      // scale problem.
-      val hiveConsistent = files.forall { f =>
-        !f._1.startsWith("/") &&
-          (try {
-            partitionValuesOf(f._1, physPcs).toSeq.sortBy(_._1) ==
-              physPcs.zip(recordedPv(f)).map { case (c, v) =>
-                c -> v.orNull }.sortBy(_._1)
-          } catch { case _: IllegalArgumentException => false })
-      }
-      if (hiveConsistent) {
-        val (dataScan, dataPhysMap) = readSchemaFor(st, dataSchema)
-        val physFull = StructType(dataScan.fields ++
-          schema.fields.filter(f => pcSet(f.name)).map(f =>
-            f.copy(name = physMap.getOrElse(f.name, f.name))))
-        spark.read.option("basePath", root).schema(physFull)
-          .parquet(files.map(f => resolvePath(root, f._1).toString): _*)
-          .select(schema.fields.map { f =>
-            if (pcSet(f.name))
-              col(physMap.getOrElse(f.name, f.name)).as(f.name)
-            else toLogicalField(f, dataPhysMap.getOrElse(f.name, f.name))
-          }.toIndexedSeq: _*)
-      } else {
-        val byPartition = files.groupBy(recordedPv)
-        val parts = byPartition.toSeq.sortBy(_._1.mkString(" "))
-          .map { case (pvals, group) =>
-            val pvByCol = st.partitionColumns.zip(pvals).toMap
-            val withPv = readDataFiles(spark, st, dataSchema,
-              group.map(f => resolvePath(root, f._1).toString))
-            schema.fields.foldLeft(withPv) { (df, f) =>
-              if (!pcSet(f.name)) df
-              else df.withColumn(f.name,
-                pvByCol(f.name) match {
-                  case Some(s) => lit(s).cast(f.dataType)
-                  case None => lit(null).cast(f.dataType)
-                })
-            }.select(schema.fieldNames.map(col).toSeq: _*)
-          }
-        parts.reduce(_ unionByName _)
-      }
-    }
   }
 
   /** Metadata-only COUNT(*) over the CURRENT snapshot from the log
@@ -3265,9 +3041,8 @@ object DeltaLog {
         col(c) >= java.sql.Date.valueOf(lo) &&
           col(c) <= java.sql.Date.valueOf(hi)
       case PartitionEquals(c, v) => v match {
-        // partition columns attach as typed literals per partition, so
-        // this residual constant-folds and the optimizer drops
-        // non-matching scans — belt on exact suspenders
+        // a partition filter the scan's file index evaluates at
+        // planning — belt on exact suspenders
         case Some(x) => col(c).cast(StringType) === x
         case None => col(c).isNull
       }
@@ -3524,13 +3299,8 @@ object DeltaLog {
       // of which matches would poison any later readAppendsSince over
       // the tail for a change that changed nothing. ONE probe job over
       // the predicate column finds the exact touched set.
-      val candDvs = overlapping
-        .flatMap(f => st.fileDvs.get(f._1).map(f._1 -> _)).toMap
       val exactTouched = probeTouched(spark, root, overlapping,
-        StructType(Seq(dataSchema(column))), _.filter(matches), st,
-        candDvs)
-      val touchedDvs = candDvs.filter(d =>
-        exactTouched.exists(_._1 == d._1))
+        StructType(Seq(dataSchema(column))), _.filter(matches), st)
       // Change data feed: a partial-file DELETE cannot be synthesized
       // from its remove+add pair (survivor rows would read as
       // delete+reinsert), so when CDF is on the matched rows land in a
@@ -3549,9 +3319,8 @@ object DeltaLog {
             .map { case (pv, group) =>
               // live rows only: a row the file's prior DV already
               // deleted must not re-emit as a delete
-              val deleted = readFilesMinusDv(spark, root, st, dataSchema,
-                group.map(_._1))
-                .filter(col(column) >= lo && col(column) <= hi)
+              val deleted = scanFiles(spark, root, st, group, dataSchema)
+                .filter(matches)
                 .withColumn(ChangeTypeCol, lit("delete"))
               writeCdcFile(deleted, root, pv, st)
             }
@@ -3559,9 +3328,9 @@ object DeltaLog {
       // ONE rewrite job over every touched file (a file that keeps zero
       // rows simply never appears — pure remove). A DV-carrying file
       // rewrites its LIVE survivors and the new add drops the DV.
-      val rewritten = rewriteFilesBatched(spark, root, exactTouched.map(_._1),
+      val rewritten = rewriteFilesBatched(spark, root, exactTouched,
         dataSchema, _.filter(!matches || col(column).isNull),
-        "graft-delta-del", st, touchedDvs)
+        "graft-delta-del", st)
       exactTouched.foreach { case (rel, pv) =>
         actions += removeActionNode(rel, true); touched += 1
         rewritten.get(rel).foreach { part =>
@@ -3606,7 +3375,6 @@ object DeltaLog {
     */
   def deleteWhereLongDV(spark: SparkSession, root: String, column: String,
                         lo: Long, hi: Long): Long = {
-    import spark.implicits._
     require(lo <= hi, s"DeltaLog.deleteWhereLongDV: empty interval [$lo, $hi]")
     val v = currentVersion(root)
     val st = replay(spark, root, v)
@@ -3630,104 +3398,52 @@ object DeltaLog {
     val overlapping = st.files
       .filter { case (p, _) => statsOverlap(st, p, column, lo, hi) }
     val actions = Seq.newBuilder[JsonNode]
-    var touched = 0
     val dvUuid = java.util.UUID.randomUUID()
     val dvFile = Paths.get(root, Dv.dvFileName(dvUuid))
     val pathOrInline = Dv.z85Encode(Dv.uuidBytes(dvUuid))
     val matches = col(column) >= lo && col(column) <= hi
-    // name-mode mapping: the scan reads PHYSICAL fields and the
-    // predicate rebinds to the physical column name
-    val (physSchema, physMap) = readSchemaFor(st, dataSchema)
-    val physCol = physMap.getOrElse(column, column)
-    val matchesPhys = col(physCol) >= lo && col(physCol) <= hi
-    // Matched positions per file are built EXECUTOR-side into the
-    // serialized portable bitmap by ONE aggregation job: the driver
-    // receives bitmap BYTES per file, never row positions — driver
-    // memory ∝ bitmap size, not deleted-row count. Basename tagging as
-    // in the batched rewrites, with a per-file fallback on collision.
-    val matchedBytes: Map[String, Array[Byte]] = {
+    // Matched LIVE positions per file are built EXECUTOR-side into the
+    // serialized portable bitmap by ONE aggregation job over one tagged
+    // scan: the driver receives bitmap BYTES per file, never row
+    // positions — driver memory ∝ bitmap size, not deleted-row count.
+    val matchedBytes: Map[String, Array[Byte]] =
       if (overlapping.isEmpty) Map.empty
       else {
         val bitmapAgg = org.apache.spark.sql.functions.udaf(
           BitmapAgg, org.apache.spark.sql.Encoders.scalaLong)
-        chooseTagging(root, overlapping.map(_._1)) match {
-          case Some(tagging) =>
-            val tagToRel = overlapping.map(c =>
-              tagging.tagOf(c._1) -> c._1).toMap
-            spark.read.schema(physSchema)
-              .parquet(overlapping.map(c =>
-                resolvePath(root, c._1).toString): _*)
-              .filter(matchesPhys)
-              .select(tagging.tagExpr.as("__name"),
-                col("_metadata.row_index").as("__pos"))
-              .groupBy(col("__name")).agg(bitmapAgg(col("__pos")).as("__dv"))
-              .collect()
-              .map(r => tagToRel(r.getString(0)) -> r.getAs[Array[Byte]](1))
-              .toMap
-          case None => overlapping.flatMap { case (rel, _) =>
-            spark.read.schema(physSchema)
-              .parquet(resolvePath(root, rel).toString)
-              .filter(matchesPhys)
-              .select(col("_metadata.row_index").as("__pos"))
-              .agg(bitmapAgg(col("__pos")).as("__dv"))
-              .collect().headOption.filterNot(_.isNullAt(0))
-              .map(r => rel -> r.getAs[Array[Byte]](0))
-          }.toMap
-        }
+        scanFiles(spark, root, st, overlapping,
+            StructType(Seq(dataSchema(column))), tagged = true)
+          .filter(matches)
+          .groupBy(col(SrcTagCol)).agg(bitmapAgg(col(PosCol)).as("__dv"))
+          .collect()
+          .map(r => overlapping(r.getInt(0))._1 -> r.getAs[Array[Byte]](1))
+          .toMap
       }
+    // every matched position is live, so each matched file gains
+    // fresh deletes
+    if (matchedBytes.isEmpty) return v
+    val touched = overlapping.filter(f => matchedBytes.contains(f._1))
+    touched.foreach { case (rel, pv) =>
+      val matchedPs = Dv.deserialize(matchedBytes(rel))
+      val union = st.fileDvs.get(rel).map(_.read(root))
+        .map(e => Dv.union(e, matchedPs)).getOrElse(matchedPs)
+      val (offset, size) = Dv.appendBlob(dvFile, Dv.serialize(union))
+      val desc = DvDescriptor("u", pathOrInline, Some(offset), size,
+        union.cardinality)
+      actions += removeActionNode(rel, dataChange = true)
+      actions += addActionNode(root, rel, pv, dataChange = true, conf,
+        dv = Some(desc))
     }
-    val cdcDel =
-      Seq.newBuilder[(Map[String, String], String, Option[Dv.PositionSet])]
-    overlapping.foreach { case (rel, pv) =>
-      matchedBytes.get(rel).foreach { bytes =>
-        val matchedPs = Dv.deserialize(bytes)
-        val existing = st.fileDvs.get(rel).map(_.read(root))
-        val union = existing
-          .map(e => Dv.union(e, matchedPs)).getOrElse(matchedPs)
-        // fresh rows exist iff the union grew past the existing DV
-        if (union.cardinality >
-            existing.map(_.cardinality).getOrElse(0L)) {
-          cdcDel += ((pv, rel, existing))
-          val (offset, size) = Dv.appendBlob(dvFile, Dv.serialize(union))
-          val desc = DvDescriptor("u", pathOrInline, Some(offset), size,
-            union.cardinality)
-          actions += removeActionNode(rel, dataChange = true)
-          actions += addActionNode(root, rel, pv, dataChange = true, conf,
-            dv = Some(desc))
-          touched += 1
-        }
-      }
-    }
-    if (touched == 0) return v
     // CDF: a DV delete is invisible to add/remove synthesis (the data
     // file is re-added byte-identical), so the freshly deleted rows
-    // MUST land in a CDC file — the predicate re-finds them; rows the
-    // file's PRIOR DV had already deleted are excluded by position
-    // (broadcast bounded by the prior DV's cardinality, usually zero).
+    // MUST land in a CDC file — the predicate re-finds them over the
+    // files' live rows (rows a PRIOR DV deleted stay out), one scan
+    // per touched partition.
     if (cdfEnabled(st)) {
-      cdcDel.result().groupBy(_._1).toSeq.sortBy(_._1.mkString(" "))
+      touched.groupBy(_._2).toSeq.sortBy(_._1.mkString(" "))
         .foreach { case (pv, group) =>
-          val deleted = group.map { case (_, rel, existing) =>
-            // mapped-aware scan: physical names in, logical out
-            val base = spark.read.schema(physSchema)
-              .parquet(resolvePath(root, rel).toString)
-            existing match {
-              case None =>
-                base.filter(matchesPhys)
-                  .select(dataSchema.fields.map(f =>
-                    toLogicalField(f, physMap.getOrElse(f.name, f.name)))
-                    .toIndexedSeq: _*)
-              case Some(e) =>
-                val posDf = org.apache.spark.sql.functions.broadcast(
-                  e.positions.toSeq.toDF("__graft_pos"))
-                base.filter(matchesPhys)
-                  .select(Seq(col("_metadata.row_index").as("__graft_pos")) ++
-                    dataSchema.fields.map(f =>
-                      toLogicalField(f, physMap.getOrElse(f.name, f.name))): _*)
-                  .join(posDf, Seq("__graft_pos"), "left_anti")
-                  .drop("__graft_pos")
-            }
-          }.reduce(_ unionByName _)
+          val deleted = scanFiles(spark, root, st, group, dataSchema)
+            .filter(matches)
             .withColumn(ChangeTypeCol, lit("delete"))
           actions += writeCdcFile(deleted, root, pv, st)
         }
@@ -3804,13 +3520,9 @@ object DeltaLog {
     // poison later readAppendsSince tails for a change that changed
     // nothing. ONE probe job over the predicate column, not a limit-1
     // probe per candidate file.
-    val candDvs = overlapping
-      .flatMap(f => st.fileDvs.get(f._1).map(f._1 -> _)).toMap
     val exactTouched = probeTouched(spark, root, overlapping,
-      StructType(Seq(dataSchema(column))), _.filter(matches), st,
-      candDvs)
+      StructType(Seq(dataSchema(column))), _.filter(matches), st)
     if (exactTouched.isEmpty) return v
-    val touchedDvs = candDvs.filter(d => exactTouched.exists(_._1 == d._1))
     val actions = Seq.newBuilder[JsonNode]
     // CDF: matched rows before and after the SET — the only record of
     // WHICH rows changed (the remove+add pair is file-grain); one
@@ -3833,8 +3545,8 @@ object DeltaLog {
         exactTouched.groupBy(_._2).toSeq.sortBy(_._1.mkString(" "))
           .map { case (pv, group) =>
             // live rows only: prior-DV-deleted rows are not updated
-            val matched = readFilesMinusDv(spark, root, st, dataSchema,
-              group.map(_._1)).filter(matches)
+            val matched = scanFiles(spark, root, st, group, dataSchema)
+              .filter(matches)
             val staged = dataSchema.fieldNames.foldLeft(matched)(
               (d, c) => d.withColumn(s"__graft_pre_$c", col(c)))
             val folded = assignments.foldLeft(staged) { case (df, (c, e)) =>
@@ -3855,7 +3567,7 @@ object DeltaLog {
     // ONE rewrite job over every touched file; an UPDATE keeps every
     // LIVE row, so each touched rel must come back. A DV-carrying file
     // rewrites its live rows and the new add drops the DV.
-    val rewritten = rewriteFilesBatched(spark, root, exactTouched.map(_._1),
+    val rewritten = rewriteFilesBatched(spark, root, exactTouched,
       dataSchema,
       source => enforceInvariants(
         assignments.foldLeft(source) { case (df, (c, e)) =>
@@ -3863,7 +3575,7 @@ object DeltaLog {
             org.apache.spark.sql.functions.when(matches, e)
               .otherwise(col(c)).cast(dataSchema(c).dataType))
         }, dataSchema, st.configuration),
-      "graft-delta-upd", st, touchedDvs)
+      "graft-delta-upd", st)
     exactTouched.foreach { case (rel, pv) =>
       val part = rewritten.getOrElse(rel, throw new IllegalStateException(
         s"DeltaLog.updateWhereLong: rewrite of $rel produced no rows — " +
@@ -4106,15 +3818,12 @@ object DeltaLog {
           bloomOptions(Seq(physMap.getOrElse(key, key))) +
             ("parquet.bloom.filter.adaptive.enabled" -> "true")
         else Map.empty[String, String]
-      val candDvs = candidates
-        .flatMap(f => st.fileDvs.get(f._1).map(f._1 -> _)).toMap
       // exact touched set by ONE semi-join probe job over the
       // candidates' key columns only
       val touched = probeTouched(spark, root, candidates,
         StructType(Seq(dataSchema(key))),
-        _.join(srcKeys, Seq(key), "left_semi"), st, candDvs)
+        _.join(srcKeys, Seq(key), "left_semi"), st)
         .sortBy(_._1)
-      val touchedDvs = candDvs.filter(d => touched.exists(_._1 == d._1))
       val actions = Seq.newBuilder[JsonNode]
       // an append-only table allows the pure-insert merge (nothing
       // matched); any matched row would rewrite history
@@ -4133,96 +3842,36 @@ object DeltaLog {
         if (!(cdfEnabled(st) && touched.nonEmpty)) None
         else Some(Future {
           // live rows only: keys whose target rows were all DV-deleted
-          // are inserts, not updates
-          val touchedRows = readFilesMinusDv(spark, root, st, dataSchema,
-            touched.map(_._1))
+          // are inserts, not updates. Pre-images carry their FILE's
+          // partition values (the scan's index supplies them);
+          // post-images and inserts the source row's own.
+          val touchedRows = scanFiles(spark, root, st, touched, fullSchema)
           val matchedKeys = touchedRows.select(col(key))
             .join(srcKeys, Seq(key), "left_semi").distinct().persist()
           def inOrder(df: DataFrame) =
-            df.select(dataSchema.fieldNames.map(col).toSeq: _*)
+            df.select(fullSchema.fieldNames.map(col).toSeq: _*)
           try {
-            if (pcs.isEmpty) {
-              val pre = inOrder(touchedRows
-                .join(srcKeys, Seq(key), "left_semi"))
-                .withColumn(ChangeTypeCol, lit("update_preimage"))
-              val post = inOrder(src.join(matchedKeys, Seq(key),
-                "left_semi"))
-                .withColumn(ChangeTypeCol, lit("update_postimage"))
-              val ins = inOrder(src.join(matchedKeys, Seq(key),
-                "left_anti"))
-                .withColumn(ChangeTypeCol, lit("insert"))
-              Seq(writeCdcFile(
-                pre.unionByName(post).unionByName(ins), root, Map.empty,
-                st))
-            } else {
-              // PARTITIONED change capture in ONE dynamic-partitioned
-              // write: pre-images get their FILE's partition values from
-              // Spark's own basePath partition discovery (data files
-              // don't store partition columns; basename tags can COLLIDE
-              // across partition dirs of one write, so no tag joins);
-              // DV'd or clone-absolute files take a per-file branch with
-              // pv literals. Post-images and inserts carry the source
-              // row's own values. Jobs stay O(1), never O(partitions).
-              val (special, plain) = touched.partition { case (rel, _) =>
-                rel.startsWith("/") || st.fileDvs.contains(rel) }
-              // data fields resolve like every other mapped read —
-              // readSchemaFor stamps parquet.field.id in id mode, where a
-              // file's stored names may legally differ from the declared
-              // physicalName (a hand-renamed physFull would read such
-              // files as all-NULL pre-images); partition fields append
-              // PHYSICAL-named for basePath directory discovery
-              val physFull = StructType(readSchemaFor(st, dataSchema)._1.fields
-                ++ fullSchema.fields.filter(f => pcSet(f.name)).map(f =>
-                  f.copy(name = physMap.getOrElse(f.name, f.name))))
-              def logicalAll = fullSchema.fields.map(f =>
-                toLogicalField(f, physMap.getOrElse(f.name, f.name)))
-              val preParts = Seq.newBuilder[DataFrame]
-              if (plain.nonEmpty)
-                preParts += spark.read.option("basePath", root)
-                  .schema(physFull)
-                  .parquet(plain.map(p =>
-                    resolvePath(root, p._1).toString): _*)
-                  .select(logicalAll.toIndexedSeq: _*)
-              special.foreach { case (rel, pv) =>
-                val base = readFilesMinusDv(spark, root, st, dataSchema,
-                  Seq(rel))
-                preParts += fullSchema.fields.filter(f => pcSet(f.name))
-                  .foldLeft(base) { (d, f) =>
-                    val k2 = pvKeyOf(st, fullSchema, f.name, pv).getOrElse(
-                      throw new IllegalArgumentException(
-                        s"DeltaLog.mergeKey: $rel lacks partitionValues " +
-                          s"for declared partition column ${f.name}"))
-                    d.withColumn(f.name, Option(pv(k2)) match {
-                      case Some(s) => lit(s).cast(f.dataType)
-                      case None => lit(null).cast(f.dataType)
-                    })
-                  }
-                  .select(fullSchema.fieldNames.map(col).toSeq: _*)
-              }
-              def inOrderFull(df: DataFrame) =
-                df.select(fullSchema.fieldNames.map(col).toSeq: _*)
-              val pre = inOrderFull(preParts.result()
-                .reduce(_ unionByName _)
-                .join(srcKeys, Seq(key), "left_semi"))
-                .withColumn(ChangeTypeCol, lit("update_preimage"))
-              val post = inOrderFull(src.join(matchedKeys, Seq(key),
-                "left_semi"))
-                .withColumn(ChangeTypeCol, lit("update_postimage"))
-              val ins = inOrderFull(src.join(matchedKeys, Seq(key),
-                "left_anti"))
-                .withColumn(ChangeTypeCol, lit("insert"))
-              writeCdcFilesPartitioned(
-                pre.unionByName(post).unionByName(ins), root, pcs, st)
-            }
+            val pre = inOrder(touchedRows
+              .join(srcKeys, Seq(key), "left_semi"))
+              .withColumn(ChangeTypeCol, lit("update_preimage"))
+            val post = inOrder(src.join(matchedKeys, Seq(key), "left_semi"))
+              .withColumn(ChangeTypeCol, lit("update_postimage"))
+            val ins = inOrder(src.join(matchedKeys, Seq(key), "left_anti"))
+              .withColumn(ChangeTypeCol, lit("insert"))
+            val changes = pre.unionByName(post).unionByName(ins)
+            // partitioned: ONE dynamic-partitioned write, jobs O(1),
+            // never O(partitions)
+            if (pcs.isEmpty) Seq(writeCdcFile(changes, root, Map.empty, st))
+            else writeCdcFilesPartitioned(changes, root, pcs, st)
           } finally matchedKeys.unpersist()
         }(sideJobEc))
       // ONE rewrite job drops the matched rows from every touched file
       // (a file that loses all its rows becomes a pure remove); each
       // rewrite stays in its source file's partition directory. A
       // DV-carrying file rewrites its LIVE rows and the add drops the DV.
-      val rewritten = rewriteFilesBatched(spark, root, touched.map(_._1),
+      val rewritten = rewriteFilesBatched(spark, root, touched,
         dataSchema, _.join(srcKeys, Seq(key), "left_anti"),
-        "graft-delta-merge", st, touchedDvs, keyBloomOpts)
+        "graft-delta-merge", st, keyBloomOpts)
       touched.foreach { case (rel, pv) =>
         actions += removeActionNode(rel, dataChange = true)
         rewritten.get(rel).foreach { part =>
@@ -4300,15 +3949,6 @@ object DeltaLog {
       v + 1
     } finally src.unpersist()
   }
-
-  /** Backwards-compatible name for [[mergeKey]] from when the merge
-    * was limited to flat tables with a LONG key; the generalized
-    * implementation accepts any data-column key type and partitioned
-    * targets, so this simply delegates.
-    */
-  def mergeLongKey(spark: SparkSession, root: String, key: String,
-                   source: DataFrame): Long =
-    mergeKey(spark, root, key, source)
 
   /** Rows APPENDED after `sinceVersion` — the incremental-ETL tail
     * read a downstream job consumes between runs. Semantics mirror the
@@ -4564,8 +4204,6 @@ object DeltaLog {
         "delta.enableChangeDataFeed=true — no change feed was recorded")
     val schema = st.schema.getOrElse(throw new IllegalStateException(
       s"DeltaLog: no metaData action in $root log — schema unknown"))
-    val pcSet = st.partitionColumns.toSet
-    val dataSchema = StructType(schema.filterNot(f => pcSet(f.name)))
     val present = versions(root).toSet
     ((sinceVersion + 1) to to).foreach(v => require(present.contains(v),
       s"DeltaLog.readChangeFeed: commit $v missing from $root — the " +
@@ -4578,21 +4216,6 @@ object DeltaLog {
         .map(e => e.getKey ->
           (if (e.getValue.isNull) null else e.getValue.asText())).toMap
     }
-    def attachPv(df: DataFrame, pv: Map[String, String],
-                 rel: String): DataFrame =
-      schema.fields.foldLeft(df) { (d, f) =>
-        if (!pcSet(f.name)) d
-        else {
-          val key = pvKeyOf(st, schema, f.name, pv).getOrElse(
-            throw new IllegalArgumentException(
-              s"DeltaLog.readChangeFeed: $rel lacks partitionValues " +
-                s"for declared partition column ${f.name}"))
-          d.withColumn(f.name, Option(pv(key)) match {
-            case Some(s) => lit(s).cast(f.dataType)
-            case None => lit(null).cast(f.dataType)
-          })
-        }
-      }
     val outCols = schema.fieldNames.toSeq :+ ChangeTypeCol
     val perVersion = ((sinceVersion + 1) to to).flatMap { v =>
       val lines = Files.readAllLines(logDir(root).resolve(commitName(v)))
@@ -4621,20 +4244,12 @@ object DeltaLog {
       val (cdcList, addList, removeList) =
         (cdcs.result(), adds.result(), removes.result())
       val changes: Option[DataFrame] =
-        if (cdcList.nonEmpty) {
-          // mapped tables: cdc data columns store physical names /
-          // field ids; `_change_type` is a feed artifact, never mapped
-          val (scanData, _) = readSchemaFor(st, dataSchema)
-          val cdcSchema = StructType(scanData.fields :+
-            StructField(ChangeTypeCol, StringType, nullable = true))
-          Some(cdcList.map { case (rel, pv) =>
-            attachPv(spark.read.schema(cdcSchema)
-              .parquet(resolvePath(root, rel).toString)
-              .toDF((dataSchema.fieldNames :+ ChangeTypeCol).toSeq: _*),
-              pv, rel)
-              .select(outCols.map(col): _*)
-          }.reduce(_ unionByName _))
-        } else if (addList.isEmpty && removeList.isEmpty) None
+        if (cdcList.nonEmpty)
+          // one scan over the version's cdc files; `_change_type` is a
+          // feed artifact the table does not declare, read as named
+          Some(scanFiles(spark, root, st, cdcList, StructType(schema.fields :+
+            StructField(ChangeTypeCol, StringType, nullable = true))))
+        else if (addList.isEmpty && removeList.isEmpty) None
         else {
           require(dvAdds == 0,
             s"DeltaLog.readChangeFeed: commit $v of $root attaches a " +
@@ -4928,15 +4543,6 @@ object DeltaLog {
         .exists(_.trim.equalsIgnoreCase("true")))
     0L
   }
-
-  /** `CLONE src TIMESTAMP AS OF ts` — [[shallowClone]] at the version
-    * [[versionAsOf]] resolves (latest commit at or before `tsMillis`,
-    * ICT-aware).
-    */
-  def shallowCloneAsOf(spark: SparkSession, sourceRoot: String,
-                       targetRoot: String, tsMillis: Long): Long =
-    shallowClone(spark, sourceRoot, targetRoot,
-      versionAsOf(sourceRoot, tsMillis))
 
   /** `GENERATE symlink_format_manifest` — the Presto / Athena /
     * legacy-Hive interop surface delta.io documents: one `manifest`

@@ -739,19 +739,14 @@ object Analytics {
     * mad = 0 — then ANY deviation > 0 is flagged (textbook MAD
     * behavior; `k` only matters for spread groups).
     *
-    * CACHE LIFECYCLE (public contract): the default (`eager = false`)
-    * returns a lazy plan over two per-call MEMORY_AND_DISK persists that
-    * this method cannot release (the plan references them until the
-    * caller materializes it) — the session owner clears them via
-    * `spark.catalog.clearCache()` between pipelines. A long-lived
-    * session calling this repeatedly should pass `eager = true`: the
-    * (outlier-sized) result is persisted and materialized HERE, both
-    * intermediates are unpersisted before returning, and the caller owns
-    * exactly one handle — `result.unpersist()` when done.
+    * CACHE LIFECYCLE (public contract): returns a lazy plan over two
+    * per-call MEMORY_AND_DISK persists that this method cannot release
+    * (the plan references them until the caller materializes it) — the
+    * session owner clears them via `spark.catalog.clearCache()` between
+    * pipelines.
     */
   def madOutliers(df: DataFrame, keys: Seq[String], valueCol: String,
-                  idCols: Seq[String], k: Double,
-                  eager: Boolean = false): DataFrame = {
+                  idCols: Seq[String], k: Double): DataFrame = {
     require(keys.nonEmpty && idCols.nonEmpty,
       "madOutliers needs group keys and id columns")
     require(k >= 0, s"madOutliers k must be >= 0, got $k")
@@ -773,18 +768,10 @@ object Analytics {
     val mad = groupPercentilesDisc(
         dev.select(keys.map(col) :+ col("dev_fp"): _*), keys, "dev_fp", Seq(50))
       .select(keys.map(col) :+ col("p50").as("mad_fp"): _*)
-    val out = dev.join(mad, keys)
+    dev.join(mad, keys)
       .filter(col("dev_fp").cast("double") > lit(k) * col("mad_fp").cast("double"))
       .select((keys ++ idCols).map(col) :+ col(valueCol) :+
         col("dev_fp") :+ col("mad_fp"): _*)
-    if (!eager) out
-    else {
-      val pinned = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pinned.count() // materialize so the intermediates can be dropped
-      dev.unpersist(blocking = false)
-      base.unpersist(blocking = false)
-      pinned
-    }
   }
 
   /** Pointwise mutual information of event-type co-occurrence within
@@ -802,14 +789,10 @@ object Analytics {
     * tables and output are |types|-sized. Fixed-point
     * `floor(ln·10⁶)` keeps the scores hash-stable cross-engine.
     *
-    * CACHE LIFECYCLE (public contract): same as [[madOutliers]] — the
-    * default leaves one per-call persist for the session owner's
-    * `clearCache()`; `eager = true` materializes the (|types|²-sized)
-    * result here, releases the intermediate, and hands the caller the
-    * one persisted handle to `unpersist()`.
+    * CACHE LIFECYCLE (public contract): same as [[madOutliers]] — one
+    * per-call persist is left for the session owner's `clearCache()`.
     */
-  def sessionPmi(events: DataFrame, gapUs: Long,
-                 eager: Boolean = false): DataFrame = {
+  def sessionPmi(events: DataFrame, gapUs: Long): DataFrame = {
     val sess = graft.operators.Temporal.sessionize(
       events.filter(col("user_id").isNotNull)
         .select(col("user_id"), col("event_id"), col("event_type"),
@@ -832,7 +815,7 @@ object Analytics {
       .groupBy(col("a.event_type").as("type_a"),
         col("b.event_type").as("type_b"))
       .agg(count(lit(1)).as("n_ab"))
-    val out = pairs
+    pairs
       .join(single.select(col("event_type").as("type_a"), col("n_a")),
         Seq("type_a"))
       .join(single.select(col("event_type").as("type_b"),
@@ -842,13 +825,6 @@ object Analytics {
         floor(log((col("n_ab").cast("double") * lit(nSessions.toDouble)) /
           (col("n_a").cast("double") * col("n_b").cast("double"))) *
           lit(1000000.0)).as("pmi_fp"))
-    if (!eager) out
-    else {
-      val pinned = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pinned.count()
-      st.unpersist(blocking = false)
-      pinned
-    }
   }
 
   /** Market-basket affinity — pair support and LIFT over item baskets
@@ -864,13 +840,12 @@ object Analytics {
     * key and its expansion is bounded by per-basket distinct-item
     * count² (the q121 shape) — never corpus×corpus; marginals are one
     * map-side-combinable count; the support filter prunes BEFORE the
-    * marginal joins. `eager` mirrors [[sessionPmi]]'s cache contract:
-    * the distinct basket table feeds the scalar count and both join
-    * sides, so it persists per call; eager=true materializes the result
-    * and releases it.
+    * marginal joins. Cache contract as [[sessionPmi]]: the distinct
+    * basket table feeds the scalar count and both join sides, so it
+    * persists per call, left for the session owner's `clearCache()`.
     */
   def basketLift(items: DataFrame, basketCol: String, itemCol: String,
-                 minSupport: Long = 2, eager: Boolean = false): DataFrame = {
+                 minSupport: Long = 2): DataFrame = {
     require(minSupport >= 1, s"basketLift: minSupport >= 1, got $minSupport")
     val b = items.select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .distinct()
@@ -883,7 +858,7 @@ object Analytics {
       .groupBy(col("a.__i").as("item_a"), col("x.__i").as("item_b"))
       .agg(count(lit(1)).as("n_ab"))
       .filter(col("n_ab") >= minSupport)
-    val out = pairs
+    pairs
       .join(marg.select(col("__i").as("item_a"), col("__n").as("n_a")),
         Seq("item_a"))
       .join(marg.select(col("__i").as("item_b"), col("__n").as("n_b")),
@@ -894,13 +869,6 @@ object Analytics {
           lit(1000000.0) /
           (col("n_a").cast("double") * col("n_b").cast("double")))
           .cast("long").as("lift_fp"))
-    if (!eager) out
-    else {
-      val pinned = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pinned.count()
-      b.unpersist(blocking = false)
-      pinned
-    }
   }
 
   /** Categorical distribution drift — add-one-smoothed KL divergence

@@ -6,8 +6,8 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
-  Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+  UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -348,13 +348,13 @@ private[streaming] class DeltaMicroBatchStream(root: String,
       while (i < until) {
         val (rel, pv, extras, _) = fs(i)
         val consts = constantCols(extras)
-        // Delta partition-value strings → typed values by the rule the
-        // batch read applies (a cast of the string), keyed physical on
-        // mapped tables with the logical name as a fallback
+        // Delta partition-value strings → typed values by the batch
+        // scan's rule, keyed physical on mapped tables with the logical
+        // name as a fallback
         val values = consts.map { c =>
           val raw = extras.getOrElse(c,
             pv.getOrElse(physicalName(c), pv.get(c).orNull))
-          Cast(Literal(raw), schema(c).dataType, Some(tz)).eval()
+          DeltaLog.typedPartitionValue(raw, schema(c).dataType, tz)
         }
         out += DeltaFilePartition(java.nio.file.Paths.get(root, rel).toString,
           consts, InternalRow.fromSeq(values))

@@ -28,9 +28,41 @@ class DeltaDmlScaleSpec extends SparkSpec {
     val jobs = countJobs {
       DeltaLog.deleteWhereLong(spark, root, "k", 1L, 6399L)
     }
-    assert(jobs <= 10, s"wide delete ran $jobs jobs — O(files) regression")
+    // probe (shuffle + collect) + rewrite (shuffle + write)
+    assert(jobs <= 4, s"wide delete ran $jobs jobs — O(files) regression")
     assert(DeltaLog.read(spark, root).select("k").as[Long].collect()
       .toSeq == Seq(6400L))
+  }
+
+  test("a 64-file read, flat or partitioned, runs as many jobs as a " +
+    "1-file read: the log is the listing, no discovery job") {
+    def readJobs(root: String, p: Option[Long] = None): (Int, Long) = {
+      var n = 0L
+      val jobs = countJobs {
+        val df = DeltaLog.read(spark, root)
+        n = p.map(v => df.filter(col("p") === v)).getOrElse(df).count()
+      }
+      (jobs, n)
+    }
+    val one = freshRoot()
+    DeltaLog.commitFlat(spark, one,
+      (1L to 100L).map(k => (k, k % 7)).toDF("k", "x").coalesce(1))
+    val flat = freshRoot() + "-flat"
+    DeltaLog.commitFlat(spark, flat,
+      (1L to 6400L).map(k => (k, k % 7)).toDF("k", "x").repartition(64))
+    val part = freshRoot() + "-part"
+    DeltaLog.commitPartitioned(spark, part,
+      (1L to 6400L).map(k => (k, k % 8)).toDF("k", "p").repartition(8),
+      Seq("p"))
+    assert(DeltaLog.filesAt(spark, flat, 0L).size == 64)
+    assert(DeltaLog.filesAt(spark, part, 0L).size == 64)
+    val (oneJobs, oneRows) = readJobs(one)
+    assert(oneRows == 100L)
+    assert(oneJobs == 2, s"1-file count ran $oneJobs jobs")
+    assert(readJobs(flat) == ((oneJobs, 6400L)))
+    assert(readJobs(part) == ((oneJobs, 6400L)))
+    // a partition filter prunes in the index, still without a listing
+    assert(readJobs(part, Some(2L)) == ((oneJobs, 800L)))
   }
 
   test("an UPDATE touching 64 files runs a bounded job count and " +
@@ -42,7 +74,7 @@ class DeltaDmlScaleSpec extends SparkSpec {
       DeltaLog.updateWhereLong(spark, root, "k", 1L, 6400L,
         Map("x" -> lit(-1L)))
     }
-    assert(jobs <= 10, s"wide update ran $jobs jobs — O(files) regression")
+    assert(jobs <= 4, s"wide update ran $jobs jobs — O(files) regression")
     val got = DeltaLog.read(spark, root)
     assert(got.count() == 6400L)
     assert(got.filter(col("x") =!= -1L).count() == 0L)
@@ -56,7 +88,7 @@ class DeltaDmlScaleSpec extends SparkSpec {
     val saved = DeltaLog.mergeInsertRowsPerFile
     try {
       DeltaLog.mergeInsertRowsPerFile = 1000L
-      DeltaLog.mergeLongKey(spark, root, "k",
+      DeltaLog.mergeKey(spark, root, "k",
         (50L to 4049L).map(k => (k, -k)).toDF("k", "x"))
     } finally DeltaLog.mergeInsertRowsPerFile = saved
     // 4 000 source rows at 1 000/file = 4 insert files + the rewritten
@@ -209,10 +241,10 @@ class DeltaDmlScaleSpec extends SparkSpec {
   }
 
   test("HOSTILE layout (duplicate basenames at MIXED depths, converted " +
-    "table) stays on the batched one-job DML path via the synthesized " +
-    "md5(file_path) tag") {
-    // a CONVERTed layout no structural tag covers: same basename
-    // part-0.parquet at depth 0, 1 and 2
+    "table) runs the batched DML path in a pinned job count: the scan " +
+    "tags rows by the file's ordinal in the log") {
+    // a CONVERTed layout whose file names and path tails collide: the
+    // same basename part-0.parquet at depth 0, 1 and 2
     import scala.jdk.CollectionConverters._
     val root = freshRoot()
     java.nio.file.Files.createDirectories(
@@ -234,12 +266,12 @@ class DeltaDmlScaleSpec extends SparkSpec {
     writeOne("a/b/part-0.parquet", 201L, 300L)
     DeltaLog.convertToDelta(spark, root)
     assert(DeltaLog.filesAt(spark, root, 0L).size == 3)
-    // wide DELETE touching all three files: bounded jobs (probe +
-    // rewrite + the one-time metadata tag probe), never per-file
+    // wide DELETE touching all three files: one probe and one rewrite
+    // (two jobs each), never per-file
     val jobs = countJobs {
       DeltaLog.deleteWhereLong(spark, root, "k", 1L, 299L)
     }
-    assert(jobs <= 10, s"hostile-layout delete ran $jobs jobs")
+    assert(jobs <= 4, s"hostile-layout delete ran $jobs jobs")
     assert(DeltaLog.read(spark, root).select("k").as[Long].collect()
       .toSeq == Seq(300L))
     // UPDATE keeps working over the rewritten mixed-depth survivors

@@ -70,8 +70,8 @@ class DeltaLogSpec extends SparkSpec {
   }
 
   /** Files actually SCANNED by the executed plan (sum of file-scan
-    * numFiles metrics) — the partitioned read is ONE basePath-discovery
-    * relation whose partition pruning happens at planning, invisible to
+    * numFiles metrics) — every read is ONE log-backed relation whose
+    * file index prunes partitions at planning, invisible to
     * `DataFrame.inputFiles`.
     */
   private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
@@ -497,7 +497,7 @@ class DeltaLogSpec extends SparkSpec {
     DeltaLog.commitFlat(spark, root,
       Seq((10L, "x"), (11L, "y")).toDF("k", "v").coalesce(1))
     val before = DeltaLog.filesAt(spark, root, 1L)
-    val mv = DeltaLog.mergeLongKey(spark, root, "k",
+    val mv = DeltaLog.mergeKey(spark, root, "k",
       Seq((2L, "B"), (3L, "c")).toDF("k", "v"))
     assert(mv == 2L)
     assert(rows(DeltaLog.read(spark, root)) ==
@@ -518,7 +518,7 @@ class DeltaLogSpec extends SparkSpec {
     DeltaLog.commitFlat(spark, root,
       Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1),
       configuration = Map("delta.enableChangeDataFeed" -> "true"))
-    DeltaLog.mergeLongKey(spark, root, "k",
+    DeltaLog.mergeKey(spark, root, "k",
       Seq((2L, "B"), (3L, "c")).toDF("k", "v"))
     val feed = DeltaLog.readChangeFeed(spark, root, 0L)
       .select("k", "v", DeltaLog.ChangeTypeCol).collect()
@@ -526,7 +526,7 @@ class DeltaLogSpec extends SparkSpec {
     assert(feed == Set((2L, "b", "update_preimage"),
       (2L, "B", "update_postimage"), (3L, "c", "insert")))
     // no-match merge: adds only — the append tail stays readable
-    DeltaLog.mergeLongKey(spark, root, "k",
+    DeltaLog.mergeKey(spark, root, "k",
       Seq((90L, "z")).toDF("k", "v"))
     assert(rows(DeltaLog.readAppendsSince(spark, root, 1L)) ==
       Set((90L, "z")))
@@ -544,18 +544,18 @@ class DeltaLogSpec extends SparkSpec {
     // NOT NULL writer invariant (tuple-encoded Long => non-nullable)
     DeltaLog.commitFlat(spark, root,
       Seq((Some(1L), "a"), (Some(2L), "b")).toDF("k", "v").coalesce(1))
-    DeltaLog.mergeLongKey(spark, root, "k",
+    DeltaLog.mergeKey(spark, root, "k",
       Seq((Some(2L), "B"), (None, "n")).toDF("k", "v"))
     val df = DeltaLog.read(spark, root)
     assert(df.filter(col("k").isNull).count() == 1L)
     assert(rows(df.filter(col("k").isNotNull)) ==
       Set((1L, "a"), (2L, "B")))
     val eDup = intercept[IllegalArgumentException](
-      DeltaLog.mergeLongKey(spark, root, "k",
+      DeltaLog.mergeKey(spark, root, "k",
         Seq((5L, "x"), (5L, "y")).toDF("k", "v")))
     assert(eDup.getMessage.contains("multiple source rows"), eDup.getMessage)
     val eExtra = intercept[IllegalArgumentException](
-      DeltaLog.mergeLongKey(spark, root, "k",
+      DeltaLog.mergeKey(spark, root, "k",
         Seq((5L, "x", 1)).toDF("k", "v", "w")))
     assert(eExtra.getMessage.contains("extra columns"), eExtra.getMessage)
     // partitioned targets merge partition-locally: the matched row's
@@ -833,7 +833,7 @@ class DeltaLogSpec extends SparkSpec {
     val before = DeltaLog.currentVersion(root)
     intercept[Exception](DeltaLog.commitFlat(spark, root,
       Seq((-1L, "x")).toDF("k", "v")))
-    intercept[Exception](DeltaLog.mergeLongKey(spark, root, "k",
+    intercept[Exception](DeltaLog.mergeKey(spark, root, "k",
       Seq((-5L, "y")).toDF("k", "v")))
     intercept[Exception](DeltaLog.updateWhereLong(spark, root, "k",
       1L, 1L, Map("k" -> lit(-9L))))
@@ -930,7 +930,7 @@ class DeltaLogSpec extends SparkSpec {
         Map("dbl" -> lit(0L))))
     assert(eSet.getMessage.contains("GENERATED ALWAYS"), eSet.getMessage)
     // MERGE computes missing generated columns on the source
-    DeltaLog.mergeLongKey(spark, root, "k",
+    DeltaLog.mergeKey(spark, root, "k",
       Seq((3L, 8L), (9L, 1L)).toDF("k", "x"))
     assert(all() == Set((1L, 10L, 20L), (2L, 100L, 200L),
       (3L, 8L, 16L), (9L, 1L, 2L)))
@@ -1367,7 +1367,7 @@ class DeltaLogSpec extends SparkSpec {
       Map("delta.enableChangeDataFeed" -> "true"))
     val pLine = commitLines(root, vCdf).mkString("|")
     assert(pLine.contains("\"minWriterVersion\":4"), pLine)
-    DeltaLog.mergeLongKey(spark, root, "k",
+    DeltaLog.mergeKey(spark, root, "k",
       Seq((2L, "B")).toDF("k", "v"))
     val feed = DeltaLog.readChangeFeed(spark, root, vCdf)
       .select("k", "v", DeltaLog.ChangeTypeCol).collect()
@@ -1473,9 +1473,9 @@ class DeltaLogSpec extends SparkSpec {
       configuration = Map(
         "delta.enableChangeDataFeed" -> "true",
         "delta.enableInCommitTimestamps" -> "true"))
-    DeltaLog.mergeLongKey(spark, root, "k",
+    DeltaLog.mergeKey(spark, root, "k",
       Seq((2L, "B")).toDF("k", "v")) // v1: update
-    DeltaLog.mergeLongKey(spark, root, "k",
+    DeltaLog.mergeKey(spark, root, "k",
       Seq((3L, "c")).toDF("k", "v")) // v2: insert
     // resolution runs on the ICT clock, not commitInfo.timestamp —
     // probe with the exact values the resolver reads
@@ -1570,9 +1570,9 @@ class DeltaLogSpec extends SparkSpec {
     DeltaLog.commitFlat(spark, root,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1),
       configuration = Map("delta.enableChangeDataFeed" -> "true"))
-    DeltaLog.mergeLongKey(spark, root, "k",
+    DeltaLog.mergeKey(spark, root, "k",
       Seq((2L, "B")).toDF("k", "v")) // v1: one cdc file
-    DeltaLog.mergeLongKey(spark, root, "k",
+    DeltaLog.mergeKey(spark, root, "k",
       Seq((3L, "C")).toDF("k", "v")) // v2: one cdc file
     DeltaLog.checkpoint(spark, root, 2L)
     def cdcCount: Int = {
@@ -1760,7 +1760,7 @@ class DeltaLogSpec extends SparkSpec {
       (1L to 8L).map(k => (k, s"v$k")).toDF("k", "v"),
       configuration = Map("delta.appendOnly" -> "true"))
     DeltaLog.commitFlat(spark, root, Seq((9L, "v9")).toDF("k", "v"))
-    DeltaLog.mergeLongKey(spark, root, "k", Seq((90L, "x")).toDF("k", "v"))
+    DeltaLog.mergeKey(spark, root, "k", Seq((90L, "x")).toDF("k", "v"))
     def refused(body: => Any): String =
       intercept[IllegalArgumentException](body).getMessage
     assert(refused(DeltaLog.deleteWhereLong(spark, root, "k", 1L, 2L))
@@ -1769,7 +1769,7 @@ class DeltaLogSpec extends SparkSpec {
       .contains("appendOnly"))
     assert(refused(DeltaLog.updateWhereLong(spark, root, "k", 1L, 2L,
       Map("v" -> lit("z")))).contains("appendOnly"))
-    assert(refused(DeltaLog.mergeLongKey(spark, root, "k",
+    assert(refused(DeltaLog.mergeKey(spark, root, "k",
       Seq((1L, "z")).toDF("k", "v"))).contains("appendOnly"))
     assert(refused(DeltaLog.restore(spark, root, 0L))
       .contains("appendOnly"))
@@ -1811,7 +1811,7 @@ class DeltaLogSpec extends SparkSpec {
       Seq((2L, "b")).toDF("k", "v"))).contains("rowTracking"))
     assert(refused(DeltaLog.deleteWhereLong(spark, root, "k", 1L, 1L))
       .contains("rowTracking"))
-    assert(refused(DeltaLog.mergeLongKey(spark, root, "k",
+    assert(refused(DeltaLog.mergeKey(spark, root, "k",
       Seq((3L, "c")).toDF("k", "v"))).contains("rowTracking"))
     assert(refused(DeltaLog.optimizeZOrder(spark, root, "k", "k", 4, 1))
       .contains("rowTracking"))
@@ -3292,7 +3292,7 @@ class DeltaLogSpec extends SparkSpec {
     assert(streamed == Set((1L, "a"), (2L, "b"), (3L, "c"),
       (10L, "x"), (11L, "y")), streamed.toString)
     // MERGE across mixed physical forms: updates hit the NARROW file
-    DeltaLog.mergeLongKey(spark, root, "k",
+    DeltaLog.mergeKey(spark, root, "k",
       Seq((2L, "B"), (99L, "new")).toDF("k", "v"))
     assert(rows(DeltaLog.read(spark, root)) == Set((1L, "a"), (2L, "B"),
       (3L, "c"), (10L, "x"), (11L, "y"), (99L, "new")))
