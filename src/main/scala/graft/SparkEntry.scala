@@ -2039,7 +2039,7 @@ object SparkEntry {
     // metaData), read back via the log with the partition column
     // reattached as typed literals, filtered to two partitions — the
     // filter prunes the other partitions' scans at plan time
-    // (DeltaLogSpec pins the pruning via inputFiles).
+    // (DeltaLogSpec pins the pruning via the executed scan's numFiles).
     "q247_delta_partitioned_read" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("value"), col("event_type"))
@@ -2069,7 +2069,7 @@ object SparkEntry {
     // Delta data skipping: four appends with DISJOINT event_id ranges,
     // then a range read that prunes non-overlapping FILES from the scan
     // via the adds' min/max stats before any IO (DeltaLogSpec pins the
-    // pruned inputFiles; this gates the surviving rows).
+    // scanned-file count; this gates the surviving rows).
     "q252_delta_skipping_read" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_ts_us"), col("value"))
@@ -2080,7 +2080,8 @@ object SparkEntry {
             .when(col("event_id") < 5000L, 1)
             .when(col("event_id") < 7500L, 2).otherwise(3)),
         "__slice", Seq(0, 1, 2, 3))
-      graft.lake.DeltaLog.readWhereLong(s, root, "event_id", 3000L, 6000L)
+      graft.lake.DeltaLog.read(s, root)
+        .where(col("event_id").between(3000L, 6000L))
     }),
     // SCC size histogram over the q248 graph: (size, n_sccs) — the
     // cycle-structure readout (how much of the graph sits in
@@ -2370,7 +2371,7 @@ object SparkEntry {
     // slices make every file's string stats range span the key space,
     // so the footer bloom is the only thing that prunes; the string
     // merge doubles 100..200, writing key blooms on its own output,
-    // then readWhereStringPoint serves 'ord-150' from the merged
+    // then a point read serves 'ord-150' from the merged
     // state. Result = full table UNION ALL the point row.
     "q288_delta_bloom_string" -> ((s, d) => {
       val base = Tables.orders(s, d).filter(col("o_orderkey").isNotNull)
@@ -2389,8 +2390,7 @@ object SparkEntry {
         shaped(base.filter(col("o_orderkey").between(100L, 200L))
           .withColumn("o_totalprice", col("o_totalprice") * 2)))
       graft.lake.DeltaLog.read(s, root).unionByName(
-        graft.lake.DeltaLog.readWhereStringPoint(s, root, "okey",
-          "ord-150"))
+        graft.lake.DeltaLog.read(s, root).where(col("okey") === "ord-150"))
     }),
     // INT-key MERGE + point read: the reference's dimension surrogate
     // keys are ints (services/catalog/app/api/products.py id lookups) —
@@ -2413,7 +2413,7 @@ object SparkEntry {
         shaped(base.filter(col("o_orderkey").between(100L, 200L))
           .withColumn("o_totalprice", col("o_totalprice") * 2)))
       graft.lake.DeltaLog.read(s, root).unionByName(
-        graft.lake.DeltaLog.readWhereLongPoint(s, root, "okey", 150L))
+        graft.lake.DeltaLog.read(s, root).where(col("okey") === 150))
     }),
     // NESTED STREAMING into a NAME-MAPPED sink — the last cell of the
     // nested × mapped × streaming matrix (q289 batch nested-mapped DML
@@ -2467,12 +2467,11 @@ object SparkEntry {
         .filter(col("version") === 1L).head().getLong(2)
       graft.lake.DeltaLog.readAsOf(s, root, ts1)
     }),
-    // UNIFIED conjunctive skipping read: real predicates are
-    // conjunctions — readWhere intersects the partition-value prune
-    // with the numeric stats range BEFORE assembling the scan, so the
-    // file set is the intersection of what each column prunes alone
-    // (DeltaLogSpec pins the scanned-file count below either
-    // single-column prune).
+    // CONJUNCTIVE skipping read: real predicates are conjunctions —
+    // the table's file index intersects the partition-value prune with
+    // the numeric stats range at planning, so the file set is the
+    // intersection of what each column prunes alone (DeltaLogSpec pins
+    // the scanned-file count below either single-column prune).
     "q300_delta_read_where" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("value"), col("event_type"))
@@ -2481,17 +2480,15 @@ object SparkEntry {
       graft.lake.DeltaLog.commitPartitionedSlices(s, root,
         ev.withColumn("__slice", pmod(col("event_id"), lit(2))),
         "__slice", Seq(0, 1), Seq("event_type"))
-      graft.lake.DeltaLog.readWhere(s, root, Seq(
-        graft.lake.DeltaLog.ColumnPredicate.LongRange(
-          "event_id", 100L, 5000L),
-        graft.lake.DeltaLog.ColumnPredicate.PartitionEquals(
-          "event_type", Some("purchase"))))
+      graft.lake.DeltaLog.read(s, root).where(
+        col("event_id").between(100L, 5000L) &&
+          col("event_type") === "purchase")
     }),
     // NULL-presence skipping read: the driver testdata's events carry
     // NULL event_ids — committed as their own file here, so the
-    // IsNotNull predicate's nullCount layer drops that file before
-    // any data IO (DeltaLogSpec pins the scanned-file count); the
-    // residual filter keeps the result exact either way.
+    // IS NOT NULL filter's nullCount check drops that file before any
+    // data IO (DeltaLogSpec pins the scanned-file count); the filter
+    // itself keeps the result exact either way.
     "q301_delta_read_notnull" -> ((s, d) => {
       val ev = Tables.events(s, d).select(col("event_id"), col("value"))
       val root = freshScratch("q301")
@@ -2499,8 +2496,7 @@ object SparkEntry {
         ev.withColumn("__slice",
           col("event_id").isNotNull.cast("int")),
         "__slice", Seq(0, 1))
-      graft.lake.DeltaLog.readWhere(s, root, Seq(
-        graft.lake.DeltaLog.ColumnPredicate.IsNotNull("event_id")))
+      graft.lake.DeltaLog.read(s, root).where(col("event_id").isNotNull)
     }),
     // METADATA cleanup (delta.logRetentionDuration): after the
     // checkpoint-boundary cut reclaims the expired JSON prefix, the
@@ -2520,12 +2516,12 @@ object SparkEntry {
         "q302: the expired commit prefix must be reclaimed")
       graft.lake.DeltaLog.read(s, root)
     }),
-    // IN-LIST skipping read: LongIn keeps a file only when SOME listed
+    // IN-LIST skipping read: an IN keeps a file only when SOME listed
     // value lands in its stats range AND survives its footer bloom
-    // (exact negatives), StringIn likewise ASCII-guarded — the
+    // (exact negatives), string lists likewise ASCII-guarded — the
     // pmod-split files here have fully overlapping event_id ranges, so
     // the blooms do the pruning (DeltaLogSpec pins the scanned-file
-    // counts for both layers); the residual isin filter is exact.
+    // counts for both layers); the isin filter itself is exact.
     "q303_delta_read_in" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("value"), col("event_type"))
@@ -2537,11 +2533,9 @@ object SparkEntry {
         writeOptions = graft.lake.DeltaLog.bloomOptions(
           Seq("event_id"), ndv = 4096),
         onePerSlice = true)
-      graft.lake.DeltaLog.readWhere(s, root, Seq(
-        graft.lake.DeltaLog.ColumnPredicate.LongIn(
-          "event_id", Seq(4L, 8L, 1001L, 2005L)),
-        graft.lake.DeltaLog.ColumnPredicate.StringIn(
-          "event_type", Seq("purchase", "view", "click"))))
+      graft.lake.DeltaLog.read(s, root).where(
+        col("event_id").isin(4L, 8L, 1001L, 2005L) &&
+          col("event_type").isin("purchase", "view", "click"))
     }),
     // AUTO-CHECKPOINT (delta.checkpointInterval): with the property
     // declared, the third commit's lag past the last checkpoint
@@ -2865,7 +2859,7 @@ object SparkEntry {
     // STRING-RANGE data-skipping read: zero-padded order keys in four
     // SORTED slices (disjoint lexicographic ranges per file — the
     // recorded string min/max prune the range read; spec pins the
-    // file count), then the inclusive range through readWhereString.
+    // file count), then the inclusive range read.
     "q294_delta_string_range" -> ((s, d) => {
       val base = Tables.orders(s, d).filter(col("o_orderkey").isNotNull)
       def shaped(df: org.apache.spark.sql.DataFrame) =
@@ -2879,8 +2873,8 @@ object SparkEntry {
             .when(col("okey") < "ord-00008000", 1)
             .when(col("okey") < "ord-00012000", 2).otherwise(3)),
         "__slice", Seq(0, 1, 2, 3))
-      graft.lake.DeltaLog.readWhereString(s, root, "okey",
-        "ord-00000100", "ord-00000200")
+      graft.lake.DeltaLog.read(s, root)
+        .where(col("okey").between("ord-00000100", "ord-00000200"))
     }),
     // PARTITIONED MERGE × CDF: the reference's README recommends
     // event_date-partitioned silver — merge into a bucket-partitioned
@@ -2988,7 +2982,8 @@ object SparkEntry {
         1000L, 1500L)
       graft.lake.DeltaLog.optimizeZOrder(s, root, "event_id",
         "event_ts_us", 20, 8)
-      graft.lake.DeltaLog.readWhereLong(s, root, "event_id", 0L, 2000L)
+      graft.lake.DeltaLog.read(s, root)
+        .where(col("event_id").between(0L, 2000L))
     }),
     // Per-partition OPTIMIZE ZORDER: q273's fold on an event_type-
     // PARTITIONED table (the README's recommended maintenance for
@@ -3010,7 +3005,8 @@ object SparkEntry {
         1000L, 1500L)
       graft.lake.DeltaLog.optimizeZOrder(s, root, "event_id",
         "event_ts_us", 20, 10)
-      graft.lake.DeltaLog.readWhereLong(s, root, "event_id", 0L, 2000L)
+      graft.lake.DeltaLog.read(s, root)
+        .where(col("event_id").between(0L, 2000L))
     }),
     // GENERATED COLUMNS: day GENERATED ALWAYS AS (event_ts_us div
     // 86400000000). Batch 0 provides it (verified inline), batch 1
@@ -3101,7 +3097,7 @@ object SparkEntry {
     // parquet bloom on o_custkey (UNSORTED — every file spans the
     // custkey range, stats prune nothing); the point read must return
     // that customer's orders through the bloom layer. Pruning itself
-    // is pinned by DeltaLogSpec (owner-file-only inputFiles).
+    // is pinned by DeltaLogSpec (owner-file-only scanned-file count).
     "q278_delta_bloom_lookup" -> ((s, d) => {
       val o = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -3111,7 +3107,7 @@ object SparkEntry {
           pmod(coalesce(col("o_orderkey"), lit(0L)), lit(4))),
         "__slice", Seq(0, 1, 2, 3), writeOptions =
           graft.lake.DeltaLog.bloomOptions(Seq("o_custkey")))
-      graft.lake.DeltaLog.readWhereLongPoint(s, root, "o_custkey", 371L)
+      graft.lake.DeltaLog.read(s, root).where(col("o_custkey") === 371)
     }),
     // STREAMING SINK (exactly-once DSv2 write): a delta-to-delta
     // pipeline — the source table streams through a checkpointed query

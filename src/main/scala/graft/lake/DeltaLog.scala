@@ -5,13 +5,18 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
-  BoundReference, Cast, Expression, Literal, Predicate}
+  BoundReference, Cast, EqualTo, EvalMode, Expression, GreaterThan,
+  GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan,
+  LessThanOrEqual, Literal, Or, Predicate}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{assert_true, col, count, expr, hash,
   input_file_name, lit, max, pmod, regexp_extract, row_number, sum, when}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -59,7 +64,8 @@ import scala.jdk.CollectionConverters._
   *    whose values live in each add's `partitionValues` (not in the
   *    data files); the scan's file index carries them typed per file,
   *    so a filter on a partition column PRUNES whole files at plan
-  *    time.
+  *    time, as a filter on a data column does through the adds' stats
+  *    and footer blooms ([[mightSatisfy]]).
   *    Scope: parquet format, relative paths, reader protocol 1;
   *    protocol 2 with column-mapping mode none or name (physical
   *    parquet names resolved from schema metadata); protocol 3 when
@@ -1585,6 +1591,12 @@ object DeltaLog {
   private def resolvePath(root: String, rel: String): Path =
     if (rel.startsWith("/")) Paths.get(rel) else Paths.get(root, rel)
 
+  /** [[resolvePath]] as the Hadoop path Spark's scan and the footer
+    * readers open.
+    */
+  private def dataPath(root: String, rel: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(resolvePath(root, rel).toUri)
+
   /** Staging directory UNDER the table root (created on demand): the
     * final rename of a staged file into the table or its `_delta_log` is
     * then guaranteed same-filesystem — staging in `java.io.tmpdir`
@@ -1704,14 +1716,18 @@ object DeltaLog {
     * the listing, so no directory discovery or listing job runs. Each
     * file is its own `PartitionDirectory` whose row holds the table's
     * typed partition values and the file's ordinal ([[SrcTagCol]]);
-    * `listFiles` evaluates the partition filters on those rows, so
-    * partition pruning happens at planning (visible in the executed
-    * scan's `numFiles`, not in `inputFiles`). Equal file lists make
-    * equal indexes, so two reads of one snapshot share cache entries
-    * and exchanges.
+    * `listFiles` evaluates the partition filters on those rows and
+    * Spark's pushed data filters on each file's add `stats` and footer
+    * bloom ([[mightSatisfy]]), so all pruning happens at planning
+    * (visible in the executed scan's `numFiles`, not in `inputFiles`).
+    * Equal file lists make equal indexes, so two reads of one snapshot
+    * share cache entries and exchanges.
     */
   private case class LogFileIndex(partitionSchema: StructType,
-      entries: Seq[(org.apache.hadoop.fs.FileStatus, InternalRow)])
+      entries: Seq[(org.apache.hadoop.fs.FileStatus, InternalRow,
+        Option[String])],
+      fieldIds: Map[String, Long],
+      conf: org.apache.hadoop.conf.Configuration)
     extends FileIndex {
     override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
       entries.map(_._1.getPath)
@@ -1727,7 +1743,8 @@ object DeltaLog {
             val i = names.indexOf(a.name)
             BoundReference(i, partitionSchema(i).dataType, nullable = true)
         }).eval
-      entries.collect { case (status, row) if keep(row) =>
+      entries.collect { case (status, row, stats) if keep(row) &&
+          mightSatisfy(dataFilters, status.getPath, stats, fieldIds, conf) =>
         PartitionDirectory(row, Array(status)) }
     }
     override def inputFiles: Array[String] =
@@ -1759,7 +1776,7 @@ object DeltaLog {
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     val conf = spark.sparkContext.hadoopConfiguration
     val entries = files.zipWithIndex.map { case ((rel, pv), i) =>
-      val path = new org.apache.hadoop.fs.Path(resolvePath(root, rel).toUri)
+      val path = dataPath(root, rel)
       val values = pcs.map { c =>
         val key = pvKeyOf(st, schema, c, pv).getOrElse(
           throw new IllegalArgumentException(
@@ -1767,13 +1784,14 @@ object DeltaLog {
               s"partition column $c"))
         typedPartitionValue(pv(key), schema(c).dataType, tz)
       }
-      path.getFileSystem(conf).getFileStatus(path) ->
-        InternalRow.fromSeq(values :+ i)
+      (path.getFileSystem(conf).getFileStatus(path),
+        InternalRow.fromSeq(values :+ i), st.fileStats.get(rel))
     }
     val (fileCols, extra) = cols.filterNot(f => pcs.contains(f.name))
       .partition(f => schema.fieldNames.contains(f.name))
     val (scanSchema, physMap) = readSchemaFor(st, StructType(fileCols))
-    val relation = HadoopFsRelation(LogFileIndex(partitionSchema, entries),
+    val relation = HadoopFsRelation(LogFileIndex(partitionSchema, entries,
+        physFieldIds(st, schema), conf),
       partitionSchema,
       nullableDataType(StructType(scanSchema ++ extra)).asInstanceOf[StructType],
       None, new ParquetFileFormat, Map.empty)(spark)
@@ -2659,107 +2677,146 @@ object DeltaLog {
         .getOrElse(column, column)).getOrElse(column)
     else column
 
-  private def statsOverlap(st: LogState, path: String, column: String,
-                           lo: Long, hi: Long): Boolean =
-    st.fileStats.get(path) match {
-      case None => true
-      case Some(s) =>
-        val key = statsKeyOf(st, column)
-        val n = mapper.readTree(s)
-        val mn = n.path("minValues").path(key)
-        val mx = n.path("maxValues").path(key)
-        !(mn.isNumber && mx.isNumber) ||
-          (mn.asLong() <= hi && mx.asLong() >= lo)
+  /** `column` as [[mightSatisfy]] names it: the stats (physical) key,
+    * with the declared type.
+    */
+  private def statsColumn(st: LogState, column: String): AttributeReference =
+    AttributeReference(statsKeyOf(st, column),
+      st.schema.map(_.apply(column).dataType).getOrElse(NullType))()
+
+  /** A DML operation's `column BETWEEN lo AND hi` for [[mightSatisfy]]:
+    * on an integral or DECIMAL column each bound is cast to the column's
+    * type in TRY mode, so a bound the type cannot hold turns NULL; a NULL
+    * bound, or any other column type, keeps every file.
+    */
+  private def statsBetween(st: LogState, column: String, lo: Long,
+                           hi: Long): Expression = {
+    val a = statsColumn(st, column)
+    def bound(v: Long) = Literal(a.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | _: DecimalType =>
+        Cast(Literal(v), a.dataType, None, EvalMode.TRY).eval()
+      case _ => null
+    }, a.dataType)
+    And(GreaterThanOrEqual(a, bound(lo)), LessThanOrEqual(a, bound(hi)))
+  }
+
+  /** The one file-skipping rule, for reads (the scan's
+    * [[LogFileIndex]], on Spark's pushed data filters) and writes (the
+    * DML candidate sets): false only when the file's add `stats`, or its
+    * footer bloom, prove that no row satisfies every predicate in
+    * `preds`. Predicates name columns by PHYSICAL name, the key of both
+    * the stats and the footer. The rule recurses through And/Or; its
+    * leaves are `=`, `<`, `<=`, `>`, `>=` against a literal on either
+    * side, IN and INSET (min/max), and IS [NOT] NULL (`nullCount` against
+    * `numRecords`). Min/max prune integral, DECIMAL, DATE and STRING
+    * columns: a recorded bound is typed by the [[typedPartitionValue]]
+    * cast in TRY mode and compared by Catalyst's ordering for the type.
+    * STRING bounds and literals must be ASCII: external writers truncate
+    * string stats, and only there do all the orderings in play agree.
+    * `=`/IN on a [[bloomProbeable]] column then probe the footer bloom,
+    * only on files the stats kept. Any other shape or type, a
+    * cast-wrapped column, or a missing or uncastable stat keeps the
+    * file. Stats are physical, so the rule holds under deletion vectors
+    * (a DV only removes rows).
+    */
+  private def mightSatisfy(preds: Seq[Expression],
+      file: org.apache.hadoop.fs.Path, stats: Option[String],
+      fieldIds: Map[String, Long],
+      conf: org.apache.hadoop.conf.Configuration): Boolean =
+    preds.isEmpty || {
+      val s = stats.map(statsReader.readTree)
+        .getOrElse(mapper.missingNode())
+      val tz = SQLConf.get.sessionLocalTimeZone
+      def ascii(v: Any) = v.toString.forall(_ < 0x80)
+      def longOf(n: JsonNode) = if (n.isNumber) Some(n.asLong()) else None
+      // typed recorded (min, max) of a pruned column, when both cast
+      def bounds(a: AttributeReference): Option[(Any, Any)] = {
+        val numeric = a.dataType match {
+          case ByteType | ShortType | IntegerType | LongType |
+               _: DecimalType => Some(true)
+          case DateType | StringType => Some(false)
+          case _ => None
+        }
+        def typed(n: JsonNode) = numeric
+          .filter(num => if (num) n.isNumber else n.isTextual)
+          .flatMap(_ => Option(Cast(Literal(n.asText()), a.dataType,
+            Some(tz), EvalMode.TRY).eval()))
+        for {
+          lo <- typed(s.path("minValues").path(a.name))
+          hi <- typed(s.path("maxValues").path(a.name))
+          if a.dataType != StringType || (ascii(lo) && ascii(hi))
+        } yield (lo, hi)
+      }
+      // a literal the rule cannot place: NULL, or typed unlike the column
+      def unknown(a: AttributeReference, v: Literal) =
+        v.value == null || v.dataType != a.dataType
+      // might a row in the file's [min, max] satisfy `test` against `v`?
+      def range(a: AttributeReference, v: Literal)(
+          test: (Ordering[Any], Any, Any) => Boolean): Boolean =
+        unknown(a, v) || (a.dataType == StringType && !ascii(v.value)) ||
+          bounds(a).forall { case (lo, hi) =>
+            test(TypeUtils.getInterpretedOrdering(a.dataType), lo, hi) }
+      def member(a: AttributeReference, vs: Seq[Literal],
+                 bloom: Boolean): Boolean = vs.exists(unknown(a, _)) || {
+        val in = vs.filter(v => range(a, v)((o, lo, hi) =>
+          o.lteq(lo, v.value) && o.gteq(hi, v.value)))
+        in.nonEmpty && (!bloom || !bloomProbeable(a.dataType) ||
+          bloomKeepsFile(file, a.name, fieldIds.get(a.name),
+            in.map(_.value match {
+              case u: UTF8String => u.toString
+              // integral and DATE (epoch days): the probe's Long form
+              case n: java.lang.Number => java.lang.Long.valueOf(n.longValue)
+              case other => other
+            }), conf))
+      }
+      def might(e: Expression, bloom: Boolean): Boolean = e match {
+        case And(l, r) => might(l, bloom) && might(r, bloom)
+        case Or(l, r) => might(l, bloom) || might(r, bloom)
+        case EqualTo(v: Literal, a: AttributeReference) =>
+          might(EqualTo(a, v), bloom)
+        case LessThan(v: Literal, a: AttributeReference) =>
+          might(GreaterThan(a, v), bloom)
+        case LessThanOrEqual(v: Literal, a: AttributeReference) =>
+          might(GreaterThanOrEqual(a, v), bloom)
+        case GreaterThan(v: Literal, a: AttributeReference) =>
+          might(LessThan(a, v), bloom)
+        case GreaterThanOrEqual(v: Literal, a: AttributeReference) =>
+          might(LessThanOrEqual(a, v), bloom)
+        case EqualTo(a: AttributeReference, v: Literal) =>
+          member(a, Seq(v), bloom)
+        case In(a: AttributeReference, vs)
+            if vs.forall(_.isInstanceOf[Literal]) =>
+          member(a, vs.map(_.asInstanceOf[Literal]), bloom)
+        case InSet(a: AttributeReference, vs) =>
+          member(a, vs.toSeq.map(Literal(_, a.dataType)), bloom)
+        case LessThan(a: AttributeReference, v: Literal) =>
+          range(a, v)((o, lo, _) => o.lt(lo, v.value))
+        case LessThanOrEqual(a: AttributeReference, v: Literal) =>
+          range(a, v)((o, lo, _) => o.lteq(lo, v.value))
+        case GreaterThan(a: AttributeReference, v: Literal) =>
+          range(a, v)((o, _, hi) => o.gt(hi, v.value))
+        case GreaterThanOrEqual(a: AttributeReference, v: Literal) =>
+          range(a, v)((o, _, hi) => o.gteq(hi, v.value))
+        case IsNull(a: AttributeReference) =>
+          longOf(s.path("nullCount").path(a.name)).forall(_ > 0L)
+        case IsNotNull(a: AttributeReference) =>
+          (longOf(s.path("nullCount").path(a.name)),
+            longOf(s.path("numRecords"))) match {
+            case (Some(nulls), Some(rows)) => nulls < rows
+            case _ => true
+          }
+        case _ => true
+      }
+      preds.forall(might(_, bloom = false)) &&
+        preds.forall(might(_, bloom = true))
     }
 
-  /** NULL-presence file skipping over recorded `nullCount`/
-    * `numRecords`: `wantNull = true` keeps files with at least one
-    * physical null; `wantNull = false` drops files that are ALL null
-    * (nullCount == numRecords). Counts are physical, so both prunes
-    * stay exact under deletion vectors — a DV removes rows, never
-    * adds them. Absent or non-numeric counts keep the file.
+  /** Stats JSON reader: decimal bounds parse exactly, not through a
+    * double.
     */
-  private def statsNullKeep(st: LogState, path: String, column: String,
-                            wantNull: Boolean): Boolean =
-    st.fileStats.get(path) match {
-      case None => true
-      case Some(s) =>
-        val key = statsKeyOf(st, column)
-        val n = mapper.readTree(s)
-        val nc = n.path("nullCount").path(key)
-        val nr = n.path("numRecords")
-        if (!nc.isNumber) true
-        else if (wantNull) nc.asLong() > 0L
-        else !nr.isNumber || nc.asLong() < nr.asLong()
-    }
-
-  /** STRING-range file skipping over recorded footer min/max. External
-    * writers TRUNCATE long string stats, but truncation keeps the
-    * bounds ENCLOSING (a truncated min is a prefix ≤ the true min; a
-    * truncated max must be rounded UP by the writer to stay ≥ the true
-    * max — Delta's own rule), so range pruning on truncated bounds is
-    * still exact. Comparisons run only when all four bounds are pure
-    * ASCII — there Java string order equals parquet's unsigned-byte
-    * stats order equals the JSON rendering order; a non-ASCII recorded
-    * bound keeps the file (callers skip pruning entirely on a
-    * non-ASCII probe range), so order divergence above 0x7f can never
-    * drop a matching file.
-    */
-  private def statsOverlapStr(st: LogState, path: String, column: String,
-                              lo: String, hi: String): Boolean =
-    st.fileStats.get(path) match {
-      case None => true
-      case Some(s) =>
-        val key = statsKeyOf(st, column)
-        val n = mapper.readTree(s)
-        val mn = n.path("minValues").path(key)
-        val mx = n.path("maxValues").path(key)
-        def ascii(x: String) = x.forall(_ < 0x80)
-        !(mn.isTextual && mx.isTextual) ||
-          !(ascii(mn.asText()) && ascii(mx.asText())) ||
-          (mn.asText() <= hi && mx.asText() >= lo)
-    }
-
-  /** DECIMAL-range file skipping: Delta stats render decimal bounds as
-    * JSON numbers — compare them exactly as BigDecimal (no double
-    * round-trip: a 38-digit decimal loses precision through asDouble).
-    * Non-numeric or absent bounds keep the file.
-    */
-  private def statsOverlapDec(st: LogState, path: String, column: String,
-                              lo: java.math.BigDecimal,
-                              hi: java.math.BigDecimal): Boolean =
-    st.fileStats.get(path) match {
-      case None => true
-      case Some(s) =>
-        val key = statsKeyOf(st, column)
-        val n = mapper.readTree(s)
-        val mn = n.path("minValues").path(key)
-        val mx = n.path("maxValues").path(key)
-        !(mn.isNumber && mx.isNumber) ||
-          (mn.decimalValue().compareTo(hi) <= 0 &&
-            mx.decimalValue().compareTo(lo) >= 0)
-    }
-
-  /** DATE-range file skipping: Delta stats render dates as ISO
-    * `YYYY-MM-DD` strings, whose lexicographic order equals date order
-    * for four-digit years — bounds not matching that shape keep the
-    * file (a five-digit or negative year would break the equivalence).
-    */
-  private val IsoDateRe = """\d{4}-\d{2}-\d{2}""".r
-  private def statsOverlapDate(st: LogState, path: String, column: String,
-                               lo: String, hi: String): Boolean =
-    st.fileStats.get(path) match {
-      case None => true
-      case Some(s) =>
-        val key = statsKeyOf(st, column)
-        val n = mapper.readTree(s)
-        val mn = n.path("minValues").path(key)
-        val mx = n.path("maxValues").path(key)
-        def iso(x: JsonNode) =
-          x.isTextual && IsoDateRe.matches(x.asText())
-        !(iso(mn) && iso(mx)) ||
-          (mn.asText() <= hi && mx.asText() >= lo)
-    }
+  private val statsReader = mapper.reader(
+    com.fasterxml.jackson.databind.DeserializationFeature
+      .USE_BIG_DECIMAL_FOR_FLOATS)
 
   /** Inverse of [[decodePath]]: percent-encode a table-relative path the
     * way the protocol expects (spaces, '%', … escaped; '/', '=' kept).
@@ -2872,194 +2929,6 @@ object DeltaLog {
         lit(0L)) - lit(deleted)).as("n_rows"), count(lit(1)).as("n_files"))
   }
 
-  /** Data-skipping read: rows of the current snapshot with `column` in
-    * [lo, hi], where files whose stats range cannot intersect the
-    * interval are pruned BEFORE any IO — the Delta data-skipping path
-    * (files without stats, or without min/max for the column, are
-    * conservatively kept; NULL rows never match the filter, so nullCount
-    * plays no part). The spec pins that non-matching files vanish from
-    * `inputFiles`.
-    */
-  /** One conjunct of a [[readWhere]] filter. Real predicates are
-    * conjunctions — a unified read intersects EVERY predicate's
-    * metadata layers (numeric/string stats ranges, footer-bloom
-    * points, partition values) before any data IO, so the scanned
-    * file set is the intersection of what each column would prune
-    * alone.
-    */
-  sealed trait ColumnPredicate { def column: String }
-  object ColumnPredicate {
-    /** `column BETWEEN lo AND hi` over a numeric (integral) column —
-      * pruned by the recorded stats range.
-      */
-    case class LongRange(column: String, lo: Long, hi: Long)
-      extends ColumnPredicate {
-      require(lo <= hi, s"LongRange($column): empty interval [$lo, $hi]")
-    }
-    /** `column = value` — stats range AND footer-bloom exact-negative
-      * layers (the bloom hashes by each file's own physical form).
-      */
-    case class LongPoint(column: String, value: Long)
-      extends ColumnPredicate
-    /** `column BETWEEN lo AND hi` lexicographically — ASCII-guarded
-      * truncation-enclosing string stats ([[readWhereString]]'s rule).
-      */
-    case class StringRange(column: String, lo: String, hi: String)
-      extends ColumnPredicate {
-      require(lo <= hi, s"StringRange($column): empty range [$lo, $hi]")
-    }
-    /** `column = value` on strings — stats + footer bloom. */
-    case class StringPoint(column: String, value: String)
-      extends ColumnPredicate
-    /** `column BETWEEN lo AND hi` on a DATE column — pruned through
-      * the ISO-rendered date stats ([[statsOverlapDate]]).
-      */
-    case class DateRange(column: String, lo: java.time.LocalDate,
-                         hi: java.time.LocalDate) extends ColumnPredicate {
-      require(!lo.isAfter(hi), s"DateRange($column): empty range [$lo, $hi]")
-    }
-    /** `column = value` on a PARTITION column, in the add's rendered
-      * partition-value form (`None` = the null partition) — planning-
-      * time pruning with zero data IO, exact by construction.
-      */
-    case class PartitionEquals(column: String, value: Option[String])
-      extends ColumnPredicate
-    /** `column IN (values)` on an integral column: a file stays when
-      * ANY value lands inside its stats range, then the footer bloom
-      * answers the survivors per value (exact negatives — the same
-      * two layers as [[LongPoint]], unioned over the list). Sized for
-      * human-written IN lists; a MILLION-key probe belongs in a
-      * semi-join (the MERGE candidate path), not a predicate list.
-      */
-    case class LongIn(column: String, values: Seq[Long])
-      extends ColumnPredicate {
-      require(values.nonEmpty, s"LongIn($column): empty value list")
-    }
-    /** `column IN (values)` on strings — stats + footer bloom per
-      * value, ASCII-guarded like [[StringPoint]].
-      */
-    case class StringIn(column: String, values: Seq[String])
-      extends ColumnPredicate {
-      require(values.nonEmpty, s"StringIn($column): empty value list")
-    }
-    /** `column IS NULL` — pruned through the recorded per-column
-      * `nullCount`: a file whose nullCount is 0 holds no matching
-      * rows. Stats are PHYSICAL, so the prune stays exact under
-      * deletion vectors (a DV only removes rows — it cannot turn a
-      * zero-null file into one with nulls).
-      */
-    case class IsNull(column: String) extends ColumnPredicate
-    /** `column IS NOT NULL` — a file whose nullCount equals its
-      * numRecords is all-null physically, so no surviving row can
-      * match; everything else is kept and the residual filter decides.
-      */
-    case class IsNotNull(column: String) extends ColumnPredicate
-  }
-
-  /** Read the current snapshot under a CONJUNCTION of predicates with
-    * every metadata-skipping layer applied per file BEFORE any data
-    * IO: partition-value equality and stats ranges first (free — they
-    * ride the log), then footer-bloom point probes on the survivors
-    * only (footer bytes ∝ surviving candidates). The returned frame
-    * carries the exact residual filter, so results are correct even
-    * where pruning is best-effort. The single-column
-    * `readWhereLong/Point/String/StringPoint` entry points are
-    * one-predicate forms of this.
-    */
-  def readWhere(spark: SparkSession, root: String,
-                preds: Seq[ColumnPredicate]): DataFrame = {
-    import ColumnPredicate._
-    require(preds.nonEmpty, "DeltaLog.readWhere: at least one predicate")
-    val st = replay(spark, root, currentVersion(root))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val pcSet = st.partitionColumns.toSet
-    val physPc: Map[String, String] =
-      st.schema.map(physicalTopLevel).getOrElse(Map.empty)
-    preds.foreach {
-      case PartitionEquals(c, _) =>
-        require(pcSet(c),
-          s"DeltaLog.readWhere: $c is not a partition column — use a " +
-            "data-column predicate")
-      case p =>
-        require(st.schema.exists(_.fieldNames.contains(p.column)),
-          s"DeltaLog.readWhere: ${p.column} not in schema")
-        require(!pcSet(p.column),
-          s"DeltaLog.readWhere: ${p.column} is a partition column — " +
-            "use PartitionEquals")
-    }
-    // log-resident layers first (free), footer-bloom probes last and
-    // only on the files every cheap layer kept
-    def keepCheap(rel: String, pv: Map[String, String],
-                  p: ColumnPredicate): Boolean = p match {
-      case LongRange(c, lo, hi) => statsOverlap(st, rel, c, lo, hi)
-      case LongPoint(c, v) => statsOverlap(st, rel, c, v, v)
-      case StringRange(c, lo, hi) =>
-        !(lo + hi).forall(_ < 0x80) || statsOverlapStr(st, rel, c, lo, hi)
-      case StringPoint(c, v) =>
-        !v.forall(_ < 0x80) || statsOverlapStr(st, rel, c, v, v)
-      case DateRange(c, lo, hi) =>
-        // a probe bound outside the 4-digit-year ISO shape (year ≤ 0 or
-        // > 9999 renders with a sign/5 digits) breaks the lexicographic
-        // equivalence — keep the file, the residual filter is exact
-        !(IsoDateRe.matches(lo.toString) && IsoDateRe.matches(hi.toString)) ||
-          statsOverlapDate(st, rel, c, lo.toString, hi.toString)
-      case PartitionEquals(c, v) =>
-        pv.get(physPc.getOrElse(c, c)).orElse(pv.get(c)) match {
-          case Some(rec) => Option(rec) == v
-          case None => true // pv not recorded for c: conservative keep
-        }
-      case IsNull(c) => statsNullKeep(st, rel, c, wantNull = true)
-      case IsNotNull(c) => statsNullKeep(st, rel, c, wantNull = false)
-      case LongIn(c, vs) => vs.exists(v => statsOverlap(st, rel, c, v, v))
-      case StringIn(c, vs) => vs.exists(v =>
-        !v.forall(_ < 0x80) || statsOverlapStr(st, rel, c, v, v))
-    }
-    def keepBloom(rel: String, p: ColumnPredicate): Boolean = p match {
-      case LongPoint(c, v) =>
-        bloomKeepsFile(resolvePath(root, rel), statsKeyOf(st, c),
-          fieldIdOf(st, c), Seq(java.lang.Long.valueOf(v)), conf)
-      case StringPoint(c, v) =>
-        bloomKeepsFile(resolvePath(root, rel), statsKeyOf(st, c),
-          fieldIdOf(st, c), Seq(v), conf)
-      case LongIn(c, vs) =>
-        bloomKeepsFile(resolvePath(root, rel), statsKeyOf(st, c),
-          fieldIdOf(st, c), vs.map(java.lang.Long.valueOf), conf)
-      case StringIn(c, vs) =>
-        bloomKeepsFile(resolvePath(root, rel), statsKeyOf(st, c),
-          fieldIdOf(st, c), vs, conf)
-      case _ => true
-    }
-    val kept = st.files
-      .filter { case (rel, pv) => preds.forall(keepCheap(rel, pv, _)) }
-      .filter { case (rel, _) => preds.forall(keepBloom(rel, _)) }
-    val residual = preds.map {
-      case LongRange(c, lo, hi) => col(c) >= lo && col(c) <= hi
-      case LongPoint(c, v) => col(c) === v
-      case StringRange(c, lo, hi) => col(c) >= lo && col(c) <= hi
-      case StringPoint(c, v) => col(c) === v
-      case DateRange(c, lo, hi) =>
-        col(c) >= java.sql.Date.valueOf(lo) &&
-          col(c) <= java.sql.Date.valueOf(hi)
-      case PartitionEquals(c, v) => v match {
-        // a partition filter the scan's file index evaluates at
-        // planning — belt on exact suspenders
-        case Some(x) => col(c).cast(StringType) === x
-        case None => col(c).isNull
-      }
-      case IsNull(c) => col(c).isNull
-      case IsNotNull(c) => col(c).isNotNull
-      case LongIn(c, vs) => col(c).isin(vs: _*)
-      case StringIn(c, vs) => col(c).isin(vs: _*)
-    }.reduce(_ && _)
-    assembleFiles(spark, root, st, kept).filter(residual)
-  }
-
-  def readWhereLong(spark: SparkSession, root: String, column: String,
-                    lo: Long, hi: Long): DataFrame = {
-    require(lo <= hi, s"DeltaLog.readWhereLong: empty interval [$lo, $hi]")
-    readWhere(spark, root, Seq(ColumnPredicate.LongRange(column, lo, hi)))
-  }
-
   /** Nullability and field metadata are write-path metadata, not
     * physical schema — the shared normalization for schema-shape
     * checks ([[commitData]] and the slice commits).
@@ -3142,47 +3011,6 @@ object DeltaLog {
     0L
   }
 
-  /** Point lookup `column = value` with TWO file-skipping layers: the
-    * footer-stats range check first (free — stats ride the log), then
-    * each surviving file's parquet BLOOM FILTER (footer-bytes IO only,
-    * never data pages): a bloom that answers "definitely absent" drops
-    * the file. On an UNSORTED column every file spans the value range
-    * and stats alone prune NOTHING — blooms are what make a point
-    * lookup on a 100 TB unsorted fact open only the files that can
-    * match. Files without a bloom (not written with [[bloomOptions]])
-    * conservatively stay. Deterministic: parquet blooms are xxhash —
-    * the same data always prunes the same way.
-    */
-  def readWhereLongPoint(spark: SparkSession, root: String,
-                         column: String, value: Long): DataFrame =
-    readWhere(spark, root, Seq(ColumnPredicate.LongPoint(column, value)))
-
-  /** STRING-range data-skipping read — [[readWhereLong]]'s sibling for
-    * lexicographic key ranges (order-id prefixes, ULID/KSUID time
-    * windows): files whose recorded string min/max cannot intersect
-    * [lo, hi] are pruned before any IO. Truncated external stats stay
-    * enclosing ([[statsOverlapStr]]); a non-ASCII bound on either side
-    * keeps the file (pruning is best-effort, the residual filter is
-    * exact).
-    */
-  def readWhereString(spark: SparkSession, root: String, column: String,
-                      lo: String, hi: String): DataFrame = {
-    require(lo <= hi, s"DeltaLog.readWhereString: empty range [$lo, $hi]")
-    readWhere(spark, root, Seq(ColumnPredicate.StringRange(column, lo, hi)))
-  }
-
-  /** [[readWhereLongPoint]]'s STRING sibling — the reference's
-    * production point-lookup shape (string `order_id`): truncated-stats
-    * range check (truncation keeps bounds enclosing, see
-    * [[statsOverlapStr]]) then the footer bloom's exact-negative
-    * answer. Files written by [[mergeKey]] carry a bloom on the merge
-    * key automatically, so the table's own upsert traffic stays
-    * point-prunable.
-    */
-  def readWhereStringPoint(spark: SparkSession, root: String,
-                           column: String, value: String): DataFrame =
-    readWhere(spark, root, Seq(ColumnPredicate.StringPoint(column, value)))
-
   /** Footer-only bloom probe: true when the file might contain ANY of
     * `keys` (LONG or STRING) in the column named `physName` — or when
     * no bloom was written (conservatively kept). On an id-mode table
@@ -3193,11 +3021,11 @@ object DeltaLog {
     * different column). One footer open per file regardless of key
     * count; data pages are never read.
     */
-  private def bloomKeepsFile(file: Path, physName: String,
-      fieldId: Option[Long], keys: Seq[Any],
+  private def bloomKeepsFile(file: org.apache.hadoop.fs.Path,
+      physName: String, fieldId: Option[Long], keys: Seq[Any],
       conf: org.apache.hadoop.conf.Configuration): Boolean = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(file.toString), conf)
+      .fromPath(file, conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       val colName = fieldId.flatMap { id =>
@@ -3241,16 +3069,6 @@ object DeltaLog {
     } finally r.close()
   }
 
-  /** Declared column-mapping field id of `column` on an id-mode table
-    * (None otherwise) — the footer-resolution key [[bloomKeepsFile]]
-    * needs where stored names are not authoritative.
-    */
-  private def fieldIdOf(st: LogState, column: String): Option[Long] =
-    if (mappingMode(st) != "id") None
-    else st.schema.flatMap(_.fields.find(_.name == column))
-      .filter(_.metadata.contains(ColumnIdKey))
-      .map(_.metadata.getLong(ColumnIdKey))
-
   /** Copy-on-write DELETE of rows with `column` in [lo, hi] over the
     * current snapshot, committed as `remove`+`add` with
     * `dataChange=true`. File-skipping applies BEFORE any IO: only files
@@ -3292,8 +3110,9 @@ object DeltaLog {
       }
     } else {
       val dataSchema = StructType(schema.filterNot(f => pcSet(f.name)))
-      val overlapping = st.files
-        .filter { case (p, _) => statsOverlap(st, p, column, lo, hi) }
+      val inRange = Seq(statsBetween(st, column, lo, hi))
+      val overlapping = st.files.filter { case (rel, _) => mightSatisfy(
+        inRange, dataPath(root, rel), st.fileStats.get(rel), Map.empty, conf) }
       val matches = col(column) >= lo && col(column) <= hi
       // stats say overlap, but overlap ≠ match: rewriting a file no row
       // of which matches would poison any later readAppendsSince over
@@ -3395,8 +3214,9 @@ object DeltaLog {
         "metadata — use deleteWhereLong")
     val dataSchema = StructType(schema.filterNot(f => pcSet(f.name)))
     val conf = spark.sparkContext.hadoopConfiguration
-    val overlapping = st.files
-      .filter { case (p, _) => statsOverlap(st, p, column, lo, hi) }
+    val inRange = Seq(statsBetween(st, column, lo, hi))
+    val overlapping = st.files.filter { case (rel, _) => mightSatisfy(
+      inRange, dataPath(root, rel), st.fileStats.get(rel), Map.empty, conf) }
     val actions = Seq.newBuilder[JsonNode]
     val dvUuid = java.util.UUID.randomUUID()
     val dvFile = Paths.get(root, Dv.dvFileName(dvUuid))
@@ -3512,8 +3332,9 @@ object DeltaLog {
     val assignments = set.toSeq.sortBy(_._1) ++
       gens.map { case (c, g) => c -> expr(g) }
     val conf = spark.sparkContext.hadoopConfiguration
-    val overlapping = st.files
-      .filter { case (p, _) => statsOverlap(st, p, column, lo, hi) }
+    val inRange = Seq(statsBetween(st, column, lo, hi))
+    val overlapping = st.files.filter { case (rel, _) => mightSatisfy(
+      inRange, dataPath(root, rel), st.fileStats.get(rel), Map.empty, conf) }
     if (overlapping.isEmpty) return v
     val matches = col(column) >= lo && col(column) <= hi
     // stats overlap ≠ rows match: rewriting an unmatched file would
@@ -3634,87 +3455,39 @@ object DeltaLog {
     * its inserts like any append. No-op (no commit) on an empty
     * source. Returns the table version afterwards.
     */
-  /** Candidate file set of a [[mergeKey]] probe — stacked METADATA-ONLY
-    * pruning so a point upsert into a 100 TB table opens only files
-    * that can hold a matching key:
-    * (1) footer-stats RANGE prune: numeric min/max for INTEGRAL keys
-    *     (long/int/short/byte — int stats are JSON numbers like long
-    *     stats), ISO-string min/max for DATE keys
-    *     ([[statsOverlapDate]]), exact BigDecimal min/max for DECIMAL
-    *     keys ([[statsOverlapDec]]), lexicographic min/max for STRING
-    *     keys (external writers truncate string stats, but truncated
-    *     bounds stay ENCLOSING — [[statsOverlapStr]] — so pruning is
-    *     exact; guarded to ASCII bounds where every ordering in play
-    *     agrees);
-    * (2) footer BLOOM exact-negative point prune when the source key
-    *     set is enumerable ([[mergeBloomMaxKeys]]) and the key type is
-    *     [[bloomProbeable]] (integral/date keys hash by the file's OWN
-    *     physical INT32/INT64 form, strings as UTF-8 binary): on an
-    *     UNSORTED key stats prune nothing — the bloom is what keeps a
-    *     point merge from scanning the whole table. Files [[mergeKey]]
-    *     itself wrote carry a key bloom by construction; files without
-    *     one are conservatively kept.
-    * Other key types skip both layers (the exact semi-join probe then
-    * reads the key column of every active file). IO here is footer
-    * bytes ∝ candidate count, never data pages.
+  /** Candidate file set of a [[mergeKey]] probe, from metadata only, so
+    * a point upsert into a 100 TB table opens only files that can hold a
+    * matching key: [[mightSatisfy]] keeps the files whose stats overlap
+    * `key BETWEEN min AND max` of the source keys, then, when the key
+    * set is enumerable ([[mergeBloomMaxKeys]]) and the key type is
+    * [[bloomProbeable]], the survivors that `key IN (keys)` keeps by
+    * stats and footer bloom. On an UNSORTED key stats prune nothing and
+    * the bloom is what keeps a point merge from scanning the whole table;
+    * files [[mergeKey]] itself wrote carry a key bloom by construction.
+    * IO here is footer bytes ∝ candidate count, never data pages.
     */
   private[lake] def mergeCandidates(spark: SparkSession, root: String,
       st: LogState, key: String, srcKeys: DataFrame,
       srcRows: Long): Seq[(String, Map[String, String])] = {
     import org.apache.spark.sql.functions.{min => fmin, max => fmax}
     val conf = spark.sparkContext.hadoopConfiguration
-    val keyType = st.schema.map(_.apply(key).dataType).getOrElse(NullType)
-    val ranged: Seq[(String, Map[String, String])] = keyType match {
-      case LongType | IntegerType | ShortType | ByteType =>
-        // ALL integral keys prune through the numeric stats range —
-        // int/short/byte stats are JSON numbers like long stats, and
-        // the reference's own dimension keys are ints (an int surrogate
-        // key must not degrade to a full-table probe)
-        val kr = srcKeys
-          .agg(fmin(col(key).cast(LongType)), fmax(col(key).cast(LongType)))
-          .head()
-        if (kr.isNullAt(0)) Nil // all-NULL keys: pure insert
-        else st.files.filter { case (rel, _) =>
-          statsOverlap(st, rel, key, kr.getLong(0), kr.getLong(1)) }
-      case DateType =>
-        // date stats render as ISO strings in Delta stats JSON;
-        // ISO order == date order (see [[statsOverlapDate]])
-        val kr = srcKeys.agg(fmin(col(key)), fmax(col(key))).head()
-        if (kr.isNullAt(0)) Nil
-        else st.files.filter { case (rel, _) =>
-          statsOverlapDate(st, rel, key,
-            kr.getDate(0).toLocalDate.toString,
-            kr.getDate(1).toLocalDate.toString) }
-      case _: DecimalType =>
-        // decimal stats are JSON numbers — exact BigDecimal compare
-        val kr = srcKeys.agg(fmin(col(key)), fmax(col(key))).head()
-        if (kr.isNullAt(0)) Nil
-        else st.files.filter { case (rel, _) =>
-          statsOverlapDec(st, rel, key, kr.getDecimal(0), kr.getDecimal(1)) }
-      case StringType =>
-        val kr = srcKeys.agg(fmin(col(key)), fmax(col(key))).head()
-        if (kr.isNullAt(0)) Nil
-        else {
-          val (lo, hi) = (kr.getString(0), kr.getString(1))
-          // Spark's min/max order strings by UTF-8 bytes; for ASCII
-          // bounds that coincides with the stats comparison's order
-          if (lo.forall(_ < 0x80) && hi.forall(_ < 0x80))
-            st.files.filter { case (rel, _) =>
-              statsOverlapStr(st, rel, key, lo, hi) }
-          else st.files
-        }
-      case _ => if (srcKeys.isEmpty) Nil else st.files
-    }
-    if (!bloomProbeable(keyType) || ranged.isEmpty ||
-        srcRows > mergeBloomMaxKeys) ranged
+    val fieldIds = st.schema.map(physFieldIds(st, _)).getOrElse(Map.empty)
+    def kept(files: Seq[(String, Map[String, String])], pred: Expression) =
+      files.filter { case (rel, _) => mightSatisfy(Seq(pred),
+        dataPath(root, rel), st.fileStats.get(rel), fieldIds, conf) }
+    val a = statsColumn(st, key)
+    val kr = srcKeys.agg(fmin(col(key)), fmax(col(key))).head()
+    if (kr.isNullAt(0)) Nil // all-NULL keys: pure insert
     else {
+      val ranged = kept(st.files, And(
+        GreaterThanOrEqual(a, Literal.create(kr.get(0), a.dataType)),
+        LessThanOrEqual(a, Literal.create(kr.get(1), a.dataType))))
+      if (ranged.isEmpty || !bloomProbeable(a.dataType) ||
+          srcRows > mergeBloomMaxKeys) ranged
       // srcRows bounds the key count, so this collect is point/batch
       // sized by the gate above — never a bulk upsert's key set
-      val keys = srcKeys.collect().map(r => normalizeBloomKey(r.get(0)))
-      val physKey = statsKeyOf(st, key)
-      val fid = fieldIdOf(st, key)
-      ranged.filter { case (rel, _) =>
-        bloomKeepsFile(resolvePath(root, rel), physKey, fid, keys, conf) }
+      else kept(ranged, In(a, srcKeys.collect()
+        .map(r => Literal.create(r.get(0), a.dataType)).toSeq))
     }
   }
 
@@ -3729,20 +3502,6 @@ object DeltaLog {
     case LongType | IntegerType | ShortType | ByteType | DateType |
          StringType => true
     case _ => false
-  }
-
-  /** Collected driver value of a probeable key → the [[bloomKeepsFile]]
-    * probe form: every integral (and date, as epoch days — parquet's
-    * own DATE representation) normalizes to java.lang.Long; the probe
-    * re-narrows by the FILE's physical type.
-    */
-  private def normalizeBloomKey(v: Any): Any = v match {
-    case i: java.lang.Integer => java.lang.Long.valueOf(i.longValue())
-    case s: java.lang.Short => java.lang.Long.valueOf(s.longValue())
-    case b: java.lang.Byte => java.lang.Long.valueOf(b.longValue())
-    case d: java.sql.Date => java.lang.Long.valueOf(d.toLocalDate.toEpochDay)
-    case d: java.time.LocalDate => java.lang.Long.valueOf(d.toEpochDay)
-    case other => other
   }
 
   /** Test seam: the pruned candidate rel set a [[mergeKey]] of `source`
@@ -3808,7 +3567,7 @@ object DeltaLog {
       // every file a merge writes carries a BLOOM on the merge key
       // (adaptive sizing: parquet picks the smallest candidate filter
       // covering the file's actual NDV), so the NEXT point merge or
-      // readWhere*Point prunes this table's own upsert traffic without
+      // point read prunes this table's own upsert traffic without
       // relying on external writers to have indexed the key. Only for
       // key types the prune layers can actually probe (~0.2-0.4 s
       // local fixed cost per merge, bought back at the first point
@@ -5082,9 +4841,8 @@ object DeltaLog {
       })
       // Emit min/max ONLY for values whose JSON rendering preserves the
       // comparator's ordering: plain numerics/booleans, int-annotated
-      // ints, DATE ints (rendered ISO, Delta's own form — lexicographic
-      // order == date order for 4-digit years), int-backed DECIMALs
-      // (rendered as scaled JSON numbers, Delta's own form), and
+      // ints, DATE ints (rendered ISO, Delta's own form), int-backed
+      // DECIMALs (rendered as scaled JSON numbers, Delta's own form), and
       // pure-ASCII utf8 strings (ASCII ⇒ unsigned-byte order ==
       // code-point order == JSON string order). FLBA-backed decimals,
       // timestamps and non-ASCII strings are omitted — the way Delta
@@ -5107,8 +4865,7 @@ object DeltaLog {
           case i: java.lang.Integer if plainOrInt => Some(i)
           case i: java.lang.Integer
             if ann.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation] =>
-            val d = java.time.LocalDate.ofEpochDay(i.longValue()).toString
-            if (IsoDateRe.matches(d)) Some(d) else None
+            Some(java.time.LocalDate.ofEpochDay(i.longValue()).toString)
           case l: java.lang.Long
             if ann.isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation] =>
             dec(l.longValue())
@@ -5214,7 +4971,7 @@ object DeltaLog {
       mergeSchema, writeOptions)
 
   /** Parquet writer options enabling a BLOOM FILTER on each column —
-    * the per-file point-lookup index [[readWhereLongPoint]] consults:
+    * the per-file point-lookup index [[mightSatisfy]] consults:
     * on an UNSORTED column min/max stats cannot prune (every file
     * spans the range), but the bloom answers "definitely absent" from
     * footer bytes alone. Pass to `commitFlat(writeOptions = …)`;
@@ -5782,7 +5539,7 @@ object DeltaLog {
     * so append tails skip the commit and every earlier version stays
     * time-travelable until vacuum. Each new file covers a contiguous
     * Morton run = a small (x, y) rectangle, so its footer min/max are
-    * NARROW on both dimensions and [[readWhereLong]]/external
+    * NARROW on both dimensions and [[read]]'s file index/external
     * data-skipping readers prune selective reads on EITHER column —
     * the reason to Z-order at all. Deletion vectors are APPLIED and
     * cleared (Delta's own OPTIMIZE does the same), and shallow-cloned

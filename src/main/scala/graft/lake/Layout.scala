@@ -71,8 +71,9 @@ object Layout {
     * the manifest records row count and min/max of BOTH dimension keys.
     * Because the Morton curve keeps each contiguous run a small (x, y)
     * rectangle, both ranges stay narrow — which is exactly what makes a
-    * selective filter on EITHER column prune tiles ([[skippingRead]]
-    * consumes the same stats at file grain).
+    * selective filter on EITHER column prune tiles (a Delta table's
+    * file index prunes on the same stats at file grain, see
+    * [[DeltaLog.optimizeZOrder]]).
     *
     * One map-side-combinable groupBy on a row-local key; the manifest is
     * ≤ 2^tileBits rows regardless of table size — the fixed-size summary
@@ -90,56 +91,6 @@ object Layout {
       .agg(count(lit(1)).as("n_rows"),
         min(col("__x")).as("min_x"), max(col("__x")).as("max_x"),
         min(col("__y")).as("min_y"), max(col("__y")).as("max_y"))
-  }
-
-  /** Per-file min/max stats of `statsCols` for a written parquet table —
-    * the manifest [[skippingRead]] prunes against. One scan, one tiny
-    * groupBy keyed on file name (one row per file).
-    */
-  def fileManifest(spark: org.apache.spark.sql.SparkSession, path: String,
-                   statsCols: Seq[String]): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"),
-        statsCols.flatMap(c =>
-          Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))): _*)
-
-  /** Read `path` with file-level data skipping on `keyCol` ∈ [lo, hi]:
-    * consult the manifest, open only files whose [min, max] overlaps the
-    * predicate, then apply the exact filter to the survivors. The
-    * manifest pass reads ONLY the stats column (column-pruned scan); the
-    * collected file list is one row per file — bounded by layout
-    * granularity, not data size (the same driver-side footprint as
-    * Spark's own file listing). On a [[zorderWrite]] layout a selective
-    * range on either Z dimension opens a small fraction of files — the
-    * read-side payoff of the write-side clustering (spec-asserted:
-    * equals the full scan, touches fewer files).
-    */
-  def skippingRead(spark: org.apache.spark.sql.SparkSession, path: String,
-                   keyCol: String, lo: Long, hi: Long): DataFrame =
-    skippingRead(spark, path, Seq((keyCol, lo, hi)))
-
-  /** Multi-predicate variant: prune by EVERY `(col, lo, hi)` range at
-    * once. On a Z-ordered layout this is where the clustering pays
-    * twice — a 2-D box predicate intersects both per-file ranges, so the
-    * surviving file set is roughly the PRODUCT of the two selectivities
-    * (spec-asserted: the 2-D box opens fewer files than either 1-D
-    * range alone).
-    */
-  def skippingRead(spark: org.apache.spark.sql.SparkSession, path: String,
-                   preds: Seq[(String, Long, Long)]): DataFrame = {
-    require(preds.nonEmpty, "skippingRead: at least one (col, lo, hi) predicate")
-    val overlap = preds.map { case (c, lo, hi) =>
-      col(s"min_$c") <= lit(hi) && col(s"max_$c") >= lit(lo) }.reduce(_ && _)
-    val files = fileManifest(spark, path, preds.map(_._1).distinct)
-      .filter(overlap)
-      .select(col("file")).collect().map(_.getString(0)).toIndexedSeq
-    val residual = preds.map { case (c, lo, hi) =>
-      col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
-    if (files.isEmpty)
-      spark.read.parquet(path).filter(lit(false))
-    else
-      spark.read.parquet(files: _*).filter(residual)
   }
 
   /** Rendezvous (highest-random-weight, Thaler & Ravishankar 1998) shard

@@ -20,6 +20,9 @@ object SparkSpec {
     GraftSession.configure(s)
   }
   val sfDir = "/root/testdata/sf0.001"
+  /** Plan traversal that descends into adaptive query stages. */
+  object plans
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 }
 
 abstract class SparkSpec extends AnyFunSuite {
@@ -57,6 +60,22 @@ abstract class SparkSpec extends AnyFunSuite {
     try { body; flushListeners() }
     finally spark.sparkContext.removeSparkListener(l)
     n.get()
+  }
+
+  /** Files actually SCANNED by `df`'s executed plan (sum of the file
+    * scans' numFiles metrics, inside adaptive query stages too), after
+    * collecting it. A Delta read's file index prunes at planning — by
+    * partition values, stats and footer blooms — which
+    * `DataFrame.inputFiles` (the whole snapshot) never shows. Pass a
+    * DataFrame not yet executed: a re-executed scan does not list its
+    * files again, so its numFiles reads 0.
+    */
+  protected def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    SparkSpec.plans.collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.metrics.get("numFiles").map(_.value).getOrElse(0L)
+    }.sum
   }
 
   /** Spark jobs started by `body` — a timing-free cost contract. */

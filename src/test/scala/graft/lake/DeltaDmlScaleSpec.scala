@@ -118,13 +118,16 @@ class DeltaDmlScaleSpec extends SparkSpec {
     assert(candSorted.size == 1,
       s"sorted string layout must stats-prune to 1 file, got " +
         s"${candSorted.size}")
-    // the public string-RANGE read prunes on the same stats
-    val ranged = DeltaLog.readWhereString(spark, sortedRoot, "k",
-      "id-07-000", "id-07-999")
-    assert(ranged.inputFiles.length == 1,
-      s"string range read must open 1 of 16 files, got " +
-        s"${ranged.inputFiles.length}")
-    assert(ranged.count() == 100L)
+    // the public string-RANGE read prunes on the same stats, in the
+    // job count of an unpruned read (the index prunes at planning)
+    def ranged = DeltaLog.read(spark, sortedRoot)
+      .where(col("k").between("id-07-000", "id-07-999"))
+    val nRanged = scannedFiles(ranged)
+    assert(nRanged == 1L,
+      s"string range read must open 1 of 16 files, got $nRanged")
+    var n = 0L
+    assert(countJobs { n = ranged.count() } == 2)
+    assert(n == 100L)
     // layout B: keys HASH-spread across 16 files so every stats range
     // spans the whole key space — the per-file BLOOM is what prunes
     val hashedRoot = freshRoot() + "-hashed"
@@ -132,6 +135,12 @@ class DeltaDmlScaleSpec extends SparkSpec {
     DeltaLog.commitFlat(spark, hashedRoot, all.toDF("k", "x")
       .repartition(16), writeOptions = DeltaLog.bloomOptions(Seq("k")))
     assert(DeltaLog.filesAt(spark, hashedRoot, 0L).size == 16)
+    // the bloom-pruned point read: footer probes run during planning,
+    // outside any Spark job, so it adds no job
+    def point = DeltaLog.read(spark, hashedRoot).where(col("k") === "ord-0042")
+    assert(scannedFiles(point) <= 3L)
+    assert(countJobs { n = point.count() } == 2)
+    assert(n == 1L)
     val candHashed = DeltaLog.mergeCandidateRels(spark, hashedRoot, "k",
       Seq(("ord-0042", -1L)).toDF("k", "x"))
     assert(candHashed.size <= 3,
@@ -168,8 +177,8 @@ class DeltaDmlScaleSpec extends SparkSpec {
     } finally r.close()
     assert(hasBloom, "merge output must carry a bloom on the merge key")
     // point lookup through the public surface agrees
-    assert(DeltaLog.readWhereStringPoint(spark, hashedRoot, "k", "ord-0042")
-      .as[(String, Long)].collect().toSeq == Seq(("ord-0042", -42L)))
+    assert(point.as[(String, Long)].collect().toSeq ==
+      Seq(("ord-0042", -42L)))
   }
 
   test("INT-key point merge prunes candidates to O(matching) files: " +
@@ -212,7 +221,7 @@ class DeltaDmlScaleSpec extends SparkSpec {
     assert(cand2.size <= 3,
       s"merge-written int files must stay bloom-prunable, got ${cand2.size}")
     // the long-point public read probes the INT32 bloom correctly
-    assert(DeltaLog.readWhereLongPoint(spark, hashedRoot, "k", 42L)
+    assert(DeltaLog.read(spark, hashedRoot).where(col("k") === 42)
       .as[(Int, Long)].collect().toSeq == Seq((42, -42L)))
   }
 

@@ -69,19 +69,6 @@ class DeltaLogSpec extends SparkSpec {
     Files.move(part, Paths.get(root, name), StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Files actually SCANNED by the executed plan (sum of file-scan
-    * numFiles metrics) — every read is ONE log-backed relation whose
-    * file index prunes partitions at planning, invisible to
-    * `DataFrame.inputFiles`.
-    */
-  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-    df.collect()
-    df.queryExecution.executedPlan.collectLeaves().collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.metrics.get("numFiles").map(_.value).getOrElse(0L)
-    }.sum
-  }
-
   private def writeCommit(root: String, v: Long, lines: Seq[String]): Unit = {
     Files.createDirectories(Paths.get(root, "_delta_log"))
     Files.write(Paths.get(root, "_delta_log", f"$v%020d.json"),
@@ -295,7 +282,8 @@ class DeltaLogSpec extends SparkSpec {
       assert(rows(DeltaLog.read(spark, root)) == driverRows)
       assert(DeltaLog.statsCount(spark, root).collect()
         .map(r => (r.getLong(0), r.getLong(1))).head == driverCount)
-      assert(rows(DeltaLog.readWhereLong(spark, root, "k", 905L, 999L))
+      assert(rows(DeltaLog.read(spark, root)
+        .where(col("k").between(905L, 999L)))
         == driverRows.filter(t => t._1 >= 905L))
     } finally DeltaLog.distributedReplayCheckpointBytes = saved
   }
@@ -880,8 +868,8 @@ class DeltaLogSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     val pre = all(DeltaLog.read(spark, root))
     assert(pre.size == 4 * 64 - 4)
-    val filesBefore = DeltaLog.readWhereLong(spark, root, "x", 0L, 7L)
-      .inputFiles.length
+    val filesBefore = scannedFiles(DeltaLog.read(spark, root)
+      .where(col("x").between(0L, 7L)))
     assert(filesBefore == 4, "every pre-optimize file overlaps [0,7]")
     val vOpt = DeltaLog.optimizeZOrder(spark, root, "x", "y", 6, 4)
     assert(vOpt == vPre + 1)
@@ -892,8 +880,8 @@ class DeltaLogSpec extends SparkSpec {
     assert(lines.filter(_.contains("\"add\""))
       .forall(!_.contains("deletionVector")), "OPTIMIZE must clear DVs")
     // narrow per-file x ranges now prune the selective read
-    val filesAfter = DeltaLog.readWhereLong(spark, root, "x", 0L, 7L)
-      .inputFiles.length
+    val filesAfter = scannedFiles(DeltaLog.read(spark, root)
+      .where(col("x").between(0L, 7L)))
     assert(filesAfter < filesBefore && filesAfter <= 2,
       s"$filesBefore -> $filesAfter")
     // pre-optimize versions stay travelable; the append tail skips it
@@ -996,7 +984,6 @@ class DeltaLogSpec extends SparkSpec {
     "long-range conjunction scans FEWER files than either predicate " +
     "alone; rows are the exact conjunction") {
     import spark.implicits._
-    import DeltaLog.ColumnPredicate._
     val root = freshRoot()
     // 4 partitions × 4 disjoint-range files each = 16 files: the range
     // predicate alone keeps one file PER partition (4), the partition
@@ -1011,12 +998,11 @@ class DeltaLogSpec extends SparkSpec {
     }
     assert(DeltaLog.filesAt(spark, root,
       DeltaLog.currentVersion(root)).size == 16)
-    val rangeOnly = DeltaLog.readWhere(spark, root,
-      Seq(LongRange("k", 150, 160)))
-    val partOnly = DeltaLog.readWhere(spark, root,
-      Seq(PartitionEquals("bucket", Some("b2"))))
-    val both = DeltaLog.readWhere(spark, root,
-      Seq(LongRange("k", 150, 160), PartitionEquals("bucket", Some("b2"))))
+    val range = col("k").between(150, 160)
+    val part = col("bucket") === "b2"
+    val rangeOnly = DeltaLog.read(spark, root).where(range)
+    val partOnly = DeltaLog.read(spark, root).where(part)
+    val both = DeltaLog.read(spark, root).where(range && part)
     val (nRange, nPart, nBoth) =
       (scannedFiles(rangeOnly), scannedFiles(partOnly), scannedFiles(both))
     assert(nRange == 4L, s"range-only scanned $nRange files")
@@ -1026,27 +1012,17 @@ class DeltaLogSpec extends SparkSpec {
         s"either single-column prune ($nRange / $nPart)")
     assert(both.select("k").as[Long].collect().toSet ==
       (150L to 160L).toSet)
-    // the bloom point layer composes too: point × partition opens only
-    // bloom-kept files of the one partition
-    val pointBoth = DeltaLog.readWhere(spark, root,
-      Seq(LongPoint("k", 155L), PartitionEquals("bucket", Some("b1"))))
+    // the point layer composes too: point × partition opens only the
+    // kept files of the one partition
+    val pointBoth = DeltaLog.read(spark, root)
+      .where(col("k") === 155L && col("bucket") === "b1")
     assert(scannedFiles(pointBoth) <= 1L)
     assert(pointBoth.select("k").as[Long].collect().toSeq == Seq(155L))
-    // loud contracts: a data predicate on a partition column, and a
-    // partition predicate on a data column, both refuse
-    assert(intercept[IllegalArgumentException] {
-      DeltaLog.readWhere(spark, root, Seq(LongRange("bucket", 0, 1)))
-    }.getMessage.contains("PartitionEquals"))
-    assert(intercept[IllegalArgumentException] {
-      DeltaLog.readWhere(spark, root,
-        Seq(PartitionEquals("k", Some("1"))))
-    }.getMessage.contains("not a partition column"))
   }
 
   test("readWhere DateRange prunes through ISO-rendered date stats; " +
     "vacuumDryRun reports without deleting") {
     import spark.implicits._
-    import DeltaLog.ColumnPredicate._
     val root = freshRoot()
     (0 until 4).foreach { i =>
       val base = java.time.LocalDate.of(2022, 1, 1).plusMonths(i * 3L)
@@ -1055,9 +1031,9 @@ class DeltaLogSpec extends SparkSpec {
           (java.sql.Date.valueOf(base.plusDays(j.toLong)), j.toLong))
           .toDF("d", "x").coalesce(1))
     }
-    val ranged = DeltaLog.readWhere(spark, root, Seq(DateRange("d",
-      java.time.LocalDate.of(2022, 4, 5),
-      java.time.LocalDate.of(2022, 4, 20))))
+    val ranged = DeltaLog.read(spark, root).where(col("d").between(
+      java.sql.Date.valueOf("2022-04-05"),
+      java.sql.Date.valueOf("2022-04-20")))
     assert(scannedFiles(ranged) == 1L,
       "date range must stats-prune to the one covering file")
     assert(ranged.count() == 16L)
@@ -1075,7 +1051,6 @@ class DeltaLogSpec extends SparkSpec {
   test("readWhere IsNull/IsNotNull prune through recorded nullCount " +
     "and compose with range conjuncts") {
     import spark.implicits._
-    import DeltaLog.ColumnPredicate._
     val root = freshRoot()
     // three one-file commits: all-present, mixed, all-null
     DeltaLog.commitFlat(spark, root,
@@ -1086,20 +1061,20 @@ class DeltaLogSpec extends SparkSpec {
     DeltaLog.commitFlat(spark, root,
       Seq((Option.empty[Long], "c"), (Option.empty[Long], "c"))
         .toDF("k", "v").coalesce(1))
-    val nulls = DeltaLog.readWhere(spark, root, Seq(IsNull("k")))
+    val nulls = DeltaLog.read(spark, root).where(col("k").isNull)
     assert(scannedFiles(nulls) == 2L,
       "IS NULL must skip the zero-nullCount file")
     assert(nulls.select("v").as[String].collect().sorted.toSeq ==
       Seq("b", "c", "c"))
-    val notNulls = DeltaLog.readWhere(spark, root, Seq(IsNotNull("k")))
+    val notNulls = DeltaLog.read(spark, root).where(col("k").isNotNull)
     assert(scannedFiles(notNulls) == 2L,
       "IS NOT NULL must skip the all-null file")
     assert(notNulls.select("k").as[Long].collect().toSet ==
       Set(1L, 2L, 3L))
     // conjunction: IS NOT NULL × range [1,2] — the null layer drops
     // the all-null file, the range layer drops the mixed file (min 3)
-    val both = DeltaLog.readWhere(spark, root,
-      Seq(IsNotNull("k"), LongRange("k", 1L, 2L)))
+    val both = DeltaLog.read(spark, root)
+      .where(col("k").isNotNull && col("k").between(1L, 2L))
     assert(scannedFiles(both) == 1L)
     assert(both.select("k").as[Long].collect().toSet == Set(1L, 2L))
   }
@@ -1107,7 +1082,6 @@ class DeltaLogSpec extends SparkSpec {
   test("readWhere LongIn/StringIn prune per listed value: stats drop " +
     "files no value lands in, footer blooms drop in-range non-owners") {
     import spark.implicits._
-    import DeltaLog.ColumnPredicate._
     // stats layer: four files with DISJOINT key ranges — an IN list
     // touching two of them scans exactly two
     val ranged = freshRoot()
@@ -1116,8 +1090,8 @@ class DeltaLogSpec extends SparkSpec {
         (i * 100 until i * 100 + 100).map(k => (k.toLong, s"f$i"))
           .toDF("k", "v").coalesce(1))
     }
-    val two = DeltaLog.readWhere(spark, ranged,
-      Seq(LongIn("k", Seq(5L, 310L, 315L))))
+    val two = DeltaLog.read(spark, ranged)
+      .where(col("k").isin(5L, 310L, 315L))
     assert(scannedFiles(two) == 2L,
       "stats must keep only the two files the IN list lands in")
     assert(two.select("k").as[Long].collect().toSet ==
@@ -1132,15 +1106,15 @@ class DeltaLogSpec extends SparkSpec {
           .coalesce(1),
         writeOptions = DeltaLog.bloomOptions(Seq("k"), ndv = 64))
     }
-    val owners = DeltaLog.readWhere(spark, hashed,
-      Seq(LongIn("k", Seq(128L, 129L, 6L)))) // residues 0, 1, absent
+    val owners = DeltaLog.read(spark, hashed)
+      .where(col("k").isin(128L, 129L, 6L)) // residues 0, 1, absent
     assert(scannedFiles(owners) == 2L,
       "blooms must keep only the owner files of listed values")
     assert(owners.select("k").as[Long].collect().toSet ==
       Set(128L, 129L))
-    // StringIn: same layers on a string key; a non-ASCII value keeps
-    // files at the stats layer (truncation guard) but the bloom still
-    // answers exactly, and the residual filter stays correct
+    // a string IN: same layers on a string key; a non-ASCII value
+    // keeps files at the stats layer (truncation guard) but the bloom
+    // still answers exactly, and the filter itself stays correct
     val named = freshRoot()
     (0 until 3).foreach { i =>
       DeltaLog.commitFlat(spark, named,
@@ -1148,18 +1122,117 @@ class DeltaLogSpec extends SparkSpec {
           .coalesce(1),
         writeOptions = DeltaLog.bloomOptions(Seq("name"), ndv = 32))
     }
-    val sIn = DeltaLog.readWhere(spark, named,
-      Seq(StringIn("name", Seq("u0-5", "u2-7", "absent-é"))))
+    val sIn = DeltaLog.read(spark, named)
+      .where(col("name").isin("u0-5", "u2-7", "absent-é"))
     assert(scannedFiles(sIn) == 2L,
       "string IN must scan only the owners (bloom is byte-exact even " +
         "for the non-ASCII miss)")
     assert(sIn.select("name").as[String].collect().toSet ==
       Set("u0-5", "u2-7"))
-    // empty value lists refuse loudly
-    assert(intercept[IllegalArgumentException](
-      LongIn("k", Seq.empty)).getMessage.contains("empty"))
-    assert(intercept[IllegalArgumentException](
-      StringIn("name", Seq.empty)).getMessage.contains("empty"))
+  }
+
+  test("file skipping is sound: read().where(p) returns the locally " +
+    "filtered rows for every predicate shape, and the shapes the rule " +
+    "understands scan fewer files") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(919L)
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("i", IntegerType), StructField("dec", DecimalType(12, 2)),
+      StructField("d", DateType), StructField("s", StringType),
+      StructField("ts", TimestampType), StructField("dbl", DoubleType),
+      StructField("b", BooleanType), StructField("p", StringType)))
+    val day0 = java.time.LocalDate.of(2021, 1, 1)
+    // one file's rows: k = lo..lo+24 shuffled, the other columns follow
+    // k, so every file's ranges are disjoint; `kind` marks the odd files
+    def fileRows(lo: Long, p: String, kind: String = ""): Seq[Row] =
+      rnd.shuffle((lo until lo + 25).toList).map { k =>
+        Row(k,
+          if (kind == "nullI" || (kind == "mixed" && k % 3 == 0)) null
+          else Int.box((k % 7).toInt),
+          java.math.BigDecimal.valueOf(k * 25, 2),
+          java.sql.Date.valueOf(
+            if (kind == "farDates") java.time.LocalDate.of(10000, 1, 1)
+              .plusDays(k % 25)
+            else day0.plusDays(k)),
+          if (kind == "nonAscii") s"é-$k" else f"s-$k%04d",
+          new java.sql.Timestamp(k * 1000L),
+          if (kind == "mixed" && rnd.nextBoolean()) Double.NaN else k / 3.0,
+          Boolean.box(rnd.nextBoolean()), p)
+      }
+    def frame(rows: Seq[Row]) =
+      spark.createDataFrame(rows.asJava, schema).coalesce(1)
+    val kinds = Map((1, "x") -> "nullI", (1, "y") -> "mixed",
+      (2, "x") -> "nonAscii", (3, "y") -> "farDates")
+    val root = freshRoot()
+    (0 until 4).foreach { c =>
+      DeltaLog.commitPartitioned(spark, root, frame(Seq("x", "y").flatMap(p =>
+        fileRows(c * 100L + (if (p == "y") 50L else 0L), p,
+          kinds.getOrElse((c, p), "")))), Seq("p"))
+    }
+    DeltaLog.deleteWhereLongDV(spark, root, "k", 10L, 14L)
+    // two external adds: truncated (still enclosing) string stats, and
+    // no stats at all
+    val trunc = fileRows(900L, "x").sortBy(_.getLong(0)).zip(Seq(
+      "trunc-aaaa-long", "trunc-mmmm-long", "trunc-zzzz-long"))
+      .map { case (r, s) => Row.fromSeq(r.toSeq.updated(4, s)) }
+    writeFlat(root, "p=x/ext-trunc.parquet", frame(trunc).drop("p"))
+    writeFlat(root, "p=y/ext-nostats.parquet",
+      frame(fileRows(950L, "y")).drop("p"))
+    val stats = """{"numRecords":3,"minValues":{"k":900,"s":"trunc-a"},""" +
+      """"maxValues":{"k":902,"s":"trunc-{"},"nullCount":{"k":0,"i":0}}"""
+    val v = DeltaLog.currentVersion(root)
+    writeCommit(root, v + 1, Seq(
+      s"""{"add":{"path":"p=x/ext-trunc.parquet","partitionValues":{"p":"x"},"size":1,"modificationTime":1,"dataChange":true,"stats":"${stats.replace("\"", "\\\"")}"}}""",
+      """{"add":{"path":"p=y/ext-nostats.parquet","partitionValues":{"p":"y"},"size":1,"modificationTime":1,"dataChange":true}}"""))
+    val total = DeltaLog.filesAt(spark, root, v + 1).size.toLong
+    assert(total == 10L)
+    val unpruned = DeltaLog.read(spark, root).collect()
+    assert(unpruned.length == 8 * 25 - 5 + 3 + 25)
+    val local = spark.createDataFrame(unpruned.toList.asJava,
+      DeltaLog.read(spark, root).schema)
+    def check(p: org.apache.spark.sql.Column): Long = {
+      val df = DeltaLog.read(spark, root).where(p)
+      val n = scannedFiles(df)
+      assert(df.collect().map(_.toString).sorted.toSeq ==
+        local.where(p).collect().map(_.toString).sorted.toSeq,
+        s"rows differ under $p")
+      n
+    }
+    def day(n: Int) = java.sql.Date.valueOf(day0.plusDays(n.toLong))
+    // bounds sit on recorded min/max values where they can: an
+    // off-by-one in the rule loses rows there
+    val pruned = Seq(
+      col("k") === 150L, col("k") === 124L, lit(205L) === col("k"),
+      col("k") < 20L, lit(20L) > col("k"), col("k") <= 250L,
+      col("k") > 323L, col("k") >= 374L, lit(374L) <= col("k"),
+      col("k").between(150L, 160L), col("k").between(10L, 12L),
+      col("k").isin(5L, 50L, 224L, 960L),
+      col("k").isin((300L to 320L): _*), col("i").isNull,
+      col("i").isNotNull, col("i") > 100, col("k") < 10L || col("k") > 370L,
+      col("k") > 100L && col("dec") < new java.math.BigDecimal("40.00"),
+      col("dec").between(new java.math.BigDecimal("25.00"),
+        new java.math.BigDecimal("30.00")),
+      col("d").between(day(100), day(124)), col("d") === day(260),
+      col("d") > java.sql.Date.valueOf("9999-12-31"),
+      col("s") === "s-0260", col("s").between("s-0300", "s-0330"),
+      col("s") === "trunc-zzzz-long", col("s") > "trunc-b",
+      col("p") === "x" && col("k").between(100L, 400L))
+    val kept = Seq(
+      col("ts") > new java.sql.Timestamp(300000L), col("dbl") > 100.0,
+      col("dbl").isNaN, col("b") === true, col("s") === "é-205",
+      col("k").cast("string") === "205")
+    val rowsOnly = Seq(!(col("k") > 300L), col("dbl") < col("k"),
+      col("p") === "x" || col("k") > 370L, col("k") === 955L)
+    pruned.foreach { p =>
+      val n = check(p)
+      assert(n < total, s"$p scanned $n of $total files")
+    }
+    kept.foreach { p =>
+      val n = check(p)
+      assert(n == total, s"$p scanned $n of $total files")
+    }
+    rowsOnly.foreach(check)
   }
 
   test("cleanUpExpiredLogs cuts at a checkpoint boundary: expired " +
@@ -1314,9 +1387,9 @@ class DeltaLogSpec extends SparkSpec {
       .getMessage.contains("partitions"))
     // a partition-column RENAME carries partitionColumns and pruning
     DeltaLog.renameColumn(spark, parted, "bucket", "shard")
-    val pruned = DeltaLog.readWhere(spark, parted,
-      Seq(DeltaLog.ColumnPredicate.PartitionEquals("shard", Some("p0"))))
+    val pruned = DeltaLog.read(spark, parted).where(col("shard") === "p0")
     assert(pruned.select("k").as[Long].collect().toSeq == Seq(1L))
+    assert(scannedFiles(pruned) == 1L)
   }
 
   test("delta.symlinkFormatManifest.enabled regenerates manifests on " +
@@ -1633,9 +1706,9 @@ class DeltaLogSpec extends SparkSpec {
     assert(DeltaLog.read(spark, root).as[(Long, Long)].collect().toSet
       == before, "post-trim replay must equal the pre-trim snapshot")
     // stats rode the sidecar adds: the range read still prunes
-    val pruned = DeltaLog.readWhereLong(spark, root, "k", 250L, 260L)
-    assert(pruned.inputFiles.length == 1,
-      s"stats skipping must survive: ${pruned.inputFiles.length} files")
+    val pruned = scannedFiles(DeltaLog.read(spark, root)
+      .where(col("k").between(250L, 260L)))
+    assert(pruned == 1L, s"stats skipping must survive: $pruned files")
     // txn watermark survived compaction (the r15 lesson)
     assert(DeltaLog.txnWatermark(spark, root, "appA") == Some(7L))
     // configuration survived — the retention property is still declared
@@ -1830,21 +1903,21 @@ class DeltaLogSpec extends SparkSpec {
           .coalesce(1),
         writeOptions = DeltaLog.bloomOptions(Seq("k"), ndv = 64))
     }
-    val hit = DeltaLog.readWhereLongPoint(spark, root, "k", 128L)
+    val hit = DeltaLog.read(spark, root).where(col("k") === 128L)
+    val nHit = scannedFiles(hit)
+    assert(nHit == 1L, s"bloom must keep only the owner file: $nHit")
     assert(hit.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
       Set((128L, "f0-16")))
-    assert(hit.inputFiles.length == 1,
-      s"bloom must keep only the owner file: ${hit.inputFiles.toSeq}")
     // absent value (within range, wrong residue never written): 0 files
-    val miss = DeltaLog.readWhereLongPoint(spark, root, "k", 6L)
+    val miss = DeltaLog.read(spark, root).where(col("k") === 6L)
+    assert(scannedFiles(miss) == 0L)
     assert(miss.count() == 0L)
-    assert(miss.inputFiles.isEmpty, miss.inputFiles.toSeq)
     // a bloom-less commit stays conservatively readable
     DeltaLog.commitFlat(spark, root,
       Seq((6L, "late")).toDF("k", "v").coalesce(1))
-    val late = DeltaLog.readWhereLongPoint(spark, root, "k", 6L)
+    val late = DeltaLog.read(spark, root).where(col("k") === 6L)
+    assert(scannedFiles(late) == 1L)
     assert(late.collect().map(_.getString(1)).toSeq == Seq("late"))
-    assert(late.inputFiles.length == 1)
   }
 
   test("convertToDelta adopts a parquet directory in place — flat and " +
@@ -2526,22 +2599,23 @@ class DeltaLogSpec extends SparkSpec {
     val sc = DeltaLog.statsCount(spark, root).head()
     assert(sc.getLong(0) == 30L && sc.getLong(1) == 3L, sc.toString)
     // skipping: [12, 18] overlaps ONLY the middle file
-    val skipped = DeltaLog.readWhereLong(spark, root, "k", 12L, 18L)
-    assert(skipped.inputFiles.length == 1, skipped.inputFiles.mkString("|"))
+    val skipped = DeltaLog.read(spark, root)
+      .where(col("k").between(12L, 18L))
+    assert(scannedFiles(skipped) == 1L)
     assert(rows(skipped) == (12L to 18L).map(i => (i, s"v$i")).toSet)
     // a column with no stats entry is conservatively kept: bounds on v
     // (a string column) must not skip anything for a long query on k
     // spanning everything
-    assert(DeltaLog.readWhereLong(spark, root, "k", 1L, 30L)
-      .inputFiles.length == 3)
+    assert(scannedFiles(DeltaLog.read(spark, root)
+      .where(col("k").between(1L, 30L))) == 3L)
     // stats flow THROUGH the checkpoint: compact the JSON prefix away,
     // metadata count and skipping still work
     (0L to 1L).foreach(v => Files.delete(
       Paths.get(root, "_delta_log", f"$v%020d.json")))
     val sc2 = DeltaLog.statsCount(spark, root).head()
     assert(sc2.getLong(0) == 30L, sc2.toString)
-    assert(DeltaLog.readWhereLong(spark, root, "k", 12L, 18L)
-      .inputFiles.length == 1)
+    assert(scannedFiles(DeltaLog.read(spark, root)
+      .where(col("k").between(12L, 18L))) == 1L)
   }
 
   test("deleteWhereLong: copy-on-write on overlapping files only; " +
@@ -2824,8 +2898,8 @@ class DeltaLogSpec extends SparkSpec {
     }
     assert(DeltaLog.filesAt(spark, root, 3L).size == 8)
     // a narrow x-window before Z-order: stats prune NOTHING
-    val before = DeltaLog.readWhereLong(spark, root, "x", 10L, 20L)
-      .inputFiles.length
+    val before = scannedFiles(DeltaLog.read(spark, root)
+      .where(col("x").between(10L, 20L)))
     assert(before == 8, s"pre-zorder narrow read must scan all 8, got " +
       s"$before")
     // DV-delete a slice inside the window, then Z-order
@@ -2850,11 +2924,29 @@ class DeltaLogSpec extends SparkSpec {
     assert(got == want)
     // the same narrow window now PRUNES: contiguous Morton runs give
     // each file a narrow x-range inside its partition
-    val after = DeltaLog.readWhereLong(spark, root, "x", 10L, 20L)
-    assert(after.inputFiles.length < 8,
-      s"post-zorder narrow read still scans ${after.inputFiles.length}")
+    def scan(p: org.apache.spark.sql.Column) =
+      DeltaLog.read(spark, root).where(p)
+    val (xs, ys) = (col("x").between(10L, 20L), col("y").between(30L, 50L))
+    val after = scan(xs)
+    val nAfter = scannedFiles(after)
+    assert(nAfter < 8, s"post-zorder narrow read still scans $nAfter")
     assert(after.select("p", "x", "y").as[(String, Long, Long)]
       .collect().toSet == want.filter(r => r._2 >= 10L && r._2 <= 20L))
+    // the Z-order payoff: a 2-D box prunes at least as hard as either
+    // 1-D range, and strictly harder than the whole table
+    val nY = scannedFiles(scan(ys))
+    val box = scan(xs && ys)
+    val nBox = scannedFiles(box)
+    assert(nBox <= math.min(nAfter, nY), s"box $nBox, x $nAfter, y $nY")
+    assert(nBox < active.size, s"box scans $nBox of ${active.size}")
+    val boxRows = want.filter(r => r._2 >= 10L && r._2 <= 20L &&
+      r._3 >= 30L && r._3 <= 50L)
+    assert(boxRows.nonEmpty)
+    assert(box.select("p", "x", "y").as[(String, Long, Long)]
+      .collect().toSet == boxRows)
+    // a window outside the domain scans no file at all
+    val outside = scan(col("x").between(5000L, 6000L))
+    assert(scannedFiles(outside) == 0L && outside.count() == 0L)
   }
 
   test("NESTED column mapping: items array<struct<...>> (the reference's " +
@@ -3478,8 +3570,7 @@ class DeltaLogSpec extends SparkSpec {
         rows(DeltaLog.readAt(spark, seqRoot, v)), s"version $v")
     }
     // partition pruning parity: the partitionValues landed typed+keyed
-    val pruned = DeltaLog.readWhere(spark, slcRoot, Seq(
-      DeltaLog.ColumnPredicate.PartitionEquals("pt", Some("t1"))))
+    val pruned = DeltaLog.read(spark, slcRoot).where(col("pt") === "t1")
     assert(pruned.count() == src.filter(col("pt") === "t1").count())
     assert(DeltaLog.read(spark, slcRoot).columns.toSet ==
       Set("k", "v", "pt"))
@@ -3679,8 +3770,8 @@ class DeltaLogSpec extends SparkSpec {
       "pre-optimize version must stay readable")
     // the clustered layout actually skips: a selective x-range opens
     // fewer files than the table has
-    val opened = DeltaLog.readWhereLong(spark, root, "x", 0L, 8L)
-      .inputFiles.length
+    val opened = scannedFiles(DeltaLog.read(spark, root)
+      .where(col("x").between(0L, 8L)))
     assert(opened < 8, s"no skipping benefit: $opened of 8 files overlap x<=8")
   }
 

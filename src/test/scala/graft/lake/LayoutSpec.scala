@@ -87,41 +87,6 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
-  test("skippingRead: equals the full-scan filter while opening fewer files") {
-    val s = spark; import s.implicits._
-    val dir = Files.createTempDirectory("graft-skip").toString + "/t"
-    val rows = scala.util.Random.shuffle(
-      for (x <- 0 until 64; y <- 0 until 64) yield (x.toLong, y.toLong))
-    Layout.zorderWrite(rows.toDF("x", "y"), dir, "x", "y", bits = 6, numFiles = 16)
-    val full = spark.read.parquet(dir)
-    val nFiles = full.inputFiles.length
-    assert(nFiles >= 8)
-    val pruned = Layout.skippingRead(spark, dir, "x", lo = 3L, hi = 6L)
-    val expected = full.filter(col("x") >= 3 && col("x") <= 6)
-      .select(col("x"), col("y")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = pruned.select(col("x"), col("y")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == expected, "skipping read changed the answer")
-    assert(pruned.inputFiles.length < nFiles,
-      s"no files pruned: ${pruned.inputFiles.length} of $nFiles opened")
-    // empty selectivity window outside the domain: zero files, empty result
-    val none = Layout.skippingRead(spark, dir, "x", lo = 1000L, hi = 2000L)
-    assert(none.count() == 0)
-    // the Z-order payoff: a 2-D box prunes at least as hard as either
-    // 1-D range, and strictly harder than the whole table
-    val xOnly = Layout.skippingRead(spark, dir, Seq(("x", 3L, 6L)))
-    val yOnly = Layout.skippingRead(spark, dir, Seq(("y", 40L, 44L)))
-    val box = Layout.skippingRead(spark, dir, Seq(("x", 3L, 6L), ("y", 40L, 44L)))
-    assert(box.inputFiles.length <= math.min(xOnly.inputFiles.length,
-      yOnly.inputFiles.length))
-    assert(box.inputFiles.length < nFiles)
-    val boxExpected = full
-      .filter(col("x").between(3, 6) && col("y").between(40, 44))
-      .select(col("x"), col("y")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(box.select(col("x"), col("y")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet == boxExpected)
-  }
-
   test("rendezvousMoves: growth moves keys only INTO the added shards") {
     val s = spark; import s.implicits._
     val keys = (1L to 400L).toDF("k")
