@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{assert_true, col, count, expr, hash,
-  input_file_name, lit, max, pmod, regexp_extract, row_number, sum, when}
+  lit, max, pmod, sum, when}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -52,10 +52,11 @@ import scala.jdk.CollectionConverters._
   *    the requested version (single-part `%020d.checkpoint.parquet` or
   *    multi-part `%020d.checkpoint.%010d.%010d.parquet`; discovery is
   *    by listing, so a stale or missing `_last_checkpoint` hint never
-  *    breaks reads), then applies the JSON commits after it —
-  *    line-delimited actions, `add` activating a file, `remove`
-  *    retiring it (last action per path wins), `metaData` carrying the
-  *    schema, unknown actions (`commitInfo`, `txn`, …) skipped. The file
+  *    breaks reads), then applies the JSON commits after it — one
+  *    fold over both, every action decoded by one decoder: `add`
+  *    activating a file, `remove` retiring it (last action per path
+  *    wins), `metaData` carrying the schema, `txn` a watermark,
+  *    `commitInfo` and unknown actions skipped. The file
   *    list resolves eagerly and IS the scan's file listing (no
   *    directory discovery), so a returned frame is a pinned snapshot:
   *    later commits never change what it reads, and every version stays
@@ -212,15 +213,18 @@ object DeltaLog {
               "append (it removes files or changes metadata) — its " +
               "state basis may be stale; re-run against the current " +
               "version. Nothing was committed.", e)
-          val winner = Files.readAllLines(logDir(root).resolve(commitName(v)))
-            .asScala.filter(_.trim.nonEmpty).map(mapper.readTree)
-          val winnerMeta = winner.exists(n =>
-            n.has("metaData") || n.has("protocol"))
+          val winner = commitActions(root, v)
+          val winnerMeta = winner.exists {
+            case _: MetaData | _: Protocol => true
+            case _ => false
+          }
           val ourApps = actions.collect {
             case n if n.has("txn") => n.get("txn").path("appId").asText()
           }.toSet
-          val winnerTxnClash = winner.exists(n => n.has("txn") &&
-            ourApps(n.get("txn").path("appId").asText()))
+          val winnerTxnClash = winner.exists {
+            case t: Txn => ourApps(t.appId)
+            case _ => false
+          }
           if (winnerMeta || winnerTxnClash) throw new IllegalStateException(
             s"DeltaLog: commit version $v of $root was taken by a " +
               "concurrent writer whose commit " +
@@ -255,26 +259,9 @@ object DeltaLog {
     // was compacted away the chain restarts from wall clock —
     // monotonic unless the clock itself regressed.
     val prevIct: Option[Long] =
-      if (dv <= 0L) None
-      else {
-        val prev = logDir(root).resolve(commitName(dv - 1))
-        if (!Files.exists(prev)) None
-        else {
-          // scan for the commitInfo action and stop at the first match —
-          // THIS writer leads with it, but the protocol does not mandate
-          // ordering, so an external predecessor whose commitInfo sits
-          // later must not silently restart the chain from wall clock
-          // (which could emit an inCommitTimestamp BELOW the
-          // predecessor's and mis-resolve timestamp time travel)
-          val br = Files.newBufferedReader(prev)
-          try Iterator.continually(br.readLine()).takeWhile(_ != null)
-            .filter(_.trim.nonEmpty).map(mapper.readTree)
-            .collectFirst { case n if n.has("commitInfo") =>
-              n.get("commitInfo").path("inCommitTimestamp") }
-            .filter(_.isNumber).map(_.asLong())
-          finally br.close()
-        }
-      }
+      if (dv <= 0L || !Files.exists(logDir(root).resolve(commitName(dv - 1))))
+        None
+      else commitInfoOf(root, dv - 1).flatMap(_.inCommitTimestamp)
     val ict: Option[Long] = prevIct
       .map(p => math.max(System.currentTimeMillis(), p + 1))
       .orElse(if (ictStart) Some(System.currentTimeMillis()) else None)
@@ -402,118 +389,153 @@ object DeltaLog {
       StructField("sizeInBytes", LongType),
       StructField("modificationTime", LongType))))))
 
-  /** Every action row of a checkpoint in [[checkpointSchemaV2]] shape:
-    * classic parts read directly; a V2 top file (parquet or JSON
-    * line-actions) contributes its own rows PLUS those of every sidecar
-    * parquet it references under `_delta_log/_sidecars/`.
+  // ------------------------------------------------------------------
+  // Log actions: one decoder, two readers
+  // ------------------------------------------------------------------
+
+  /** One decoded `_delta_log` action (PROTOCOL.md "Actions"), the shape
+    * every log reader pattern-matches whether the action came from a
+    * commit file, a checkpoint row or a V2 checkpoint top. Paths are
+    * DECODED ([[decodePath]]); partition values keep their nulls.
     */
-  private def checkpointActionsDF(spark: SparkSession, root: String,
-                                  ref: CpRef): DataFrame = ref match {
-    case ClassicCp(_, parts) =>
-      spark.read.schema(checkpointSchemaV2)
-        .parquet(parts.map(_.toString): _*)
-    case V2Cp(_, top) =>
-      val topDF =
-        if (top.toString.endsWith(".parquet"))
-          spark.read.schema(checkpointSchemaV2).parquet(top.toString)
-        else
-          spark.createDataFrame(
-            spark.sparkContext.parallelize(jsonCheckpointRows(top), 1),
-            checkpointSchemaV2)
-      val sidecars = topDF.where(col("sidecar").isNotNull)
-        .select(col("sidecar.path")).collect().map(_.getString(0)).toSeq
-      val sideDFs = sidecars.map(p =>
-        spark.read.schema(checkpointSchemaV2)
-          .parquet(logDir(root).resolve("_sidecars").resolve(p).toString))
-      (Seq(topDF) ++ sideDFs).reduce(_ unionByName _)
+  private[lake] sealed trait Action
+  private[lake] case class Protocol(minReaderVersion: Int,
+      minWriterVersion: Int, readerFeatures: Seq[String],
+      writerFeatures: Seq[String]) extends Action
+  private[lake] case class MetaData(id: String, schemaString: String,
+      partitionColumns: Seq[String],
+      configuration: Map[String, String]) extends Action
+  private[lake] case class AddFile(path: String,
+      partitionValues: Map[String, String], size: Option[Long],
+      modificationTime: Option[Long], dataChange: Boolean,
+      stats: Option[String], deletionVector: Option[DvDescriptor])
+    extends Action
+  private[lake] case class RemoveFile(path: String,
+      deletionTimestamp: Option[Long], dataChange: Boolean) extends Action
+  private[lake] case class AddCdc(path: String,
+      partitionValues: Map[String, String], size: Long) extends Action
+  private[lake] case class Txn(appId: String, version: Long) extends Action
+  private[lake] case class CommitInfo(operation: Option[String],
+      timestamp: Option[Long], inCommitTimestamp: Option[Long])
+    extends Action
+  private[lake] case class Sidecar(path: String) extends Action
+
+  /** Decode one action line: a commit-file line, a V2 JSON top line, or
+    * a checkpoint row serialized by `toJSON` (a checkpoint row IS a
+    * commit line once its null columns are dropped). The action is the
+    * line's object-valued field; `checkpointMetadata`, `domainMetadata`
+    * and unknown actions decode to None. The protocol's defaults live
+    * here: `dataChange` true, reader/writer floors 1/2, absent features
+    * empty, provider parquet (any other provider refuses).
+    */
+  private def decodeAction(line: String): Option[Action] = {
+    def long(n: JsonNode): Option[Long] =
+      if (n.isNumber) Some(n.asLong()) else None
+    def text(n: JsonNode): Option[String] =
+      if (n.isTextual) Some(n.asText()) else None
+    def strings(n: JsonNode): Seq[String] =
+      if (n.isArray) n.elements().asScala.map(_.asText()).toSeq
+      else Seq.empty
+    def pairs(n: JsonNode): Map[String, String] =
+      if (!n.isObject) Map.empty
+      else n.properties().asScala.map(e => e.getKey ->
+        (if (e.getValue.isNull) null else e.getValue.asText())).toMap
+    mapper.readTree(line).properties().asScala
+      .find(_.getValue.isObject).flatMap { e =>
+        val a = e.getValue
+        def path = decodePath(a.path("path").asText())
+        e.getKey match {
+          case "add" => Some(AddFile(path, pairs(a.path("partitionValues")),
+            long(a.path("size")), long(a.path("modificationTime")),
+            a.path("dataChange").asBoolean(true), text(a.path("stats")),
+            dvFromNode(a.path("deletionVector"))))
+          case "remove" => Some(RemoveFile(path,
+            long(a.path("deletionTimestamp")),
+            a.path("dataChange").asBoolean(true)))
+          case "cdc" => Some(AddCdc(path, pairs(a.path("partitionValues")),
+            a.path("size").asLong(0L)))
+          case "metaData" =>
+            val provider = a.path("format").path("provider").asText("parquet")
+            require(provider == "parquet",
+              s"DeltaLog: format provider '$provider' unsupported")
+            Some(MetaData(a.path("id").asText(null),
+              a.path("schemaString").asText(null),
+              strings(a.path("partitionColumns")),
+              pairs(a.path("configuration"))))
+          case "protocol" => Some(Protocol(
+            a.path("minReaderVersion").asInt(1),
+            a.path("minWriterVersion").asInt(2),
+            strings(a.path("readerFeatures")),
+            strings(a.path("writerFeatures"))))
+          case "txn" =>
+            for (app <- text(a.path("appId")); ver <- long(a.path("version")))
+              yield Txn(app, ver)
+          case "commitInfo" => Some(CommitInfo(text(a.path("operation")),
+            long(a.path("timestamp")), long(a.path("inCommitTimestamp"))))
+          case "sidecar" => Some(Sidecar(a.path("path").asText()))
+          case _ => None
+        }
+      }
   }
 
-  /** JSON-variant V2 top file → [[checkpointSchemaV2]] rows (driver-side
-    * — a V2 JSON top holds non-file actions and sidecar references, or
-    * the inline file actions of a SMALL table).
+  /** The one reader of `_delta_log` JSON lines (commit files and V2
+    * JSON checkpoint tops): `f` gets the file's actions decoded lazily,
+    * so a lookup that stops at its first match reads no further.
     */
-  private def jsonCheckpointRows(top: Path): Seq[Row] = {
-    def nullRow = Array.fill[Any](7)(null)
-    Files.readAllLines(top).asScala.filter(_.trim.nonEmpty).map { line =>
-      val n = mapper.readTree(line)
-      val cells = nullRow
-      if (n.has("txn")) {
-        val t = n.get("txn")
-        cells(0) = Row(t.path("appId").asText(null),
-          if (t.path("version").isNumber) t.path("version").asLong()
-          else null)
-      } else if (n.has("add")) {
-        val a = n.get("add")
-        val pvNode = a.path("partitionValues")
-        val pv =
-          if (pvNode.isObject)
-            pvNode.properties().asScala.map(e => e.getKey ->
-              (if (e.getValue.isNull) null else e.getValue.asText())).toMap
-          else Map.empty[String, String]
-        val dvRow = dvFromNode(a.path("deletionVector")).map(d =>
-          Row(d.storageType, d.pathOrInlineDv, d.offset.orNull,
-            d.sizeInBytes, d.cardinality)).orNull
-        cells(1) = Row(a.path("path").asText(), pv,
-          if (a.path("size").isNumber) a.path("size").asLong() else null,
-          if (a.path("modificationTime").isNumber)
-            a.path("modificationTime").asLong()
-          else null,
-          if (a.path("dataChange").isBoolean)
-            a.path("dataChange").asBoolean()
-          else null,
-          if (a.path("stats").isTextual) a.path("stats").asText() else null,
-          null, dvRow)
-      } else if (n.has("remove")) {
-        val r = n.get("remove")
-        cells(2) = Row(r.path("path").asText(),
-          if (r.path("deletionTimestamp").isNumber)
-            r.path("deletionTimestamp").asLong()
-          else null,
-          if (r.path("dataChange").isBoolean)
-            r.path("dataChange").asBoolean()
-          else null)
-      } else if (n.has("metaData")) {
-        val m = n.get("metaData")
-        val pc = m.path("partitionColumns")
-        val pcs =
-          if (pc.isArray) pc.elements().asScala.map(_.asText()).toSeq
-          else Seq.empty[String]
-        val cfgNode = m.path("configuration")
-        val cfg =
-          if (cfgNode.isObject)
-            cfgNode.properties().asScala
-              .map(e => e.getKey -> e.getValue.asText(null)).toMap
-          else Map.empty[String, String]
-        cells(3) = Row(m.path("id").asText(null),
-          m.path("name").asText(null), m.path("description").asText(null),
-          Row(m.path("format").path("provider").asText("parquet"),
-            Map.empty[String, String]),
-          m.path("schemaString").asText(null), pcs, cfg, null)
-      } else if (n.has("protocol")) {
-        val p = n.get("protocol")
-        def feats(key: String): Seq[String] = {
-          val f = p.path(key)
-          if (f.isArray) f.elements().asScala.map(_.asText()).toSeq else null
-        }
-        cells(4) = Row(p.path("minReaderVersion").asInt(1),
-          p.path("minWriterVersion").asInt(2),
-          feats("readerFeatures"), feats("writerFeatures"))
-      } else if (n.has("checkpointMetadata")) {
-        cells(5) = Row(
-          n.get("checkpointMetadata").path("version").asLong(-1L))
-      } else if (n.has("sidecar")) {
-        val s = n.get("sidecar")
-        cells(6) = Row(s.path("path").asText(),
-          if (s.path("sizeInBytes").isNumber)
-            s.path("sizeInBytes").asLong()
-          else null,
-          if (s.path("modificationTime").isNumber)
-            s.path("modificationTime").asLong()
-          else null)
-      }
-      Row.fromSeq(cells.toIndexedSeq)
-    }.toSeq
+  private def jsonActions[T](file: Path)(f: Iterator[Action] => T): T = {
+    val br = Files.newBufferedReader(file)
+    try f(Iterator.continually(br.readLine()).takeWhile(_ != null)
+      .filter(_.trim.nonEmpty).flatMap(decodeAction))
+    finally br.close()
   }
+
+  /** The actions of commit `v`, in file order. */
+  private def commitActions(root: String, v: Long): Seq[Action] =
+    jsonActions(logDir(root).resolve(commitName(v)))(_.toVector)
+
+  /** The commits `from..to` with their actions, each read as the caller
+    * reaches it. Every commit of the range must be present: a gap
+    * refuses up front, `why` saying what needs the commits.
+    */
+  private def commitActions(root: String, from: Long, to: Long, op: String,
+                            why: String): Iterator[(Long, Seq[Action])] = {
+    val present = versions(root).toSet
+    (from to to).foreach(v => require(present.contains(v),
+      s"DeltaLog.$op: commit $v missing from $root — $why"))
+    (from to to).iterator.map(v => v -> commitActions(root, v))
+  }
+
+  /** Every action of a checkpoint, in file order. A V2 top's `sidecar`
+    * actions pull in the file actions of each sidecar under
+    * `_delta_log/_sidecars/`.
+    */
+  private def checkpointActions(spark: SparkSession, root: String,
+                                ref: CpRef): Seq[Action] = ref match {
+    case ClassicCp(_, parts) => parquetActions(spark, parts)
+    case V2Cp(_, top) =>
+      val own = v2TopActions(spark, top)
+      val sidecars = own.collect { case Sidecar(p) =>
+        logDir(root).resolve("_sidecars").resolve(p)
+      }
+      if (sidecars.isEmpty) own else own ++ parquetActions(spark, sidecars)
+  }
+
+  /** A V2 top's own actions: a JSON top is read line by line with no
+    * Spark job, a parquet top like any checkpoint parquet.
+    */
+  private def v2TopActions(spark: SparkSession, top: Path): Seq[Action] =
+    if (top.toString.endsWith(".json")) jsonActions(top)(_.toVector)
+    else parquetActions(spark, Seq(top))
+
+  /** The actions of checkpoint parquet files, in the order given: their
+    * [[checkpointSchemaV2]] rows serialized to action lines in one Spark
+    * job. One scan per file, unioned — a multi-path scan would order
+    * its rows by file size.
+    */
+  private def parquetActions(spark: SparkSession,
+                             files: Seq[Path]): Seq[Action] =
+    files.map(f => spark.read.schema(checkpointSchemaV2).parquet(f.toString))
+      .reduce(_ union _).toJSON.collect().toSeq.flatMap(decodeAction)
 
   /** Write the parquet checkpoint for `version` (replayed state: one
     * protocol row, one metaData row, one row per active file with
@@ -623,7 +645,7 @@ object DeltaLog {
     * protocol, metaData, txn watermarks (the r15 lesson: losing them
     * breaks exactly-once sinks after compaction), `checkpointMetadata`
     * — plus one `sidecar` action per sidecar file. The reader side
-    * ([[checkpointActionsDF]]) already consumes this shape (q262);
+    * ([[checkpointActions]]) already consumes this shape (q262);
     * this is its writer. Refreshes `_last_checkpoint`. Idempotent per
     * version: an existing V2 top for `version` is left untouched.
     */
@@ -876,7 +898,7 @@ object DeltaLog {
     * `name` (reads resolve `delta.columnMapping.physicalName` from the
     * schema metadata; mapped tables are read-only here); `v2Checkpoint`
     * tables replay from the V2 top file + its sidecars (see
-    * [[checkpointActionsDF]]). Mode `id` and anything else would make a
+    * [[checkpointActions]]). Mode `id` and anything else would make a
     * plain replay return WRONG ROWS, so the refusal names the specific
     * feature.
     */
@@ -1225,27 +1247,11 @@ object DeltaLog {
       physFieldIds(st, schema))
   }
 
-  /** One replayed log action in the distributed reconstruction's common
-    * shape (checkpoint adds and JSON-tail adds/removes both map here).
-    */
-  private case class ActRow(version: Long, isAdd: Boolean, path: String,
-                            pv: Map[String, String], size: Option[Long],
-                            mod: Option[Long], stats: Option[String],
-                            dv: Option[String])
-
-  /** Checkpoint byte size beyond which [[replay]] reconstructs FILE
-    * state distributed instead of folding every action through
-    * driver-side maps (~16 MiB ≈ low hundreds of thousands of files).
-    * The non-file actions (protocol, metaData, txn) are a handful of
-    * rows and always replay driver-side. Tunable for specs.
-    */
-  private[lake] var distributedReplayCheckpointBytes: Long = 16L << 20
-
   /** Rows per file a MERGE's insert set lands as: a bulk upsert writes
     * ceil(sourceRows / this) target-sized files in ONE job instead of
     * serializing 10⁹ rows through a single task; a point merge
     * (source ≤ one file) keeps the shuffle-free single-file path.
-    * Test seam, like [[distributedReplayCheckpointBytes]].
+    * Test seam.
     */
   private[lake] var mergeInsertRowsPerFile: Long = 4L << 20
 
@@ -1256,105 +1262,14 @@ object DeltaLog {
     */
   private[lake] var mergeBloomMaxKeys: Long = 1024L
 
-  /** Distributed last-action-wins reconstruction of the ACTIVE add set
-    * at `version` — the 100 TB-posture replacement for driver-side
-    * HashMap replay: at millions of files the checkpoint is itself big
-    * data, so the checkpoint parquet and the JSON tail are unioned as
-    * DataFrames, the newest action per path wins via one window, and
-    * only rows whose final action is `add` survive. Output columns:
-    * (version, path, pv, size, mod, stats) — `path` DECODED, one row
-    * per active file. The driver then holds active-file-count rows (the
-    * planning surface it needs anyway), never action-count rows.
-    * Equality with the driver-side fold is spec-pinned.
+  /** The snapshot at `upTo`: one in-order fold of the newest usable
+    * checkpoint's actions and the JSON commits after it (PROTOCOL.md
+    * "Action Reconciliation"). Last action per path wins, so within a
+    * commit a later `add` beats an earlier `remove` of the same path
+    * (DV deletes and RESTORE commit both), and a re-add without a DV
+    * clears the DV; txn watermarks keep their max. Checkpoint
+    * tombstones are not state for reads.
     */
-  def activeAddsDF(spark: SparkSession, root: String,
-                   version: Long): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val fromCp = checkpointRefs(root).filter(_.version <= version).lastOption
-    val replayFrom = fromCp.map(_.version + 1).getOrElse(0L)
-    val present = versions(root).toSet
-    (replayFrom to version).foreach(v => require(present.contains(v),
-      s"DeltaLog: commit $v missing from $root (newest usable checkpoint: " +
-        s"${fromCp.map(_.version).getOrElse(-1L)})"))
-    val cpAdds: org.apache.spark.sql.Dataset[ActRow] = fromCp match {
-      case Some(ref) =>
-        val cpv = ref.version
-        checkpointActionsDF(spark, root, ref)
-          .where(col("add.path").isNotNull)
-          .select(col("add.path"), col("add.partitionValues"),
-            col("add.size"), col("add.modificationTime"), col("add.stats"),
-            org.apache.spark.sql.functions.to_json(col("add.deletionVector"))
-              .as("dv"))
-          .as[(String, Map[String, String], Option[Long], Option[Long],
-            Option[String], Option[String])]
-          .map { case (p, pv, sz, md, st, dv) =>
-            ActRow(cpv, isAdd = true, decodePath(p),
-              Option(pv).getOrElse(Map.empty), sz, md, st, dv)
-          }
-      case None => spark.emptyDataset[ActRow]
-    }
-    val tailVersions = (replayFrom to version)
-    val tailActs: org.apache.spark.sql.Dataset[ActRow] =
-      if (tailVersions.isEmpty) spark.emptyDataset[ActRow]
-      else spark.read
-        .textFile(tailVersions.map(v =>
-          logDir(root).resolve(commitName(v)).toString): _*)
-        .select(regexp_extract(input_file_name(),
-          "(\\d{20})\\.json", 1).cast("long").as("v"), col("value"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          val m = new ObjectMapper()
-          it.flatMap { case (v, line) =>
-            if (line.trim.isEmpty) Iterator.empty
-            else {
-              val node = m.readTree(line)
-              if (node.has("add")) {
-                val a = node.get("add")
-                val pvNode = a.path("partitionValues")
-                val pv =
-                  if (pvNode.isObject)
-                    pvNode.properties().asScala
-                      .map(e => e.getKey ->
-                        (if (e.getValue.isNull) null else e.getValue.asText()))
-                      .toMap
-                  else Map.empty[String, String]
-                Iterator.single(ActRow(v, isAdd = true,
-                  decodePath(a.path("path").asText()), pv,
-                  if (a.path("size").isNumber) Some(a.path("size").asLong())
-                  else None,
-                  if (a.path("modificationTime").isNumber)
-                    Some(a.path("modificationTime").asLong())
-                  else None,
-                  if (a.path("stats").isTextual)
-                    Some(a.path("stats").asText())
-                  else None,
-                  if (a.path("deletionVector").isObject)
-                    Some(m.writeValueAsString(a.path("deletionVector")))
-                  else None))
-              } else if (node.has("remove")) {
-                Iterator.single(ActRow(v, isAdd = false,
-                  decodePath(node.get("remove").path("path").asText()),
-                  Map.empty, None, None, None, None))
-              } else Iterator.empty
-            }
-          }
-        }
-    // newest action per path wins; within ONE version the add beats the
-    // remove — DV deletes and RESTORE legitimately commit remove+add of
-    // the SAME path in one commit (retire the old entry, re-add with
-    // the DV/restored state), and the driver-side fold applies the add
-    // after the remove, so the distributed fold must agree or those
-    // files silently vanish from the active set
-    val w = Window.partitionBy(col("path"))
-      .orderBy(col("version").desc, col("isAdd").desc)
-    cpAdds.union(tailActs).toDF()
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1 && col("isAdd"))
-      .select(col("version"), col("path"), col("pv"), col("size"),
-        col("mod"), col("stats"), col("dv"))
-  }
-
   private def replay(spark: SparkSession, root: String,
                      upTo: Long): LogState = {
     val present = versions(root)
@@ -1362,207 +1277,45 @@ object DeltaLog {
     require(present.contains(upTo) || fromCp.exists(_.version == upTo),
       s"DeltaLog: version $upTo of $root does not exist " +
         s"(have ${present.mkString(",")})")
-    var schema: Option[StructType] = None
-    var partitionCols: Seq[String] = Seq.empty
-    var minReader = 1
-    var minWriter = 2
-    var readerFeats: Seq[String] = Seq.empty
-    var writerFeats: Seq[String] = Seq.empty
-    var config: Map[String, String] = Map.empty
-    var tableId: String = null
-    val active = new java.util.LinkedHashMap[String, Map[String, String]]()
-    val sizes = scala.collection.mutable.Map.empty[String, Long]
-    val mods = scala.collection.mutable.Map.empty[String, Long]
-    val statsOf = scala.collection.mutable.Map.empty[String, String]
-    val dvs = scala.collection.mutable.Map.empty[String, DvDescriptor]
-    val txns = scala.collection.mutable.Map.empty[String, Long]
-
-    def applyMeta(id: String, ss: String, pcs: Seq[String],
-                  cfg: Map[String, String]): Unit = {
-      if (id != null) tableId = id
-      partitionCols = pcs
-      config = cfg
-      if (ss != null)
-        schema = Some(DataType.fromJson(ss).asInstanceOf[StructType])
-    }
-
-    // Big checkpoint ⇒ file state is reconstructed DISTRIBUTED (one
-    // window job, driver holds only the active set); the handful of
-    // protocol/metaData/txn actions always replay driver-side. V2
-    // checkpoints count the top file plus the whole sidecar dir (an
-    // over-count across checkpoints only flips INTO the distributed
-    // mode, which is always correct).
-    val distributed = fromCp.exists {
-      case ClassicCp(_, files) =>
-        files.map(Files.size(_)).sum > distributedReplayCheckpointBytes
-      case V2Cp(_, top) =>
-        val sideDir = logDir(root).resolve("_sidecars")
-        val sideBytes =
-          if (!Files.isDirectory(sideDir)) 0L
-          else {
-            val s = Files.list(sideDir)
-            try s.iterator().asScala
-              .filter(Files.isRegularFile(_)).map(Files.size(_)).sum
-            finally s.close()
-          }
-        Files.size(top) + sideBytes > distributedReplayCheckpointBytes
-    }
-
-    val replayFrom: Long = fromCp match {
-      case Some(ref) =>
-        val cpv = ref.version
-        // Checkpoint = full state at cpv: protocol + metaData + active
-        // adds (tombstone removes, if present, are irrelevant to reads).
-        val reader = checkpointActionsDF(spark, root, ref)
-        val rows = (if (distributed) reader.where(col("add").isNull)
-                    else reader).collect()
-        rows.foreach { r =>
-          if (!r.isNullAt(4)) {
-            val p = r.getStruct(4)
-            minReader = p.getInt(0); minWriter = p.getInt(1)
-            readerFeats =
-              if (p.length > 2 && !p.isNullAt(2)) p.getSeq[String](2).toSeq
-              else Seq.empty
-            writerFeats =
-              if (p.length > 3 && !p.isNullAt(3)) p.getSeq[String](3).toSeq
-              else Seq.empty
-          } else if (!r.isNullAt(3)) {
-            val m = r.getStruct(3)
-            val provider = m.getStruct(3).getString(0)
-            require(provider == "parquet",
-              s"DeltaLog: format provider '$provider' unsupported")
-            applyMeta(m.getString(0), m.getString(4),
-              Option(m.getSeq[String](5)).map(_.toSeq).getOrElse(Seq.empty),
-              Option(m.getMap[String, String](6)).map(_.toMap)
-                .getOrElse(Map.empty))
-          } else if (!r.isNullAt(1)) {
-            val a = r.getStruct(1)
-            val path = decodePath(a.getString(0))
-            val pv = Option(a.getMap[String, String](1))
-              .map(_.toMap).getOrElse(Map.empty[String, String])
-            active.put(path, pv)
-            if (!a.isNullAt(2)) sizes(path) = a.getLong(2)
-            if (!a.isNullAt(3)) mods(path) = a.getLong(3)
-            if (!a.isNullAt(5)) statsOf(path) = a.getString(5)
-            if (a.length > 7 && !a.isNullAt(7)) {
-              val d = a.getStruct(7)
-              dvs(path) = DvDescriptor(d.getString(0), d.getString(1),
-                if (d.isNullAt(2)) None else Some(d.getLong(2)),
-                d.getInt(3), d.getLong(4))
-            } else dvs.remove(path)
-          } else if (!r.isNullAt(0)) {
-            val t = r.getStruct(0)
-            if (!t.isNullAt(0) && !t.isNullAt(1))
-              txns(t.getString(0)) =
-                math.max(txns.getOrElse(t.getString(0), Long.MinValue),
-                  t.getLong(1))
-          }
-          // remove tombstones: not state for reads
-        }
-        cpv + 1
-      case None => 0L
-    }
-    // The JSON tail must be contiguous from the replay start — a gap
+    // the JSON tail must be contiguous from the replay start — a gap
     // below the newest checkpoint is fine (that's what the checkpoint
-    // is FOR); a gap above it means missing history.
-    (replayFrom to upTo).foreach(v => require(present.contains(v),
-      s"DeltaLog: commit $v missing from $root (newest usable checkpoint: " +
-        s"${fromCp.map(_.version).getOrElse(-1L)})"))
-    (replayFrom to upTo).foreach { v =>
-      val lines = Files.readAllLines(logDir(root).resolve(commitName(v)))
-        .asScala.filter(_.trim.nonEmpty)
-      lines.foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("protocol")) {
-          val p = node.get("protocol")
-          minReader = p.path("minReaderVersion").asInt(1)
-          minWriter = p.path("minWriterVersion").asInt(2)
-          val rf = p.path("readerFeatures")
-          readerFeats =
-            if (rf.isArray) rf.elements().asScala.map(_.asText()).toSeq
-            else Seq.empty
-          val wf = p.path("writerFeatures")
-          writerFeats =
-            if (wf.isArray) wf.elements().asScala.map(_.asText()).toSeq
-            else Seq.empty
-        } else if (node.has("metaData")) {
-          val md = node.get("metaData")
-          val provider = md.path("format").path("provider").asText("parquet")
-          require(provider == "parquet",
-            s"DeltaLog: format provider '$provider' unsupported")
-          val pc = md.path("partitionColumns")
-          val pcs =
-            if (pc.isArray) pc.elements().asScala.map(_.asText()).toSeq
-            else Seq.empty
-          val cfgNode = md.path("configuration")
-          val cfg =
-            if (cfgNode.isObject)
-              cfgNode.properties().asScala
-                .map(e => e.getKey -> e.getValue.asText(null)).toMap
-            else Map.empty[String, String]
-          applyMeta(md.path("id").asText(null),
-            md.path("schemaString").asText(null), pcs, cfg)
-        } else if (node.has("add")) {
-          if (!distributed) {
-            val a = node.get("add")
-            val path = decodePath(a.path("path").asText())
-            val pvNode = a.path("partitionValues")
-            val pv =
-              if (pvNode.isObject)
-                pvNode.properties().asScala
-                  .map(e => e.getKey ->
-                    (if (e.getValue.isNull) null else e.getValue.asText()))
-                  .toMap
-              else Map.empty[String, String]
-            active.put(path, pv)
-            if (a.path("size").isNumber) sizes(path) = a.path("size").asLong()
-            if (a.path("modificationTime").isNumber)
-              mods(path) = a.path("modificationTime").asLong()
-            if (a.path("stats").isTextual) statsOf(path) = a.path("stats").asText()
-            dvFromNode(a.path("deletionVector")) match {
-              case Some(d) => dvs(path) = d
-              case None => dvs.remove(path) // re-add without DV clears it
-            }
-          }
-        } else if (node.has("remove")) {
-          if (!distributed) {
-            val p = decodePath(node.get("remove").path("path").asText())
-            active.remove(p)
-            dvs.remove(p)
-          }
-        } else if (node.has("txn")) {
-          val t = node.get("txn")
-          val app = t.path("appId").asText(null)
-          if (app != null && t.path("version").isNumber)
-            txns(app) = math.max(txns.getOrElse(app, Long.MinValue),
-              t.path("version").asLong())
-        }
-        // commitInfo / cdc / domainMetadata: ignored by design
-      }
+    // is FOR); a gap above it means missing history
+    val tail = commitActions(root, fromCp.map(_.version + 1).getOrElse(0L),
+      upTo, "replay", "no usable checkpoint covers it (newest usable: " +
+        s"${fromCp.map(_.version).getOrElse(-1L)})")
+    val fromCheckpoint = fromCp.toSeq
+      .flatMap(checkpointActions(spark, root, _))
+      .filterNot(_.isInstanceOf[RemoveFile])
+    var schema: Option[StructType] = None
+    var partitionCols = Seq.empty[String]
+    var config = Map.empty[String, String]
+    var tableId: String = null
+    var proto = Protocol(1, 2, Seq.empty, Seq.empty)
+    val active = new java.util.LinkedHashMap[String, AddFile]()
+    val txns = scala.collection.mutable.Map.empty[String, Long]
+    (fromCheckpoint.iterator ++ tail.flatMap(_._2)).foreach {
+      case p: Protocol => proto = p
+      case m: MetaData =>
+        if (m.id != null) tableId = m.id
+        partitionCols = m.partitionColumns
+        config = m.configuration
+        if (m.schemaString != null) schema =
+          Some(DataType.fromJson(m.schemaString).asInstanceOf[StructType])
+      case a: AddFile => active.put(a.path, a)
+      case r: RemoveFile => active.remove(r.path)
+      case Txn(app, ver) =>
+        txns(app) = math.max(txns.getOrElse(app, Long.MinValue), ver)
+      case _ => () // commitInfo / cdc / sidecar: not snapshot state
     }
-    if (distributed) {
-      // file state wholesale from the distributed reconstruction —
-      // ordered (version, path) for deterministic assembly
-      activeAddsDF(spark, root, upTo)
-        .orderBy(col("version"), col("path"))
-        .collect().foreach { r =>
-          val path = r.getString(1)
-          active.put(path,
-            Option(r.getMap[String, String](2)).map(_.toMap)
-              .getOrElse(Map.empty))
-          if (!r.isNullAt(3)) sizes(path) = r.getLong(3)
-          if (!r.isNullAt(4)) mods(path) = r.getLong(4)
-          if (!r.isNullAt(5)) statsOf(path) = r.getString(5)
-          if (!r.isNullAt(6))
-            dvFromNode(mapper.readTree(r.getString(6)))
-              .foreach(dvs(path) = _)
-        }
-    }
-    val st = LogState(schema, partitionCols, minReader, minWriter,
-      readerFeats, writerFeats, config, tableId,
-      active.entrySet().iterator().asScala
-        .map(e => e.getKey -> e.getValue).toSeq,
-      sizes.toMap, mods.toMap, statsOf.toMap, dvs.toMap, txns.toMap)
+    val adds = active.values().asScala.toVector
+    val st = LogState(schema, partitionCols, proto.minReaderVersion,
+      proto.minWriterVersion, proto.readerFeatures, proto.writerFeatures,
+      config, tableId, adds.map(a => a.path -> a.partitionValues),
+      adds.flatMap(a => a.size.map(a.path -> _)).toMap,
+      adds.flatMap(a => a.modificationTime.map(a.path -> _)).toMap,
+      adds.flatMap(a => a.stats.map(a.path -> _)).toMap,
+      adds.flatMap(a => a.deletionVector.map(a.path -> _)).toMap,
+      txns.toMap)
     validateReaderSupport(root, st)
     st
   }
@@ -3738,49 +3491,27 @@ object DeltaLog {
     */
   private[graft] def appendedFilesIn(root: String, sinceVersion: Long,
       toVersion: Long): Seq[(Long, String, Map[String, String], Long)] = {
-    val present = versions(root).toSet
-    ((sinceVersion + 1) to toVersion).foreach(v =>
-      require(present.contains(v),
-        s"DeltaLog.appendedFilesIn: commit $v missing from $root — the " +
-          "append tail needs its JSON commits (checkpoints compact " +
-          "state, not history)"))
-    val adds = Seq.newBuilder[(Long, String, Map[String, String], Long)]
-    ((sinceVersion + 1) to toVersion).foreach { v =>
-      val lines = Files.readAllLines(logDir(root).resolve(commitName(v)))
-        .asScala.filter(_.trim.nonEmpty)
-      lines.foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("add")) {
-          val a = node.get("add")
-          if (a.path("dataChange").asBoolean(true)) {
-            // the DV refusal applies only to dataChange adds: an
-            // external OPTIMIZE that rewrites with dataChange=false
-            // while RETAINING DV descriptors is a layout-only no-op for
-            // an append tail and must skip like any other compaction
-            require(!a.path("deletionVector").isObject,
-              s"DeltaLog.appendedFilesIn: commit $v of $root attaches a " +
-                "deletion vector (DELETE via DV) — an append tail cannot " +
-                "represent changed history; consume CDC instead")
-            val pvNode = a.path("partitionValues")
-            val pv =
-              if (pvNode.isObject)
-                pvNode.properties().asScala
-                  .map(e => e.getKey ->
-                    (if (e.getValue.isNull) null else e.getValue.asText()))
-                  .toMap
-              else Map.empty[String, String]
-            adds += ((v, decodePath(a.path("path").asText()), pv,
-              a.path("size").asLong(0L)))
-          }
-        } else if (node.has("remove")) {
-          require(!node.get("remove").path("dataChange").asBoolean(true),
+    commitActions(root, sinceVersion + 1, toVersion, "appendedFilesIn",
+      "the append tail needs its JSON commits (checkpoints compact " +
+        "state, not history)").flatMap { case (v, actions) =>
+      actions.collect {
+        case a: AddFile if a.dataChange =>
+          // the DV refusal applies only to dataChange adds: an
+          // external OPTIMIZE that rewrites with dataChange=false
+          // while RETAINING DV descriptors is a layout-only no-op for
+          // an append tail and must skip like any other compaction
+          require(a.deletionVector.isEmpty,
+            s"DeltaLog.appendedFilesIn: commit $v of $root attaches a " +
+              "deletion vector (DELETE via DV) — an append tail cannot " +
+              "represent changed history; consume CDC instead")
+          (v, a.path, a.partitionValues, a.size.getOrElse(0L))
+        case r: RemoveFile if r.dataChange =>
+          throw new IllegalArgumentException(
             s"DeltaLog.appendedFilesIn: commit $v of $root removes data " +
               "with dataChange=true (DELETE/UPDATE/rewrite) — an append " +
               "tail cannot represent changed history; consume CDC instead")
-        }
       }
-    }
-    adds.result()
+    }.toSeq
   }
 
   /** The parquet scan schema that reads the LOGICAL columns of
@@ -3817,55 +3548,24 @@ object DeltaLog {
     */
   private[graft] def changeFilesIn(root: String, sinceVersion: Long,
       toVersion: Long): Seq[(Long, String, Map[String, String], Option[String], Long)] = {
-    val present = versions(root).toSet
-    ((sinceVersion + 1) to toVersion).foreach(v =>
-      require(present.contains(v),
-        s"DeltaLog.changeFilesIn: commit $v missing from $root — the " +
-          "feed tail needs its JSON commits"))
-    val out = Seq.newBuilder[(Long, String, Map[String, String], Option[String], Long)]
-    ((sinceVersion + 1) to toVersion).foreach { v =>
-      val cdcs = Seq.newBuilder[(String, Map[String, String], Long)]
-      val adds = Seq.newBuilder[(String, Map[String, String], Long)]
-      var removesData = false
-      Files.readAllLines(logDir(root).resolve(commitName(v))).asScala
-        .filter(_.trim.nonEmpty).foreach { line =>
-          val node = mapper.readTree(line)
-          def pvOf(n: JsonNode): Map[String, String] = {
-            val pvNode = n.path("partitionValues")
-            if (pvNode.isObject)
-              pvNode.properties().asScala.map(e => e.getKey ->
-                (if (e.getValue.isNull) null else e.getValue.asText())).toMap
-            else Map.empty[String, String]
-          }
-          if (node.has("cdc")) {
-            val c = node.get("cdc")
-            cdcs += ((decodePath(c.path("path").asText()), pvOf(c),
-              c.path("size").asLong(0L)))
-          } else if (node.has("add")) {
-            val a = node.get("add")
-            if (a.path("dataChange").asBoolean(true))
-              adds += ((decodePath(a.path("path").asText()), pvOf(a),
-                a.path("size").asLong(0L)))
-          } else if (node.has("remove")) {
-            if (node.get("remove").path("dataChange").asBoolean(true))
-              removesData = true
-          }
-        }
-      val cdcFiles = cdcs.result()
-      if (cdcFiles.nonEmpty)
-        cdcFiles.foreach { case (rel, pv, sz) =>
-          out += ((v, rel, pv, None, sz)) }
+    commitActions(root, sinceVersion + 1, toVersion, "changeFilesIn",
+      "the feed tail needs its JSON commits").flatMap { case (v, actions) =>
+      val cdcs = actions.collect { case c: AddCdc =>
+        (v, c.path, c.partitionValues, Option.empty[String], c.size)
+      }
+      if (cdcs.nonEmpty) cdcs
       else {
-        require(!removesData,
-          s"DeltaLog.changeFilesIn: commit $v of $root removes data " +
+        require(!actions.exists {
+          case r: RemoveFile => r.dataChange
+          case _ => false
+        }, s"DeltaLog.changeFilesIn: commit $v of $root removes data " +
             "without cdc files — the stream cannot represent it; use " +
             "the batch readChangeFeed")
-        adds.result().foreach { case (rel, pv, sz) =>
-          out += ((v, rel, pv, Some("insert"), sz))
+        actions.collect { case a: AddFile if a.dataChange =>
+          (v, a.path, a.partitionValues, Some("insert"), a.size.getOrElse(0L))
         }
       }
-    }
-    out.result()
+    }.toSeq
   }
 
   /** The declared schema and partition columns of the CURRENT version —
@@ -3963,45 +3663,18 @@ object DeltaLog {
         "delta.enableChangeDataFeed=true — no change feed was recorded")
     val schema = st.schema.getOrElse(throw new IllegalStateException(
       s"DeltaLog: no metaData action in $root log — schema unknown"))
-    val present = versions(root).toSet
-    ((sinceVersion + 1) to to).foreach(v => require(present.contains(v),
-      s"DeltaLog.readChangeFeed: commit $v missing from $root — the " +
-        "change feed needs its JSON commits (checkpoints compact state, " +
-        "not history)"))
-    def pvOf(n: JsonNode): Map[String, String] = {
-      val pvNode = n.path("partitionValues")
-      if (!pvNode.isObject) Map.empty
-      else pvNode.properties().asScala
-        .map(e => e.getKey ->
-          (if (e.getValue.isNull) null else e.getValue.asText())).toMap
-    }
     val outCols = schema.fieldNames.toSeq :+ ChangeTypeCol
-    val perVersion = ((sinceVersion + 1) to to).flatMap { v =>
-      val lines = Files.readAllLines(logDir(root).resolve(commitName(v)))
-        .asScala.filter(_.trim.nonEmpty)
-      val cdcs = Seq.newBuilder[(String, Map[String, String])]
-      val adds = Seq.newBuilder[(String, Map[String, String])]
-      val removes = Seq.newBuilder[String]
-      var dvAdds = 0
-      lines.foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("cdc")) {
-          val c = node.get("cdc")
-          cdcs += decodePath(c.path("path").asText()) -> pvOf(c)
-        } else if (node.has("add")) {
-          val a = node.get("add")
-          if (a.path("dataChange").asBoolean(true)) {
-            if (a.path("deletionVector").isObject) dvAdds += 1
-            adds += decodePath(a.path("path").asText()) -> pvOf(a)
-          }
-        } else if (node.has("remove")) {
-          val r = node.get("remove")
-          if (r.path("dataChange").asBoolean(true))
-            removes += decodePath(r.path("path").asText())
-        }
-      }
-      val (cdcList, addList, removeList) =
-        (cdcs.result(), adds.result(), removes.result())
+    val commits = commitActions(root, sinceVersion + 1, to,
+      "readChangeFeed", "the change feed needs its JSON commits " +
+        "(checkpoints compact state, not history)")
+    val perVersion = commits.flatMap { case (v, actions) =>
+      val cdcList = actions.collect { case c: AddCdc =>
+        c.path -> c.partitionValues }
+      val dataAdds = actions.collect { case a: AddFile if a.dataChange => a }
+      val dvAdds = dataAdds.count(_.deletionVector.isDefined)
+      val addList = dataAdds.map(a => a.path -> a.partitionValues)
+      val removeList = actions.collect {
+        case r: RemoveFile if r.dataChange => r.path }
       val changes: Option[DataFrame] =
         if (cdcList.nonEmpty)
           // one scan over the version's cdc files; `_change_type` is a
@@ -4061,7 +3734,7 @@ object DeltaLog {
           lit(new java.sql.Timestamp(commitTimestamp(root, v))))
         .select((outCols ++ Seq("_commit_version", "_commit_timestamp"))
           .map(col): _*))
-    }
+    }.toSeq
     if (perVersion.isEmpty) {
       val outSchema = StructType(schema.fields ++ Seq(
         StructField(ChangeTypeCol, StringType, nullable = true),
@@ -4326,18 +3999,13 @@ object DeltaLog {
     * O(commit), never O(table).
     */
   private def touchedPartitionDirs(root: String, v: Long): Set[String] =
-    Files.readAllLines(logDir(root).resolve(commitName(v))).asScala
-      .filter(_.trim.nonEmpty).flatMap { line =>
-        val n = mapper.readTree(line)
-        val p =
-          if (n.has("add")) Some(n.get("add").path("path").asText())
-          else if (n.has("remove")) Some(n.get("remove").path("path").asText())
-          else None
-        p.map(decodePath)
-      }.map { rel =>
-        val slash = rel.lastIndexOf('/')
-        if (slash < 0) "" else rel.substring(0, slash)
-      }.toSet
+    commitActions(root, v).collect {
+      case a: AddFile => a.path
+      case r: RemoveFile => r.path
+    }.map { rel =>
+      val slash = rel.lastIndexOf('/')
+      if (slash < 0) "" else rel.substring(0, slash)
+    }.toSet
 
   /** Manifest (re)generation over a bounded set of partition
     * directories: `touched = Some(dirs)` rewrites exactly those
@@ -4601,22 +4269,11 @@ object DeltaLog {
     // fall back to mtime below)
     lazy val removalTimes: Map[String, Long] =
       if (retentionMs == 0L) Map.empty
-      else versions(root).flatMap { v =>
-        Files.readAllLines(logDir(root).resolve(commitName(v))).asScala
-          .filter(_.trim.nonEmpty).flatMap { line =>
-            val n = mapper.readTree(line)
-            if (!n.has("remove")) None
-            else {
-              val r = n.get("remove")
-              val ts = r.path("deletionTimestamp")
-              // a remove without a timestamp contributes nothing — the
-              // file then falls back to the mtime test like unknowns
-              if (ts.isNumber)
-                Some(decodePath(r.path("path").asText()) -> ts.asLong())
-              else None
-            }
-          }
-      }.groupMapReduce(_._1)(_._2)(math.max)
+      else versions(root).flatMap(v => commitActions(root, v).collect {
+        // a remove without a timestamp contributes nothing — the file
+        // then falls back to the mtime test like unknowns
+        case RemoveFile(rel, Some(ts), _) => rel -> ts
+      }).groupMapReduce(_._1)(_._2)(math.max)
     val orphans = onDisk.filterNot(rel =>
       active(rel) || activeDvFiles(rel))
       .filter(rel => retentionMs == 0L ||
@@ -4658,14 +4315,8 @@ object DeltaLog {
     * loading the sidecars themselves (the cleanup walk needs names
     * only — content stays unread).
     */
-  private def sidecarRefsOf(spark: SparkSession, root: String,
-                            top: Path): Seq[String] =
-    if (top.toString.endsWith(".parquet"))
-      spark.read.schema(checkpointSchemaV2).parquet(top.toString)
-        .where(col("sidecar").isNotNull)
-        .select(col("sidecar.path")).collect().map(_.getString(0)).toSeq
-    else jsonCheckpointRows(top)
-      .flatMap(r => Option(r.getStruct(6)).map(_.getString(0)))
+  private def sidecarRefsOf(spark: SparkSession, top: Path): Seq[String] =
+    v2TopActions(spark, top).collect { case Sidecar(p) => p }
 
   /** Delta's METADATA cleanup — the `_delta_log` sibling of [[vacuum]]
     * (`delta.logRetentionDuration`, default `interval 30 days`): drop
@@ -4689,13 +4340,7 @@ object DeltaLog {
     * (the cleanup walk needs names only — content stays unread).
     */
   private def cdcRefsOf(root: String, v: Long): Seq[String] =
-    Files.readAllLines(logDir(root).resolve(commitName(v))).asScala.toSeq
-      .filter(_.trim.nonEmpty).flatMap { line =>
-        val n = mapper.readTree(line)
-        if (n.has("cdc"))
-          Some(decodePath(n.path("cdc").path("path").asText()))
-        else None
-      }
+    commitActions(root, v).collect { case c: AddCdc => c.path }
 
   def cleanUpExpiredLogs(spark: SparkSession, root: String): Seq[String] = {
     val st = replay(spark, root, currentVersion(root))
@@ -4772,7 +4417,7 @@ object DeltaLog {
     val sideDir = logd.resolve("_sidecars")
     if (Files.isDirectory(sideDir)) {
       val live: Set[String] = checkpointRefs(root).collect {
-        case V2Cp(_, top) => sidecarRefsOf(spark, root, top)
+        case V2Cp(_, top) => sidecarRefsOf(spark, top)
       }.flatten.toSet
       val s = Files.list(sideDir)
       val onDisk =
@@ -5522,15 +5167,8 @@ object DeltaLog {
 
   def txnCommitVersion(root: String, appId: String,
                        txnVersion: Long): Option[Long] =
-    versions(root).sorted.reverse.find { v =>
-      Files.readAllLines(logDir(root).resolve(commitName(v))).asScala
-        .filter(_.trim.nonEmpty).exists { line =>
-          val n = mapper.readTree(line)
-          n.has("txn") &&
-            n.get("txn").path("appId").asText("") == appId &&
-            n.get("txn").path("version").asLong(Long.MinValue) == txnVersion
-        }
-    }
+    versions(root).sorted.reverse.find(v =>
+      commitActions(root, v).contains(Txn(appId, txnVersion)))
 
   /** `OPTIMIZE … ZORDER BY (x, y)` through the Delta log: the current
     * active set rewrites Z-clustered ([[Layout.zorderWrite]] —
@@ -5783,15 +5421,19 @@ object DeltaLog {
     * feature — filesystem-clock-independent, PROTOCOL.md), else the
     * commit file's modification time (classic Delta resolution).
     */
-  private def commitTimestamp(root: String, v: Long): Long = {
-    val f = logDir(root).resolve(commitName(v))
-    Files.readAllLines(f).asScala.iterator
-      .filter(_.trim.nonEmpty).map(mapper.readTree)
-      .find(_.has("commitInfo"))
-      .map(_.get("commitInfo").path("inCommitTimestamp"))
-      .filter(_.isNumber).map(_.asLong())
-      .getOrElse(Files.getLastModifiedTime(f).toMillis)
-  }
+  private def commitTimestamp(root: String, v: Long): Long =
+    commitInfoOf(root, v).flatMap(_.inCommitTimestamp).getOrElse(
+      Files.getLastModifiedTime(logDir(root).resolve(commitName(v))).toMillis)
+
+  /** Commit `v`'s first `commitInfo`, reading no further than it: this
+    * writer leads with it, but the protocol does not mandate ordering,
+    * so an external commit whose commitInfo sits later is still found
+    * (an in-commit-timestamp chain must not restart from wall clock
+    * below its predecessor's timestamp).
+    */
+  private def commitInfoOf(root: String, v: Long): Option[CommitInfo] =
+    jsonActions(logDir(root).resolve(commitName(v)))(
+      _.collectFirst { case c: CommitInfo => c })
 
   /** Read the table as of a wall-clock timestamp (millis). */
   def readAsOf(spark: SparkSession, root: String, tsMillis: Long): DataFrame =
@@ -5875,14 +5517,9 @@ object DeltaLog {
   def history(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     versions(root).sorted.map { v =>
-      val ci = Files.readAllLines(logDir(root).resolve(commitName(v)))
-        .asScala.iterator.filter(_.trim.nonEmpty).map(mapper.readTree)
-        .find(_.has("commitInfo")).map(_.get("commitInfo"))
-      (v,
-        ci.map(_.path("operation")).filter(_.isTextual)
-          .map(_.asText()).orNull,
-        ci.map(_.path("timestamp")).filter(_.isNumber).map(_.asLong())
-          .getOrElse(commitTimestamp(root, v)))
+      val ci = commitInfoOf(root, v)
+      (v, ci.flatMap(_.operation).orNull,
+        ci.flatMap(_.timestamp).getOrElse(commitTimestamp(root, v)))
     }.toDF("version", "operation", "timestamp")
   }
 

@@ -249,8 +249,8 @@ class DeltaLogSpec extends SparkSpec {
       "the existing commit must survive the conflict untouched")
   }
 
-  test("distributed replay equals the driver-side fold on a many-file " +
-    "log: same active set, same rows, same skipping inputs") {
+  test("checkpointed replay of a many-file log equals the JSON fold: " +
+    "same active set, same rows, same skipping inputs") {
     val root = freshRoot()
     // 3 commits x 4 files, then a rewrite that retires them all and a
     // final append — adds, removes, and checkpoint state all in play
@@ -264,32 +264,26 @@ class DeltaLogSpec extends SparkSpec {
         .repartition(3), rewrite = true)
     DeltaLog.commitFlat(spark, root,
       Seq((999L, "tail")).toDF("k", "v").coalesce(1))
-    DeltaLog.checkpoint(spark, root, 3L)
-    val driverFiles = DeltaLog.filesAt(spark, root, 4L).toSet
-    val driverRows = rows(DeltaLog.read(spark, root))
-    val driverCount = DeltaLog.statsCount(spark, root).collect()
+    // the JSON fold, before any checkpoint exists
+    val jsonFiles = DeltaLog.filesAt(spark, root, 4L).toSet
+    val jsonRows = rows(DeltaLog.read(spark, root))
+    val jsonCount = DeltaLog.statsCount(spark, root).collect()
       .map(r => (r.getLong(0), r.getLong(1))).head
-    // the distributed reconstruction directly
-    val dist = DeltaLog.activeAddsDF(spark, root, 4L).collect()
-    assert(dist.map(_.getString(1)).toSet == driverFiles,
-      s"active sets differ: ${dist.map(_.getString(1)).toSet} vs $driverFiles")
-    assert(dist.forall(r => !r.isNullAt(5)), "stats must ride along")
-    // now force the WIRED-IN distributed path and replay everything
-    val saved = DeltaLog.distributedReplayCheckpointBytes
-    try {
-      DeltaLog.distributedReplayCheckpointBytes = 1L
-      assert(DeltaLog.filesAt(spark, root, 4L).toSet == driverFiles)
-      assert(rows(DeltaLog.read(spark, root)) == driverRows)
-      assert(DeltaLog.statsCount(spark, root).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).head == driverCount)
-      assert(rows(DeltaLog.read(spark, root)
-        .where(col("k").between(905L, 999L)))
-        == driverRows.filter(t => t._1 >= 905L))
-    } finally DeltaLog.distributedReplayCheckpointBytes = saved
+    assert(jsonRows == (901L to 906L).map(k => (k, s"w${k - 900}")).toSet +
+      ((999L, "tail")))
+    // replay from the checkpoint plus the one-commit tail
+    DeltaLog.checkpoint(spark, root, 3L)
+    assert(DeltaLog.filesAt(spark, root, 4L).toSet == jsonFiles)
+    assert(rows(DeltaLog.read(spark, root)) == jsonRows)
+    assert(DeltaLog.statsCount(spark, root).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).head == jsonCount)
+    assert(rows(DeltaLog.read(spark, root)
+      .where(col("k").between(905L, 999L)))
+      == jsonRows.filter(t => t._1 >= 905L))
   }
 
-  test("distributed replay keeps same-version remove+add files active: " +
-    "a DV-delete + RESTORE tail matches the driver fold") {
+  test("checkpointed replay keeps same-version remove+add files " +
+    "active across a DV-delete + RESTORE tail") {
     val root = freshRoot()
     DeltaLog.commitFlat(spark, root,
       (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v")
@@ -300,21 +294,14 @@ class DeltaLogSpec extends SparkSpec {
     // SAME path in one version (retire the bare entry, re-add with the
     // DV), and the RESTORE past it commits another same-version pair
     // re-attaching the pre-delete state — the fold must let the add win
-    // within a commit or these files vanish from the distributed active
-    // set while the driver fold keeps them
+    // within a commit or these files vanish from the active set
     DeltaLog.deleteWhereLongDV(spark, root, "k", 5L, 12L)
     val afterDelete = rows(DeltaLog.read(spark, root))
     DeltaLog.restore(spark, root, dv0)
-    val driverRows = rows(DeltaLog.read(spark, root))
-    assert(driverRows == (1L to 40L).map(k => (k, s"v$k")).toSet)
+    val restored = rows(DeltaLog.read(spark, root))
+    assert(restored == (1L to 40L).map(k => (k, s"v$k")).toSet)
     assert(afterDelete ==
-      driverRows.filterNot(t => t._1 >= 5L && t._1 <= 12L))
-    val saved = DeltaLog.distributedReplayCheckpointBytes
-    try {
-      DeltaLog.distributedReplayCheckpointBytes = 1L
-      assert(rows(DeltaLog.read(spark, root)) == driverRows,
-        "distributed replay dropped same-version remove+add files")
-    } finally DeltaLog.distributedReplayCheckpointBytes = saved
+      restored.filterNot(t => t._1 >= 5L && t._1 <= 12L))
   }
 
   test("deleteWhereLongDV: soft-delete via deletion vectors — no data " +
@@ -2107,10 +2094,6 @@ class DeltaLogSpec extends SparkSpec {
       Set((1L, "a"), (2L, "b"), (3L, "c")))
     assert(rows(DeltaLog.readAt(spark, root, 1L)) ==
       Set((1L, "a"), (2L, "b")))
-    // the distributed reconstruction walks the same V2 shape
-    val dist = DeltaLog.activeAddsDF(spark, root, 2L).collect()
-      .map(_.getString(1)).toSet
-    assert(dist == Set("part-a.parquet", "part-b.parquet", "part-c.parquet"))
 
     // ---- variant 2: JSON top with INLINE adds, no sidecars ----
     val root2 = freshRoot()
