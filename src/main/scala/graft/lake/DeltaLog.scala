@@ -190,7 +190,7 @@ object DeltaLog {
     * the version actually committed.
     */
   private[lake] def writeCommitFile(root: String, dv: Long,
-                                    actions: Seq[JsonNode],
+                                    actions: Seq[Action],
                                     operation: String = null,
                                     ictStart: Boolean = false,
                                     retryDataConflicts: Boolean = false,
@@ -206,7 +206,10 @@ object DeltaLog {
         case e: IllegalStateException
           if retryDataConflicts && attempt < maxAttempts &&
             e.getCause.isInstanceOf[java.nio.file.FileAlreadyExistsException] =>
-          val blind = actions.forall(n => n.has("add") || n.has("txn"))
+          val blind = actions.forall {
+            case _: AddFile | _: Txn => true
+            case _ => false
+          }
           if (!blind) throw new IllegalStateException(
             s"DeltaLog: commit version $v of $root was taken by a " +
               "concurrent writer and this commit is not a blind " +
@@ -218,9 +221,7 @@ object DeltaLog {
             case _: MetaData | _: Protocol => true
             case _ => false
           }
-          val ourApps = actions.collect {
-            case n if n.has("txn") => n.get("txn").path("appId").asText()
-          }.toSet
+          val ourApps = actions.collect { case t: Txn => t.appId }.toSet
           val winnerTxnClash = winner.exists {
             case t: Txn => ourApps(t.appId)
             case _ => false
@@ -246,7 +247,7 @@ object DeltaLog {
     * committed history (the Delta commit protocol's requirement).
     */
   private def writeCommitFileOnce(root: String, dv: Long,
-                                  actions: Seq[JsonNode],
+                                  actions: Seq[Action],
                                   operation: String = null,
                                   ictStart: Boolean = false): Unit = {
     // In-commit timestamps (the `inCommitTimestamp` writer feature):
@@ -270,16 +271,9 @@ object DeltaLog {
     // ignores it, DESCRIBE-HISTORY-style surfaces read it
     val all =
       if (operation == null && ict.isEmpty) actions
-      else {
-        val n = mapper.createObjectNode()
-        val ci = n.putObject("commitInfo")
-        ci.put("timestamp", System.currentTimeMillis())
-        if (operation != null) ci.put("operation", operation)
-        ict.foreach(ci.put("inCommitTimestamp", _))
-        ci.put("engineInfo", "graft-deltalog")
-        n +: actions
-      }
-    val body = all.map(mapper.writeValueAsString).mkString("", "\n", "\n")
+      else CommitInfo(Option(operation), Some(System.currentTimeMillis()),
+        ict) +: actions
+    val body = all.map(encodeAction).mkString("", "\n", "\n")
     val tmp = logDir(root).resolve(commitName(dv) + ".__tmp")
     Files.write(tmp, body.getBytes("UTF-8"))
     val target = logDir(root).resolve(commitName(dv))
@@ -306,24 +300,6 @@ object DeltaLog {
             "concurrent writer conflict; the committed file was NOT " +
             "overwritten", e)
     }
-  }
-
-  private def metaDataAction(tableId: String, schemaJson: String,
-                             partitionCols: Seq[String],
-                             configuration: Map[String, String] =
-                               Map.empty): JsonNode = {
-    val n = mapper.createObjectNode()
-    val m = n.putObject("metaData")
-    m.put("id", tableId)
-    val fmt = m.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    m.put("schemaString", schemaJson)
-    val pcs = m.putArray("partitionColumns")
-    partitionCols.foreach(pcs.add)
-    val cfg = m.putObject("configuration")
-    configuration.foreach { case (k, v) => cfg.put(k, v) }
-    n
   }
 
   // ------------------------------------------------------------------
@@ -390,13 +366,14 @@ object DeltaLog {
       StructField("modificationTime", LongType))))))
 
   // ------------------------------------------------------------------
-  // Log actions: one decoder, two readers
+  // Log actions: one codec for every reader and writer
   // ------------------------------------------------------------------
 
-  /** One decoded `_delta_log` action (PROTOCOL.md "Actions"), the shape
-    * every log reader pattern-matches whether the action came from a
-    * commit file, a checkpoint row or a V2 checkpoint top. Paths are
-    * DECODED ([[decodePath]]); partition values keep their nulls.
+  /** One `_delta_log` action (PROTOCOL.md "Actions"), the shape every
+    * log reader pattern-matches whether the action came from a commit
+    * file, a checkpoint row or a V2 checkpoint top, and the shape every
+    * writer builds ([[encodeAction]]). Paths are DECODED
+    * ([[decodePath]]); partition values keep their nulls.
     */
   private[lake] sealed trait Action
   private[lake] case class Protocol(minReaderVersion: Int,
@@ -418,17 +395,19 @@ object DeltaLog {
   private[lake] case class CommitInfo(operation: Option[String],
       timestamp: Option[Long], inCommitTimestamp: Option[Long])
     extends Action
-  private[lake] case class Sidecar(path: String) extends Action
+  private[lake] case class Sidecar(path: String, sizeInBytes: Long,
+      modificationTime: Long) extends Action
+  private[lake] case class CheckpointMetadata(version: Long) extends Action
 
   /** Decode one action line: a commit-file line, a V2 JSON top line, or
     * a checkpoint row serialized by `toJSON` (a checkpoint row IS a
     * commit line once its null columns are dropped). The action is the
-    * line's object-valued field; `checkpointMetadata`, `domainMetadata`
-    * and unknown actions decode to None. The protocol's defaults live
-    * here: `dataChange` true, reader/writer floors 1/2, absent features
-    * empty, provider parquet (any other provider refuses).
+    * line's object-valued field; `domainMetadata` and unknown actions
+    * decode to None. The protocol's defaults live here: `dataChange`
+    * true, reader/writer floors 1/2, absent features empty, provider
+    * parquet (any other provider refuses).
     */
-  private def decodeAction(line: String): Option[Action] = {
+  private[lake] def decodeAction(line: String): Option[Action] = {
     def long(n: JsonNode): Option[Long] =
       if (n.isNumber) Some(n.asLong()) else None
     def text(n: JsonNode): Option[String] =
@@ -472,10 +451,103 @@ object DeltaLog {
               yield Txn(app, ver)
           case "commitInfo" => Some(CommitInfo(text(a.path("operation")),
             long(a.path("timestamp")), long(a.path("inCommitTimestamp"))))
-          case "sidecar" => Some(Sidecar(a.path("path").asText()))
+          case "sidecar" => Some(Sidecar(a.path("path").asText(),
+            a.path("sizeInBytes").asLong(0L),
+            a.path("modificationTime").asLong(0L)))
+          case "checkpointMetadata" =>
+            long(a.path("version")).map(CheckpointMetadata)
           case _ => None
         }
       }
+  }
+
+  /** The inverse of [[decodeAction]]: one action as its log line, the
+    * fields in the order graft writes them — `commitInfo` with a
+    * constant `engineInfo`, `cdc` with a constant `dataChange:false`,
+    * absent options and empty protocol feature lists omitted. Commit
+    * files and checkpoints both encode through here.
+    */
+  private[lake] def encodeAction(a: Action): String = {
+    val out = new java.io.StringWriter
+    val g = mapper.getFactory.createGenerator(out)
+    def obj(name: String)(body: => Unit): Unit = {
+      g.writeObjectFieldStart(name); body; g.writeEndObject()
+    }
+    def strings(name: String, xs: Seq[String]): Unit = {
+      g.writeArrayFieldStart(name); xs.foreach(g.writeString); g.writeEndArray()
+    }
+    def pairs(name: String, m: Map[String, String]): Unit =
+      obj(name)(m.foreach { case (k, v) => g.writeStringField(k, v) })
+    def long(name: String, v: Option[Long]): Unit =
+      v.foreach(g.writeNumberField(name, _))
+    g.writeStartObject()
+    a match {
+      case CommitInfo(operation, timestamp, ict) => obj("commitInfo") {
+        long("timestamp", timestamp)
+        operation.foreach(g.writeStringField("operation", _))
+        long("inCommitTimestamp", ict)
+        g.writeStringField("engineInfo", "graft-deltalog")
+      }
+      case Protocol(reader, writer, readerFeatures, writerFeatures) =>
+        obj("protocol") {
+          g.writeNumberField("minReaderVersion", reader)
+          g.writeNumberField("minWriterVersion", writer)
+          if (readerFeatures.nonEmpty) strings("readerFeatures", readerFeatures)
+          if (writerFeatures.nonEmpty) strings("writerFeatures", writerFeatures)
+        }
+      case MetaData(id, schemaString, partitionColumns, configuration) =>
+        obj("metaData") {
+          g.writeStringField("id", id)
+          obj("format") {
+            g.writeStringField("provider", "parquet")
+            obj("options")(())
+          }
+          g.writeStringField("schemaString", schemaString)
+          strings("partitionColumns", partitionColumns)
+          pairs("configuration", configuration)
+        }
+      case f: AddFile => obj("add") {
+        g.writeStringField("path", encodePath(f.path))
+        pairs("partitionValues", f.partitionValues)
+        long("size", f.size)
+        long("modificationTime", f.modificationTime)
+        g.writeBooleanField("dataChange", f.dataChange)
+        f.stats.foreach(g.writeStringField("stats", _))
+        f.deletionVector.foreach(d => obj("deletionVector") {
+          g.writeStringField("storageType", d.storageType)
+          g.writeStringField("pathOrInlineDv", d.pathOrInlineDv)
+          long("offset", d.offset)
+          g.writeNumberField("sizeInBytes", d.sizeInBytes)
+          g.writeNumberField("cardinality", d.cardinality)
+        })
+      }
+      case RemoveFile(path, deletionTimestamp, dataChange) => obj("remove") {
+        g.writeStringField("path", encodePath(path))
+        long("deletionTimestamp", deletionTimestamp)
+        g.writeBooleanField("dataChange", dataChange)
+      }
+      case AddCdc(path, partitionValues, size) => obj("cdc") {
+        g.writeStringField("path", encodePath(path))
+        pairs("partitionValues", partitionValues)
+        g.writeNumberField("size", size)
+        g.writeBooleanField("dataChange", false)
+      }
+      case Txn(appId, version) => obj("txn") {
+        g.writeStringField("appId", appId)
+        g.writeNumberField("version", version)
+      }
+      case Sidecar(path, sizeInBytes, modificationTime) => obj("sidecar") {
+        g.writeStringField("path", path)
+        g.writeNumberField("sizeInBytes", sizeInBytes)
+        g.writeNumberField("modificationTime", modificationTime)
+      }
+      case CheckpointMetadata(version) => obj("checkpointMetadata") {
+        g.writeNumberField("version", version)
+      }
+    }
+    g.writeEndObject()
+    g.close()
+    out.toString
   }
 
   /** The one reader of `_delta_log` JSON lines (commit files and V2
@@ -514,7 +586,7 @@ object DeltaLog {
     case ClassicCp(_, parts) => parquetActions(spark, parts)
     case V2Cp(_, top) =>
       val own = v2TopActions(spark, top)
-      val sidecars = own.collect { case Sidecar(p) =>
+      val sidecars = own.collect { case Sidecar(p, _, _) =>
         logDir(root).resolve("_sidecars").resolve(p)
       }
       if (sidecars.isEmpty) own else own ++ parquetActions(spark, sidecars)
@@ -537,63 +609,72 @@ object DeltaLog {
     files.map(f => spark.read.schema(checkpointSchemaV2).parquet(f.toString))
       .reduce(_ union _).toJSON.collect().toSeq.flatMap(decodeAction)
 
-  /** Write the parquet checkpoint for `version` (replayed state: one
-    * protocol row, one metaData row, one row per active file with
-    * `dataChange=false` — the checkpoint convention) plus the
-    * `_last_checkpoint` pointer `{"version":v,"size":n}`. Idempotent:
-    * an existing checkpoint for `version` is left untouched (the
-    * pointer still refreshes to the newest checkpoint present).
+  /** The snapshot `st` as checkpoint actions: its protocol and
+    * metaData, its txn watermarks (Delta checkpoints carry them, so
+    * exactly-once sinks survive compaction) and, apart, its active adds
+    * with `dataChange=false` (the checkpoint convention). The
+    * configuration MUST ride the metaData: replay takes it from here
+    * once the JSON prefix is trimmed — dropping it silently un-declares
+    * CDF/appendOnly/constraints/mapping mode/ICT.
+    */
+  private def snapshotActions(st: LogState, op: String, root: String,
+      version: Long): (Seq[Action], Seq[Action], Seq[AddFile]) = {
+    val schemaJson = st.schema.map(_.json).getOrElse(
+      throw new IllegalStateException(
+        s"DeltaLog.$op: no metaData in $root log at $version"))
+    (Seq(Protocol(st.minReaderVersion, st.minWriterVersion,
+        st.readerFeatures, st.writerFeatures),
+      MetaData(st.tableId, schemaJson, st.partitionColumns, st.configuration)),
+      st.txnVersions.toSeq.sortBy(_._1).map { case (app, v) => Txn(app, v) },
+      st.files.map(_.copy(dataChange = false)))
+  }
+
+  /** Write `actions` as ONE parquet file of `schema` rows — one row per
+    * action, the action in its column, nulls elsewhere — staged like
+    * [[writeSingleParquet]]. The rows are the encoded lines read back
+    * by Spark's JSON reader: the inverse of [[parquetActions]].
+    */
+  private def writeActionsParquet(spark: SparkSession, root: String,
+      actions: Seq[Action], schema: StructType, prefix: String): Path = {
+    import spark.implicits._
+    writeSingleParquet(spark.read.schema(schema)
+      .json(spark.createDataset(actions.map(encodeAction))), root, prefix)
+  }
+
+  /** Write the parquet checkpoint for `version` ([[snapshotActions]]:
+    * protocol, metaData, txn watermarks, one add per active file) plus
+    * the `_last_checkpoint` pointer `{"version":v,"size":n}`.
+    * Idempotent: an existing checkpoint for `version` is left untouched
+    * (the pointer still refreshes to the newest checkpoint present).
     */
   def checkpoint(spark: SparkSession, root: String, version: Long): Unit = {
     val target = logDir(root).resolve(checkpointName(version))
     var writtenRows = -1L
     if (!Files.exists(target)) {
-      val st = replay(spark, root, version)
-      val schemaJson = st.schema.map(_.json).getOrElse(
-        throw new IllegalStateException(
-          s"DeltaLog.checkpoint: no metaData in $root log at $version"))
-      val protoRow = Row(null, null, null, null,
-        Row(st.minReaderVersion, st.minWriterVersion,
-          if (st.readerFeatures.isEmpty) null else st.readerFeatures,
-          if (st.writerFeatures.isEmpty) null else st.writerFeatures))
-      // configuration MUST ride the checkpoint: replay takes it from
-      // here once the JSON prefix is trimmed — dropping it silently
-      // un-declares CDF/appendOnly/constraints/mapping mode/ICT
-      val metaRow = Row(null, null, null,
-        Row(st.tableId, null, null, Row("parquet", Map.empty[String, String]),
-          schemaJson, st.partitionColumns, st.configuration, null),
-        null)
-      val addRows = st.files.map { case (path, pv) =>
-        val dvRow = st.fileDvs.get(path).map(d =>
-          Row(d.storageType, d.pathOrInlineDv, d.offset.orNull,
-            d.sizeInBytes, d.cardinality)).orNull
-        Row(null,
-          Row(encodePath(path), pv, st.fileSizes.getOrElse(path, 0L),
-            st.fileModTimes.getOrElse(path, 0L), false,
-            st.fileStats.getOrElse(path, null), null, dvRow),
-          null, null, null)
-      }
-      // txn watermarks survive compaction (Delta checkpoints carry them)
-      val txnRows = st.txnVersions.toSeq.sortBy(_._1).map { case (app, ver) =>
-        Row(Row(app, ver), null, null, null, null)
-      }
-      val rows = Seq(protoRow, metaRow) ++ txnRows ++ addRows
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), checkpointSchema)
-      val part = writeSingleParquet(df, root, "graft-delta-ckpt")
+      val (meta, txns, adds) = snapshotActions(replay(spark, root, version),
+        "checkpoint", root, version)
+      val actions = meta ++ txns ++ adds
+      val part = writeActionsParquet(spark, root, actions, checkpointSchema,
+        "graft-delta-ckpt")
       Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
-      writtenRows = rows.size.toLong
+      writtenRows = actions.size.toLong
     }
     // _last_checkpoint is a HINT (readers discover by listing); keep it
-    // pointing at the newest checkpoint present.
+    // pointing at the newest checkpoint present. The row count is known
+    // when this call wrote the newest checkpoint; otherwise one parquet
+    // read (footer-sized file) recovers it
     val newest = checkpointVersions(root).map(_._1).max
-    val n = mapper.createObjectNode()
-    n.put("version", newest)
-    // row count is known when this call wrote the newest checkpoint;
-    // otherwise one parquet read (footer-sized file) recovers it
-    n.put("size",
+    writeLastCheckpoint(root, newest,
       if (newest == version && writtenRows >= 0L) writtenRows
       else countCheckpointRows(spark, root, newest))
+  }
+
+  /** Point the `_last_checkpoint` hint at `version` (`size` actions). */
+  private def writeLastCheckpoint(root: String, version: Long,
+                                  size: Long): Unit = {
+    val n = mapper.createObjectNode()
+    n.put("version", version)
+    n.put("size", size)
     val tmp = logDir(root).resolve("_last_checkpoint.__tmp")
     Files.write(tmp, mapper.writeValueAsString(n).getBytes("UTF-8"))
     Files.move(tmp, logDir(root).resolve("_last_checkpoint"),
@@ -620,18 +701,12 @@ object DeltaLog {
     requireWritable(st, "enableV2Checkpoints")
     if (st.minReaderVersion >= 3 && st.readerFeatures.contains("v2Checkpoint")
         && st.writerFeatures.contains("v2Checkpoint")) return v
-    val n = mapper.createObjectNode()
-    val p = n.putObject("protocol")
-    p.put("minReaderVersion", 3)
-    p.put("minWriterVersion", 7)
-    val rf = p.putArray("readerFeatures")
     // legacy minReaderVersion 2 implies columnMapping — enumerate it
-    ((if (st.minReaderVersion == 2) Seq("columnMapping") else Seq.empty) ++
-      st.readerFeatures :+ "v2Checkpoint").distinct.foreach(rf.add)
-    val wf = p.putArray("writerFeatures")
-    (legacyWriterFeatures(st.minWriterVersion) ++ st.writerFeatures :+
-      "v2Checkpoint").distinct.foreach(wf.add)
-    writeCommitFile(root, v + 1, Seq(n), operation = "UPGRADE PROTOCOL")
+    writeCommitFile(root, v + 1, Seq(Protocol(3, 7,
+      ((if (st.minReaderVersion == 2) Seq("columnMapping") else Seq.empty) ++
+        st.readerFeatures :+ "v2Checkpoint").distinct,
+      (legacyWriterFeatures(st.minWriterVersion) ++ st.writerFeatures :+
+        "v2Checkpoint").distinct)), operation = "UPGRADE PROTOCOL")
     v + 1
   }
 
@@ -662,62 +737,29 @@ object DeltaLog {
       st.readerFeatures.contains("v2Checkpoint"),
       s"DeltaLog.checkpointV2: $root does not declare the v2Checkpoint " +
         "reader feature — run enableV2Checkpoints first")
-    val schemaJson = st.schema.map(_.json).getOrElse(
-      throw new IllegalStateException(
-        s"DeltaLog.checkpointV2: no metaData in $root log at $version"))
-    // rows in checkpointSchemaV2 shape:
-    // (txn, add, remove, metaData, protocol, checkpointMetadata, sidecar)
-    def row(txn: Row = null, add: Row = null, meta: Row = null,
-            proto: Row = null, cpMeta: Row = null, side: Row = null) =
-      Row(txn, add, null, meta, proto, cpMeta, side)
-    val addRows = st.files.map { case (path, pv) =>
-      val dvRow = st.fileDvs.get(path).map(d =>
-        Row(d.storageType, d.pathOrInlineDv, d.offset.orNull,
-          d.sizeInBytes, d.cardinality)).orNull
-      row(add = Row(encodePath(path), pv, st.fileSizes.getOrElse(path, 0L),
-        st.fileModTimes.getOrElse(path, 0L), false,
-        st.fileStats.getOrElse(path, null), null, dvRow))
-    }
+    val (meta, txns, adds) = snapshotActions(st, "checkpointV2", root,
+      version)
     val sidecarDir = logDir(root).resolve("_sidecars")
     Files.createDirectories(sidecarDir)
-    val sidecarRows = addRows.grouped(
+    val sidecars = adds.grouped(
       math.min(maxAddsPerSidecar, Int.MaxValue.toLong).toInt)
       .map { batch =>
-        val df = spark.createDataFrame(
-          spark.sparkContext.parallelize(batch, 1), checkpointSchemaV2)
-        val part = writeSingleParquet(df, root, "graft-delta-ckpt-sc")
+        val part = writeActionsParquet(spark, root, batch,
+          checkpointSchemaV2, "graft-delta-ckpt-sc")
         val name = s"${java.util.UUID.randomUUID()}.parquet"
         val target = sidecarDir.resolve(name)
         Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
-        row(side = Row(name, Files.size(target),
-          Files.getLastModifiedTime(target).toMillis))
+        Sidecar(name, Files.size(target),
+          Files.getLastModifiedTime(target).toMillis)
       }.toSeq
-    val protoRow = row(proto =
-      Row(st.minReaderVersion, st.minWriterVersion,
-        if (st.readerFeatures.isEmpty) null else st.readerFeatures,
-        if (st.writerFeatures.isEmpty) null else st.writerFeatures))
-    val metaRow = row(meta =
-      Row(st.tableId, null, null, Row("parquet", Map.empty[String, String]),
-        schemaJson, st.partitionColumns, st.configuration, null))
-    val txnRows = st.txnVersions.toSeq.sortBy(_._1).map { case (app, ver) =>
-      row(txn = Row(app, ver))
-    }
-    val cpMetaRow = row(cpMeta = Row(version))
-    val topRows = Seq(protoRow, metaRow, cpMetaRow) ++ txnRows ++ sidecarRows
-    val topDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(topRows, 1), checkpointSchemaV2)
-    val topPart = writeSingleParquet(topDf, root, "graft-delta-ckpt-v2")
+    val top = meta ++ (CheckpointMetadata(version) +: txns) ++ sidecars
+    val topPart = writeActionsParquet(spark, root, top, checkpointSchemaV2,
+      "graft-delta-ckpt-v2")
     val topName =
       f"$version%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
     Files.move(topPart, logDir(root).resolve(topName),
       StandardCopyOption.ATOMIC_MOVE)
-    val n = mapper.createObjectNode()
-    n.put("version", version)
-    n.put("size", (topRows.size + addRows.size).toLong)
-    val tmp = logDir(root).resolve("_last_checkpoint.__tmp")
-    Files.write(tmp, mapper.writeValueAsString(n).getBytes("UTF-8"))
-    Files.move(tmp, logDir(root).resolve("_last_checkpoint"),
-      StandardCopyOption.REPLACE_EXISTING)
+    writeLastCheckpoint(root, version, (top.size + adds.size).toLong)
   }
 
   /** Post-commit auto-checkpoint (`delta.checkpointInterval`): once a
@@ -799,11 +841,6 @@ object DeltaLog {
   // Reader: _delta_log → DataFrame
   // ------------------------------------------------------------------
 
-  /** Replayed log state at a version: declared schema + partition
-    * columns (from `metaData`), protocol floor, table id, and the
-    * active table-relative file paths in activation order with their
-    * partition values (null map values = null partition value).
-    */
   /** `add.deletionVector` descriptor (PROTOCOL.md: Deletion Vector
     * Descriptor Schema): `storageType` `u` (UUID-named file beside the
     * table, path suffix = optional prefix + 20-char Z85 UUID), `i`
@@ -871,6 +908,10 @@ object DeltaLog {
       n.path("sizeInBytes").asInt(),
       n.path("cardinality").asLong()))
 
+  /** Replayed log state at a version: declared schema + partition
+    * columns (from `metaData`), protocol floor, table id, txn
+    * watermarks and the active adds in activation order.
+    */
   private case class LogState(
     schema: Option[StructType],
     partitionColumns: Seq[String],
@@ -880,12 +921,11 @@ object DeltaLog {
     writerFeatures: Seq[String],
     configuration: Map[String, String],
     tableId: String,
-    files: Seq[(String, Map[String, String])],
-    fileSizes: Map[String, Long],
-    fileModTimes: Map[String, Long],
-    fileStats: Map[String, String],
-    fileDvs: Map[String, DvDescriptor],
-    txnVersions: Map[String, Long])
+    files: Vector[AddFile],
+    txnVersions: Map[String, Long]) {
+    /** The active adds by path. */
+    lazy val byPath: Map[String, AddFile] = files.map(a => a.path -> a).toMap
+  }
 
   /** Reader features this implementation genuinely honors when named by
     * a protocol-3 table: `deletionVectors` (full read support — add
@@ -1258,9 +1298,9 @@ object DeltaLog {
   /** Largest source-key set a MERGE enumerates driver-side for the
     * footer-bloom point prune ([[mergeCandidates]] layer 2) — above
     * it, bulk merges rely on range pruning + the semi-join probe
-    * (where most files genuinely hold matches anyway). Test seam.
+    * (where most files genuinely hold matches anyway).
     */
-  private[lake] var mergeBloomMaxKeys: Long = 1024L
+  private val mergeBloomMaxKeys: Long = 1024L
 
   /** The snapshot at `upTo`: one in-order fold of the newest usable
     * checkpoint's actions and the JSON commits after it (PROTOCOL.md
@@ -1305,17 +1345,11 @@ object DeltaLog {
       case r: RemoveFile => active.remove(r.path)
       case Txn(app, ver) =>
         txns(app) = math.max(txns.getOrElse(app, Long.MinValue), ver)
-      case _ => () // commitInfo / cdc / sidecar: not snapshot state
+      case _ => () // commitInfo / cdc / sidecar / checkpointMetadata
     }
-    val adds = active.values().asScala.toVector
     val st = LogState(schema, partitionCols, proto.minReaderVersion,
       proto.minWriterVersion, proto.readerFeatures, proto.writerFeatures,
-      config, tableId, adds.map(a => a.path -> a.partitionValues),
-      adds.flatMap(a => a.size.map(a.path -> _)).toMap,
-      adds.flatMap(a => a.modificationTime.map(a.path -> _)).toMap,
-      adds.flatMap(a => a.stats.map(a.path -> _)).toMap,
-      adds.flatMap(a => a.deletionVector.map(a.path -> _)).toMap,
-      txns.toMap)
+      config, tableId, active.values().asScala.toVector, txns.toMap)
     validateReaderSupport(root, st)
     st
   }
@@ -1518,7 +1552,7 @@ object DeltaLog {
     * one.
     */
   private def scanFiles(spark: SparkSession, root: String, st: LogState,
-      files: Seq[(String, Map[String, String])], cols: StructType,
+      files: Seq[AddFile], cols: StructType,
       tagged: Boolean = false): DataFrame = {
     // every caller has already refused a log without metaData
     val schema = st.schema.getOrElse(cols)
@@ -1528,17 +1562,17 @@ object DeltaLog {
       StructField(SrcTagCol, IntegerType, nullable = false))
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     val conf = spark.sparkContext.hadoopConfiguration
-    val entries = files.zipWithIndex.map { case ((rel, pv), i) =>
-      val path = dataPath(root, rel)
+    val entries = files.zipWithIndex.map { case (f, i) =>
+      val path = dataPath(root, f.path)
       val values = pcs.map { c =>
-        val key = pvKeyOf(st, schema, c, pv).getOrElse(
+        val key = pvKeyOf(st, schema, c, f.partitionValues).getOrElse(
           throw new IllegalArgumentException(
-            s"DeltaLog: add $rel lacks partitionValues for declared " +
+            s"DeltaLog: add ${f.path} lacks partitionValues for declared " +
               s"partition column $c"))
-        typedPartitionValue(pv(key), schema(c).dataType, tz)
+        typedPartitionValue(f.partitionValues(key), schema(c).dataType, tz)
       }
       (path.getFileSystem(conf).getFileStatus(path),
-        InternalRow.fromSeq(values :+ i), st.fileStats.get(rel))
+        InternalRow.fromSeq(values :+ i), f.stats)
     }
     val (fileCols, extra) = cols.filterNot(f => pcs.contains(f.name))
       .partition(f => schema.fieldNames.contains(f.name))
@@ -1551,8 +1585,8 @@ object DeltaLog {
     val out = cols.fields.toSeq.map(f =>
       if (pcs.contains(f.name)) col(f.name)
       else toLogicalField(f, physMap.getOrElse(f.name, f.name)))
-    val dvs = files.zipWithIndex.flatMap { case ((rel, _), i) =>
-      st.fileDvs.get(rel).map(i -> _) }
+    val dvs = files.zipWithIndex.flatMap { case (f, i) =>
+      f.deletionVector.map(i -> _) }
     val df = spark.baseRelationToDataFrame(relation)
     if (dvs.isEmpty && !tagged) df.select(out: _*)
     else {
@@ -1598,9 +1632,9 @@ object DeltaLog {
     * candidate files the probe is one job, not 10 k.
     */
   private def probeTouched(spark: SparkSession, root: String,
-      candidates: Seq[(String, Map[String, String])],
+      candidates: Seq[AddFile],
       probeSchema: StructType, matcher: DataFrame => DataFrame,
-      st: LogState): Seq[(String, Map[String, String])] = {
+      st: LogState): Seq[AddFile] = {
     import spark.implicits._
     if (candidates.isEmpty) return Nil
     val hit: Set[Int] = matcher(
@@ -1624,7 +1658,7 @@ object DeltaLog {
     * probe job and one rewrite job, never 10 k sequential jobs.
     */
   private def rewriteFilesBatched(spark: SparkSession, root: String,
-      files: Seq[(String, Map[String, String])], dataSchema: StructType,
+      files: Seq[AddFile], dataSchema: StructType,
       transform: DataFrame => DataFrame,
       prefix: String,
       st: LogState,
@@ -1648,58 +1682,36 @@ object DeltaLog {
           try s.iterator().asScala
             .find(_.getFileName.toString.endsWith(".parquet"))
             .getOrElse(throw new IllegalStateException(
-              s"DeltaLog: no parquet produced for ${files(i)._1} in $staging"))
+              s"DeltaLog: no parquet produced for ${files(i).path} in $staging"))
           finally s.close()
         // one task writes several partition dirs under ONE part name —
         // hoist under a fresh UUID so sibling moves cannot collide
         val hoisted = stagingBase(root).resolve(
           s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
         Files.move(part, hoisted, StandardCopyOption.ATOMIC_MOVE)
-        out += files(i)._1 -> hoisted
+        out += files(i).path -> hoisted
       }
     } finally dirs.close()
     deleteRecursively(staging)
     out.result()
   }
 
-  /** Canonical `add` action for an on-disk table file: size/mtime from
-    * the filesystem, `stats` from the footer.
+  /** Canonical `add` for an on-disk table file: size/mtime from the
+    * filesystem, `stats` from the footer.
     */
-  private def addActionNode(root: String, rel: String,
-                            pv: Map[String, String], dataChange: Boolean,
-                            conf: org.apache.hadoop.conf.Configuration,
-                            dv: Option[DvDescriptor] = None): JsonNode = {
+  private def addFor(root: String, rel: String, pv: Map[String, String],
+                     dataChange: Boolean,
+                     conf: org.apache.hadoop.conf.Configuration,
+                     dv: Option[DvDescriptor] = None): AddFile = {
     val fp = resolvePath(root, rel)
-    val n = mapper.createObjectNode()
-    val a = n.putObject("add")
-    a.put("path", encodePath(rel))
-    val pvo = a.putObject("partitionValues")
-    pv.foreach { case (k, sv) =>
-      if (sv == null) pvo.putNull(k) else pvo.put(k, sv)
-    }
-    a.put("size", Files.size(fp))
-    a.put("modificationTime", Files.getLastModifiedTime(fp).toMillis)
-    a.put("dataChange", dataChange)
-    a.put("stats", footerStatsJson(fp, conf))
-    dv.foreach { d =>
-      val o = a.putObject("deletionVector")
-      o.put("storageType", d.storageType)
-      o.put("pathOrInlineDv", d.pathOrInlineDv)
-      d.offset.foreach(o.put("offset", _))
-      o.put("sizeInBytes", d.sizeInBytes)
-      o.put("cardinality", d.cardinality)
-    }
-    n
+    AddFile(rel, pv, Some(Files.size(fp)),
+      Some(Files.getLastModifiedTime(fp).toMillis), dataChange,
+      Some(footerStatsJson(fp, conf)), dv)
   }
 
-  private def removeActionNode(rel: String, dataChange: Boolean): JsonNode = {
-    val n = mapper.createObjectNode()
-    val r = n.putObject("remove")
-    r.put("path", encodePath(rel))
-    r.put("deletionTimestamp", System.currentTimeMillis())
-    r.put("dataChange", dataChange)
-    n
-  }
+  /** `remove` of `rel`, stamped now. */
+  private def removeOf(rel: String, dataChange: Boolean): RemoveFile =
+    RemoveFile(rel, Some(System.currentTimeMillis()), dataChange)
 
   // ------------------------------------------------------------------
   // Change data feed (PROTOCOL.md: Add CDC File; the `cdc` action)
@@ -1761,30 +1773,13 @@ object DeltaLog {
         "deletes and updates; only appends and layout-only OPTIMIZE " +
         "are legal")
 
-  /** `cdc` action for an on-disk `_change_data/` file — same shape as
-    * `add` minus stats; `dataChange` is ALWAYS false (PROTOCOL.md: CDC
-    * files never affect snapshot state, only the change feed).
-    */
-  private def cdcActionNode(root: String, rel: String,
-                            pv: Map[String, String]): JsonNode = {
-    val n = mapper.createObjectNode()
-    val c = n.putObject("cdc")
-    c.put("path", encodePath(rel))
-    val pvo = c.putObject("partitionValues")
-    pv.foreach { case (k, sv) =>
-      if (sv == null) pvo.putNull(k) else pvo.put(k, sv)
-    }
-    c.put("size", Files.size(Paths.get(root, rel)))
-    c.put("dataChange", false)
-    n
-  }
-
   /** Stage `df` (data columns + [[ChangeTypeCol]]) as one CDC parquet
-    * under `_change_data/` and return its `cdc` action carrying `pv`.
+    * under `_change_data/` and return its `cdc` action carrying `pv`
+    * (CDC files never affect snapshot state, only the change feed).
     */
   private def writeCdcFile(df: DataFrame, root: String,
                            pv: Map[String, String],
-                           st: LogState): JsonNode = {
+                           st: LogState): AddCdc = {
     // mapped tables: cdc files store PHYSICAL data-column names/ids at
     // every nesting level, like every other data file (the
     // `_change_type` column is a feed artifact, never mapped —
@@ -1795,9 +1790,8 @@ object DeltaLog {
     val target = dir.resolve(
       "cdc-" + java.util.UUID.randomUUID() + ".parquet")
     Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
-    val rel = Paths.get(root).relativize(target).toString
-      .replace(java.io.File.separatorChar, '/')
-    cdcActionNode(root, rel, pv)
+    AddCdc(Paths.get(root).relativize(target).toString
+      .replace(java.io.File.separatorChar, '/'), pv, Files.size(target))
   }
 
   /** Partitioned sibling of [[writeCdcFile]] — ONE dynamic-partitioned
@@ -1808,7 +1802,7 @@ object DeltaLog {
     * jobs are O(1), never O(touched partitions).
     */
   private def writeCdcFilesPartitioned(df: DataFrame, root: String,
-      pcs: Seq[String], st: LogState): Seq[JsonNode] = {
+      pcs: Seq[String], st: LogState): Seq[AddCdc] = {
     require(pcs.nonEmpty, "writeCdcFilesPartitioned: partitioned only")
     val physMap = st.schema.map(physicalWriteMap(st, _))
       .getOrElse(Map.empty[String, String])
@@ -1827,19 +1821,18 @@ object DeltaLog {
         .toSeq.sortBy(_.toString)
       finally walk.close()
     val dir = Files.createDirectories(Paths.get(root, "_change_data"))
-    val nodes = parts.map { p =>
+    val cdcs = parts.map { p =>
       val relStaged = staging.relativize(p).toString
         .replace(java.io.File.separatorChar, '/')
       val pv = partitionValuesOf(relStaged, physPcs)
       val target = dir.resolve(
         "cdc-" + java.util.UUID.randomUUID() + ".parquet")
       Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-      val rel = Paths.get(root).relativize(target).toString
-        .replace(java.io.File.separatorChar, '/')
-      cdcActionNode(root, rel, pv)
+      AddCdc(Paths.get(root).relativize(target).toString
+        .replace(java.io.File.separatorChar, '/'), pv, Files.size(target))
     }
     deleteRecursively(staging)
-    nodes
+    cdcs
   }
 
   /** Writer features a LEGACY `minWriterVersion` implies — what a
@@ -2037,31 +2030,16 @@ object DeltaLog {
     require(violating.isEmpty,
       s"DeltaLog.addCheckConstraint: existing rows violate $name ($sql)")
     val cfg = st.configuration + (s"delta.constraints.$name" -> sql)
-    val actions = Seq.newBuilder[JsonNode]
-    if (st.minWriterVersion < 3) {
-      val n = mapper.createObjectNode()
-      val p = n.putObject("protocol")
-      p.put("minReaderVersion", st.minReaderVersion)
-      p.put("minWriterVersion", 3)
-      actions += n
-    } else if (st.minWriterVersion >= 7 &&
-      !st.writerFeatures.contains("checkConstraints")) {
-      val n = mapper.createObjectNode()
-      val p = n.putObject("protocol")
-      p.put("minReaderVersion", st.minReaderVersion)
-      p.put("minWriterVersion", st.minWriterVersion)
-      if (st.readerFeatures.nonEmpty) {
-        val rf = p.putArray("readerFeatures")
-        st.readerFeatures.foreach(rf.add)
-      }
-      val wf = p.putArray("writerFeatures")
-      (st.writerFeatures :+ "checkConstraints").distinct.foreach(wf.add)
-      actions += n
-    }
-    actions += metaDataAction(st.tableId, schema.json, st.partitionColumns,
-      cfg)
-    writeCommitFile(root, v + 1, actions.result(),
-      operation = "ADD CONSTRAINT")
+    val protocol =
+      if (st.minWriterVersion < 3)
+        Some(Protocol(st.minReaderVersion, 3, Nil, Nil))
+      else if (st.minWriterVersion >= 7 &&
+        !st.writerFeatures.contains("checkConstraints"))
+        Some(Protocol(st.minReaderVersion, st.minWriterVersion,
+          st.readerFeatures, (st.writerFeatures :+ "checkConstraints").distinct))
+      else None
+    writeCommitFile(root, v + 1, protocol.toSeq :+ MetaData(st.tableId,
+      schema.json, st.partitionColumns, cfg), operation = "ADD CONSTRAINT")
     v + 1
   }
 
@@ -2077,7 +2055,7 @@ object DeltaLog {
       s"DeltaLog.dropCheckConstraint: no constraint named $name")
     val schema = st.schema.getOrElse(throw new IllegalStateException(
       s"DeltaLog: no metaData action in $root log — schema unknown"))
-    writeCommitFile(root, v + 1, Seq(metaDataAction(st.tableId,
+    writeCommitFile(root, v + 1, Seq(MetaData(st.tableId,
       schema.json, st.partitionColumns, st.configuration - key)),
       operation = "DROP CONSTRAINT")
     v + 1
@@ -2110,13 +2088,13 @@ object DeltaLog {
           "with the mapping mode it should keep"))
     if (props.get("delta.symlinkFormatManifest.enabled")
         .exists(_.trim.equalsIgnoreCase("true"))) {
-      val dvd = st.files.map(_._1).count(st.fileDvs.contains)
+      val dvd = st.files.count(_.deletionVector.isDefined)
       require(dvd == 0,
         s"DeltaLog.setTableProperties: $dvd active file(s) carry " +
           "deletion vectors — symlink-manifest readers see whole files " +
           "and would resurrect their deleted rows; compact the DVs " +
           "away before enabling delta.symlinkFormatManifest.enabled")
-      val abs = st.files.count(_._1.startsWith("/"))
+      val abs = st.files.count(_.path.startsWith("/"))
       require(abs == 0,
         s"DeltaLog.setTableProperties: $abs active file(s) are " +
           "absolute-path references (a shallow clone) — manifests " +
@@ -2137,10 +2115,9 @@ object DeltaLog {
       .exists(_.trim.equalsIgnoreCase("true"))
     val schema = st.schema.getOrElse(throw new IllegalStateException(
       s"DeltaLog: no metaData action in $root log — schema unknown"))
-    val actions = Seq.newBuilder[JsonNode]
     val legacyFloor = math.max(st.minWriterVersion,
       if (needsCdf) 4 else 2)
-    if (enablingIct || st.minWriterVersion >= 7) {
+    val protocol = if (enablingIct || st.minWriterVersion >= 7) {
       // features form. The base set differs by where the table starts:
       // CONVERTING a legacy table enumerates what its legacy floor
       // implied (those obligations already bind); a table ALREADY on
@@ -2156,29 +2133,14 @@ object DeltaLog {
         (if (enablingIct || wasIct) Seq("inCommitTimestamp") else Nil))
         .distinct
       if (st.minWriterVersion < 7 ||
-          !feats.forall(st.writerFeatures.contains)) {
-        val n = mapper.createObjectNode()
-        val p = n.putObject("protocol")
-        p.put("minReaderVersion", st.minReaderVersion)
-        p.put("minWriterVersion", 7)
-        if (st.readerFeatures.nonEmpty) {
-          val rf = p.putArray("readerFeatures")
-          st.readerFeatures.foreach(rf.add)
-        }
-        val wf = p.putArray("writerFeatures")
-        feats.foreach(wf.add)
-        actions += n
-      }
-    } else if (legacyFloor > st.minWriterVersion) {
-      val n = mapper.createObjectNode()
-      val p = n.putObject("protocol")
-      p.put("minReaderVersion", st.minReaderVersion)
-      p.put("minWriterVersion", legacyFloor)
-      actions += n
-    }
-    actions += metaDataAction(st.tableId, schema.json,
-      st.partitionColumns, cfg)
-    writeCommitFile(root, v + 1, actions.result(),
+          !feats.forall(st.writerFeatures.contains))
+        Some(Protocol(st.minReaderVersion, 7, st.readerFeatures, feats))
+      else None
+    } else if (legacyFloor > st.minWriterVersion)
+      Some(Protocol(st.minReaderVersion, legacyFloor, Nil, Nil))
+    else None
+    writeCommitFile(root, v + 1, protocol.toSeq :+ MetaData(st.tableId,
+      schema.json, st.partitionColumns, cfg),
       operation = "SET TBLPROPERTIES", ictStart = enablingIct)
     // ENABLING auto-manifests generates the full tree right here —
     // later commits then maintain it incrementally; without this, a
@@ -2211,7 +2173,7 @@ object DeltaLog {
     requireWritable(st, "unsetTableProperties")
     val schema = st.schema.getOrElse(throw new IllegalStateException(
       s"DeltaLog: no metaData action in $root log — schema unknown"))
-    writeCommitFile(root, v + 1, Seq(metaDataAction(st.tableId,
+    writeCommitFile(root, v + 1, Seq(MetaData(st.tableId,
       schema.json, st.partitionColumns, st.configuration -- keys)),
       operation = "UNSET TBLPROPERTIES")
     v + 1
@@ -2290,30 +2252,20 @@ object DeltaLog {
     val widened = StructType(schema.fields.map(x =>
       if (x.name == column) x.copy(dataType = to, metadata = newMeta)
       else x))
-    val actions = Seq.newBuilder[JsonNode]
     val needReader = !(st.minReaderVersion >= 3 &&
       st.readerFeatures.contains("typeWidening"))
     val needWriter = !(st.minWriterVersion >= 7 &&
       st.writerFeatures.contains("typeWidening"))
-    if (needReader || needWriter) {
-      val rf = ((if (st.minReaderVersion >= 3) st.readerFeatures
+    val protocol = Option.when(needReader || needWriter)(Protocol(3, 7,
+      ((if (st.minReaderVersion >= 3) st.readerFeatures
       else if (st.minReaderVersion >= 2 || mappingMode(st) != "none")
         Seq("columnMapping")
-      else Seq.empty) :+ "typeWidening").distinct
-      val wf = ((if (st.minWriterVersion >= 7) st.writerFeatures
+      else Seq.empty) :+ "typeWidening").distinct,
+      ((if (st.minWriterVersion >= 7) st.writerFeatures
       else legacyWriterFeatures(st.minWriterVersion)) :+ "typeWidening")
-        .distinct
-      val n = mapper.createObjectNode()
-      val p = n.putObject("protocol")
-      p.put("minReaderVersion", 3)
-      p.put("minWriterVersion", 7)
-      val rfa = p.putArray("readerFeatures"); rf.foreach(rfa.add)
-      val wfa = p.putArray("writerFeatures"); wf.foreach(wfa.add)
-      actions += n
-    }
-    actions += metaDataAction(st.tableId, widened.json,
-      st.partitionColumns, st.configuration)
-    writeCommitFile(root, v + 1, actions.result(),
+        .distinct))
+    writeCommitFile(root, v + 1, protocol.toSeq :+ MetaData(st.tableId,
+      widened.json, st.partitionColumns, st.configuration),
       operation = "CHANGE COLUMN")
     v + 1
   }
@@ -2376,7 +2328,7 @@ object DeltaLog {
     requireNoStoredSqlOn(st, schema, from, "renameColumn")
     val renamed = StructType(schema.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
-    writeCommitFile(root, v + 1, Seq(metaDataAction(st.tableId,
+    writeCommitFile(root, v + 1, Seq(MetaData(st.tableId,
       renamed.json, st.partitionColumns.map(c => if (c == from) to else c),
       st.configuration)), operation = "RENAME COLUMN")
     v + 1
@@ -2413,7 +2365,7 @@ object DeltaLog {
       s"DeltaLog.dropColumn: $column is the last column of $root")
     requireNoStoredSqlOn(st, schema, column, "dropColumn")
     val remaining = StructType(schema.fields.filterNot(_.name == column))
-    writeCommitFile(root, v + 1, Seq(metaDataAction(st.tableId,
+    writeCommitFile(root, v + 1, Seq(MetaData(st.tableId,
       remaining.json, st.partitionColumns, st.configuration)),
       operation = "DROP COLUMN")
     v + 1
@@ -2599,7 +2551,7 @@ object DeltaLog {
     * [[readAt]], the stats-skipping read and the change feed.
     */
   private def assembleFiles(spark: SparkSession, root: String, st: LogState,
-                            files: Seq[(String, Map[String, String])]): DataFrame =
+                            files: Seq[AddFile]): DataFrame =
     scanFiles(spark, root, st, files, st.schema.getOrElse(
       throw new IllegalStateException(
         s"DeltaLog: no metaData action in $root log — schema unknown")))
@@ -2626,15 +2578,16 @@ object DeltaLog {
     */
   def statsCount(spark: SparkSession, root: String): DataFrame = {
     val st = replay(spark, root, currentVersion(root))
-    val counts = st.files.map { case (p, _) =>
-      val s = st.fileStats.getOrElse(p, throw new IllegalStateException(
-        s"DeltaLog.statsCount: active file $p has no stats — cannot " +
-          "count from metadata"))
+    val counts = st.files.map { f =>
+      val s = f.stats.getOrElse(throw new IllegalStateException(
+        s"DeltaLog.statsCount: active file ${f.path} has no stats — " +
+          "cannot count from metadata"))
       val n = mapper.readTree(s).path("numRecords")
-      require(n.isNumber, s"DeltaLog.statsCount: stats of $p lack numRecords")
+      require(n.isNumber,
+        s"DeltaLog.statsCount: stats of ${f.path} lack numRecords")
       // physical rows minus the file's deleted positions (descriptor
       // cardinality) — still zero data IO
-      n.asLong() - st.fileDvs.get(p).map(_.cardinality).getOrElse(0L)
+      n.asLong() - f.deletionVector.map(_.cardinality).getOrElse(0L)
     }
     spark.createDataFrame(Seq((counts.sum, counts.size.toLong)))
       .toDF("n_rows", "n_files")
@@ -2655,8 +2608,8 @@ object DeltaLog {
   def countFast(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val st = replay(spark, root, currentVersion(root))
-    val files = st.files.map(_._1)
-    val deleted = files.flatMap(st.fileDvs.get).map(_.cardinality).sum
+    val files = st.files.map(_.path)
+    val deleted = st.files.flatMap(_.deletionVector).map(_.cardinality).sum
     // Ship the SESSION'S hadoopConfiguration to the tasks (resolved
     // key/value pairs, rebuilt into a Configuration per task) — a bare
     // `new Configuration()` inside the task loses S3 credentials / FS
@@ -2745,22 +2698,17 @@ object DeltaLog {
         "the data files"))
     val schema = StructType(dataSchema.fields ++ partitionSchema.fields)
     val conf = spark.sparkContext.hadoopConfiguration
-    val actions = Seq.newBuilder[JsonNode]
-    val protocol = mapper.createObjectNode()
-    val p = protocol.putObject("protocol")
-    p.put("minReaderVersion", 1)
-    p.put("minWriterVersion", 2)
-    actions += protocol
     val tableId = java.util.UUID.nameUUIDFromBytes(
       ("graft-delta:" + root).getBytes("UTF-8")).toString
-    actions += metaDataAction(tableId, schema.json, pcs, Map.empty)
-    rels.foreach { rel =>
+    val adds = rels.map { rel =>
       val pv = if (pcs.isEmpty) Map.empty[String, String]
                else partitionValuesOf(rel, pcs)
-      actions += addActionNode(root, rel, pv, dataChange = true, conf)
+      addFor(root, rel, pv, dataChange = true, conf)
     }
     Files.createDirectories(logDir(root))
-    writeCommitFile(root, 0L, actions.result(), operation = "CONVERT")
+    writeCommitFile(root, 0L, Seq(Protocol(1, 2, Nil, Nil),
+      MetaData(tableId, schema.json, pcs, Map.empty)) ++ adds,
+      operation = "CONVERT")
     0L
   }
 
@@ -2844,14 +2792,15 @@ object DeltaLog {
       s"DeltaLog: no metaData action in $root log — schema unknown"))
     val pcSet = st.partitionColumns.toSet
     val conf = spark.sparkContext.hadoopConfiguration
-    val actions = Seq.newBuilder[JsonNode]
+    val actions = Seq.newBuilder[Action]
     var touched = 0
     if (pcSet(column)) {
-      st.files.foreach { case (rel, pv) =>
+      st.files.foreach { f =>
+        val pv = f.partitionValues
         val key = pvKeyOf(st, schema, column, pv).getOrElse(
           throw new IllegalArgumentException(
-            s"DeltaLog.deleteWhereLong: add $rel lacks partitionValues " +
-              s"for declared partition column $column"))
+            s"DeltaLog.deleteWhereLong: add ${f.path} lacks " +
+              s"partitionValues for declared partition column $column"))
         val inRange = Option(pv(key)).exists { s =>
           try { val x = s.toLong; x >= lo && x <= hi }
           catch { case _: NumberFormatException =>
@@ -2859,13 +2808,13 @@ object DeltaLog {
               s"DeltaLog.deleteWhereLong: partition value '$s' of " +
                 s"$column is not numeric") }
         }
-        if (inRange) { actions += removeActionNode(rel, true); touched += 1 }
+        if (inRange) { actions += removeOf(f.path, true); touched += 1 }
       }
     } else {
       val dataSchema = StructType(schema.filterNot(f => pcSet(f.name)))
       val inRange = Seq(statsBetween(st, column, lo, hi))
-      val overlapping = st.files.filter { case (rel, _) => mightSatisfy(
-        inRange, dataPath(root, rel), st.fileStats.get(rel), Map.empty, conf) }
+      val overlapping = st.files.filter(f => mightSatisfy(
+        inRange, dataPath(root, f.path), f.stats, Map.empty, conf))
       val matches = col(column) >= lo && col(column) <= hi
       // stats say overlap, but overlap ≠ match: rewriting a file no row
       // of which matches would poison any later readAppendsSince over
@@ -2884,10 +2833,11 @@ object DeltaLog {
       // rewrite's task tail) instead of paying two sequential fixed
       // costs; an orphaned cdc file from a failed rewrite is never
       // referenced by any commit and falls to vacuum.
-      val cdcFut: Option[Future[Seq[JsonNode]]] =
+      val cdcFut: Option[Future[Seq[AddCdc]]] =
         if (!cdfEnabled(st)) None
         else Some(Future {
-          exactTouched.groupBy(_._2).toSeq.sortBy(_._1.mkString(" "))
+          exactTouched.groupBy(_.partitionValues).toSeq
+            .sortBy(_._1.mkString(" "))
             .map { case (pv, group) =>
               // live rows only: a row the file's prior DV already
               // deleted must not re-emit as a delete
@@ -2903,8 +2853,9 @@ object DeltaLog {
       val rewritten = rewriteFilesBatched(spark, root, exactTouched,
         dataSchema, _.filter(!matches || col(column).isNull),
         "graft-delta-del", st)
-      exactTouched.foreach { case (rel, pv) =>
-        actions += removeActionNode(rel, true); touched += 1
+      exactTouched.foreach { f =>
+        val rel = f.path
+        actions += removeOf(rel, true); touched += 1
         rewritten.get(rel).foreach { part =>
           // a shallow-cloned (absolute) source file rewrites into
           // THIS table's root — never beside the source
@@ -2915,7 +2866,8 @@ object DeltaLog {
           Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
           val newRel = Paths.get(root).relativize(target).toString
             .replace(java.io.File.separatorChar, '/')
-          actions += addActionNode(root, newRel, pv, dataChange = true, conf)
+          actions += addFor(root, newRel, f.partitionValues,
+            dataChange = true, conf)
         }
       }
       cdcFut.foreach(f => actions ++= Await.result(f, Duration.Inf))
@@ -2968,9 +2920,9 @@ object DeltaLog {
     val dataSchema = StructType(schema.filterNot(f => pcSet(f.name)))
     val conf = spark.sparkContext.hadoopConfiguration
     val inRange = Seq(statsBetween(st, column, lo, hi))
-    val overlapping = st.files.filter { case (rel, _) => mightSatisfy(
-      inRange, dataPath(root, rel), st.fileStats.get(rel), Map.empty, conf) }
-    val actions = Seq.newBuilder[JsonNode]
+    val overlapping = st.files.filter(f => mightSatisfy(
+      inRange, dataPath(root, f.path), f.stats, Map.empty, conf))
+    val actions = Seq.newBuilder[Action]
     val dvUuid = java.util.UUID.randomUUID()
     val dvFile = Paths.get(root, Dv.dvFileName(dvUuid))
     val pathOrInline = Dv.z85Encode(Dv.uuidBytes(dvUuid))
@@ -2989,23 +2941,23 @@ object DeltaLog {
           .filter(matches)
           .groupBy(col(SrcTagCol)).agg(bitmapAgg(col(PosCol)).as("__dv"))
           .collect()
-          .map(r => overlapping(r.getInt(0))._1 -> r.getAs[Array[Byte]](1))
+          .map(r => overlapping(r.getInt(0)).path -> r.getAs[Array[Byte]](1))
           .toMap
       }
     // every matched position is live, so each matched file gains
     // fresh deletes
     if (matchedBytes.isEmpty) return v
-    val touched = overlapping.filter(f => matchedBytes.contains(f._1))
-    touched.foreach { case (rel, pv) =>
-      val matchedPs = Dv.deserialize(matchedBytes(rel))
-      val union = st.fileDvs.get(rel).map(_.read(root))
+    val touched = overlapping.filter(f => matchedBytes.contains(f.path))
+    touched.foreach { f =>
+      val matchedPs = Dv.deserialize(matchedBytes(f.path))
+      val union = f.deletionVector.map(_.read(root))
         .map(e => Dv.union(e, matchedPs)).getOrElse(matchedPs)
       val (offset, size) = Dv.appendBlob(dvFile, Dv.serialize(union))
       val desc = DvDescriptor("u", pathOrInline, Some(offset), size,
         union.cardinality)
-      actions += removeActionNode(rel, dataChange = true)
-      actions += addActionNode(root, rel, pv, dataChange = true, conf,
-        dv = Some(desc))
+      actions += removeOf(f.path, dataChange = true)
+      actions += addFor(root, f.path, f.partitionValues, dataChange = true,
+        conf, dv = Some(desc))
     }
     // CDF: a DV delete is invisible to add/remove synthesis (the data
     // file is re-added byte-identical), so the freshly deleted rows
@@ -3013,7 +2965,7 @@ object DeltaLog {
     // files' live rows (rows a PRIOR DV deleted stay out), one scan
     // per touched partition.
     if (cdfEnabled(st)) {
-      touched.groupBy(_._2).toSeq.sortBy(_._1.mkString(" "))
+      touched.groupBy(_.partitionValues).toSeq.sortBy(_._1.mkString(" "))
         .foreach { case (pv, group) =>
           val deleted = scanFiles(spark, root, st, group, dataSchema)
             .filter(matches)
@@ -3024,24 +2976,14 @@ object DeltaLog {
     // first DV on this table: upgrade the protocol the way Delta does
     val hasDvFeature = st.minReaderVersion >= 3 &&
       st.readerFeatures.contains("deletionVectors")
-    val protocolUpgrade =
-      if (hasDvFeature) Seq.empty[JsonNode]
-      else {
-        val n = mapper.createObjectNode()
-        val p = n.putObject("protocol")
-        p.put("minReaderVersion", 3)
-        p.put("minWriterVersion", 7)
-        val rf = p.putArray("readerFeatures")
-        (st.readerFeatures :+ "deletionVectors").distinct.foreach(rf.add)
-        // a legacy minWriterVersion implies features version 7 must
-        // ENUMERATE — dropping them here would let a feature-gated
-        // external writer stop honoring e.g. changeDataFeed
-        val wf = p.putArray("writerFeatures")
-        (legacyWriterFeatures(st.minWriterVersion) ++ st.writerFeatures :+
-          "deletionVectors").distinct.foreach(wf.add)
-        Seq[JsonNode](n)
-      }
-    writeCommitFile(root, v + 1, protocolUpgrade ++ actions.result(),
+    // a legacy minWriterVersion implies features version 7 must
+    // ENUMERATE — dropping them here would let a feature-gated external
+    // writer stop honoring e.g. changeDataFeed
+    val protocolUpgrade = Option.when(!hasDvFeature)(Protocol(3, 7,
+      (st.readerFeatures :+ "deletionVectors").distinct,
+      (legacyWriterFeatures(st.minWriterVersion) ++ st.writerFeatures :+
+        "deletionVectors").distinct))
+    writeCommitFile(root, v + 1, protocolUpgrade.toSeq ++ actions.result(),
       operation = "DELETE")
     postCommit(spark, root, st, v + 1)
     v + 1
@@ -3086,8 +3028,8 @@ object DeltaLog {
       gens.map { case (c, g) => c -> expr(g) }
     val conf = spark.sparkContext.hadoopConfiguration
     val inRange = Seq(statsBetween(st, column, lo, hi))
-    val overlapping = st.files.filter { case (rel, _) => mightSatisfy(
-      inRange, dataPath(root, rel), st.fileStats.get(rel), Map.empty, conf) }
+    val overlapping = st.files.filter(f => mightSatisfy(
+      inRange, dataPath(root, f.path), f.stats, Map.empty, conf))
     if (overlapping.isEmpty) return v
     val matches = col(column) >= lo && col(column) <= hi
     // stats overlap ≠ rows match: rewriting an unmatched file would
@@ -3097,7 +3039,7 @@ object DeltaLog {
     val exactTouched = probeTouched(spark, root, overlapping,
       StructType(Seq(dataSchema(column))), _.filter(matches), st)
     if (exactTouched.isEmpty) return v
-    val actions = Seq.newBuilder[JsonNode]
+    val actions = Seq.newBuilder[Action]
     // CDF: matched rows before and after the SET — the only record of
     // WHICH rows changed (the remove+add pair is file-grain); one
     // multi-file scan per touched partition. Postimage from the MATCHED
@@ -3112,11 +3054,12 @@ object DeltaLog {
     // independent of the rewrite job and launched to OVERLAP it (FIFO
     // back-fill); an orphaned cdc file from a failed rewrite is never
     // referenced by any commit and falls to vacuum.
-    val cdcFut: Option[Future[Seq[JsonNode]]] =
+    val cdcFut: Option[Future[Seq[AddCdc]]] =
       if (!cdfEnabled(st)) None
       else Some(Future {
         import org.apache.spark.sql.functions.{array, explode, struct}
-        exactTouched.groupBy(_._2).toSeq.sortBy(_._1.mkString(" "))
+        exactTouched.groupBy(_.partitionValues).toSeq
+          .sortBy(_._1.mkString(" "))
           .map { case (pv, group) =>
             // live rows only: prior-DV-deleted rows are not updated
             val matched = scanFiles(spark, root, st, group, dataSchema)
@@ -3150,7 +3093,8 @@ object DeltaLog {
               .otherwise(col(c)).cast(dataSchema(c).dataType))
         }, dataSchema, st.configuration),
       "graft-delta-upd", st)
-    exactTouched.foreach { case (rel, pv) =>
+    exactTouched.foreach { f =>
+      val rel = f.path
       val part = rewritten.getOrElse(rel, throw new IllegalStateException(
         s"DeltaLog.updateWhereLong: rewrite of $rel produced no rows — " +
           "an UPDATE must keep every row"))
@@ -3161,8 +3105,9 @@ object DeltaLog {
       Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
       val newRel = Paths.get(root).relativize(target).toString
         .replace(java.io.File.separatorChar, '/')
-      actions += removeActionNode(rel, true)
-      actions += addActionNode(root, newRel, pv, dataChange = true, conf)
+      actions += removeOf(rel, true)
+      actions += addFor(root, newRel, f.partitionValues, dataChange = true,
+        conf)
     }
     cdcFut.foreach(f => actions ++= Await.result(f, Duration.Inf))
     writeCommitFile(root, v + 1, actions.result(), operation = "UPDATE")
@@ -3221,13 +3166,13 @@ object DeltaLog {
     */
   private[lake] def mergeCandidates(spark: SparkSession, root: String,
       st: LogState, key: String, srcKeys: DataFrame,
-      srcRows: Long): Seq[(String, Map[String, String])] = {
+      srcRows: Long): Seq[AddFile] = {
     import org.apache.spark.sql.functions.{min => fmin, max => fmax}
     val conf = spark.sparkContext.hadoopConfiguration
     val fieldIds = st.schema.map(physFieldIds(st, _)).getOrElse(Map.empty)
-    def kept(files: Seq[(String, Map[String, String])], pred: Expression) =
-      files.filter { case (rel, _) => mightSatisfy(Seq(pred),
-        dataPath(root, rel), st.fileStats.get(rel), fieldIds, conf) }
+    def kept(files: Seq[AddFile], pred: Expression) =
+      files.filter(f => mightSatisfy(Seq(pred), dataPath(root, f.path),
+        f.stats, fieldIds, conf))
     val a = statsColumn(st, key)
     val kr = srcKeys.agg(fmin(col(key)), fmax(col(key))).head()
     if (kr.isNullAt(0)) Nil // all-NULL keys: pure insert
@@ -3265,7 +3210,7 @@ object DeltaLog {
     val st = replay(spark, root, currentVersion(root))
     val srcKeys = source.filter(col(key).isNotNull).select(col(key))
     mergeCandidates(spark, root, st, key, srcKeys, source.count())
-      .map(_._1)
+      .map(_.path)
   }
 
   def mergeKey(spark: SparkSession, root: String, key: String,
@@ -3335,8 +3280,8 @@ object DeltaLog {
       val touched = probeTouched(spark, root, candidates,
         StructType(Seq(dataSchema(key))),
         _.join(srcKeys, Seq(key), "left_semi"), st)
-        .sortBy(_._1)
-      val actions = Seq.newBuilder[JsonNode]
+        .sortBy(_.path)
+      val actions = Seq.newBuilder[Action]
       // an append-only table allows the pure-insert merge (nothing
       // matched); any matched row would rewrite history
       if (touched.nonEmpty) requireNotAppendOnly(st, "mergeKey")
@@ -3350,7 +3295,7 @@ object DeltaLog {
       // the insert job, so it is launched here to OVERLAP them (FIFO
       // back-fill); an orphaned cdc file from a failed rewrite is never
       // referenced by any commit and falls to vacuum.
-      val cdcFut: Option[Future[Seq[JsonNode]]] =
+      val cdcFut: Option[Future[Seq[AddCdc]]] =
         if (!(cdfEnabled(st) && touched.nonEmpty)) None
         else Some(Future {
           // live rows only: keys whose target rows were all DV-deleted
@@ -3384,8 +3329,9 @@ object DeltaLog {
       val rewritten = rewriteFilesBatched(spark, root, touched,
         dataSchema, _.join(srcKeys, Seq(key), "left_anti"),
         "graft-delta-merge", st, keyBloomOpts)
-      touched.foreach { case (rel, pv) =>
-        actions += removeActionNode(rel, dataChange = true)
+      touched.foreach { f =>
+        val rel = f.path
+        actions += removeOf(rel, dataChange = true)
         rewritten.get(rel).foreach { part =>
           // a shallow-cloned (absolute) source file rewrites into THIS
           // table's root — never beside the source
@@ -3396,8 +3342,8 @@ object DeltaLog {
           Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
           val newRel = Paths.get(root).relativize(target).toString
             .replace(java.io.File.separatorChar, '/')
-          actions += addActionNode(root, newRel, pv, dataChange = true,
-            conf)
+          actions += addFor(root, newRel, f.partitionValues,
+            dataChange = true, conf)
         }
       }
       // the whole source — updated versions of matched rows plus the
@@ -3421,9 +3367,8 @@ object DeltaLog {
         insParts.foreach { insPart =>
           val insTarget = Paths.get(root).resolve(insPart.getFileName)
           Files.move(insPart, insTarget, StandardCopyOption.ATOMIC_MOVE)
-          actions += addActionNode(root,
-            insTarget.getFileName.toString, Map.empty, dataChange = true,
-            conf)
+          actions += addFor(root, insTarget.getFileName.toString,
+            Map.empty, dataChange = true, conf)
         }
       } else {
         // dynamic-partitioned insert, ONE job: partition cols + a
@@ -3450,8 +3395,8 @@ object DeltaLog {
           val target = Paths.get(root, rel)
           Files.createDirectories(target.getParent)
           Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-          actions += addActionNode(root, rel,
-            partitionValuesOf(rel, physPcs), dataChange = true, conf)
+          actions += addFor(root, rel, partitionValuesOf(rel, physPcs),
+            dataChange = true, conf)
         }
         deleteRecursively(staging)
       }
@@ -3479,7 +3424,8 @@ object DeltaLog {
     val cur = currentVersion(root)
     val st = replay(spark, root, cur)
     assembleFiles(spark, root, st,
-      appendedFilesIn(root, sinceVersion, cur).map(a => (a._2, a._3)))
+      appendedFilesIn(root, sinceVersion, cur).map { case (_, rel, pv, sz) =>
+        AddFile(rel, pv, Some(sz), None, dataChange = true, None, None) })
   }
 
   /** The (version, relPath, partitionValues) of every data file
@@ -3669,10 +3615,9 @@ object DeltaLog {
         "(checkpoints compact state, not history)")
     val perVersion = commits.flatMap { case (v, actions) =>
       val cdcList = actions.collect { case c: AddCdc =>
-        c.path -> c.partitionValues }
-      val dataAdds = actions.collect { case a: AddFile if a.dataChange => a }
-      val dvAdds = dataAdds.count(_.deletionVector.isDefined)
-      val addList = dataAdds.map(a => a.path -> a.partitionValues)
+        AddFile(c.path, c.partitionValues, Some(c.size), None,
+          dataChange = false, None, None) }
+      val addList = actions.collect { case a: AddFile if a.dataChange => a }
       val removeList = actions.collect {
         case r: RemoveFile if r.dataChange => r.path }
       val changes: Option[DataFrame] =
@@ -3683,36 +3628,35 @@ object DeltaLog {
             StructField(ChangeTypeCol, StringType, nullable = true))))
         else if (addList.isEmpty && removeList.isEmpty) None
         else {
-          require(dvAdds == 0,
+          require(addList.forall(_.deletionVector.isEmpty),
             s"DeltaLog.readChangeFeed: commit $v of $root attaches a " +
               "deletion vector without CDC files — row-level changes " +
               "were not recorded and cannot be synthesized")
           val inserted =
             if (addList.isEmpty) None
             else {
-              addList.foreach { case (rel, _) =>
-                require(Files.exists(resolvePath(root, rel)),
-                  s"DeltaLog.readChangeFeed: added file $rel of commit " +
-                    s"$v was vacuumed away — this change-feed range is " +
-                    "no longer readable")
+              addList.foreach { a =>
+                require(Files.exists(resolvePath(root, a.path)),
+                  s"DeltaLog.readChangeFeed: added file ${a.path} of " +
+                    s"commit $v was vacuumed away — this change-feed " +
+                    "range is no longer readable")
               }
-              // the files carried no DV AT v (checked above); strip any
-              // DV a LATER version attached so the insert reads the full
-              // file as committed
-              Some(assembleFiles(spark, root,
-                st.copy(fileDvs = st.fileDvs -- addList.map(_._1)), addList)
+              // the adds as committed at v carry no DV (checked above),
+              // so the insert reads the full file whatever DV a LATER
+              // version attached
+              Some(assembleFiles(spark, root, st, addList)
                 .withColumn(ChangeTypeCol, lit("insert")))
             }
           val deleted =
             if (removeList.isEmpty) None
             else {
               val prev = replay(spark, root, v - 1)
-              val prevFiles = prev.files.toMap
               val rfiles = removeList.map { rel =>
-                require(prevFiles.contains(rel),
+                require(prev.byPath.contains(rel),
                   s"DeltaLog.readChangeFeed: remove $rel at commit $v " +
                     s"was not active at ${v - 1}")
-                require(!prev.fileDvs.contains(rel),
+                val f = prev.byPath(rel)
+                require(f.deletionVector.isEmpty,
                   s"DeltaLog.readChangeFeed: removed file $rel carried " +
                     "a deletion vector — whole-file synthesis would " +
                     "resurrect its dead rows; the writer should have " +
@@ -3721,7 +3665,7 @@ object DeltaLog {
                   s"DeltaLog.readChangeFeed: removed file $rel was " +
                     "vacuumed away — this change-feed range is no " +
                     "longer readable")
-                rel -> prevFiles(rel)
+                f
               }
               Some(assembleFiles(spark, root, prev, rfiles)
                 .withColumn(ChangeTypeCol, lit("delete")))
@@ -3778,61 +3722,35 @@ object DeltaLog {
     val needMeta = target.schema != current.schema ||
       target.partitionColumns != current.partitionColumns ||
       target.configuration != current.configuration
-    val curFiles = current.files.toMap
-    val tgtFiles = target.files.toMap
-    def dvOf(st: LogState, rel: String): Option[DvDescriptor] =
-      st.fileDvs.get(rel)
-    val toAdd = target.files.filter { case (rel, _) =>
-      !curFiles.contains(rel) || dvOf(current, rel) != dvOf(target, rel)
-    }
-    val toRemove = current.files.collect {
-      case (rel, _) if !tgtFiles.contains(rel) => rel
-    } ++ toAdd.collect {
-      case (rel, _) if curFiles.contains(rel) => rel
-    }
+    val toAdd = target.files.filter(f => current.byPath.get(f.path)
+      .forall(_.deletionVector != f.deletionVector))
+    val toRemove = current.files.map(_.path)
+      .filterNot(target.byPath.contains) ++
+      toAdd.map(_.path).filter(current.byPath.contains)
     if (toAdd.isEmpty && toRemove.isEmpty && !needMeta) return cur
-    toAdd.foreach { case (rel, _) =>
-      require(Files.exists(resolvePath(root, rel)),
-        s"DeltaLog.restore: $rel of version $version was vacuumed " +
+    toAdd.foreach { f =>
+      require(Files.exists(resolvePath(root, f.path)),
+        s"DeltaLog.restore: ${f.path} of version $version was vacuumed " +
           "away — that snapshot is no longer restorable")
-      dvOf(target, rel).filter(_.storageType == "u").foreach { d =>
+      f.deletionVector.filter(_.storageType == "u").foreach { d =>
         val sidecar = d.sidecarRel
         require(Files.exists(Paths.get(root, sidecar)),
           s"DeltaLog.restore: DV sidecar $sidecar of version $version " +
             "was vacuumed away — that snapshot is no longer restorable")
       }
     }
-    val actions = Seq.newBuilder[JsonNode]
-    if (needMeta)
-      actions += metaDataAction(current.tableId,
-        target.schema.getOrElse(throw new IllegalStateException(
-          s"DeltaLog.restore: version $version has no metaData")).json,
-        target.partitionColumns, target.configuration)
-    toRemove.distinct.foreach(rel =>
-      actions += removeActionNode(rel, dataChange = true))
-    toAdd.foreach { case (rel, pv) =>
-      val n = mapper.createObjectNode()
-      val a = n.putObject("add")
-      a.put("path", encodePath(rel))
-      val pvo = a.putObject("partitionValues")
-      pv.foreach { case (k, sv) =>
-        if (sv == null) pvo.putNull(k) else pvo.put(k, sv)
-      }
-      a.put("size", target.fileSizes.getOrElse(rel,
-        Files.size(resolvePath(root, rel))))
-      a.put("modificationTime", target.fileModTimes.getOrElse(rel,
-        Files.getLastModifiedTime(resolvePath(root, rel)).toMillis))
-      a.put("dataChange", true)
-      target.fileStats.get(rel).foreach(a.put("stats", _))
-      dvOf(target, rel).foreach { d =>
-        val o = a.putObject("deletionVector")
-        o.put("storageType", d.storageType)
-        o.put("pathOrInlineDv", d.pathOrInlineDv)
-        d.offset.foreach(o.put("offset", _))
-        o.put("sizeInBytes", d.sizeInBytes)
-        o.put("cardinality", d.cardinality)
-      }
-      actions += n
+    val meta = Option.when(needMeta)(MetaData(current.tableId,
+      target.schema.getOrElse(throw new IllegalStateException(
+        s"DeltaLog.restore: version $version has no metaData")).json,
+      target.partitionColumns, target.configuration))
+    // the target's own adds, re-emitted as data changes; size and mtime
+    // fall back to the filesystem where the target's log omits them
+    val adds = toAdd.map { f =>
+      val fp = resolvePath(root, f.path)
+      f.copy(dataChange = true,
+        size = f.size.orElse(Some(Files.size(fp))),
+        modificationTime = f.modificationTime.orElse(
+          Some(Files.getLastModifiedTime(fp).toMillis)))
     }
     // the POST-restore configuration (= the target's: needMeta re-emits
     // it; !needMeta means it already equals the current one) governs
@@ -3841,7 +3759,7 @@ object DeltaLog {
     // otherwise the durable restore would be followed by the manifest
     // regeneration throwing, leaving on-disk manifests stale at the
     // pre-restore snapshot (mirrors the deleteWhereLongDV guard).
-    val restoredDvs = target.files.count(f => target.fileDvs.contains(f._1))
+    val restoredDvs = target.files.count(_.deletionVector.isDefined)
     if (manifestEnabled(target.configuration))
       require(restoredDvs == 0,
         s"DeltaLog.restore: $restoredDvs file(s) of version $version " +
@@ -3849,7 +3767,8 @@ object DeltaLog {
           "declares delta.symlinkFormatManifest.enabled — symlink " +
           "readers would resurrect their deleted rows; unset the " +
           "property or restore to a DV-free version")
-    writeCommitFile(root, cur + 1, actions.result(),
+    writeCommitFile(root, cur + 1, meta.toSeq ++
+      toRemove.distinct.map(removeOf(_, dataChange = true)) ++ adds,
       operation = "RESTORE")
     // a restore that FLIPS the property on reinstates auto-manifests
     // over a tree that went stale (or missing) while it was off — the
@@ -3918,59 +3837,30 @@ object DeltaLog {
         "property on the source (or clone a version without it) and " +
         "re-enable on the clone after compacting")
     val srcAbs = Paths.get(sourceRoot).toAbsolutePath.normalize()
-    val actions = Seq.newBuilder[JsonNode]
-    val protocol = mapper.createObjectNode()
-    val p = protocol.putObject("protocol")
-    p.put("minReaderVersion", st.minReaderVersion)
-    p.put("minWriterVersion", st.minWriterVersion)
-    if (st.readerFeatures.nonEmpty) {
-      val rf = p.putArray("readerFeatures"); st.readerFeatures.foreach(rf.add)
-    }
-    if (st.writerFeatures.nonEmpty) {
-      val wf = p.putArray("writerFeatures"); st.writerFeatures.foreach(wf.add)
-    }
-    actions += protocol
     val tableId = java.util.UUID.nameUUIDFromBytes(
       ("graft-delta:" + targetRoot).getBytes("UTF-8")).toString
-    actions += metaDataAction(tableId, schema.json, st.partitionColumns,
-      st.configuration)
-    st.files.foreach { case (rel, pv) =>
+    val adds = st.files.map { f =>
       val abs =
-        if (rel.startsWith("/")) rel // cloning a clone: already absolute
-        else srcAbs.resolve(rel).toString
-      val n = mapper.createObjectNode()
-      val a = n.putObject("add")
-      a.put("path", encodePath(abs))
-      val pvo = a.putObject("partitionValues")
-      pv.foreach { case (k, sv) =>
-        if (sv == null) pvo.putNull(k) else pvo.put(k, sv)
-      }
-      a.put("size", st.fileSizes.getOrElse(rel, Files.size(Paths.get(abs))))
-      a.put("modificationTime", st.fileModTimes.getOrElse(rel, 0L))
-      a.put("dataChange", true)
-      st.fileStats.get(rel).foreach(a.put("stats", _))
-      st.fileDvs.get(rel).foreach { d =>
-        val o = a.putObject("deletionVector")
-        d.storageType match {
-          case "u" =>
-            // re-address the source-relative sidecar absolutely
-            o.put("storageType", "p")
-            o.put("pathOrInlineDv", srcAbs.resolve(d.sidecarRel).toString)
-          case _ =>
-            o.put("storageType", d.storageType)
-            o.put("pathOrInlineDv", d.pathOrInlineDv)
-        }
-        d.offset.foreach(o.put("offset", _))
-        o.put("sizeInBytes", d.sizeInBytes)
-        o.put("cardinality", d.cardinality)
-      }
-      actions += n
+        if (f.path.startsWith("/")) f.path // cloning a clone: already absolute
+        else srcAbs.resolve(f.path).toString
+      f.copy(path = abs, dataChange = true,
+        size = f.size.orElse(Some(Files.size(Paths.get(abs)))),
+        modificationTime = f.modificationTime.orElse(Some(0L)),
+        // re-address a source-relative DV sidecar absolutely
+        deletionVector = f.deletionVector.map(d =>
+          if (d.storageType != "u") d
+          else d.copy(storageType = "p",
+            pathOrInlineDv = srcAbs.resolve(d.sidecarRel).toString)))
     }
+    val actions = Seq(Protocol(st.minReaderVersion, st.minWriterVersion,
+        st.readerFeatures, st.writerFeatures),
+      MetaData(tableId, schema.json, st.partitionColumns, st.configuration)) ++
+      adds
     Files.createDirectories(logDir(targetRoot))
     // a clone of an ICT table starts its own monotonic chain — the
     // carried configuration says timestamps are in-commit, so its
     // commits must actually have them
-    writeCommitFile(targetRoot, 0L, actions.result(), operation = "CLONE",
+    writeCommitFile(targetRoot, 0L, actions, operation = "CLONE",
       ictStart = st.configuration.get("delta.enableInCommitTimestamps")
         .exists(_.trim.equalsIgnoreCase("true")))
     0L
@@ -4026,12 +3916,12 @@ object DeltaLog {
   private def regenerateManifests(spark: SparkSession, root: String,
                                   touched: Option[Set[String]]): Seq[String] = {
     val st = replay(spark, root, currentVersion(root))
-    val dvd = st.files.map(_._1).filter(st.fileDvs.contains)
+    val dvd = st.files.filter(_.deletionVector.isDefined)
     require(dvd.isEmpty,
       s"DeltaLog.generateSymlinkManifest: ${dvd.size} active file(s) " +
         "carry deletion vectors — a symlink reader would resurrect " +
         "their deleted rows; rewrite them first (compact/OPTIMIZE)")
-    val abs = st.files.filter(_._1.startsWith("/"))
+    val abs = st.files.filter(_.path.startsWith("/"))
     require(abs.isEmpty,
       s"DeltaLog.generateSymlinkManifest: ${abs.size} active file(s) " +
         "are absolute-path references (a shallow clone) — they have " +
@@ -4041,7 +3931,7 @@ object DeltaLog {
     val base = rootAbs.resolve("_symlink_format_manifest")
     // group active files by their partition DIRECTORY (everything
     // above the file name; flat tables group under "")
-    val byDir: Map[String, Seq[String]] = st.files.map { case (rel, _) =>
+    val byDir: Map[String, Seq[String]] = st.files.map(_.path).map { rel =>
       val slash = rel.lastIndexOf('/')
       val dir = if (slash < 0) "" else rel.substring(0, slash)
       dir -> resolvePath(root, rel).toAbsolutePath.normalize().toString
@@ -4202,12 +4092,11 @@ object DeltaLog {
                          retentionMs: Long, delete: Boolean): Seq[String] = {
     require(retentionMs >= 0L, s"DeltaLog.vacuum: retentionMs >= 0")
     val st = replay(spark, root, currentVersion(root))
-    val active = st.files.map(_._1).toSet
+    val active = st.byPath.keySet
     // DV sidecars referenced by an ACTIVE descriptor stay; the rest are
     // history (an old DV superseded by a merge, or of a removed file)
-    val activeDvFiles: Set[String] = st.fileDvs.values.collect {
-      case d if d.storageType == "u" => d.sidecarRel
-    }.toSet
+    val activeDvFiles: Set[String] = st.files.flatMap(_.deletionVector)
+      .collect { case d if d.storageType == "u" => d.sidecarRel }.toSet
     val rootPath = Paths.get(root).toAbsolutePath.normalize()
     val rootPrefix = rootPath.toString + "/"
     val hadoopProps: Array[(String, String)] = {
@@ -4316,7 +4205,7 @@ object DeltaLog {
     * only — content stays unread).
     */
   private def sidecarRefsOf(spark: SparkSession, top: Path): Seq[String] =
-    v2TopActions(spark, top).collect { case Sidecar(p) => p }
+    v2TopActions(spark, top).collect { case s: Sidecar => s.path }
 
   /** Delta's METADATA cleanup — the `_delta_log` sibling of [[vacuum]]
     * (`delta.logRetentionDuration`, default `interval 30 days`): drop
@@ -4562,7 +4451,7 @@ object DeltaLog {
     * external integration scans (exposed for specs and manifests).
     */
   def filesAt(spark: SparkSession, root: String, version: Long): Seq[String] =
-    replay(spark, root, version).files.map(_._1)
+    replay(spark, root, version).files.map(_.path)
 
   // ------------------------------------------------------------------
   // Partitioned writer
@@ -4794,29 +4683,22 @@ object DeltaLog {
     var committed = -1L
     values.zipWithIndex.foreach { case (sv, vi) =>
       val v = v0 + vi.toLong
-      val actions = Seq.newBuilder[JsonNode]
+      val actions = Seq.newBuilder[Action]
       if (v == 0L) {
         // protocol floor: the commitData creation logic restricted to
         // the shapes admitted above (no mapping/variant/identity)
-        val protocol = mapper.createObjectNode()
-        val p = protocol.putObject("protocol")
-        p.put("minReaderVersion", 1)
         val legacyFloor =
           if (configuration.get("delta.enableChangeDataFeed")
             .exists(_.trim.equalsIgnoreCase("true")) ||
             generationExprs(dataSchema).nonEmpty) 4 else 2
-        if (ictEnabled) {
-          p.put("minWriterVersion", 7)
-          val wf = p.putArray("writerFeatures")
-          (legacyWriterFeatures(legacyFloor) :+ "inCommitTimestamp")
-            .distinct.foreach(wf.add)
-        } else p.put("minWriterVersion", legacyFloor)
-        actions += protocol
-        actions += metaDataAction(tableId, dataSchema.json, partitionCols,
+        actions += (if (ictEnabled) Protocol(1, 7, Nil,
+            (legacyWriterFeatures(legacyFloor) :+ "inCommitTimestamp").distinct)
+          else Protocol(1, legacyFloor, Nil, Nil))
+        actions += MetaData(tableId, dataSchema.json, partitionCols,
           configuration)
       }
       movedBySlice.getOrElse(sv, Seq.empty).foreach { rel =>
-        actions += addActionNode(root, rel,
+        actions += addFor(root, rel,
           partitionValuesOf(rel, partitionCols), dataChange = true, conf)
       }
       val cv = writeCommitFile(root, v, actions.result(),
@@ -5029,7 +4911,7 @@ object DeltaLog {
     require(configuration.isEmpty || v == 0L,
       "DeltaLog.commitData: table configuration is set at CREATION " +
         "(version 0) only — later commits inherit it")
-    val actions = Seq.newBuilder[JsonNode]
+    val actions = Seq.newBuilder[Action]
     val ictEnabled = configuration.get("delta.enableInCommitTimestamps")
       .exists(_.trim.equalsIgnoreCase("true"))
     // VARIANT columns require the variantType reader+writer feature
@@ -5037,17 +4919,6 @@ object DeltaLog {
     // declaration, never discover variant bytes mid-scan
     val hasVariant = hasVariantType(createdSchema.getOrElse(dfG.schema))
     if (v == 0L) {
-      val protocol = mapper.createObjectNode()
-      val p = protocol.putObject("protocol")
-      // column mapping requires reader 2 (legacy form); variant the
-      // features form (reader 3)
-      p.put("minReaderVersion",
-        if (hasVariant) 3 else if (createMode != "none") 2 else 1)
-      if (hasVariant) {
-        val rf = p.putArray("readerFeatures")
-        ((if (createMode != "none") Seq("columnMapping") else Seq.empty)
-          :+ "variantType").foreach(rf.add)
-      }
       // change data feed AND generated columns are legacy
       // writer-version-4 features (PROTOCOL.md: Writer Version
       // Requirements) — a table created with either must declare the
@@ -5063,16 +4934,19 @@ object DeltaLog {
       val legacyFloor =
         if (createMode != "none") math.max(legacyFloor0, 5)
         else legacyFloor0
-      if (ictEnabled || hasVariant) {
-        p.put("minWriterVersion", 7)
-        val wf = p.putArray("writerFeatures")
-        (legacyWriterFeatures(legacyFloor) ++
+      // column mapping requires reader 2 (legacy form); variant the
+      // features form (reader 3)
+      actions += Protocol(
+        if (hasVariant) 3 else if (createMode != "none") 2 else 1,
+        if (ictEnabled || hasVariant) 7 else legacyFloor,
+        if (!hasVariant) Nil
+        else (if (createMode != "none") Seq("columnMapping") else Seq.empty)
+          :+ "variantType",
+        if (!(ictEnabled || hasVariant)) Nil
+        else (legacyWriterFeatures(legacyFloor) ++
           (if (ictEnabled) Seq("inCommitTimestamp") else Nil) ++
-          (if (hasVariant) Seq("variantType") else Nil))
-          .distinct.foreach(wf.add)
-      } else p.put("minWriterVersion", legacyFloor)
-      actions += protocol
-      actions += metaDataAction(tableId,
+          (if (hasVariant) Seq("variantType") else Nil)).distinct)
+      actions += MetaData(tableId,
         createdSchema.getOrElse(dfG.schema).json, partitionCols,
         createdConfig)
     }
@@ -5080,27 +4954,19 @@ object DeltaLog {
     // preserving the table's ORIGINAL id and configuration
     evolvedSchema.foreach { es =>
       val st = prior.get
-      actions += metaDataAction(st.tableId, es.json, partitionCols,
+      actions += MetaData(st.tableId, es.json, partitionCols,
         evolvedConfig.getOrElse(st.configuration))
     }
-    txn.foreach { case (app, ver) =>
-      val n = mapper.createObjectNode()
-      val t = n.putObject("txn")
-      t.put("appId", app)
-      t.put("version", ver)
-      actions += n
-    }
+    txn.foreach { case (app, ver) => actions += Txn(app, ver) }
     if (rewrite) prior.foreach { st =>
       requireNotAppendOnly(st, "commitData(rewrite)")
-      st.files.foreach { case (path, _) =>
-        actions += removeActionNode(path, dataChange = true)
-      }
+      st.files.foreach(f => actions += removeOf(f.path, dataChange = true))
     }
     val conf = spark.sparkContext.hadoopConfiguration
-    val addNodes = added.map { case (rel, pv) =>
-      addActionNode(root, rel, pv, dataChange = true, conf)
+    val adds = added.map { case (rel, pv) =>
+      addFor(root, rel, pv, dataChange = true, conf)
     }
-    addNodes.foreach(actions += _)
+    actions ++= adds
     // identity high-water marks: fold each identity column's max over
     // the written files' EMBEDDED footer stats (zero extra IO) and
     // re-emit metaData whenever the mark advanced — the contract the
@@ -5109,7 +4975,7 @@ object DeltaLog {
     // its assigned physicalNames here, and the stats fold must key them
     val hwmSchema = declared
     val idents = identityInfo(hwmSchema)
-    if (idents.nonEmpty && addNodes.nonEmpty) {
+    if (idents.nonEmpty && adds.nonEmpty) {
       var sch = hwmSchema
       var changed = false
       idents.foreach { ic =>
@@ -5117,21 +4983,16 @@ object DeltaLog {
         val statsKey = physicalTopLevel(
           StructType(hwmSchema.filter(_.name == ic.name)))
           .getOrElse(ic.name, ic.name)
-        val maxes = addNodes.flatMap { n =>
-          val stats = n.path("add").path("stats")
-          if (!stats.isTextual) None
-          else {
-            val mx = mapper.readTree(stats.asText())
-              .path("maxValues").path(statsKey)
-            if (mx.isNumber) Some(mx.asLong()) else None
-          }
+        val maxes = adds.flatMap(_.stats).flatMap { stats =>
+          val mx = mapper.readTree(stats).path("maxValues").path(statsKey)
+          if (mx.isNumber) Some(mx.asLong()) else None
         }
         if (maxes.nonEmpty && ic.hwm.forall(_ < maxes.max)) {
           sch = withHwm(sch, ic.name, maxes.max); changed = true
         }
       }
       if (changed)
-        actions += metaDataAction(
+        actions += MetaData(
           prior.map(_.tableId).getOrElse(tableId), sch.json,
           partitionCols,
           evolvedConfig.getOrElse(
@@ -5224,10 +5085,8 @@ object DeltaLog {
     val staging = Files.createTempDirectory(stagingBase(root),
       "graft-delta-zorder")
     val conf = spark.sparkContext.hadoopConfiguration
-    val actions = Seq.newBuilder[JsonNode]
-    st.files.foreach { case (rel, _) =>
-      actions += removeActionNode(rel, dataChange = false)
-    }
+    val actions = Seq.newBuilder[Action]
+    st.files.foreach(f => actions += removeOf(f.path, dataChange = false))
     if (pcs.isEmpty) {
       Layout.zorderWrite(toPhysicalDf(st, schema, df), staging.toString,
         physMap.getOrElse(xCol, xCol), physMap.getOrElse(yCol, yCol),
@@ -5242,7 +5101,7 @@ object DeltaLog {
       parts.sortBy(_.getFileName.toString).foreach { p =>
         val target = Paths.get(root).resolve(p.getFileName)
         Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-        actions += addActionNode(root, target.getFileName.toString,
+        actions += addFor(root, target.getFileName.toString,
           Map.empty, dataChange = false, conf)
       }
     } else {
@@ -5276,14 +5135,14 @@ object DeltaLog {
       // string (same rationale as compactPartitioned)
       val pcTypes = pcs.map(c =>
         physMap.getOrElse(c, c) -> schema(c).dataType).toMap
-      val recordedPvs = st.files.map(_._2).distinct
+      val recordedPvs = st.files.map(_.partitionValues).distinct
       parts.foreach { p =>
         val rel = staging.relativize(p).toString
           .replace(java.io.File.separatorChar, '/')
         val target = Paths.get(root, rel)
         Files.createDirectories(target.getParent)
         Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-        actions += addActionNode(root, rel,
+        actions += addFor(root, rel,
           preferRecordedPv(partitionValuesOf(rel, physPcs), recordedPvs,
             physPcs, pcTypes),
           dataChange = false, conf)
@@ -5340,13 +5199,13 @@ object DeltaLog {
     // any DV'd file (compaction APPLIES and clears the DV — Delta's
     // OPTIMIZE semantics) or a shallow-cloned absolute reference (the
     // clone-localization pass)
-    val fat = st.files.groupBy(_._2).filter { case (_, files) =>
-      files.size > 1 || files.exists { case (rel, _) =>
-        st.fileDvs.contains(rel) || rel.startsWith("/") }
+    val fat = st.files.groupBy(_.partitionValues).filter { case (_, files) =>
+      files.size > 1 || files.exists(f =>
+        f.deletionVector.isDefined || f.path.startsWith("/"))
     }
     if (fat.isEmpty) return v
-    val fatFiles = fat.values.flatten.toSeq.sortBy(_._1)
-    val actions = Seq.newBuilder[JsonNode]
+    val fatFiles = fat.values.flatten.toSeq.sortBy(_.path)
+    val actions = Seq.newBuilder[Action]
     val conf = spark.sparkContext.hadoopConfiguration
     // ONE job for every fat partition (was: one sequential job per
     // partition): the DV/clone/mapping-aware assembly reads live rows
@@ -5375,8 +5234,7 @@ object DeltaLog {
           && p.getFileName.toString.endsWith(".parquet"))
         .toSeq.sortBy(_.toString)
       finally walk.close()
-    fatFiles.foreach { case (rel, _) =>
-      actions += removeActionNode(rel, dataChange = false) }
+    fatFiles.foreach(f => actions += removeOf(f.path, dataChange = false))
     // re-emit the RECORDED pv strings where they denote the same typed
     // partition — the dynamic write's directory rendering can normalize
     // them (int '01' → '1'), and pv-string drift splits the partition
@@ -5389,8 +5247,7 @@ object DeltaLog {
       val target = Paths.get(root, rel)
       Files.createDirectories(target.getParent)
       Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-      actions += addActionNode(root,
-        rel,
+      actions += addFor(root, rel,
         preferRecordedPv(partitionValuesOf(rel, physPcs), fat.keys,
           physPcs, pcTypes),
         dataChange = false, conf)
@@ -5501,13 +5358,13 @@ object DeltaLog {
     import spark.implicits._
     val v = currentVersion(root)
     val st = replay(spark, root, v)
-    val bytes = st.files.map { case (rel, _) =>
-      st.fileSizes.getOrElse(rel, Files.size(resolvePath(root, rel)))
-    }.sum
+    val bytes = st.files.map(f =>
+      f.size.getOrElse(Files.size(resolvePath(root, f.path)))).sum
     Seq(("parquet", st.tableId,
       Paths.get(root).toAbsolutePath.normalize().toString,
       st.partitionColumns, st.files.size.toLong, bytes,
-      st.fileDvs.size.toLong, v, st.minReaderVersion,
+      st.files.count(_.deletionVector.isDefined).toLong, v,
+      st.minReaderVersion,
       st.minWriterVersion, st.configuration))
       .toDF("format", "id", "location", "partitionColumns", "numFiles",
         "sizeInBytes", "numDeletionVectors", "version",

@@ -17,8 +17,9 @@ import org.apache.spark.sql.SparkSession
   * session per JDBC connection, and the `global_temp` database is the
   * cross-session catalog every fork sees — the in-process analog of
   * the reference's one-Trino-catalog deployment (clients query
-  * `global_temp.<view>`). The embedded Derby metastore is pointed at
-  * java.io.tmpdir so serving never litters the working directory.
+  * `global_temp.<view>`). The embedded Derby metastore's error log
+  * goes to java.io.tmpdir so serving never litters the working
+  * directory.
   *
   * Scale posture: the endpoint is a protocol front door, not an
   * execution path — each SQL statement plans and executes exactly like
@@ -56,9 +57,9 @@ object SqlGateway {
     * all public API.)
     */
   def start(spark: SparkSession, port: Int): AnyRef = {
-    if (System.getProperty("derby.system.home") == null)
-      System.setProperty("derby.system.home",
-        System.getProperty("java.io.tmpdir") + "/graft-derby")
+    if (System.getProperty("derby.stream.error.file") == null)
+      System.setProperty("derby.stream.error.file",
+        System.getProperty("java.io.tmpdir") + "/graft-derby.log")
     spark.sqlContext.setConf("hive.server2.thrift.port", port.toString)
     spark.sqlContext.setConf("hive.server2.thrift.bind.host", "localhost")
     val cls = Class.forName(

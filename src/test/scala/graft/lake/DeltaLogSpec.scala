@@ -239,9 +239,7 @@ class DeltaLogSpec extends SparkSpec {
     writeCommit(root, v0 + 1,
       Seq("""{"commitInfo":{"operation":"SOMEONE-ELSE"}}"""))
     val before = commitLines(root, v0 + 1)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val stale = mapper.createObjectNode()
-    stale.putObject("commitInfo").put("operation", "STALE-WRITER")
+    val stale = DeltaLog.CommitInfo(Some("STALE-WRITER"), None, None)
     val e = intercept[IllegalStateException](
       DeltaLog.writeCommitFile(root, v0 + 1, Seq(stale)))
     assert(e.getMessage.contains("concurrent writer"), e.getMessage)
@@ -3261,9 +3259,8 @@ class DeltaLogSpec extends SparkSpec {
         StandardCopyOption.REPLACE_EXISTING)
       Files.size(Paths.get(root, name))
     }
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def addNode(p: String, sz: Long) = om.readTree(
-      s"""{"add":{"path":"$p","partitionValues":{},"size":$sz,"modificationTime":1,"dataChange":true}}""")
+    def addNode(p: String, sz: Long) = DeltaLog.AddFile(p, Map.empty,
+      Some(sz), Some(1L), dataChange = true, None, None)
     // winner takes v1 first (an external blind append); the loser's
     // blind append reconciles and lands at v2
     val szW = alias("w.parquet")
@@ -3294,15 +3291,13 @@ class DeltaLogSpec extends SparkSpec {
     writeCommit(root, 4L, Seq("""{"txn":{"appId":"appX","version":9}}"""))
     val exTxn = intercept[IllegalStateException](
       DeltaLog.writeCommitFile(root, 4L,
-        Seq(addNode("never.parquet", 1L),
-          om.readTree("""{"txn":{"appId":"appX","version":3}}""")),
+        Seq(addNode("never.parquet", 1L), DeltaLog.Txn("appX", 3L)),
         retryDataConflicts = true))
     assert(exTxn.getMessage.contains("txn watermark"), exTxn.getMessage)
     assert(DeltaLog.currentVersion(root) == 4L)
     val szO3 = alias("o3.parquet")
     assert(DeltaLog.writeCommitFile(root, 4L,
-      Seq(addNode("o3.parquet", szO3),
-        om.readTree("""{"txn":{"appId":"appY","version":1}}""")),
+      Seq(addNode("o3.parquet", szO3), DeltaLog.Txn("appY", 1L)),
       retryDataConflicts = true) == 5L)
     assert(DeltaLog.read(spark, root).count() == 8L)
     // a loser that REMOVES files computed its rewrite from a stale
@@ -3311,8 +3306,7 @@ class DeltaLogSpec extends SparkSpec {
       s"""{"add":{"path":"o.parquet","partitionValues":{},"size":$szO,"modificationTime":2,"dataChange":true}}"""))
     val exRm = intercept[IllegalStateException](
       DeltaLog.writeCommitFile(root, 6L,
-        Seq(om.readTree(
-          """{"remove":{"path":"w.parquet","dataChange":true}}""")),
+        Seq(DeltaLog.RemoveFile("w.parquet", None, dataChange = true)),
         retryDataConflicts = true))
     assert(exRm.getMessage.contains("not a blind append"), exRm.getMessage)
     assert(DeltaLog.currentVersion(root) == 6L)

@@ -178,4 +178,134 @@ class LogReplaySpec extends SparkSpec {
     // a JSON top is read line by line on the driver
     assert(countJobs(DeltaLog.read(spark, json)) == 0)
   }
+
+  test("encodeAction is the inverse of decodeAction for every action " +
+    "kind") {
+    import DeltaLog._
+    val rnd = new scala.util.Random(20261020L)
+    def pick[T](xs: T*): T = xs(rnd.nextInt(xs.size))
+    def opt[T](t: => T): Option[T] = if (rnd.nextBoolean()) Some(t) else None
+    def path(): String = pick("", "/abs/") +
+      pick("d=x", "d=a b%c", "d=__HIVE_DEFAULT_PARTITION__", "k=1/d=é") +
+      s"/part-${rnd.nextInt(100)}.parquet"
+    def pv(): Map[String, String] = pick(Map.empty[String, String],
+      Map("d" -> null), Map("d" -> "a b%c"), Map("d" -> "x", "k" -> "1"))
+    def dv(): DvDescriptor = pick(
+      DvDescriptor("i", "wi5b=000010000siXQKl0rr91000f55c8Xg0@@D72lkbi5=-{L",
+        None, 40, 6L),
+      DvDescriptor("u", "ab^-aqEH.-t@S}K{vb[*k^", Some(1L), 30, 2L),
+      DvDescriptor("u", "ab^-aqEH.-t@S}K{vb[*k^", None, 30, 2L),
+      DvDescriptor("p", "/tmp/t/deletion_vector_x.bin", opt(41L), 30, 1L))
+    def features(): Seq[String] =
+      pick(Nil, Seq("deletionVectors"), Seq("v2Checkpoint", "columnMapping"))
+    def action(): Action = rnd.nextInt(10) match {
+      case 0 => Protocol(1 + rnd.nextInt(3), 2 + rnd.nextInt(6), features(),
+        features())
+      case 1 => MetaData(s"id-${rnd.nextInt(1000)}",
+        """{"type":"struct","fields":[]}""", pick(Nil, Seq("d"), Seq("k", "d")),
+        pick(Map.empty[String, String],
+          Map("delta.enableChangeDataFeed" -> "true",
+            "delta.constraints.kpos" -> "k > 0 AND v <> \"q\"")))
+      case 2 => AddFile(path(), pv(), opt(rnd.nextInt(1 << 20).toLong),
+        opt(rnd.nextLong().abs), rnd.nextBoolean(),
+        opt("""{"numRecords":3,"minValues":{"v":"a\"b"},"nullCount":{}}"""),
+        opt(dv()))
+      case 3 => RemoveFile(path(), opt(rnd.nextLong().abs), rnd.nextBoolean())
+      case 4 => AddCdc(path(), pv(), rnd.nextInt(1 << 20).toLong)
+      case 5 => Txn(pick("app", "stream-1"), rnd.nextInt(100).toLong)
+      case 6 => CommitInfo(opt(pick("WRITE", "MERGE")), opt(rnd.nextLong().abs),
+        opt(rnd.nextLong().abs))
+      case 7 => Sidecar(s"sidecar-${rnd.nextInt(1000)}.parquet",
+        rnd.nextInt(1 << 20).toLong, rnd.nextLong().abs)
+      case _ => CheckpointMetadata(rnd.nextInt(1000).toLong)
+    }
+    val actions = Seq.fill(500)(action())
+    actions.foreach(a => assert(decodeAction(encodeAction(a)).contains(a),
+      encodeAction(a)))
+    val kinds = actions.map(_.getClass.getSimpleName).toSet
+    assert(kinds.size == 9, kinds)
+    assert(actions.exists {
+      case a: AddFile => a.deletionVector.exists(_.offset.isEmpty) &&
+        a.partitionValues.values.exists(_ == null)
+      case _ => false
+    })
+  }
+
+  /** A commit line with what differs from run to run masked: wall-clock
+    * timestamps and file mtimes, UUIDs (file names, table ids, DV blob
+    * names), the Z85 address of an on-disk DV and the temporary table
+    * roots.
+    */
+  private def masked(line: String, roots: Seq[(String, String)]): String = {
+    val rooted = roots.foldLeft(line) { case (l, (r, name)) =>
+      l.replace(r, name) }
+    rooted
+      .replaceAll("\"(timestamp|inCommitTimestamp|modificationTime|" +
+        "deletionTimestamp)\":\\d+", "\"$1\":T")
+      .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-" +
+        "[0-9a-f]{12}", "U")
+      .replaceAll("(\"storageType\":\"u\",\"pathOrInlineDv\":\")[^\"]{20}\"",
+        "$1Z\"")
+  }
+
+  test("commit files of a fixed script are byte-identical to the " +
+    "recorded lines, timestamps, mtimes and UUIDs masked") {
+    val root = freshRoot()
+    val cloneRoot = freshRoot()
+    DeltaLog.commitPartitioned(spark, root,
+      Seq((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y"))
+        .toDF("k", "v", "d").coalesce(1), Seq("d"),
+      configuration = Map("delta.enableChangeDataFeed" -> "true"))
+    DeltaLog.commitPartitioned(spark, root,
+      Seq((10L, "n", null), (11L, "m", "a b%c"), (12L, "o", "x"))
+        .toDF("k", "v", "d").coalesce(1), Seq("d"))
+    val afterDv = DeltaLog.deleteWhereLongDV(spark, root, "k", 2L, 3L)
+    DeltaLog.updateWhereLong(spark, root, "k", 10L, 11L,
+      Map("v" -> lit("u")))
+    DeltaLog.mergeKey(spark, root, "k",
+      Seq((1L, "merged", "x"), (20L, "new", "y")).toDF("k", "v", "d"))
+    DeltaLog.commitPartitioned(spark, root,
+      Seq((30L, "t", "y")).toDF("k", "v", "d").coalesce(1), Seq("d"),
+      txn = Some(("app", 1L)))
+    DeltaLog.addCheckConstraint(spark, root, "kpos", "k > 0")
+    DeltaLog.enableV2Checkpoints(spark, root)
+    DeltaLog.restore(spark, root, afterDv)
+    DeltaLog.shallowClone(spark, root, cloneRoot)
+    val roots = Seq(cloneRoot -> "CLONE", root -> "ROOT").map {
+      case (r, n) => Paths.get(r).toAbsolutePath.normalize().toString -> n }
+    def commits(r: String, name: String): Seq[String] =
+      (0L to DeltaLog.currentVersion(r)).flatMap { v =>
+        // adds follow directory listing order: compare each commit's
+        // lines as a set
+        s"# $name $v" +: Files.readAllLines(logFile(r, v)).asScala.toSeq
+          .map(masked(_, roots)).sorted
+      }
+    val got = commits(root, "table") ++ commits(cloneRoot, "clone")
+    val want = scala.io.Source.fromResource("graft/lake/commit-lines.txt",
+      getClass.getClassLoader).getLines().toSeq
+    assert(got.size == want.size, got.mkString("\n"))
+    got.zip(want).foreach { case (g, w) => assert(g == w) }
+  }
+
+  test("checkpoint writes run a pinned number of Spark jobs") {
+    // two identical 64-file tables, so neither write replays the
+    // other's checkpoint
+    def table64(): String = {
+      val root = freshRoot()
+      DeltaLog.commitFlat(spark, root, spark.range(1L, 65L, 1L, 64)
+        .select(col("id").as("k"), concat(lit("v"), col("id")).as("v")))
+      DeltaLog.enableV2Checkpoints(spark, root)
+      assert(DeltaLog.filesAt(spark, root, 1L).size == 64)
+      root
+    }
+    val classic = table64()
+    val v2 = table64()
+    // one parquet write; the replay of a JSON-only log runs no job
+    assert(countJobs(DeltaLog.checkpoint(spark, classic, 1L)) == 1)
+    // four sidecar writes and one top write
+    assert(countJobs(DeltaLog.checkpointV2(spark, v2, 1L,
+      maxAddsPerSidecar = 16L)) == 5)
+    assert(DeltaLog.read(spark, classic).count() == 64L)
+    assert(DeltaLog.read(spark, v2).count() == 64L)
+  }
 }
