@@ -57,8 +57,9 @@ object HyperBall {
         .select(e("src").as("node"), col("bucket"), col("max_rho"))
         .groupBy(col("node"), col("bucket"))
         .agg(max(col("max_rho")).cast("int").as("max_rho"))
-      // Lazy checkpoints keep the loop at zero jobs; the single action
-      // below materializes every round's boundary in one pass.
+      // A lazy checkpoint defers only its final stage: under AQE,
+      // creating it runs the round's exchange and broadcast stages as
+      // their own SQL execution, so each round costs one here.
       regs = next.localCheckpoint(eager = false)
     }
     val out = Sketches.hllEstimateCorrected(regs, Seq("node"), p)

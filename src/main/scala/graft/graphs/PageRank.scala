@@ -35,16 +35,18 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: the distinct edge set is hash-partitioned on `dst`
   * ONCE with each source's out-degree folded in as a contribution-ready
-  * adjacency (src, dst, deg), and persisted. Each hop broadcasts the
-  * node-sized rank table into a join that streams that layout unmoved,
-  * so the groupBy(dst) inflow sum rides it in place, and the node-sized
-  * contribution table broadcasts into the completion join: ZERO per-hop
-  * exchanges, no per-hop degree recompute or node-set rebuild. The
-  * broadcasts are explicit, not left to AQE's size estimates of
-  * checkpointed rounds, so the node table must fit an executor. The
-  * iteration count is FIXED (the operator is a k-hop centrality score,
-  * not a fixpoint — near-dup/recommender use sites want a handful of
-  * hops), so the loop is bounded and each round's plan is small.
+  * adjacency (src, dst, deg), and persisted. A hop's source ranks are
+  * the previous hop's inflow table read through the rank formula
+  * (hop 1 starts every node at `scale`, so it needs none): that
+  * node-sized table broadcasts into a join that streams the adjacency
+  * unmoved, so the groupBy(dst) inflow sum rides it in place — ZERO
+  * per-hop exchanges and ONE broadcast per hop, the last one into the
+  * final `nodes` LEFT JOIN that turns inflow into ranks. All hops are
+  * one plan, materialized once at the end. The broadcasts are
+  * explicit, not left to AQE's size estimates, so the node table must
+  * fit an executor. The iteration count is FIXED (the operator is a
+  * k-hop centrality score, not a fixpoint — near-dup/recommender use
+  * sites want a handful of hops), so the plan stays small.
   * Nodes with no outgoing edges contribute nothing (standard dangling-
   * mass drop; total mass declines, rankings unaffected for comparison
   * use).
@@ -64,12 +66,12 @@ object PageRank {
     * is always consumed, and materializing here lets the persisted edge
     * list be released instead of leaking into the caller's session.
     *
-    * Fault posture: by default each iteration truncates lineage with
-    * `localCheckpoint` — blocks live only on executors, so losing an
-    * executor mid-run kills the job (acceptable for a bounded handful of
-    * iterations re-run from scratch). Pass `reliable = true` to write
-    * each round to the cluster checkpoint dir instead (requires
-    * `spark.sparkContext.setCheckpointDir`), trading per-round I/O for
+    * Fault posture: by default the result is a `localCheckpoint` —
+    * blocks live only on executors, so losing an executor mid-run kills
+    * the job (acceptable for a bounded handful of hops re-run from
+    * scratch). Pass `reliable = true` to write the result to the
+    * cluster checkpoint dir instead (requires
+    * `spark.sparkContext.setCheckpointDir`), trading one write for
     * executor-loss recovery — the same knob, same reasoning, as
     * [[ConnectedComponents.run]].
     */
@@ -87,7 +89,7 @@ object PageRank {
     val nodes = adj.select(col("src").as("node"))
       .union(adj.select(col("dst").as("node"))).distinct()
       .persist(lvl)
-    adj.count()
+    // the node set reads every adjacency row: one execution fills both
     val n = nodes.count()
     // Safe-scale bound: worst-case single-node inflow is the entire
     // starting mass n·s, and the hot expression is `85 * inflow` — keep
@@ -101,35 +103,28 @@ object PageRank {
     require(s <= safeCap,
       s"PageRank: scale $s overflows at $n nodes — need nodes*scale <= " +
         s"Long.Max/100; pass scale <= $safeCap")
-    val base = lit(15L * s / 100L)
-    var rank = nodes.select(col("node"), lit(s).as("rank_fp"))
-    for (_ <- 1 to iterations) {
-      val rankSide = broadcast(rank)
-      val contribs = rankSide
-        .join(adj, rankSide("node") === adj("src"))
-        .select(col("dst").as("node"),
-          expr("rank_fp div __deg").as("__c"))
+    // r(u) from the previous hop's inflow; a node with no inflow row
+    // (no in-edges) sits at the base rank
+    val rank = s"(${15L * s / 100L}L + " +
+      "(85 * coalesce(__in, CAST(0 AS BIGINT))) div 100)"
+    var inflow = adj
+      .select(col("dst").as("node"), expr(s"${s}L div __deg").as("__c"))
+      .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
+    for (_ <- 2 to iterations) {
+      val prev = broadcast(inflow.withColumnRenamed("node", "src"))
+      inflow = adj.join(prev, Seq("src"), "left")
+        .select(col("dst").as("node"), expr(s"$rank div __deg").as("__c"))
         .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
-      // LEFT join keeps sink-only / source-only nodes alive at the base
-      // rank (they receive no mass but stay rankable). The contribution
-      // table is node-sized too, so the completion join broadcasts it
-      // rather than exchanging both sides.
-      val next = nodes.join(broadcast(contribs), Seq("node"), "left")
-        .select(col("node"),
-          (base + expr("(85 * coalesce(__in, CAST(0 AS BIGINT))) div 100"))
-            .as("rank_fp"))
-      // Lazy checkpoints keep the loop at zero jobs; the single action
-      // below materializes every round's boundary in one pass.
-      rank = if (reliable) next.checkpoint(eager = false)
-             else next.localCheckpoint(eager = false)
     }
-    // Materialize the final (and, through the lazy chain, every
-    // intermediate) checkpoint so the plan no longer references the
-    // cached tables, then release them.
-    rank.count()
+    // LEFT join keeps sink-only / source-only nodes alive at the base
+    // rank (they receive no mass but stay rankable).
+    val ranks = nodes.join(broadcast(inflow), Seq("node"), "left")
+      .select(col("node"), expr(rank).as("rank_fp"))
+    val out = if (reliable) ranks.checkpoint(eager = true)
+              else ranks.localCheckpoint(eager = true)
     adj.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
-    rank
+    out
   }
 
   /** The contribution-ready adjacency [[run]] consumes: the DISTINCT

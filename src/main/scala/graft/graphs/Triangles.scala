@@ -54,8 +54,7 @@ object Triangles {
     // sides) and nbrs two — unpersisted, the whole edge build re-runs
     // per consumer (measured 6× at sf0.1: 64 s vs 12 s). The result is
     // one small row per triangle-bearing node, so materialize it through
-    // a lazy localCheckpoint (the [[PageRank]] idiom) and release the
-    // caches before returning.
+    // a localCheckpoint and release the caches before returning.
     val result = out.localCheckpoint(eager = false)
     result.count()
     adj.unpersist(blocking = false)

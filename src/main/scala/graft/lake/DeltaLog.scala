@@ -3262,25 +3262,31 @@ object DeltaLog {
       val candidates = mergeCandidates(spark, root, st, key, srcKeys,
         srcRows)
       val physMap = physicalWriteMap(st, fullSchema)
-      // every file a merge writes carries a BLOOM on the merge key
-      // (adaptive sizing: parquet picks the smallest candidate filter
-      // covering the file's actual NDV), so the NEXT point merge or
-      // point read prunes this table's own upsert traffic without
-      // relying on external writers to have indexed the key. Only for
-      // key types the prune layers can actually probe (~0.2-0.4 s
-      // local fixed cost per merge, bought back at the first point
-      // upsert into the written files).
-      val keyBloomOpts =
-        if (bloomProbeable(fullSchema(key).dataType))
-          bloomOptions(Seq(physMap.getOrElse(key, key))) +
-            ("parquet.bloom.filter.adaptive.enabled" -> "true")
-        else Map.empty[String, String]
       // exact touched set by ONE semi-join probe job over the
       // candidates' key columns only
       val touched = probeTouched(spark, root, candidates,
         StructType(Seq(dataSchema(key))),
         _.join(srcKeys, Seq(key), "left_semi"), st)
         .sortBy(_.path)
+      // every file a merge writes carries a BLOOM on the merge key, so
+      // the NEXT point merge or point read prunes this table's own
+      // upsert traffic without relying on external writers to have
+      // indexed the key. Only for key types the prune layers can
+      // actually probe (~0.2-0.4 s local fixed cost per merge, bought
+      // back at the first point upsert into the written files). The
+      // filter is sized for the most rows one written file can hold — a
+      // rewrite keeps at most its touched file's rows, an insert file at
+      // most mergeInsertRowsPerFile source rows — where parquet's
+      // adaptive sizing never went below a 64 KiB candidate.
+      val keyBloomOpts =
+        if (bloomProbeable(fullSchema(key).dataType)) {
+          val fileRows = touched.map(f => f.stats
+            .map(mapper.readTree(_).path("numRecords"))
+            .filter(_.isNumber).map(_.asLong())
+            .getOrElse(mergeInsertRowsPerFile))
+          bloomOptions(Seq(physMap.getOrElse(key, key)),
+            (fileRows :+ math.min(srcRows, mergeInsertRowsPerFile)).max)
+        } else Map.empty[String, String]
       val actions = Seq.newBuilder[Action]
       // an append-only table allows the pure-insert merge (nothing
       // matched); any matched row would rewrite history

@@ -181,18 +181,20 @@ object Similarity {
           / lit(math.pow(2, 2 * qBits))).as("cov"))
   }
 
-  /** One row of one vector column is inspected at build time: a dims
-    * mismatch would null-pad `zip_with` against the literal plane arrays
-    * and silently send every vector to bucket/score 0 — fail loudly
-    * instead.
+  /** `vectors` with every row's `embCol` checked inside the plan: a
+    * vector whose length is not `dims` (or a null one) fails the action
+    * with `op` and `dims` in the message. Unchecked, a mismatch would
+    * null-pad `zip_with` against the literal plane arrays or make a
+    * native scorer yield NULL, silently misplacing or dropping that
+    * vector.
     */
-  private def requireDims(vectors: DataFrame, embCol: String, dims: Int,
-                          op: String): Unit =
-    vectors.select(size(col(embCol))).limit(1).collect().foreach { r =>
-      require(!r.isNullAt(0), s"$op: sampled row has a null $embCol")
-      require(r.getInt(0) == dims,
-        s"$op: dims=$dims but embeddings have ${r.getInt(0)}")
-    }
+  private def checkDims(vectors: DataFrame, embCol: String, dims: Int,
+                        op: String): DataFrame = {
+    val n = size(col(embCol))
+    vectors.withColumn(embCol, when(n === dims, col(embCol)).otherwise(
+      raise_error(concat(lit(s"$op: dims=$dims but a row's $embCol has "),
+        coalesce(n.cast("string"), lit("null")), lit(" elements")))))
+  }
 
   /** Sign-LSH bucket id for hyperplane table `t`: `planes` bits, bit p =
     * sign of <v, hp_{t,p}>. Hyperplanes are driver-precomputed literal
@@ -236,12 +238,11 @@ object Similarity {
   def annTopKLsh(corpus: DataFrame, queries: DataFrame, k: Int,
                  planes: Int = 12, tables: Int = 4, dims: Int = 64,
                  idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    requireDims(corpus, embCol, dims, "annTopKLsh corpus")
-    requireDims(queries, embCol, dims, "annTopKLsh queries")
-    def bucketed(df: DataFrame, id: String, emb: String) =
-      nativeBuckets(df, planes, tables, dims, idCol, embCol, id, Some(emb))
-    val q = bucketed(queries, "query_id", "__q")
-    val c = bucketed(corpus, "neighbor_id", "__c")
+    def bucketed(df: DataFrame, op: String, id: String, emb: String) =
+      nativeBuckets(checkDims(df, embCol, dims, op), planes, tables, dims,
+        idCol, embCol, id, Some(emb))
+    val q = bucketed(queries, "annTopKLsh queries", "query_id", "__q")
+    val c = bucketed(corpus, "annTopKLsh corpus", "neighbor_id", "__c")
     val cand = q.join(c, q("bk") === c("bk"))
       .select(col("query_id"), col("neighbor_id"), col("__q"), col("__c"))
       .dropDuplicates("query_id", "neighbor_id")
@@ -279,13 +280,13 @@ object Similarity {
   def annTopKIvf(corpus: DataFrame, queries: DataFrame, k: Int,
                  nCells: Int = 16, nProbe: Int = 4, dims: Int = 64,
                  idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    requireDims(corpus, embCol, dims, "annTopKIvf corpus")
-    requireDims(queries, embCol, dims, "annTopKIvf queries")
     val corpusCells = topCells(
-      corpus.select(col(idCol).as("neighbor_id"), col(embCol).as("__c")),
+      checkDims(corpus, embCol, dims, "annTopKIvf corpus")
+        .select(col(idCol).as("neighbor_id"), col(embCol).as("__c")),
       "neighbor_id", "__c", nCells, dims, keep = 1)
     val queryCells = topCells(
-      queries.select(col(idCol).as("query_id"), col(embCol).as("__q")),
+      checkDims(queries, embCol, dims, "annTopKIvf queries")
+        .select(col(idCol).as("query_id"), col(embCol).as("__q")),
       "query_id", "__q", nCells, dims, keep = nProbe)
     val scored = queryCells.join(corpusCells, Seq("cell"))
       .select(col("query_id"), col("neighbor_id"),
@@ -340,7 +341,6 @@ object Similarity {
     val dims = centroids.head._2.length
     require(centroids.forall(_._2.length == dims),
       s"kmeansAssign: centroids must all have $dims dims")
-    requireDims(vectors, embCol, dims, "kmeansAssign")
     graft.functions.CosineSimilarity.register(vectors.sparkSession)
     // argmax(cosine) with min-id tiebreak = max of (cosine, -id) structs;
     // struct comparison is lexicographic, so equal scores fall through to
@@ -352,7 +352,8 @@ object Similarity {
         lit(-cid).as("negid"))
     }
     val best = greatest((if (scored.size == 1) scored ++ scored else scored): _*)
-    vectors.select(col(idCol).cast("long").as("vec_id"), col(embCol).as("__e"),
+    checkDims(vectors, embCol, dims, "kmeansAssign")
+      .select(col(idCol).cast("long").as("vec_id"), col(embCol).as("__e"),
         best.as("__best"))
       .select(col("vec_id"), (-col("__best.negid")).as("centroid_id"),
         col("__best.c").as("cosine"), col("__e"))
@@ -470,9 +471,9 @@ object Similarity {
               embCol: String = "embedding"): DataFrame = {
     require(dims % numSubspaces == 0,
       s"pqCodes: dims=$dims must divide into $numSubspaces subspaces")
-    requireDims(vectors, embCol, dims, "pqCodes")
     graft.functions.PqBests.register(vectors.sparkSession)
-    vectors.select(col(idCol).cast("long").as("vec_id"),
+    checkDims(vectors, embCol, dims, "pqCodes")
+      .select(col(idCol).cast("long").as("vec_id"),
         graft.functions.PqBests.bests(col(embCol), numSubspaces, numCodes,
           dims).as("__bests"))
       .select(col("vec_id"), posexplode(col("__bests")).as(Seq("m", "__b")))
@@ -495,22 +496,22 @@ object Similarity {
                 embCol: String = "embedding"): DataFrame = {
     require(dims % numSubspaces == 0,
       s"pqAdcTopK: dims=$dims must divide into $numSubspaces subspaces")
-    requireDims(queries, embCol, dims, "pqAdcTopK queries")
-    requireDims(corpus, embCol, dims, "pqAdcTopK corpus")
     graft.functions.PqBests.register(corpus.sparkSession)
     graft.functions.PqAdcLut.register(corpus.sparkSession)
     // codes assembled row-locally in subspace order — no exploded
     // round-trip, no shuffle; the coding scan IS the corpus scan. Both
     // the coding argmin and the query-side distance tables run in the
     // native fused-loop expressions (see [[pqBest]]'s scaladoc for why).
-    val codes = corpus.select(col(idCol).cast("long").as("neighbor_id"),
-      graft.functions.PqBests.bests(col(embCol), numSubspaces, numCodes,
-        dims).as("__bests"))
+    val codes = checkDims(corpus, embCol, dims, "pqAdcTopK corpus")
+      .select(col(idCol).cast("long").as("neighbor_id"),
+        graft.functions.PqBests.bests(col(embCol), numSubspaces, numCodes,
+          dims).as("__bests"))
       .select(col("neighbor_id"), array((0 until numSubspaces).map(m =>
         element_at(col("__bests"), m + 1).getField("k")): _*).as("__codes"))
-    val q = broadcast(queries.select(col(idCol).cast("long").as("query_id"),
-      graft.functions.PqAdcLut.lut(col(embCol), numSubspaces, numCodes,
-        dims).as("__lut")))
+    val q = broadcast(checkDims(queries, embCol, dims, "pqAdcTopK queries")
+      .select(col(idCol).cast("long").as("query_id"),
+        graft.functions.PqAdcLut.lut(col(embCol), numSubspaces, numCodes,
+          dims).as("__lut")))
     // Ordered fold expanded STATICALLY over the fixed subspace count —
     // the same left-to-right `0.0 + lut[1][c1+1] + … + lut[m][cm+1]`
     // sum, but as plain codegen-friendly expressions instead of an
@@ -607,9 +608,9 @@ object Similarity {
   def cosineDupPairsBucketed(vectors: DataFrame, threshold: Double,
                              planes: Int = 4, tables: Int = 3, dims: Int = 64,
                              idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    requireDims(vectors, embCol, dims, "cosineDupPairsBucketed")
-    val cand = bucketCandidatePairs(vectors, planes, tables, dims, idCol, embCol)
-    val emb = vectors.select(col(idCol).as("id"), col(embCol).as("emb"))
+    val checked = checkDims(vectors, embCol, dims, "cosineDupPairsBucketed")
+    val cand = bucketCandidatePairs(checked, planes, tables, dims, idCol, embCol)
+    val emb = checked.select(col(idCol).as("id"), col(embCol).as("emb"))
     cand
       .join(emb.select(col("id").as("id_a"), col("emb").as("ea")), Seq("id_a"))
       .join(emb.select(col("id").as("id_b"), col("emb").as("eb")), Seq("id_b"))
@@ -729,11 +730,11 @@ object Similarity {
     require(outDims >= 1, s"outDims must be >= 1, got $outDims")
     require(quantBits >= 0 && quantBits <= 30,
       s"quantBits must be in [0, 30], got $quantBits")
-    requireDims(vectors, embCol, dims, "randomProjection")
     val scale = math.pow(2.0, quantBits)
-    val vq = vectors.select(col(idCol).cast("long").as("vec_id"),
-      transform(col(embCol), x => floor(x.cast("double") * lit(scale)))
-        .as("__vq"))
+    val vq = checkDims(vectors, embCol, dims, "randomProjection")
+      .select(col(idCol).cast("long").as("vec_id"),
+        transform(col(embCol), x => floor(x.cast("double") * lit(scale)))
+          .as("__vq"))
     val comps = (0 until outDims).map { k =>
       val signs = (0 until dims).map(j => hashSign(s"$salt-$k-$j")).toArray
       struct(lit(k).as("proj_dim"),

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -12,8 +13,35 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
+  /** The tables' declared schemas. A read with a known schema skips the
+    * one-task Spark job parquet schema inference runs on every read; a
+    * declared column a file lacks reads as NULL. `events` is absent: its
+    * `ts` physical type differs by generation and [[events]] branches on
+    * the inferred one. TablesSpec pins these against the files.
+    */
+  private[graft] val schemas: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> ("s_suppkey BIGINT, s_name STRING, s_nationkey INT, " +
+      "s_acctbal DOUBLE"),
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, " +
+      "p_type STRING, p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "documents" -> ("doc_id BIGINT, text STRING, lang STRING, source STRING, " +
+      "n_chars BIGINT"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
   private[graft] def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    schemas.get(name).fold(spark.read)(spark.read.schema)
+      .parquet(s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "nation")

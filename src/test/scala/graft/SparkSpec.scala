@@ -2,9 +2,10 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session, tests fork). */
@@ -83,6 +84,17 @@ abstract class SparkSpec extends AnyFunSuite {
     countEvents(body)(n => new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         n.incrementAndGet()
+    })
+
+  /** SQL executions started by `body`: each pays fixed planning and
+    * AQE stage-scheduling time, however little it computes.
+    */
+  protected def countExecutions(body: => Unit): Int =
+    countEvents(body)(n => new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => n.incrementAndGet()
+        case _ =>
+      }
     })
 
   /** Shuffle-map stages completed by `body`: stages carrying a

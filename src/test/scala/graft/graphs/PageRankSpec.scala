@@ -57,6 +57,16 @@ class PageRankSpec extends SparkSpec {
     assert(four == one, s"1 iteration: $one stages, 4 iterations: $four")
   }
 
+  test("all hops are one plan: executions stay flat, jobs grow by one broadcast a hop (1 vs 4 iterations)") {
+    val s = spark; import s.implicits._
+    val df = fourNode.toDF("src", "dst")
+    val execs = Seq(1, 4).map(it => countExecutions(PageRank.run(df, it)))
+    assert(execs(1) == execs(0), s"SQL executions at 1 and 4 iterations: $execs")
+    val jobs = Seq(1, 4).map(it => countJobs(PageRank.run(df, it)))
+    info(s"SQL executions $execs, jobs $jobs")
+    assert(jobs(1) - jobs(0) <= 3, s"jobs at 1 and 4 iterations: $jobs")
+  }
+
   test("duplicate edges collapse before degree counting") {
     assert(run(Seq((1L, 2L), (1L, 2L), (2L, 1L)), 3) ==
       Map(1L -> 1000000000000L, 2L -> 1000000000000L))

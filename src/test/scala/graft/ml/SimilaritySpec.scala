@@ -18,6 +18,41 @@ class SimilaritySpec extends SparkSpec {
     (base :+ ((100L, base.head._2))).toDF("vec_id", "embedding")
   }
 
+  /** `planted` plus a 7-dim vector (id 101) as its LAST row, where a
+    * check that samples one row never looks.
+    */
+  private def ragged = {
+    import spark.implicits._
+    planted.union(Seq((101L, Array.fill(7)(0.5f))).toDF("vec_id", "embedding"))
+  }
+
+  /** The messages of `e` and its causes. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+
+  test("a wrong-length vector past the first row fails the action with the op and dims") {
+    val q = planted.filter(col("vec_id") === 0)
+    val cents = Similarity.centroidsOf(planted.filter(col("vec_id") < 4))
+    // thunks: an operator that plans eagerly may fold the local input
+    // (and raise) before its action, which is still the guard's doing
+    val guarded = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "annTopKIvf corpus" -> (() =>
+        Similarity.annTopKIvf(ragged, q, k = 3, nCells = 8, nProbe = 3, dims = 8)),
+      "annTopKLsh corpus" -> (() => Similarity.annTopKLsh(ragged, q, k = 3, dims = 8)),
+      "kmeansAssign" -> (() => Similarity.kmeansAssign(ragged, cents)),
+      "pqCodes" -> (() => Similarity.pqCodes(ragged, dims = 8)),
+      "pqAdcTopK corpus" -> (() => Similarity.pqAdcTopK(ragged, q, 3, dims = 8)),
+      "cosineDupPairsBucketed" -> (() =>
+        Similarity.cosineDupPairsBucketed(ragged, threshold = 0.95, dims = 8)),
+      "randomProjection" -> (() =>
+        Similarity.randomProjection(ragged, outDims = 2, dims = 8)))
+    for ((op, df) <- guarded) {
+      val msg = messages(intercept[Exception](df().collect()))
+      assert(msg.contains(s"$op: dims=8"), s"$op failed with: $msg")
+    }
+  }
+
   test("annTopK: planted exact duplicate is rank 1 with cosine 1") {
     val r = Similarity.annTopK(
       planted.filter(col("vec_id") > 0), planted.filter(col("vec_id") === 0), k = 3)
@@ -190,9 +225,10 @@ class SimilaritySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Similarity.kmeansAssign(vecs, Seq.empty)
     }
-    intercept[IllegalArgumentException] {
-      Similarity.kmeansAssign(vecs, Seq((0L, Array(1f, 0f, 0f))))
-    }
+    // the dims check is in the plan: the action fails, not the call
+    val mismatched = Similarity.kmeansAssign(vecs, Seq((0L, Array(1f, 0f, 0f))))
+    assert(messages(intercept[Exception](mismatched.collect()))
+      .contains("kmeansAssign: dims=3"))
     intercept[IllegalArgumentException] {
       Similarity.centroidsOf(vecs, maxK = 0)
     }
