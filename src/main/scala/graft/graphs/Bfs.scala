@@ -36,10 +36,10 @@ object Bfs {
   /** `edges`: integral `src`/`dst`, directed as stored (symmetrize
     * upstream for undirected reach); `seeds`: a `node` column, hop 0.
     * Returns (node, hops) for every node within `rounds` hops of any
-    * seed. Materialized before returning ([[PageRank.run]] lifecycle);
-    * the per-round RDDs backing the result stay persisted (the session
-    * owner's `clearCache()` releases them, the [[ConnectedComponents]]
-    * lifecycle).
+    * seed. Materialized before returning, so the persisted adjacency is
+    * released; the per-round RDDs backing the result stay persisted
+    * (the session owner's `clearCache()` releases them, the
+    * [[ConnectedComponents]] lifecycle).
     */
   def run(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20,

@@ -2,7 +2,6 @@ package graft.graphs
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.ml.Sketches
 
@@ -19,14 +18,16 @@ import graft.ml.Sketches
   *
   * Scale posture: state is nodes·2^p register rows (p = 4 → 16 per
   * node). The adjacency is hash-partitioned on `src` ONCE with a
-  * self-loop per node folded in, and persisted: the self-merge
+  * self-loop per node folded in: the self-merge
   * `regs ∪ fromNbrs` is algebraically a max over {v} ∪ out-nbrs(v), so
   * the self-loops let a single join cover it. Each round broadcasts the
   * register table into a join that streams that layout unmoved, so the
   * (node = src, bucket) max-agg rides it in place (hash(src) clusters
   * (node, bucket)): ZERO per-round exchanges. The broadcast is explicit
   * (the [[PageRank]] posture), so the register table must fit an
-  * executor. This is the [[Bfs]] cost model
+  * executor. All rounds are one plan, whose exchange reuse shares the
+  * adjacency without a persist, materialized once at the end (the
+  * [[PageRank]] lifecycle). This is the [[Bfs]] cost model
   * with a constant 2^p factor traded for EVERY source at once (n BFS
   * runs collapse into one sketch pass).
   *
@@ -40,33 +41,27 @@ object HyperBall {
   /** `edges`: integral `src`/`dst`, directed as stored (symmetrize
     * upstream for undirected balls). Returns (node, est_reachable) —
     * the estimated |ball(node, rounds)| INCLUDING the node itself —
-    * for every node with at least one edge endpoint.
+    * for every node with at least one edge endpoint, MATERIALIZED (a
+    * `localCheckpoint`) before returning: one SQL execution at any round
+    * count.
     */
   def neighborhoodSizes(edges: DataFrame, rounds: Int,
                         p: Int = 4): DataFrame = {
     require(rounds >= 1 && rounds <= 8,
       s"HyperBall: rounds in [1, 8], got $rounds")
     // The node set rides the adjacency's self-loops.
-    val e = prepareAdjacency(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
+    val e = prepareAdjacency(edges)
     var regs = Sketches.hllRegisters(
       e.filter(col("src") === col("dst")).select(col("src").as("node")),
       Seq("node"), col("node"), p)
-    for (_ <- 1 to rounds) {
-      val next = e.join(broadcast(regs), e("dst") === regs("node"))
-        .select(e("src").as("node"), col("bucket"), col("max_rho"))
+    for (_ <- 1 to rounds)
+      regs = e.join(broadcast(regs), col("dst") === col("node"))
+        .select(col("src").as("node"), col("bucket"), col("max_rho"))
         .groupBy(col("node"), col("bucket"))
         .agg(max(col("max_rho")).cast("int").as("max_rho"))
-      // A lazy checkpoint defers only its final stage: under AQE,
-      // creating it runs the round's exchange and broadcast stages as
-      // their own SQL execution, so each round costs one here.
-      regs = next.localCheckpoint(eager = false)
-    }
-    val out = Sketches.hllEstimateCorrected(regs, Seq("node"), p)
+    Sketches.hllEstimateCorrected(regs, Seq("node"), p)
       .withColumnRenamed("est_distinct", "est_reachable")
-    out.count()
-    e.unpersist(blocking = false)
-    out
+      .localCheckpoint(eager = true)
   }
 
   /** The adjacency [[neighborhoodSizes]] rides: the DISTINCT long

@@ -30,8 +30,8 @@ object KCore {
     * duplicates collapse. Returns `(node, core_deg)` for nodes surviving
     * `rounds` peels, where `core_deg` is the in-degree within the
     * previous round's survivor set (at fixpoint: within the k-core
-    * itself). Materialized before returning, so internal caches are
-    * released rather than leaked ([[PageRank.run]] lifecycle).
+    * itself). Materialized before returning, so the persisted adjacency
+    * is released rather than leaked into the caller's session.
     */
   def run(edges: DataFrame, k: Int, rounds: Int = 6): DataFrame = {
     require(k >= 1, s"KCore: k must be >= 1, got $k")

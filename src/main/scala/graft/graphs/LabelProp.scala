@@ -33,8 +33,9 @@ object LabelProp {
     * undirected semantics); duplicates collapse. Returns (node, label)
     * after `rounds` synchronous votes for every node appearing as source
     * or destination; a node with no in-edges keeps its previous label.
-    * Materialized before returning (the [[PageRank.run]] lifecycle), so
-    * the internal caches are released rather than leaked.
+    * Materialized before returning, so the persisted adjacency and
+    * no-in-edge tables are released rather than leaked into the caller's
+    * session.
     */
   def run(edges: DataFrame, rounds: Int = 4,
           reliable: Boolean = false): DataFrame = {

@@ -23,19 +23,25 @@ import org.apache.spark.sql.functions._
   * 15% per hop, dangling mass vanishes), so the worst single-node inflow
   * is the whole mass and `85 · Σ contribs` must stay under Long.Max —
   * i.e. nodes · scale ≲ Long.Max/100. The DEFAULT therefore derives the
-  * scale from the materialized node count: `min(1e12, Long.Max/100/n)`,
+  * scale from a count of the nodes: `min(1e12, Long.Max/100/n)`,
   * which equals the historical 1e12 for every graph under ~9.2·10⁴
   * nodes and degrades precision (never safety) as graphs grow. Below
   * the 1e6 precision floor (≳9.2·10¹⁰ nodes) auto REFUSES with the
   * sizing formula rather than silently ranking at garbage precision —
   * past that point the fixed-point formulation needs 128-bit
-  * accumulation, not a smaller scale. An EXPLICIT scale is validated
-  * against the same bound up front — the job fails with the formula in
-  * the message instead of an ANSI overflow mid-iteration.
+  * accumulation, not a smaller scale. An EXPLICIT scale costs no node
+  * count: the rank expression itself checks each inflow against
+  * Long.Max/85, so a scale too large for the graph fails the action with
+  * the sizing formula in the message instead of an ANSI overflow.
   *
   * Scale posture: the distinct edge set is hash-partitioned on `dst`
   * ONCE with each source's out-degree folded in as a contribution-ready
-  * adjacency (src, dst, deg), and persisted. A hop's source ranks are
+  * adjacency (src, dst, deg); at an explicit scale every hop reads it
+  * within one plan, whose exchange reuse shares it without a persist
+  * (auto scale persists it: its node count is a second action). Reuse
+  * shares the shuffle, not the distinct and degree join above it, which
+  * each read re-runs: cheaper than a persist's nested plan on small
+  * graphs, about 2× slower at 4.8M edges. A hop's source ranks are
   * the previous hop's inflow table read through the rank formula
   * (hop 1 starts every node at `scale`, so it needs none): that
   * node-sized table broadcasts into a join that streams the adjacency
@@ -63,8 +69,11 @@ object PageRank {
     * such as a replaying oracle — pins the fixed-point base.
     * The returned DataFrame is
     * MATERIALIZED (checkpointed) before returning — an iterative operator
-    * is always consumed, and materializing here lets the persisted edge
-    * list be released instead of leaking into the caller's session.
+    * is always consumed, so the hop plan runs once here and the caller
+    * gets a lineage-free table. An explicit-scale run is that one SQL
+    * execution and persists nothing; auto scale adds the node count and
+    * persists the adjacency and node set for it, released before
+    * returning.
     *
     * Fault posture: by default the result is a `localCheckpoint` —
     * blocks live only on executors, so losing an executor mid-run kills
@@ -84,29 +93,37 @@ object PageRank {
     if (reliable) require(
       edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
       "reliable=true needs spark.sparkContext.setCheckpointDir(...) first")
+    // Auto scale counts the nodes in an action of its own before the hop
+    // plan runs, so it persists what both actions read; an explicit
+    // scale is one plan, whose exchange reuse shares the adjacency.
+    val auto = scale == 0L
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val adj = prepareAdjacency(edges).persist(lvl)
+    val adj = prepareAdjacency(edges)
     val nodes = adj.select(col("src").as("node"))
       .union(adj.select(col("dst").as("node"))).distinct()
-      .persist(lvl)
-    // the node set reads every adjacency row: one execution fills both
-    val n = nodes.count()
+    if (auto) { adj.persist(lvl); nodes.persist(lvl) }
     // Safe-scale bound: worst-case single-node inflow is the entire
     // starting mass n·s, and the hot expression is `85 * inflow` — keep
-    // n·s ≤ Long.Max/100 (margin over 85). The auto default takes the
-    // largest safe scale capped at the historical 1e12, so small graphs
-    // are bit-identical to the old fixed default; an explicit scale past
-    // the bound fails HERE with the sizing formula, not mid-iteration
-    // with an ANSI overflow.
-    val safeCap = Long.MaxValue / 100L / math.max(n, 1L)
-    val s = if (scale != 0L) scale else math.max(1000000L, math.min(1000000000000L, safeCap))
-    require(s <= safeCap,
-      s"PageRank: scale $s overflows at $n nodes — need nodes*scale <= " +
-        s"Long.Max/100; pass scale <= $safeCap")
+    // n·s ≤ Long.Max/100 (margin over 85). The auto default counts the
+    // nodes and takes the largest safe scale capped at the historical
+    // 1e12, so small graphs are bit-identical to the old fixed default.
+    val s = if (!auto) scale else {
+      val n = nodes.count()
+      val safeCap = Long.MaxValue / 100L / math.max(n, 1L)
+      require(safeCap >= 1000000L,
+        s"PageRank: scale 1000000 overflows at $n nodes — need " +
+          s"nodes*scale <= Long.Max/100; pass scale <= $safeCap")
+      math.min(1000000000000L, safeCap)
+    }
     // r(u) from the previous hop's inflow; a node with no inflow row
-    // (no in-edges) sits at the base rank
-    val rank = s"(${15L * s / 100L}L + " +
-      "(85 * coalesce(__in, CAST(0 AS BIGINT))) div 100)"
+    // (no in-edges) sits at the base rank. An inflow past Long.Max/85
+    // would overflow `85 * inflow`: it raises with the sizing formula
+    // (only an explicit scale can get there).
+    val in = "coalesce(__in, CAST(0 AS BIGINT))"
+    val rank = s"(CASE WHEN $in <= ${Long.MaxValue / 85L}L " +
+      s"THEN ${15L * s / 100L}L + (85 * $in) div 100 " +
+      s"ELSE raise_error('PageRank: scale $s overflows — need " +
+      "nodes*scale <= Long.Max/100; pass scale <= Long.Max/100/nodes') END)"
     var inflow = adj
       .select(col("dst").as("node"), expr(s"${s}L div __deg").as("__c"))
       .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
@@ -122,8 +139,7 @@ object PageRank {
       .select(col("node"), expr(rank).as("rank_fp"))
     val out = if (reliable) ranks.checkpoint(eager = true)
               else ranks.localCheckpoint(eager = true)
-    adj.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
+    if (auto) { adj.unpersist(blocking = false); nodes.unpersist(blocking = false) }
     out
   }
 

@@ -257,17 +257,21 @@ object Similarity {
     * per row — keep=1 assigns corpus vectors, keep=nProbe routes queries.
     * Cell dots come from the native [[graft.functions.IvfCellDots]]
     * expression (one fused codegen pass over plan-time centroids,
-    * bit-identical to the HOF fold and the q51 oracle).
+    * bit-identical to the HOF fold and the q51 oracle). The choice is
+    * row-local: the row's (dot, −cell) pairs sort descending — score
+    * desc, then cell asc — and the first `keep` explode, so no exchange
+    * or window runs.
     */
-  private def topCells(df: DataFrame, id: String, emb: String,
-                       nCells: Int, dims: Int, keep: Int): DataFrame = {
+  private[ml] def topCells(df: DataFrame, id: String, emb: String,
+                           nCells: Int, dims: Int, keep: Int): DataFrame = {
     graft.functions.IvfCellDots.register(df.sparkSession)
-    topKPerKey(
-      df.select(col(id), col(emb),
-          posexplode(graft.functions.IvfCellDots.cellDots(col(emb), nCells, dims)))
-        .select(col(id), col(emb), col("pos").as("cell"), col("col").as("__cs")),
-      col(id), Seq(col("__cs").desc, col("cell").asc), keep, col("cell"))
-      .drop("__cs", "rank")
+    // arrays_zip names unnamed inputs' fields by position: "0" the dot,
+    // "1" the negated cell
+    val ranked = sort_array(arrays_zip(
+        graft.functions.IvfCellDots.cellDots(col(emb), nCells, dims),
+        lit((0 until nCells).map(-_).toArray)), asc = false)
+    df.select(col(id), col(emb), explode(slice(ranked, 1, keep)).as("__top"))
+      .select(col(id), col(emb), (-col("__top").getField("1")).as("cell"))
   }
 
   /** IVF-flavored ANN: corpus vectors live in their best centroid cell,

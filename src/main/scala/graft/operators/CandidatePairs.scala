@@ -28,6 +28,15 @@ import org.apache.spark.sql.functions._
   * [0, s]. An unordered pair with salts (s_i, s_j), s_i < s_j, meets
   * exactly once — in cell (s_i, s_j), row role i, column role j; equal
   * salts meet in the diagonal cell (s, s), deduplicated by id order.
+  *
+  * The guard is not free: the size agg, the salting join and the salted
+  * persist are extra query stages on every call, whether or not any
+  * bucket is hot. The LSH candidate operators therefore take it opt-in
+  * (`cap = Some(n)`: `TextDedup.nearDupPairs`,
+  * `TextDedup.incrementalNearDupPairs`, `Similarity.semDedup`) and run
+  * the plain band equi-join by default; the posting-list pair counts,
+  * whose buckets are shingles with Zipfian document frequency, always
+  * run through it.
   */
 object CandidatePairs {
 

@@ -117,35 +117,43 @@ object TextDedup {
     * (numBands, rowsPerBand): the defaults (16×4) detect J=0.8 pairs with
     * p ≈ 0.9996 and J=0.9 pairs with p ≈ 1-1e-7. Precision is exact: every
     * candidate is verified with true Jaccard on the shingle sets.
+    *
+    * Hot-bucket posture: by default (`cap = None`) the candidates are the
+    * plain band self-join `a.bk = b.bk AND a.id < b.id`, deduplicated, and
+    * AQE skew splitting bounds per-TASK load. Against a HOSTILE corpus
+    * (mass exact-dups concentrating one band bucket on one reducer), pass
+    * `cap = Some(n)`: candidates come from
+    * [[graft.operators.CandidatePairs.inBucketPairs]], whose triangle
+    * split spreads a hot bucket's quadratic pair output over bounded
+    * cells — identical output (spec-asserted), at the cost of the size
+    * agg, salting and persist stages on every call. Dedup exact
+    * duplicates upstream with dropDuplicateContent where the clique
+    * output itself isn't wanted.
+    *
+    * Nothing is persisted: the shingle table feeds the banding stage and
+    * both verify joins inside this one plan, and re-shingling is cheaper
+    * than the nested plan a persist materializes under AQE.
     */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, numBands: Int = 16, rowsPerBand: Int = 4,
-                   threshold: Double = 0.8): DataFrame = {
+                   threshold: Double = 0.8,
+                   cap: Option[Int] = None): DataFrame = {
     // Short documents (< n tokens) have no shingles; exclude them with a
     // cheap SOURCE-column predicate. (A filter on the computed shingle
     // array would be alias-substituted by predicate pushdown and re-run
-    // the whole pipeline at the scan.) The shingle table feeds the
-    // banding stage AND both verify joins — persist it so the dominant
-    // per-row work runs once, not three times. Lifecycle caveat: a
-    // Dataset persist registers in the session CacheManager and lives
-    // until an explicit unpersist or session end (memory blocks spill to
-    // disk under pressure, but the entry is NOT dropped when the returned
-    // plan is garbage-collected) — sessions running many dedup flavors
-    // over one corpus should build the shingle table once and pass it to
-    // the jaccard* overloads below rather than stacking copies.
+    // the whole pipeline at the scan.)
     val sh = shingleHashedDocs(
       docs.filter(size(tokens(col(textCol))) >= shingleN), idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = minhashBands(sh, numBands, rowsPerBand)
-    // Candidate pairs stream through an equi-join on the band key with a
-    // hot-bucket triangle split (CandidatePairs): a degenerate band bucket
-    // (mass exact-dups) spreads its quadratic pair output across many
-    // tasks instead of one reducer, and never materializes a giant in-row
-    // array (the collect_list-per-bucket alternative holds O(m²) pairs in
-    // one row). Dedup exact duplicates upstream with dropDuplicateContent
-    // where the clique output itself isn't wanted.
-    val cand = graft.operators.CandidatePairs.inBucketPairs(banded)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+    val rawCand = cap match {
+      case Some(c) => graft.operators.CandidatePairs.inBucketPairs(banded, c)
+      case None =>
+        val a = banded.select(col("id").as("id_a"), col("bk"))
+        val b = banded.select(col("id").as("id_b"), col("bk"))
+        a.join(b, Seq("bk")).filter(col("id_a") < col("id_b"))
+          .select(col("id_a"), col("id_b")).distinct()
+    }
+    val cand = rawCand.select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     cand
       .join(sh.select(col("id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(sh.select(col("id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
@@ -184,9 +192,10 @@ object TextDedup {
     * EXACT pair coverage — bounded per-task input, identical output
     * (spec-asserted equivalence).
     *
-    * CACHE LIFECYCLE: same note as [[nearDupPairs]] — the combined
-    * corpus+fresh shingle table is persisted per call and stays in the
-    * session CacheManager until `clearCache()`/session end; a nightly
+    * CACHE LIFECYCLE: the combined corpus+fresh shingle table is
+    * persisted per call, and a Dataset persist registers in the session
+    * CacheManager: it stays until `clearCache()`/session end, not until
+    * the returned plan is garbage-collected; a nightly
     * pipeline should hold the corpus shingle table as stored state and
     * rebuild only the fresh share (here both are rebuilt per call, the
     * sandbox stand-in for stored per-doc signatures).
@@ -281,7 +290,8 @@ object TextDedup {
     *
     * The shingle table is built here and persisted for this plan's
     * internal reuse (it stays in the session CacheManager until
-    * unpersist/session end — see [[nearDupPairs]]'s lifecycle note).
+    * unpersist/session end — see [[incrementalNearDupPairs]]'s lifecycle
+    * note).
     */
   def jaccardNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                           shingleN: Int = 2, threshold: Double = 0.5,

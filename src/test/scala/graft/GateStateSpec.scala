@@ -29,8 +29,8 @@ class GateStateSpec extends SparkSpec {
   /** Jobs one run of each benchmark gate starts: a cost contract no
     * host pause can move. Counted on the sf0.001 tables.
     */
-  for ((q, jobs) <- Seq("q24_neardup_pairs" -> 13, "q51_ann_ivf" -> 9,
-      "q94_pagerank" -> 17))
+  for ((q, jobs) <- Seq("q24_neardup_pairs" -> 6, "q51_ann_ivf" -> 7,
+      "q94_pagerank" -> 14))
     test(s"$q: a run starts $jobs jobs") {
       spark.catalog.clearCache()
       val n = countJobs(force(SparkEntry.queries(q)(spark, sfDir)))

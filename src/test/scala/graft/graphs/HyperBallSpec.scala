@@ -25,8 +25,7 @@ class HyperBallSpec extends SparkSpec {
 
   test("round shape: rounds add no shuffle-map stage (1 vs 4)") {
     // The round plan runs no exchange (the broadcast join streams the src
-    // layout, the max-agg rides it), and rounds chain through lazy
-    // checkpoints that the one final count materializes.
+    // layout, the max-agg rides it), and all rounds are one plan.
     val s = spark; import s.implicits._
     val edges = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 1L)) ++
       (11L to 16L).map(v => (10L, v))).toDF("src", "dst")
@@ -34,6 +33,19 @@ class HyperBallSpec extends SparkSpec {
     val four = countShuffleMapStages(HyperBall.neighborhoodSizes(edges, 4))
     info(s"shuffle-map stages: 1 round $one, 4 rounds $four")
     assert(four == one, s"1 round: $one stages, 4 rounds: $four")
+  }
+
+  test("all rounds are one plan: executions stay flat, jobs grow by one broadcast a round (1 vs 4)") {
+    val s = spark; import s.implicits._
+    val edges = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 1L)) ++
+      (11L to 16L).map(v => (10L, v))).toDF("src", "dst")
+    val execs = Seq(1, 4).map(r =>
+      countExecutions(HyperBall.neighborhoodSizes(edges, r)))
+    val jobs = Seq(1, 4).map(r =>
+      countJobs(HyperBall.neighborhoodSizes(edges, r)))
+    info(s"SQL executions $execs, jobs $jobs")
+    assert(execs == Seq(1, 1), s"SQL executions at 1 and 4 rounds: $execs")
+    assert(jobs(1) - jobs(0) <= 3, s"jobs at 1 and 4 rounds: $jobs")
   }
 
   test("rounds grow balls monotonically; round count bounds the radius") {

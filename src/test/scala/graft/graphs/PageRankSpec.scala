@@ -108,11 +108,15 @@ class PageRankSpec extends SparkSpec {
     val edges = spark.range(1L, n + 1L)
       .select(col("id").as("src"), lit(0L).as("dst"))
     // The historical fixed default is overflow-unsafe here: 85·(n·1e12)
-    // exceeds Long.Max. The up-front bound check rejects it with the
-    // sizing formula instead of an ANSI overflow mid-iteration.
-    val ex = intercept[IllegalArgumentException](
+    // exceeds Long.Max. The in-plan inflow guard refuses it with the
+    // sizing formula at the action (run's own checkpoint) instead of an
+    // ANSI overflow.
+    val ex = intercept[Exception](
       PageRank.run(edges, iterations = 1, scale = 1000000000000L))
-    assert(ex.getMessage.contains("overflows"))
+    val msg = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(msg.contains("overflows") &&
+      msg.contains("nodes*scale <= Long.Max/100"), msg)
     // Auto scale: s = Long.Max/100/(n+1), capped at 1e12 — closed-form
     // star ranks after one hop, exact long equality.
     val s = Long.MaxValue / 100L / (n + 1L)
@@ -122,6 +126,13 @@ class PageRankSpec extends SparkSpec {
     val base = 15L * s / 100L
     assert(r(0L) == base + 85L * (n * s) / 100L) // center: whole mass inflow
     assert(r(1L) == base)                        // leaf: no inflow
+  }
+
+  test("an explicit-scale run is one SQL execution: no node count, no persist") {
+    val s = spark; import s.implicits._
+    val df = fourNode.toDF("src", "dst")
+    val execs = countExecutions(PageRank.run(df, 3, scale = 1000000000000L))
+    assert(execs == 1, s"$execs SQL executions")
   }
 
   test("empty edge list yields an empty rank table, not a failure") {

@@ -163,6 +163,74 @@ class SimilaritySpec extends SparkSpec {
     assert(wide == exact, "probing every cell must equal the exact top-k")
   }
 
+  /** Seeded 8-dim vectors with exact cell-dot ties: zero vectors score
+    * 0.0 in every cell (a tie on every cell), and copies of vector 0 tie
+    * it across rows.
+    */
+  private def cellTies = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(51)
+    val base = (0 until 60).map(i =>
+      (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
+    (base ++ Seq(60L, 61L).map(i => (i, Array.fill(8)(0f))) ++
+      Seq(62L, 63L).map(i => (i, base.head._2))).toDF("vec_id", "embedding")
+  }
+
+  /** The window formulation the row-local [[Similarity.topCells]]
+    * replaced: posexplode every cell's dot, then the two-window top-k
+    * (score desc, cell asc).
+    */
+  private def windowCells(df: org.apache.spark.sql.DataFrame, id: String,
+                          emb: String, keep: Int) = {
+    graft.functions.IvfCellDots.register(spark)
+    Similarity.topKPerKey(
+      df.select(col(id), col(emb),
+          posexplode(graft.functions.IvfCellDots.cellDots(col(emb), 8, 8)))
+        .select(col(id), col(emb), col("pos").as("cell"), col("col").as("__cs")),
+      col(id), Seq(col("__cs").desc, col("cell").asc), keep, col("cell"))
+      .drop("__cs", "rank")
+  }
+
+  test("topCells: the row-local choice equals the window top-k, exact dot ties included") {
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vec_id"), col("cell")).collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSet
+    for (keep <- Seq(1, 3, 8)) {
+      val got = cells(Similarity.topCells(cellTies, "vec_id", "embedding", 8, 8, keep))
+      assert(got == cells(windowCells(cellTies, "vec_id", "embedding", keep)),
+        s"keep=$keep")
+      // an all-tie row keeps the lowest cells
+      assert(got.filter(_._1 == 60L).map(_._2) == (0 until keep).toSet)
+    }
+    val plan = Similarity.topCells(cellTies, "vec_id", "embedding", 8, 8, 3)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange") && !plan.contains("Window"),
+      s"row-local cell choice planned a shuffle:\n$plan")
+  }
+
+  test("annTopKIvf keeps the window formulation's output on exact dot ties") {
+    val queries = cellTies.filter(col("vec_id") < 10 || col("vec_id") === 60L)
+    val corpus = cellTies.filter(col("vec_id") >= 10 && col("vec_id") =!= 60L)
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+        java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
+    graft.functions.CosineSimilarity.register(spark)
+    val scored = windowCells(queries.select(col("vec_id").as("query_id"),
+        col("embedding").as("__q")), "query_id", "__q", 3)
+      .join(windowCells(corpus.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("__c")), "neighbor_id", "__c", 1), Seq("cell"))
+      .select(col("query_id"), col("neighbor_id"),
+        graft.functions.CosineSimilarity.cosine(col("__q"), col("__c")).as("cosine"))
+    val want = rows(Similarity.topKPerKey(scored, col("query_id"),
+      Seq(col("cosine").desc, col("neighbor_id").asc), 3, col("neighbor_id")))
+    val got = rows(Similarity.annTopKIvf(corpus, queries, k = 3, nCells = 8,
+      nProbe = 3, dims = 8))
+    assert(got == want)
+    // the copies of vector 0 share its cell and tie at cosine 1: id order
+    assert(got.filter(t => t._1 == 0L && t._3 <= 2).map(_._2) == Set(62L, 63L))
+  }
+
   test("cosineDupPairsBucketed: identical vectors always pair; no cartesian") {
     val pairs = Similarity.cosineDupPairsBucketed(planted, threshold = 0.95, dims = 8)
     val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet

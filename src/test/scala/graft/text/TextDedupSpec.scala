@@ -42,6 +42,30 @@ class TextDedupSpec extends SparkSpec {
     assert(pairs.filter(col("doc_a") >= col("doc_b")).count() == 0)
   }
 
+  test("nearDupPairs: the opt-in hot-bucket guard equals the default on mass exact duplicates") {
+    import spark.implicits._
+    // 200 copies of one text: every band bucket of the copies holds 200
+    // members, far past the cap; plus a near-dup pair and a loner
+    val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val hostile = spark.range(100L, 300L)
+      .selectExpr("id AS doc_id", s"'$text' AS text")
+      .unionByName(Seq(
+        (1L, "the quick brown fox jumps over the lazy dog again and again today"),
+        (2L, "the quick brown fox jumps over the lazy cat again and again today"),
+        (3L, "unrelated fifth document with its own words entirely disjoint tokens"))
+        .toDF("doc_id", "text"))
+    def pairs(cap: Option[Int]) =
+      TextDedup.nearDupPairs(hostile, "doc_id", "text", threshold = 0.5, cap = cap)
+    val plain = pairs(None)
+    val plan = plain.queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct"), s"all-pairs join in plan:\n$plan")
+    val got = plain.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got.size == 200 * 199 / 2 + 1 && got.exists(t => t._1 == 1L && t._2 == 2L))
+    assert(got == pairs(Some(8)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    spark.catalog.clearCache()
+  }
+
   test("contaminationScores counts exactly the shingles shared with the probe set") {
     val s = spark; import s.implicits._
     val corpus = Seq(
