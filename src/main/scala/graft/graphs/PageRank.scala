@@ -29,19 +29,18 @@ import org.apache.spark.sql.functions._
   * the 1e6 precision floor (≳9.2·10¹⁰ nodes) auto REFUSES with the
   * sizing formula rather than silently ranking at garbage precision —
   * past that point the fixed-point formulation needs 128-bit
-  * accumulation, not a smaller scale. An EXPLICIT scale costs no node
-  * count: the rank expression itself checks each inflow against
-  * Long.Max/85, so a scale too large for the graph fails the action with
+  * accumulation, not a smaller scale. An EXPLICIT scale must lie in
+  * [1000, Long.Max/100] and costs no node count: the rank expression
+  * checks each inflow against Long.Max/85 (an overflowing sum reads as
+  * Long.Max), so a scale too large for the graph fails the action with
   * the sizing formula in the message instead of an ANSI overflow.
   *
   * Scale posture: the distinct edge set is hash-partitioned on `dst`
   * ONCE with each source's out-degree folded in as a contribution-ready
-  * adjacency (src, dst, deg); at an explicit scale every hop reads it
-  * within one plan, whose exchange reuse shares it without a persist
-  * (auto scale persists it: its node count is a second action). Reuse
-  * shares the shuffle, not the distinct and degree join above it, which
-  * each read re-runs: cheaper than a persist's nested plan on small
-  * graphs, about 2× slower at 4.8M edges. A hop's source ranks are
+  * adjacency (src, dst, deg), and persisted: every hop and the node set
+  * read it, and exchange reuse would share only the shuffle beneath the
+  * distinct and the degree join, re-running both per read (about 2×
+  * slower at 4.8M edges, 3 hops). A hop's source ranks are
   * the previous hop's inflow table read through the rank formula
   * (hop 1 starts every node at `scale`, so it needs none): that
   * node-sized table broadcasts into a join that streams the adjacency
@@ -69,11 +68,9 @@ object PageRank {
     * such as a replaying oracle — pins the fixed-point base.
     * The returned DataFrame is
     * MATERIALIZED (checkpointed) before returning — an iterative operator
-    * is always consumed, so the hop plan runs once here and the caller
-    * gets a lineage-free table. An explicit-scale run is that one SQL
-    * execution and persists nothing; auto scale adds the node count and
-    * persists the adjacency and node set for it, released before
-    * returning.
+    * is always consumed, so the hop plan runs once here, the persisted
+    * adjacency is released, and the caller gets a lineage-free table.
+    * Auto scale adds one action, the node count.
     *
     * Fault posture: by default the result is a `localCheckpoint` —
     * blocks live only on executors, so losing an executor mid-run kills
@@ -88,26 +85,22 @@ object PageRank {
           scale: Long = 0L, reliable: Boolean = false): DataFrame = {
     require(iterations >= 1 && iterations <= 20,
       s"PageRank: iterations in [1, 20], got $iterations")
-    require(scale == 0L || scale >= 1000L,
-      s"PageRank: scale >= 1000 (or 0 for auto), got $scale")
+    require(scale == 0L || (scale >= 1000L && scale <= Long.MaxValue / 100L),
+      s"PageRank: scale in [1000, Long.Max/100] (or 0 for auto), got $scale")
     if (reliable) require(
       edges.sparkSession.sparkContext.getCheckpointDir.isDefined,
       "reliable=true needs spark.sparkContext.setCheckpointDir(...) first")
-    // Auto scale counts the nodes in an action of its own before the hop
-    // plan runs, so it persists what both actions read; an explicit
-    // scale is one plan, whose exchange reuse shares the adjacency.
-    val auto = scale == 0L
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val adj = prepareAdjacency(edges)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = adj.select(col("src").as("node"))
       .union(adj.select(col("dst").as("node"))).distinct()
-    if (auto) { adj.persist(lvl); nodes.persist(lvl) }
     // Safe-scale bound: worst-case single-node inflow is the entire
     // starting mass n·s, and the hot expression is `85 * inflow` — keep
     // n·s ≤ Long.Max/100 (margin over 85). The auto default counts the
-    // nodes and takes the largest safe scale capped at the historical
-    // 1e12, so small graphs are bit-identical to the old fixed default.
-    val s = if (!auto) scale else {
+    // nodes (filling the adjacency cache the hops then read) and takes
+    // the largest safe scale capped at the historical 1e12, so small
+    // graphs are bit-identical to the old fixed default.
+    val s = if (scale != 0L) scale else {
       val n = nodes.count()
       val safeCap = Long.MaxValue / 100L / math.max(n, 1L)
       require(safeCap >= 1000000L,
@@ -117,21 +110,23 @@ object PageRank {
     }
     // r(u) from the previous hop's inflow; a node with no inflow row
     // (no in-edges) sits at the base rank. An inflow past Long.Max/85
-    // would overflow `85 * inflow`: it raises with the sizing formula
-    // (only an explicit scale can get there).
+    // would overflow `85 * inflow`, and one past Long.Max overflows the
+    // sum itself (`try_sum` yields null, read as Long.Max): both raise
+    // with the sizing formula (only an explicit scale can get there).
     val in = "coalesce(__in, CAST(0 AS BIGINT))"
     val rank = s"(CASE WHEN $in <= ${Long.MaxValue / 85L}L " +
       s"THEN ${15L * s / 100L}L + (85 * $in) div 100 " +
       s"ELSE raise_error('PageRank: scale $s overflows — need " +
       "nodes*scale <= Long.Max/100; pass scale <= Long.Max/100/nodes') END)"
+    val inflowSum = expr(s"coalesce(try_sum(__c), ${Long.MaxValue}L)").as("__in")
     var inflow = adj
       .select(col("dst").as("node"), expr(s"${s}L div __deg").as("__c"))
-      .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
+      .groupBy(col("node")).agg(inflowSum)
     for (_ <- 2 to iterations) {
       val prev = broadcast(inflow.withColumnRenamed("node", "src"))
       inflow = adj.join(prev, Seq("src"), "left")
         .select(col("dst").as("node"), expr(s"$rank div __deg").as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
+        .groupBy(col("node")).agg(inflowSum)
     }
     // LEFT join keeps sink-only / source-only nodes alive at the base
     // rank (they receive no mass but stay rankable).
@@ -139,7 +134,7 @@ object PageRank {
       .select(col("node"), expr(rank).as("rank_fp"))
     val out = if (reliable) ranks.checkpoint(eager = true)
               else ranks.localCheckpoint(eager = true)
-    if (auto) { adj.unpersist(blocking = false); nodes.unpersist(blocking = false) }
+    adj.unpersist(blocking = false)
     out
   }
 

@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
   * The guard is not free: the size agg, the salting join and the salted
   * persist are extra query stages on every call, whether or not any
   * bucket is hot. The LSH candidate operators therefore take it opt-in
-  * (`cap = Some(n)`: `TextDedup.nearDupPairs`,
-  * `TextDedup.incrementalNearDupPairs`, `Similarity.semDedup`) and run
-  * the plain band equi-join by default; the posting-list pair counts,
+  * (`cap = Some(n)`: `TextDedup.incrementalNearDupPairs`,
+  * `Similarity.semDedup`) or not at all (`TextDedup.nearDupPairs`) and
+  * run the plain band equi-join by default; the posting-list pair counts,
   * whose buckets are shingles with Zipfian document frequency, always
   * run through it.
   */

@@ -118,17 +118,10 @@ object TextDedup {
     * p ≈ 0.9996 and J=0.9 pairs with p ≈ 1-1e-7. Precision is exact: every
     * candidate is verified with true Jaccard on the shingle sets.
     *
-    * Hot-bucket posture: by default (`cap = None`) the candidates are the
-    * plain band self-join `a.bk = b.bk AND a.id < b.id`, deduplicated, and
-    * AQE skew splitting bounds per-TASK load. Against a HOSTILE corpus
-    * (mass exact-dups concentrating one band bucket on one reducer), pass
-    * `cap = Some(n)`: candidates come from
-    * [[graft.operators.CandidatePairs.inBucketPairs]], whose triangle
-    * split spreads a hot bucket's quadratic pair output over bounded
-    * cells — identical output (spec-asserted), at the cost of the size
-    * agg, salting and persist stages on every call. Dedup exact
-    * duplicates upstream with dropDuplicateContent where the clique
-    * output itself isn't wanted.
+    * Candidates are the plain band self-join `a.bk = b.bk AND a.id < b.id`,
+    * deduplicated; AQE skew splitting bounds per-TASK load on a hot band
+    * bucket. Dedup exact duplicates upstream with dropDuplicateContent
+    * where the clique output itself isn't wanted.
     *
     * Nothing is persisted: the shingle table feeds the banding stage and
     * both verify joins inside this one plan, and re-shingling is cheaper
@@ -136,8 +129,7 @@ object TextDedup {
     */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, numBands: Int = 16, rowsPerBand: Int = 4,
-                   threshold: Double = 0.8,
-                   cap: Option[Int] = None): DataFrame = {
+                   threshold: Double = 0.8): DataFrame = {
     // Short documents (< n tokens) have no shingles; exclude them with a
     // cheap SOURCE-column predicate. (A filter on the computed shingle
     // array would be alias-substituted by predicate pushdown and re-run
@@ -145,15 +137,10 @@ object TextDedup {
     val sh = shingleHashedDocs(
       docs.filter(size(tokens(col(textCol))) >= shingleN), idCol, textCol, shingleN)
     val banded = minhashBands(sh, numBands, rowsPerBand)
-    val rawCand = cap match {
-      case Some(c) => graft.operators.CandidatePairs.inBucketPairs(banded, c)
-      case None =>
-        val a = banded.select(col("id").as("id_a"), col("bk"))
-        val b = banded.select(col("id").as("id_b"), col("bk"))
-        a.join(b, Seq("bk")).filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b")).distinct()
-    }
-    val cand = rawCand.select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+    val a = banded.select(col("id").as("doc_a"), col("bk"))
+    val b = banded.select(col("id").as("doc_b"), col("bk"))
+    val cand = a.join(b, Seq("bk")).filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b")).distinct()
     cand
       .join(sh.select(col("id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(sh.select(col("id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))

@@ -30,7 +30,7 @@ class GateStateSpec extends SparkSpec {
     * host pause can move. Counted on the sf0.001 tables.
     */
   for ((q, jobs) <- Seq("q24_neardup_pairs" -> 6, "q51_ann_ivf" -> 7,
-      "q94_pagerank" -> 14))
+      "q94_pagerank" -> 17))
     test(s"$q: a run starts $jobs jobs") {
       spark.catalog.clearCache()
       val n = countJobs(force(SparkEntry.queries(q)(spark, sfDir)))

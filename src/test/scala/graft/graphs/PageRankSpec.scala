@@ -128,11 +128,28 @@ class PageRankSpec extends SparkSpec {
     assert(r(1L) == base)                        // leaf: no inflow
   }
 
-  test("an explicit-scale run is one SQL execution: no node count, no persist") {
+  test("an explicit-scale run is one SQL execution: no node count") {
     val s = spark; import s.implicits._
     val df = fourNode.toDF("src", "dst")
     val execs = countExecutions(PageRank.run(df, 3, scale = 1000000000000L))
     assert(execs == 1, s"$execs SQL executions")
+  }
+
+  test("an explicit scale past Long.Max/100 fails at the call; an inflow sum past Long.Max fails with the sizing formula") {
+    import org.apache.spark.sql.functions._
+    // 200 leaves into one hub: each leaf sends its whole rank
+    val star = spark.range(1L, 201L).select(col("id").as("src"), lit(0L).as("dst"))
+    // the base rank 15·s/100 would wrap past Long.Max/15
+    for (sc <- Seq(Long.MaxValue / 99L, Long.MaxValue / 10L, Long.MaxValue))
+      intercept[IllegalArgumentException](PageRank.run(star, iterations = 1, scale = sc))
+    // at s = Long.Max/100 every contribution is in range, but the hub's
+    // summed inflow 200·s passes Long.Max itself
+    val ex = intercept[Exception](
+      PageRank.run(star, iterations = 1, scale = Long.MaxValue / 100L))
+    val msg = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(msg.contains("overflows") &&
+      msg.contains("nodes*scale <= Long.Max/100"), msg)
   }
 
   test("empty edge list yields an empty rank table, not a failure") {

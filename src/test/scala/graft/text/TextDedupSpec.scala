@@ -42,10 +42,10 @@ class TextDedupSpec extends SparkSpec {
     assert(pairs.filter(col("doc_a") >= col("doc_b")).count() == 0)
   }
 
-  test("nearDupPairs: the opt-in hot-bucket guard equals the default on mass exact duplicates") {
+  test("nearDupPairs on mass exact duplicates: every copy pair once, no CartesianProduct") {
     import spark.implicits._
     // 200 copies of one text: every band bucket of the copies holds 200
-    // members, far past the cap; plus a near-dup pair and a loner
+    // members; plus a near-dup pair and a loner
     val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val hostile = spark.range(100L, 300L)
       .selectExpr("id AS doc_id", s"'$text' AS text")
@@ -54,16 +54,14 @@ class TextDedupSpec extends SparkSpec {
         (2L, "the quick brown fox jumps over the lazy cat again and again today"),
         (3L, "unrelated fifth document with its own words entirely disjoint tokens"))
         .toDF("doc_id", "text"))
-    def pairs(cap: Option[Int]) =
-      TextDedup.nearDupPairs(hostile, "doc_id", "text", threshold = 0.5, cap = cap)
-    val plain = pairs(None)
-    val plan = plain.queryExecution.executedPlan.toString
+    val pairs = TextDedup.nearDupPairs(hostile, "doc_id", "text", threshold = 0.5)
+    val plan = pairs.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), s"all-pairs join in plan:\n$plan")
-    val got = plain.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got.size == 200 * 199 / 2 + 1 && got.exists(t => t._1 == 1L && t._2 == 2L))
-    assert(got == pairs(Some(8)).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
-    spark.catalog.clearCache()
+    val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val copies = (for (a <- 100L until 300L; b <- a + 1 until 300L) yield (a, b, 1.0)).toSet
+    assert(got.length == got.toSet.size, "a candidate pair is emitted twice")
+    assert(got.filter(_._1 >= 100L).toSet == copies)
+    assert(got.filter(_._1 < 100L).map(t => (t._1, t._2)).toSeq == Seq((1L, 2L)))
   }
 
   test("contaminationScores counts exactly the shingles shared with the probe set") {
